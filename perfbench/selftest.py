@@ -19,7 +19,7 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
-from metrics import END_TO_END, MOVES, PER_LAYER  # noqa: E402
+from metrics import MOVES  # noqa: E402
 
 
 def main() -> int:
@@ -29,9 +29,7 @@ def main() -> int:
         0: {m["name"]: m["unit"] for m in spec["end_to_end"]},
         1: {m["name"]: m["unit"] for m in spec["per_layer"]},
     }
-    assert declared[0] == END_TO_END, "BENCHMARK.json end_to_end != metrics.END_TO_END"
-    assert declared[1] == PER_LAYER, "BENCHMARK.json per_layer != metrics.PER_LAYER"
-    assert set(MOVES) == set(PER_LAYER)
+    assert set(MOVES) == set(declared[1]), "metrics.MOVES must cover every per_layer metric"
     problems = []
     for wl in (w["name"] for w in spec["workloads"]):
         for trace in (0, 1):

@@ -5,9 +5,11 @@ Two sources, neither of which changes a line of ``bigquack_spark``:
 - **Spans.**  :class:`Tracer` wraps the public functions each layer exposes
   at every place the package binds them (``from ... import load_table as t``
   makes a module-level alias, so the original and each alias are replaced).
-  A span records name, start, end and the span it ran under; a layer's time
-  is the sum of its outermost spans, so ``read_source`` -> ``load_table``
-  counts once.
+  A layer's time is the sum of its outermost spans, so ``read_source`` ->
+  ``load_table`` counts once.  The stages that run under a span that reads
+  the sources (``SCAN_SPANS``) give the rows read from the sources; the
+  row counts ``pipeline.transfer`` meters its targets with run outside
+  them and are left out.
 - **Spark's status store.**  Jobs are counted by the delta of the highest
   job id (the retained-jobs list is capped by ``spark.ui.retainedJobs``, so
   its length undercounts long driver loops), and stage statistics are
@@ -31,6 +33,9 @@ WRAPPED = {
 }
 #: AtomicWriter methods -> span name.
 WRAPPED_METHODS = {"write": "sinks.atomic_write", "finalize": "sinks.atomic_finalize"}
+#: Spans whose stages read the sources: the lazy reads themselves, the
+#: shred-spec sample, and the writes that execute the reads.
+SCAN_SPANS = {"sources.read", "jsonshred.spec", "sinks.ingest", "sinks.atomic_write"}
 
 
 class StageStats:
@@ -54,9 +59,12 @@ class Tracer:
         self._jsc = self.sc._jsc.sc()
         gw = self.sc._gateway
         self._no_quantiles = gw.new_array(gw.jvm.double, 0)
-        self.spans: list[tuple[str, float, float, int | None]] = []
-        self._stack: list[int] = []
+        self.seconds: dict[str, float] = defaultdict(float)  # span name -> outermost time
+        self.scan_rows = 0  # rows read by stages under SCAN_SPANS
         self._depth: dict[str, int] = defaultdict(int)
+        self._start: dict[str, float] = {}
+        self._scan_depth = 0
+        self._scan_mark = -1
         self._restore: list[tuple[object, str, object]] = []
         self.enabled = False
         self._settle()
@@ -71,13 +79,34 @@ class Tracer:
         def wrapper(*args, **kwargs):
             if not tracer.enabled:
                 return fn(*args, **kwargs)
-            with tracer.region(name):
+            tracer._enter(name)
+            try:
                 return fn(*args, **kwargs)
+            finally:
+                tracer._exit(name)
 
         return wrapper
 
-    def region(self, name: str):
-        return _Region(self, name)
+    def _enter(self, name: str) -> None:
+        if name in SCAN_SPANS:
+            if self._scan_depth == 0:
+                self._settle()
+                self._scan_mark = self._max_stage()
+            self._scan_depth += 1
+        if self._depth[name] == 0:
+            self._start[name] = time.monotonic()
+        self._depth[name] += 1
+
+    def _exit(self, name: str) -> None:
+        self._depth[name] -= 1
+        if self._depth[name] == 0:  # nested re-entry of a layer counts once
+            self.seconds[name] += time.monotonic() - self._start.pop(name)
+        if name in SCAN_SPANS:
+            self._scan_depth -= 1
+            if self._scan_depth == 0:
+                self._settle()
+                ran, _ = self._stages_since(self._scan_mark)
+                self.scan_rows += sum(st.inputRecords() for st in ran)
 
     def install(self) -> None:
         """Wrap every binding of the layer functions in loaded package modules."""
@@ -105,9 +134,6 @@ class Tracer:
             setattr(owner, key, val)
         self._restore.clear()
 
-    def layer_seconds(self, name: str) -> float:
-        return sum(end - start for n, start, end, _ in self.spans if n == name)
-
     # -- status store --------------------------------------------------------
     def _settle(self) -> None:
         self._jsc.listenerBus().waitUntilEmpty()
@@ -123,6 +149,21 @@ class Tracer:
         lst = self._stages()
         return lst.apply(0).stageId() if lst.size() else -1
 
+    def _stages_since(self, mark: int) -> tuple[list, int]:
+        """The stages with an id above ``mark`` that ran (not skipped), and
+        the highest id seen."""
+        lst = self._stages()  # newest first
+        ran, newest = [], mark
+        for i in range(lst.size()):
+            st = lst.apply(i)
+            sid = st.stageId()
+            if sid <= mark:
+                break
+            newest = max(newest, sid)
+            if str(st.status()) != "SKIPPED":
+                ran.append(st)
+        return ran, newest
+
     def snapshot(self) -> StageStats:
         """Stats of every job and stage that finished since the last call."""
         self._settle()
@@ -130,16 +171,8 @@ class Tracer:
         top_job = self._max_job()
         out.jobs = top_job - self._last_job
         self._last_job = top_job
-        lst = self._stages()  # newest first
-        newest = self._last_stage
-        for i in range(lst.size()):
-            st = lst.apply(i)
-            sid = st.stageId()
-            if sid <= self._last_stage:
-                break
-            newest = max(newest, sid)
-            if str(st.status()) == "SKIPPED":
-                continue
+        ran, self._last_stage = self._stages_since(self._last_stage)
+        for st in ran:
             out.stages += 1
             out.tasks += st.numTasks()
             out.single_task_stages += st.numTasks() == 1
@@ -147,31 +180,4 @@ class Tracer:
             out.shuffle_write_bytes += st.shuffleWriteBytes()
             out.spill_bytes += st.memoryBytesSpilled() + st.diskBytesSpilled()
             out.input_rows += st.inputRecords()
-        self._last_stage = newest
         return out
-
-
-class _Region:
-    def __init__(self, tracer: Tracer, name: str) -> None:
-        self.t, self.name = tracer, name
-
-    def __enter__(self):
-        t = self.t
-        self.outer = t._depth[self.name] == 0
-        t._depth[self.name] += 1
-        self.parent = t._stack[-1] if t._stack else None
-        self.index = len(t.spans)
-        t.spans.append((self.name, time.monotonic(), 0.0, self.parent))
-        t._stack.append(self.index)
-        return self
-
-    def __exit__(self, *exc):
-        t = self.t
-        t._stack.pop()
-        t._depth[self.name] -= 1
-        name, start, _, parent = t.spans[self.index]
-        if self.outer:
-            t.spans[self.index] = (name, start, time.monotonic(), parent)
-        else:  # nested re-entry of the same layer: keep only the outermost
-            t.spans[self.index] = (name, start, start, parent)
-        return False

@@ -9,6 +9,7 @@ noop sink, and a transfer op is the whole public-API call.
 
 from __future__ import annotations
 
+import hashlib
 import importlib.util
 import json
 import os
@@ -46,13 +47,26 @@ class Op:
         self.label, self.execute, self.build, self.layer = label, execute, build, layer
 
 
+CANON_PATH = os.path.join("tests", "util.py")
+
+
 def _load_canonical_rows():
     """The oracle canonicalisation the test suite uses (tests/util.py)."""
     spec = importlib.util.spec_from_file_location(
-        "perfbench_oracle_canon", os.path.join(os.getcwd(), "tests", "util.py"))
+        "perfbench_oracle_canon", os.path.join(os.getcwd(), CANON_PATH))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod.canonical_rows
+
+
+def _digest(*texts: str) -> str:
+    """A short cache key: cached data is remade when what made it changes."""
+    return hashlib.sha256("\0".join(texts).encode()).hexdigest()[:16]
+
+
+def _source(path: str) -> str:
+    with open(path) as fh:
+        return fh.read()
 
 
 def _dir_bytes_and_files(path: str) -> tuple[int, int]:
@@ -65,18 +79,23 @@ def _dir_bytes_and_files(path: str) -> tuple[int, int]:
 
 
 class QueryWorkload:
-    """Registry queries over generated tables, each op built then executed.
+    """The ``RELATIONAL`` registry queries over generated tables, each op
+    built then executed.
 
     The tables do not depend on the seed (the seed orders the queries), so
     they and the DuckDB oracle results are made once per checkout and
-    reused."""
+    reused.  Their cache keys hash the generator's source and the oracle
+    SQL with its canonicalisation, so a change to either remakes them."""
 
+    name = "relational"
+    queries = RELATIONAL
     writes = False
 
-    def __init__(self, name: str, queries: list[str], sf: float, data_root: str):
-        self.name, self.queries, self.sf = name, queries, sf
+    def __init__(self, sf: float, data_root: str):
+        self.sf = sf
         self.canonical_rows = _load_canonical_rows()
-        self.data_dir = os.path.join(data_root, f"tables-sf{sf}")
+        self.data_dir = os.path.join(data_root,
+                                     f"tables-sf{sf}-{_digest(_source(datagen.__file__))}")
 
     def prepare(self, seed: int, run_dir: str) -> None:
         from bigquack_spark.queries import QUERIES
@@ -88,7 +107,8 @@ class QueryWorkload:
         for t in TABLES:
             self.duck.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                               f"read_parquet('{self.data_dir}/{t}.parquet')")
-        key = "-".join(q.split("_")[0] for q in self.queries)
+        key = _digest(_source(CANON_PATH),
+                      *(f"{q}\n{self.specs[q].oracle}" for q in self.queries))
         self.oracle = _cached(os.path.join(self.data_dir, f"_ORACLE-{key}.json"),
                               self._oracle_results)
         # rows the pass reads, at the tables' logical size: each query
@@ -358,7 +378,7 @@ def _commit_rows(target: str) -> int | None:
 def make(name: str, data_root: str, smoke: bool = False):
     """The named workload; ``smoke`` shrinks every input to sf0.001."""
     if name == "relational":
-        return QueryWorkload("relational", RELATIONAL, 0.001 if smoke else 0.1, data_root)
+        return QueryWorkload(0.001 if smoke else 0.1, data_root)
     if name == "transfer":
-        return TransferWorkload(0.001 if smoke else 0.05, 2)
+        return TransferWorkload(0.001 if smoke else 0.025, 2)
     raise ValueError(f"unknown workload {name!r}")

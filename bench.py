@@ -339,13 +339,13 @@ def _headline_bucketed_block(spark, trend_dir: str) -> dict | None:
         # path — so the measured layout IS what a deployment lands, not a
         # separate save_bucketed rewrite
         t0 = time.monotonic()
-        transfer(spark, trend_dir, "orders", "bench_hb_orders", meter=False,
+        transfer(spark, trend_dir, "orders", "bench_hb_orders",
                  bucket_by={"cols": ["o_orderkey"], "num_buckets": 32,
                             "sort_cols": ["o_orderkey"]})
-        transfer(spark, trend_dir, "lineitem", "bench_hb_lineitem", meter=False,
+        transfer(spark, trend_dir, "lineitem", "bench_hb_lineitem",
                  bucket_by={"cols": ["l_orderkey"], "num_buckets": 32,
                             "sort_cols": ["l_orderkey"]})
-        transfer(spark, trend_dir, "events", "bench_hb_events", meter=False,
+        transfer(spark, trend_dir, "events", "bench_hb_events",
                  bucket_by={"cols": ["user_id"], "num_buckets": 32})
         write_s = round(time.monotonic() - t0, 4)
 
@@ -792,8 +792,7 @@ def _events_shredded_block(spark, trend_dir: str) -> dict | None:
         # AND bucket_by user_id (r10 #8 — q21's wide distinct first phase
         # and q22's sessionize window both become exchange-free)
         transfer(spark, trend_dir, "events", table, shred="auto",
-                 bucket_by={"cols": ["user_id"], "num_buckets": 32},
-                 meter=False)
+                 bucket_by={"cols": ["user_id"], "num_buckets": 32})
         land_sec = round(time.monotonic() - t0, 4)
         assert "k" in spark.table(table).columns, "auto shred must type $.k"
         es = spark.table(table)

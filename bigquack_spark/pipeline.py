@@ -8,7 +8,10 @@ single-stream (SURVEY §2.1 S4 defect).
 Spark version: the whole pump is ONE declarative statement — scan with
 pushdown, write create-or-append — executed in parallel across all
 partitions with no driver-side batch loop and no collect.  Row count comes
-from the committed table, not from driver accounting.
+from the landing write itself: an ``Observation`` on that write counts the
+rows it committed (``sinks.table.ingest_create_append``), the analogue of
+the pump's running total (bigquack.go:125-128), so the target is never
+re-scanned.
 """
 
 from __future__ import annotations
@@ -96,12 +99,10 @@ def transfer(
     fmt: str = "parquet",
     shred: "dict | str | None" = None,
     bucket_by: dict | None = None,
-    meter: bool = True,
 ) -> int:
     """Copy a (projected, filtered) source table into a managed target table;
-    returns rows ingested this call (``meter=False`` skips the before/after
-    row counts — two extra footer scans that are metering, not landing —
-    and returns -1; benches timing the landing itself use it).  Signature mirrors
+    returns rows ingested this call, counted on the landing write itself
+    (no scan of the target before or after).  Signature mirrors
     ``BQ2Duck(ctx, duckDBPath, project, dataset, table, opts)``
     (bigquack.go:64-77) with opts = SelectedFields/RowRestriction/MaxStreamCount.
 
@@ -136,11 +137,6 @@ def transfer(
     Auto always keeps the raw column; no JSON column found means land raw
     (never fail a first ingest on inference)."""
     start = time.monotonic()
-    before = (
-        spark.table(target_table).count()
-        if meter and spark.catalog.tableExists(target_table)
-        else 0
-    )
     df = read_source(
         spark, source_location, source_table,
         columns=columns, predicate=predicate, max_streams=max_streams, fmt=fmt,
@@ -153,24 +149,11 @@ def transfer(
         df = shred_json(
             df, shred["col"], shred["schema"], keep_raw=bool(shred.get("keep_raw", False))
         )
-    if bucket_by is not None:
-        from bigquack_spark.sinks.table import check_schema_compatible, table_exists
-
-        if table_exists(spark, target_table):
-            check_schema_compatible(spark, target_table, df)
-        writer = df.write.mode("append").bucketBy(
-            int(bucket_by.get("num_buckets", 32)), *bucket_by["cols"]
-        )
-        if bucket_by.get("sort_cols"):
-            writer = writer.sortBy(*bucket_by["sort_cols"])
-        writer.saveAsTable(target_table)
-    else:
-        ingest_create_append(df, target_table)
+    total = ingest_create_append(df, target_table, bucket_by=bucket_by)
     if isinstance(shred, dict):
         # provenance for shred="auto" re-ingest replay (recorded for
         # explicit specs too, so a later auto append replays them)
         _record_shred_properties(spark, target_table, shred)
-    total = (spark.table(target_table).count() - before) if meter else -1
     # duration log, bigquack.go:135-138
     log.info("transfer complete", extra={"rows": total, "seconds": time.monotonic() - start})
     return total

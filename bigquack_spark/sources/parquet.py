@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import math
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -79,13 +78,13 @@ def load_table(
     Pick a near-unique key that the query already reads.
     """
     path = table_path(sf_dir, name)
-    df = spark.read.parquet(path)
-    df = _normalize_nanos(df)
+    read = spark.read.parquet(path)
+    df = _normalize_nanos(read)
     if predicate:
         df = df.filter(predicate)
     if rebalance:
         target = spark.sparkContext.defaultParallelism
-        if rebalance != "auto" or _estimated_scan_splits(spark, path) < target:
+        if rebalance != "auto" or _estimated_scan_splits(read) < target:
             # Repartition BEFORE the projection: a rebalance_key outside
             # ``columns`` would otherwise fail analysis (ADVICE r12) — the
             # hash key is cheap and Catalyst's ColumnPruning still folds the
@@ -100,59 +99,28 @@ def load_table(
     return df
 
 
-_SIZE_UNIT = {
-    "": 1, "b": 1,
-    "k": 1024, "kb": 1024,
-    "m": 1024**2, "mb": 1024**2,
-    "g": 1024**3, "gb": 1024**3,
-    "t": 1024**4, "tb": 1024**4,
-}
-
-
-def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
-    """Read a byte-valued Spark conf ("134217728", "128m", "2mb", ...)."""
-    try:
-        raw = spark.conf.get(key)
-    except Exception:
-        return default
-    m = re.fullmatch(r"\s*(\d+)\s*([a-zA-Z]*)\s*", str(raw or ""))
-    if not m or m.group(2).lower() not in _SIZE_UNIT:
-        return default
-    return int(m.group(1)) * _SIZE_UNIT[m.group(2).lower()]
-
-
-def _estimated_scan_splits(spark: SparkSession, path: str) -> int:
-    """Planned scan-split count for a parquet path, from the file listing.
+def _estimated_scan_splits(df: DataFrame) -> int:
+    """Planned scan-split count of a freshly read file-source DataFrame.
 
     r12's guard probed ``df.rdd.getNumPartitions()``, which forces an
     analyzer pass + RDD conversion per ``load_table`` call at query-BUILD
     time on all 89 auto-rebalance paths (r12 verdict #3).  This computes
     the same number Spark's ``FilePartition.maxSplitBytes`` packing will
     produce — ``min(maxPartitionBytes, max(openCost, totalBytes/cores))``
-    sized splits greedily packed — from ``os.stat`` alone: no JVM call, no
-    analyzer pass.  The guard only compares the count against the session's
-    default parallelism, so the ±1 packing edge cannot flip a layout that
-    is not already borderline (verified against the RDD probe on every
-    bench table/layout — tests/test_pipeline.py).
+    sized splits greedily packed — from the file index Spark built when it
+    read the frame (the relation's ``inputFiles`` and ``sizeInBytes``), so
+    it runs no job, lists nothing again and works on any filesystem Spark
+    can read (``file://``, ``s3://``, ...).  The guard only compares the
+    count against the session's default parallelism, so the ±1 packing edge
+    cannot flip a layout that is not already borderline (verified against
+    the RDD probe on every bench table/layout — tests/test_pipeline.py).
     """
-    sizes: list[int] = []
-    try:
-        if os.path.isdir(path):
-            for root, _dirs, files in os.walk(path):
-                sizes.extend(
-                    os.path.getsize(os.path.join(root, f))
-                    for f in files
-                    if f.endswith(".parquet")
-                )
-        elif os.path.exists(path):
-            sizes.append(os.path.getsize(path))
-    except OSError:
-        return 1
-    if not sizes:
-        return 1
-    max_split = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
-    open_cost = _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 * 1024**2)
-    total = sum(sizes) + open_cost * len(sizes)
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    max_split = conf.filesMaxPartitionBytes()
+    open_cost = conf.filesOpenCostInBytes()
+    relation = df._jdf.queryExecution().analyzed().relation()
+    total = relation.sizeInBytes() + open_cost * len(relation.inputFiles())
     per_core = total / max(spark.sparkContext.defaultParallelism, 1)
     split = min(max_split, max(open_cost, per_core))
     return max(1, math.ceil(total / split))

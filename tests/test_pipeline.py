@@ -256,6 +256,63 @@ def test_task_retry_rereads_partition(tmp_path):
     assert len(os.listdir(marker_dir)) == 4  # every partition failed once
 
 
+def test_ingest_count_exactly_once_under_task_retry(tmp_path):
+    """``ingest_create_append`` counts the rows it landed with an
+    ``Observation`` on the write.  A task attempt that emits rows and then
+    fails must not add to that count: on a ``local[2, 2]`` master (the one
+    that retries, see test_task_retry_rereads_partition) the first attempt
+    of every partition passes two batches through the write and then
+    raises, and the returned count must still equal the rows landed and
+    the source rows, on the create and on the append."""
+    import subprocess
+    import sys
+    import textwrap
+
+    marker_dir = str(tmp_path / "attempts")
+    os.makedirs(marker_dir, exist_ok=True)
+    script = textwrap.dedent(f"""
+        import os
+        from pyspark.sql import SparkSession
+        from bigquack_spark.sinks.table import ingest_create_append
+        spark = (SparkSession.builder.master("local[2, 2]")
+                 .config("spark.ui.enabled", "false")
+                 .config("spark.sql.shuffle.partitions", "4")
+                 .config("spark.sql.warehouse.dir", {str(tmp_path / "wh")!r})
+                 .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50")
+                 .getOrCreate())
+        marker_dir = {marker_dir!r}
+
+        def flaky_frame(tag):
+            def flaky(batches):
+                from pyspark import TaskContext
+                marker = os.path.join(
+                    marker_dir, f"{{tag}}-p{{TaskContext.get().partitionId()}}")
+                first = not os.path.exists(marker)
+                if first:
+                    open(marker, "w").close()
+                for i, pdf in enumerate(batches):
+                    if first and i == 2:
+                        raise RuntimeError("injected transient failure (first attempt)")
+                    yield pdf
+            return spark.range(0, 1000, numPartitions=4).mapInPandas(flaky, "id bigint")
+
+        n = ingest_create_append(flaky_frame("create"), "retry_t")
+        assert n == spark.table("retry_t").count() == 1000, n
+        n = ingest_create_append(flaky_frame("append"), "retry_t")
+        assert n == 1000, n
+        assert spark.table("retry_t").count() == 2000
+        spark.stop()
+        print("COUNT_OK")
+    """)
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "COUNT_OK" in proc.stdout
+    assert len(os.listdir(marker_dir)) == 8  # every partition failed once per write
+
+
 def test_python_datasource_connector(spark, tmp_path):
     """The bigquery_stub Python Data Source implements the reference's read
     session contract: schema fetch, selected_fields pruning, pushFilters
@@ -473,18 +530,20 @@ def test_transfer_bucket_by_lands_exchange_free_join(spark):
     both fact tables bucketed+sorted on the join key, and the q68-class
     headline frame over the landed tables plans its fact join with NO
     exchange on either input (the layout win, paid once at landing)."""
+    import pytest
     from pyspark.sql import functions as F
 
     from bigquack_spark.queries.relational import nation_profit_frame
 
     for t in ("bkt_orders", "bkt_lineitem"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    transfer(spark, SF_SMOKE, "orders", "bkt_orders",
-             bucket_by={"cols": ["o_orderkey"], "num_buckets": 8,
-                        "sort_cols": ["o_orderkey"]})
-    transfer(spark, SF_SMOKE, "lineitem", "bkt_lineitem",
-             bucket_by={"cols": ["l_orderkey"], "num_buckets": 8,
-                        "sort_cols": ["l_orderkey"]})
+    orders_spec = {"cols": ["o_orderkey"], "num_buckets": 8, "sort_cols": ["o_orderkey"]}
+    n_orders = transfer(spark, SF_SMOKE, "orders", "bkt_orders", bucket_by=orders_spec)
+    assert n_orders == spark.table("bkt_orders").count() > 0
+    n_lineitem = transfer(spark, SF_SMOKE, "lineitem", "bkt_lineitem",
+                          bucket_by={"cols": ["l_orderkey"], "num_buckets": 8,
+                                     "sort_cols": ["l_orderkey"]})
+    assert n_lineitem == spark.table("bkt_lineitem").count() > 0
     p = (spark.read.parquet(f"{SF_SMOKE}/part.parquet")
          .filter("p_type = 'PROMO'").select("p_partkey", "p_retailprice"))
     s = spark.read.parquet(f"{SF_SMOKE}/supplier.parquet").select(
@@ -498,12 +557,16 @@ def test_transfer_bucket_by_lands_exchange_free_join(spark):
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning(l_orderkey" not in plan
     assert "Exchange hashpartitioning(o_orderkey" not in plan
-    # appends keep the bucket spec usable (no incompatible-spec error)
-    before = spark.table("bkt_orders").count()
-    transfer(spark, SF_SMOKE, "orders", "bkt_orders",
-             bucket_by={"cols": ["o_orderkey"], "num_buckets": 8,
-                        "sort_cols": ["o_orderkey"]})
-    assert spark.table("bkt_orders").count() == 2 * before
+    # appends keep the bucket spec usable (no incompatible-spec error) and
+    # return the rows that append landed
+    appended = transfer(spark, SF_SMOKE, "orders", "bkt_orders", bucket_by=orders_spec)
+    assert appended == n_orders
+    assert spark.table("bkt_orders").count() == 2 * n_orders
+    # a bucketed append is schema-gated exactly like the plain one
+    with pytest.raises(ValueError, match="record schema does not match"):
+        transfer(spark, SF_SMOKE, "orders", "bkt_orders",
+                 columns=["o_orderkey", "o_orderdate"], bucket_by=orders_spec)
+    assert spark.table("bkt_orders").count() == 2 * n_orders
     for t in ("bkt_orders", "bkt_lineitem"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
@@ -762,13 +825,15 @@ def test_load_table_auto_rebalance_guard(spark, tmp_path):
 def test_estimated_scan_splits_matches_planner(spark, tmp_path):
     """r12 verdict #5: the auto-rebalance guard's r12 probe
     (`df.rdd.getNumPartitions()`) forced an analyzer pass + RDD conversion
-    per load_table call at query-BUILD time.  The r13 probe computes the
-    planner's split count from the file listing alone
-    (`_estimated_scan_splits`).  Pin (a) decision-equivalence with the real
-    planner count on every bench table at both smoke SFs, (b) closeness and
-    zero-Exchange on a single-file multi-row-group layout (the bench
-    multifile shape: a properly laid-out table at scale must NOT pay the
-    spread exchange)."""
+    per load_table call at query-BUILD time.  `_estimated_scan_splits`
+    computes the planner's split count from the file index of the freshly
+    read frame.  Pin (a) decision-equivalence with the real planner count
+    on every bench table at both smoke SFs, (b) closeness and zero-Exchange
+    on a single-file multi-row-group layout (the bench multifile shape: a
+    properly laid-out table at scale must NOT pay the spread exchange),
+    read both by plain path and by ``file://`` URI (a listing that only
+    understood local paths saw no files behind a URI and forced the
+    exchange)."""
     import hashlib
 
     import pyarrow as pa
@@ -785,8 +850,9 @@ def test_estimated_scan_splits_matches_planner(spark, tmp_path):
             path = P.table_path(sf_dir, name)
             if not os.path.exists(path):
                 continue
-            actual = spark.read.parquet(path).rdd.getNumPartitions()
-            est = _estimated_scan_splits(spark, path)
+            df = spark.read.parquet(path)
+            actual = df.rdd.getNumPartitions()
+            est = _estimated_scan_splits(df)
             assert (est < par) == (actual < par), (
                 f"{path}: est {est} vs planner {actual} flip the guard at {par}"
             )
@@ -803,17 +869,19 @@ def test_estimated_scan_splits_matches_planner(spark, tmp_path):
     orig = P.table_path
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(1024 * 1024))
-        actual = spark.read.parquet(path).rdd.getNumPartitions()
-        est = _estimated_scan_splits(spark, path)
-        assert actual >= par, "layout under test must be multi-split"
-        assert (est < par) == (actual < par)
-        assert abs(est - actual) <= max(2, actual // 4)
-        P.table_path = lambda sf_dir, name: path
-        m = load_table(spark, "ignored", "mrg", rebalance="auto", rebalance_key="doc_id")
-        mplan = m._sc._jvm.PythonSQLUtils.explainString(
-            m._jdf.queryExecution(), "formatted"
-        )
-        assert "Exchange" not in mplan
+        for loc in (path, "file://" + path):
+            df = spark.read.parquet(loc)
+            actual = df.rdd.getNumPartitions()
+            est = _estimated_scan_splits(df)
+            assert actual >= par, "layout under test must be multi-split"
+            assert (est < par) == (actual < par), loc
+            assert abs(est - actual) <= max(2, actual // 4), loc
+            P.table_path = lambda sf_dir, name, loc=loc: loc
+            m = load_table(spark, "ignored", "mrg", rebalance="auto", rebalance_key="doc_id")
+            mplan = m._sc._jvm.PythonSQLUtils.explainString(
+                m._jdf.queryExecution(), "formatted"
+            )
+            assert "Exchange" not in mplan, loc
     finally:
         P.table_path = orig
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)

@@ -80,13 +80,13 @@ def main(trend_dir: str) -> dict:
     tables = ("attr_orders", "attr_lineitem", "attr_events")
     for t in tables:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-    transfer(spark, trend_dir, "orders", "attr_orders", meter=False,
+    transfer(spark, trend_dir, "orders", "attr_orders",
              bucket_by={"cols": ["o_orderkey"], "num_buckets": 32,
                         "sort_cols": ["o_orderkey"]})
-    transfer(spark, trend_dir, "lineitem", "attr_lineitem", meter=False,
+    transfer(spark, trend_dir, "lineitem", "attr_lineitem",
              bucket_by={"cols": ["l_orderkey"], "num_buckets": 32,
                         "sort_cols": ["l_orderkey"]})
-    transfer(spark, trend_dir, "events", "attr_events", meter=False,
+    transfer(spark, trend_dir, "events", "attr_events",
              bucket_by={"cols": ["user_id"], "num_buckets": 32})
 
     p = (

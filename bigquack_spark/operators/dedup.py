@@ -598,93 +598,32 @@ def simhash_jaccard_near_dup(
 # ------------------------------------------------ dedup clustering ----------
 
 
-def connected_components(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iterations: int = 30,
-) -> DataFrame:
-    """Connected components over an undirected pair graph -> the transitive
-    dedup closure: near-dup PAIRS become dedup GROUPS (if a~b and b~c then
-    a,b,c collapse together even though a~c was never tested).
-
-    Iterative min-label propagation, fully distributed: each round is one
-    shuffle join (labels to neighbors) + one min-aggregate, and labels only
-    ever decrease, so the fixpoint is the per-component minimum id.  Rounds
-    = graph diameter — for dedup graphs (small dense clusters) a handful.
-    The driver loop holds one scalar (the changed-count) per round, never
-    data; ``localCheckpoint`` truncates the lineage so the plan stays flat
-    across iterations.  For adversarial long-chain graphs at web scale,
-    swap the propagation body for large-star/small-star (same loop shape,
-    O(log n) rounds).
-
-    Returns (node, cluster_id) for every node that appears in an edge;
-    cluster_id is the smallest node id in the component.  Isolated docs
-    (no edges) are their own cluster by definition and are not emitted.
-    """
-    # Materialize the edge list ONCE before anything else: `edges` is
-    # usually the tip of an expensive pipeline (LSH -> candidates -> verify)
-    # and appears twice in the symmetrization union — without this
-    # checkpoint the whole upstream computes twice, and again per loop
-    # round.  After it, every iteration touches only the bounded edge list.
-    edges = edges.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).localCheckpoint()
-    # Size loop parallelism to the graph, not the session: the rounds
-    # reshuffle the SAME (small vs corpus) edge list, and per-task overhead
-    # times iterations dominates under a corpus-tuned partition count.
-    # ~1M edges/partition; the count is a driver scalar off the checkpoint.
-    n_parts = max(4, min(2048, (edges.count() // 1_000_000) + 1))
-    sym = (
-        edges.union(edges.select(F.col("dst"), F.col("src")))
-        .distinct()
-        .repartition(n_parts, "dst")
-        .localCheckpoint()
-    )
-    cur = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iterations):
-        nbr_min = (
-            sym.join(cur, sym.dst == cur.node)
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        prop = (
-            cur.join(nbr_min, cur.node == nbr_min.src, "left")
-            .select(
-                F.col("node"),
-                F.col("comp").alias("old_comp"),
-                F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))).alias(
-                    "new_comp"
-                ),
-            )
-            .localCheckpoint()
-        )
-        n_changed = prop.filter(F.col("new_comp") < F.col("old_comp")).count()
-        cur = prop.select("node", F.col("new_comp").alias("comp"))
-        if n_changed == 0:
-            break
-    return cur.select("node", F.col("comp").alias("cluster_id"))
+#: Round cap for :func:`connected_components`.  Large-star/small-star
+#: contracts any topology in O(log n) rounds; running out raises instead of
+#: returning split components.
+CC_MAX_ROUNDS = 20
 
 
-def two_star_components(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star edge
-    rewrites (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the web-scale alternative to plain min-label
-    propagation (:func:`connected_components`).
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components over an undirected ``(a, b)`` pair graph -> the
+    transitive dedup closure: near-dup PAIRS become dedup GROUPS (if a~b
+    and b~c then a,b,c collapse together even though a~c was never tested).
 
-    Label propagation needs ~diameter rounds: a 10M-link chain (adversarial
-    crawl graph) needs 10M shuffles.  The two-star rewrites contract paths
-    aggressively — O(log n) rounds on ANY topology:
+    Contract:
+
+    - returns (node, cluster_id) for every node with a non-self-loop edge;
+      a node whose only edge is a self-loop, or that has no edge, is not
+      emitted (isolated docs are their own cluster by definition);
+    - cluster_id is the component's minimum node id;
+    - finishes in O(log n) rounds on any topology;
+    - raises ``RuntimeError`` if it has not converged after
+      :data:`CC_MAX_ROUNDS` rounds.
+
+    Alternating large-star / small-star edge rewrites (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14).  Label
+    propagation needs ~diameter rounds — a 10M-link chain (adversarial crawl
+    graph) needs 10M shuffles; the two-star rewrites contract paths
+    aggressively:
 
     - **large-star**: per node u, attach every strictly-larger neighbor to
       u's smallest neighbor-or-self m(u);
@@ -692,21 +631,24 @@ def two_star_components(
       smaller neighbors to the minimum.
 
     Both passes are one groupBy(min) + one join on the same key — two
-    shuffles per round, partitioned identically, no driver state beyond a
-    three-scalar convergence signature.  The edge set only shrinks toward
-    the star form (node -> component min), so the (count, sum-of-ends)
-    signature is monotone and stalls exactly at the fixed point.
-
-    Same contract as :func:`connected_components`: returns (node,
-    cluster_id) for every node incident to an edge; cluster_id is the
-    component minimum.  Self-loops ignored; isolated nodes not emitted.
+    shuffles per round, partitioned identically, and the driver holds only
+    a four-scalar convergence signature per round, never data.  The edge
+    set only shrinks toward the star form (node -> component min), so the
+    signature stalls exactly at the fixed point.
     """
+    # Materialize the edge list ONCE: `edges` is usually the tip of an
+    # expensive pipeline (LSH -> candidates -> verify); without the
+    # checkpoint the whole upstream recomputes every round.
     e = (
-        edges.select(F.col(a_col).cast("long").alias("u"), F.col(b_col).cast("long").alias("v"))
+        edges.select(F.col("a").cast("long").alias("u"), F.col("b").cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
     )
+    # Size loop parallelism to the graph, not the session: the rounds
+    # reshuffle the same (small vs corpus) edge list, and per-task overhead
+    # times rounds dominates under a corpus-tuned partition count.
+    # ~1M edges/partition; the count is a driver scalar off the checkpoint.
     n_parts = max(4, min(2048, (e.count() // 1_000_000) + 1))
 
     def large_star(ed: DataFrame) -> DataFrame:
@@ -735,29 +677,26 @@ def two_star_components(
             .distinct()
         )
 
-    prev_sig, converged = None, False
-    for _ in range(max_iterations):
+    prev_sig = None
+    for _ in range(CC_MAX_ROUNDS):
         e = small_star(large_star(e)).repartition(n_parts, "u").localCheckpoint()
         # Order-independent edge-set signature: count, end sums, and a sum
         # of per-edge xxhash64 — the hash term kills the {(3,1),(4,2)} vs
         # {(4,1),(3,2)} class of sum collisions that count+sums alone admit.
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("u").alias("su"),
-            F.sum("v").alias("sv"),
-            F.sum(F.xxhash64("u", "v")).alias("sh"),
-        ).first()
-        sig = (sig["n"], sig["su"], sig["sv"], sig["sh"])
+        sig = tuple(
+            e.agg(
+                F.count(F.lit(1)), F.sum("u"), F.sum("v"), F.sum(F.xxhash64("u", "v"))
+            ).first()
+        )
         if sig == prev_sig:
-            converged = True
             break
         prev_sig = sig
-    if not converged:
+    else:
         # The final min-aggregate assumes a star-form edge set; on a
         # non-converged set it would silently split components.
         raise RuntimeError(
-            f"two_star_components did not converge in {max_iterations} "
-            "rounds (O(log n) expected); raise max_iterations"
+            f"connected_components did not converge in {CC_MAX_ROUNDS} "
+            "rounds (O(log n) expected)"
         )
     # Converged edges form stars; each node's component is the min over its
     # partners and itself — one final bounded aggregate.
@@ -886,15 +825,10 @@ def incremental_dedup(
     return marked.drop("__in_hist", "__batch_min")
 
 
-def incremental_components(
-    old_components: DataFrame,
-    new_pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-) -> DataFrame:
+def incremental_components(old_components: DataFrame, new_pairs: DataFrame) -> DataFrame:
     """Incremental connected components — graph IVM: fold a batch of NEW
-    edges into an EXISTING clustering (``node``/``cluster_id``, min-label
-    convention) without recomputing history.
+    edges into an EXISTING clustering (``node``/``cluster_id``,
+    component-minimum convention) without recomputing history.
 
     Contract-then-solve: each new edge's endpoints map to their current
     cluster label (identity for unseen nodes), CC runs on the CONTRACTED
@@ -910,7 +844,7 @@ def incremental_components(
         F.col("node").alias("__n"), F.col("cluster_id").alias("__l")
     )
     contracted = (
-        new_pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+        new_pairs.select("a", "b")
         .join(labels.withColumnRenamed("__n", "a").withColumnRenamed("__l", "__la"), "a", "left")
         .join(labels.withColumnRenamed("__n", "b").withColumnRenamed("__l", "__lb"), "b", "left")
         .select(
@@ -928,8 +862,8 @@ def incremental_components(
     )
     # new nodes from the batch that never appeared in history
     new_nodes = (
-        new_pairs.select(F.col(a_col).alias("node"))
-        .unionAll(new_pairs.select(F.col(b_col).alias("node")))
+        new_pairs.select(F.col("a").alias("node"))
+        .unionAll(new_pairs.select(F.col("b").alias("node")))
         .distinct()
         .join(old_components.select("node"), "node", "left_anti")
     )

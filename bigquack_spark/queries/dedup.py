@@ -285,6 +285,17 @@ def q36_lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _near_dup_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The closure queries' shared input: the documents load and its
+    near-dup pair graph ``(a, b)`` at q36's LSH parameters."""
+    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    pairs = D.near_dup_pairs(
+        docs, num_hashes=NUM_HASHES, rows_per_band=ROWS_PER_BAND,
+        shingle_len=1, threshold=JACCARD_THRESHOLD,
+    ).select("a", "b")
+    return docs, pairs
+
+
 _CLOSURE_ORACLE = f"""
     WITH RECURSIVE {_SIG_SQL},
     bands AS (
@@ -326,41 +337,24 @@ _CLOSURE_ORACLE = f"""
 )
 def q86_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive dedup closure: the q36 near-dup PAIRS become dedup GROUPS
-    via distributed connected components (min-label propagation; see
-    operators/dedup.connected_components for the scale analysis).  The
-    oracle replays the identical pair pipeline, then closes it with a
-    recursive CTE — component membership, including everything transitivity
-    adds beyond the tested pairs, must match exactly."""
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
-    pairs = D.near_dup_pairs(
-        docs, num_hashes=NUM_HASHES, rows_per_band=ROWS_PER_BAND,
-        shingle_len=1, threshold=JACCARD_THRESHOLD,
-    ).select("a", "b")
+    via distributed connected components (large-star/small-star, O(log n)
+    rounds; see operators/dedup.connected_components for the scale
+    analysis).  The oracle replays the identical pair pipeline, then closes
+    it with a recursive CTE — component membership, including everything
+    transitivity adds beyond the tested pairs, must match exactly."""
+    _, pairs = _near_dup_graph(spark, sf_dir)
     return D.connected_components(pairs)
 
 
 @query(
     "q99_dedup_clusters_twostar",
-    # Same contract as q86 — component membership is algorithm-independent,
-    # so both implementations are diffed against the identical recursive-CTE
-    # closure oracle.
     oracle=_CLOSURE_ORACLE,
 )
 def q99_dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive dedup closure computed by the large-star/small-star
-    contraction (operators/dedup.two_star_components) instead of min-label
-    propagation (q86).  Propagation runs diameter rounds; two-star runs
-    O(log n) rounds on any topology — the variant you want when the dup
-    graph has long chains (boilerplate crawls).  Oracle: the same
-    recursive-CTE closure as q86; both algorithms must land on identical
-    cluster assignments."""
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
-    pairs = D.near_dup_pairs(
-        docs, num_hashes=NUM_HASHES, rows_per_band=ROWS_PER_BAND,
-        shingle_len=1, threshold=JACCARD_THRESHOLD,
-    ).select("a", "b")
-    return D.two_star_components(pairs)
-
+    """q86's closure under its own registry name (callers key queries by
+    name): connected_components is the large-star/small-star contraction,
+    so both names return the same frame against the same oracle."""
+    return q86_dedup_clusters(spark, sf_dir)
 
 
 _Q117_MAX_HAMMING = 3
@@ -753,11 +747,7 @@ def q164_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a cluster-keyed aggregate on top of the q86 plan; the closure
     itself is the O(log n)-round distributed CC, so this inherits its
     100 TB posture unchanged."""
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
-    pairs = D.near_dup_pairs(
-        docs, num_hashes=NUM_HASHES, rows_per_band=ROWS_PER_BAND,
-        shingle_len=1, threshold=JACCARD_THRESHOLD,
-    ).select("a", "b")
+    docs, pairs = _near_dup_graph(spark, sf_dir)
     cc = D.connected_components(pairs)
     meta = docs.select("doc_id", "n_chars")
     joined = cc.join(meta, cc["node"] == meta["doc_id"])
@@ -1101,11 +1091,7 @@ def q227_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan is unchanged (score joins in the same place)."""
     from pyspark.sql.window import Window
 
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
-    pairs = D.near_dup_pairs(
-        docs, num_hashes=NUM_HASHES, rows_per_band=ROWS_PER_BAND,
-        shingle_len=1, threshold=JACCARD_THRESHOLD,
-    ).select("a", "b")
+    docs, pairs = _near_dup_graph(spark, sf_dir)
     comps = D.connected_components(pairs)
     scored = comps.join(
         docs.select(F.col("doc_id").alias("node"), F.length("text").cast("long").alias("n_chars")),
@@ -1147,11 +1133,7 @@ def q233_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     NearDupIngestSink emits verdicts; this maintains the groups)."""
     from bigquack_spark.operators.corpus import _hash_bucket
 
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
-    pairs = D.near_dup_pairs(
-        docs, num_hashes=NUM_HASHES, rows_per_band=ROWS_PER_BAND,
-        shingle_len=1, threshold=JACCARD_THRESHOLD,
-    ).select("a", "b")
+    _, pairs = _near_dup_graph(spark, sf_dir)
     bkt_a = _hash_bucket(F.col("a"), INCR_SALT, 10)
     bkt_b = _hash_bucket(F.col("b"), INCR_SALT, 10)
     old_pairs = pairs.filter((bkt_a < 8) & (bkt_b < 8))
@@ -1740,11 +1722,7 @@ def q329_dedup_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     audits."""
     from pyspark.sql.window import Window
 
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
-    pairs = D.near_dup_pairs(
-        docs, num_hashes=NUM_HASHES, rows_per_band=ROWS_PER_BAND,
-        shingle_len=1, threshold=JACCARD_THRESHOLD,
-    ).select("a", "b")
+    docs, pairs = _near_dup_graph(spark, sf_dir)
     comps = D.connected_components(pairs)
     toks = F.filter(
         F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""

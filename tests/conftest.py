@@ -24,21 +24,58 @@ SF_T2 = "/root/testdata/sf0.01"
 # summary lines.  Workers are plain pytest runs: same plugins, same
 # fixtures (each builds its own session-scoped SparkSession), same flags
 # (-x fails a worker fast and the master propagates the failure).
-# Set BQ_TEST_SHARDS=1 to force the old serial behavior.
+# The worker count defaults to what the host's cores and memory hold
+# (_default_shards); set BQ_TEST_SHARDS=N to override it, =1 to force the
+# old serial behavior.  SPARK_GRAFT_DRIVER_MEM, if set, overrides the
+# per-worker heap.
 # ---------------------------------------------------------------------------
 
 _SHARD_ENV = "BQ_TEST_SHARD"
 _NSHARDS_ENV = "BQ_TEST_SHARDS"
+_DRIVER_MEM_ENV = "SPARK_GRAFT_DRIVER_MEM"
+#: Host memory one worker takes at its peak: its JVM heap, about as much
+#: again off-heap (codegen classes, code cache, Netty), the pytest process
+#: and its Python UDF workers.  Six workers with get_spark's 8g default heap
+#: overcommit a 16 GiB host, and a kernel OOM kill of one worker's JVM fails
+#: every remaining test in that shard.
+_WORKER_GIB = 5
+#: Share of physical memory all worker JVM heaps may claim together.
+_HEAP_SHARE = 0.4
 
 
 def _is_worker() -> bool:
     return bool(os.environ.get(_SHARD_ENV))
 
 
+def _phys_mem() -> int:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return 0
+
+
+def _default_shards() -> int:
+    """As many workers as there are cores, up to 6, and no more than
+    ``_WORKER_GIB`` of physical memory each allows."""
+    mem = _phys_mem()
+    by_mem = mem // (_WORKER_GIB << 30) if mem else 6
+    return max(1, min(6, os.cpu_count() or 1, by_mem))
+
+
+def _worker_driver_mem(nshards: int) -> str:
+    """Per-worker JVM heap: an even split of ``_HEAP_SHARE`` of physical
+    memory, clamped to [1g, 8g]."""
+    mem = _phys_mem()
+    if not mem:
+        return "8g"
+    mib = int(mem * _HEAP_SHARE / nshards) >> 20
+    return f"{max(1024, min(8192, mib))}m"
+
+
 def pytest_cmdline_main(config):
     if _is_worker():
         return None  # workers run pytest normally
-    nshards = int(os.environ.get(_NSHARDS_ENV, "6"))
+    nshards = int(os.environ.get(_NSHARDS_ENV) or _default_shards())
     if nshards <= 1:
         return None
     opt = config.option
@@ -48,12 +85,14 @@ def pytest_cmdline_main(config):
         return None
     args = [a for a in config.invocation_params.args]
     procs: list[tuple[subprocess.Popen, str]] = []
+    driver_mem = os.environ.get(_DRIVER_MEM_ENV) or _worker_driver_mem(nshards)
     for i in range(nshards):
         out = tempfile.NamedTemporaryFile(
             mode="w+", suffix=f".shard{i}.log", delete=False
         )
         env = dict(os.environ)
         env[_SHARD_ENV] = f"{i}/{nshards}"
+        env[_DRIVER_MEM_ENV] = driver_mem
         p = subprocess.Popen(
             [sys.executable, "-m", "pytest", *args],
             stdout=out, stderr=subprocess.STDOUT, env=env,

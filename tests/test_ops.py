@@ -457,16 +457,25 @@ def test_contamination_finds_planted_copy(spark):
 
 
 def test_connected_components_chain_and_islands(spark):
-    """A 10-node path (worst-case diameter for the propagation loop), a
-    2-node island, and a self-contained pair must resolve to exactly three
-    components labeled by their minimum node ids."""
-    edges = [(i, i + 1) for i in range(9)] + [(100, 101), (200, 201)]
+    """A 100-node path (a diameter far above the round cap, so only an
+    O(log n)-round algorithm closes it), a 2-node island, and a
+    self-contained pair must resolve to exactly three components labeled by
+    their minimum node ids."""
+    edges = [(i, i + 1) for i in range(99)] + [(100, 101), (200, 201)]
     df = spark.createDataFrame(edges, "a bigint, b bigint")
     got = {r.node: r.cluster_id for r in D.connected_components(df).collect()}
-    assert {got[i] for i in range(10)} == {0}
+    assert {got[i] for i in range(100)} == {0}
     assert got[100] == got[101] == 100
     assert got[200] == got[201] == 200
-    assert len(got) == 14
+    assert len(got) == 104
+
+
+def test_connected_components_raises_when_out_of_rounds(spark, monkeypatch):
+    """Running out of rounds is an error, never a silently split answer."""
+    monkeypatch.setattr(D, "CC_MAX_ROUNDS", 1)
+    df = spark.createDataFrame([(i, i + 1) for i in range(9)], "a bigint, b bigint")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        D.connected_components(df)
 
 
 def test_table_diff_null_safe_and_statuses(spark):
@@ -537,22 +546,11 @@ def test_money_cents_units_exact_on_lattice(spark):
     assert got == want
 
 
-def test_two_star_components_chain_and_islands(spark):
-    """Same contract as connected_components: path + islands resolve to the
-    per-component minimum, in O(log n) rounds instead of diameter rounds."""
-    edges = [(i, i + 1) for i in range(9)] + [(100, 101), (200, 201)]
-    df = spark.createDataFrame(edges, "a bigint, b bigint")
-    got = {r.node: r.cluster_id for r in D.two_star_components(df).collect()}
-    assert {got[i] for i in range(10)} == {0}
-    assert got[100] == got[101] == 100
-    assert got[200] == got[201] == 200
-    assert len(got) == 14
-
-
-def test_two_star_equals_propagation_random_graph(spark):
-    """Algorithm-independence property: on a seeded random graph (dense
-    clusters + a long chain + self-loops + duplicate edges), two-star and
-    min-label propagation must produce identical cluster assignments."""
+def test_connected_components_matches_union_find_random_graph(spark):
+    """On a seeded random graph (dense clusters + a long chain + self-loops
+    + duplicate edges) the cluster assignment equals a pure-Python
+    union-find's, and a node whose only edge is a self-loop is not
+    emitted."""
     import random
 
     rng = random.Random(7)
@@ -560,16 +558,23 @@ def test_two_star_equals_propagation_random_graph(spark):
     for _ in range(60):  # dense small clusters
         base = rng.randrange(0, 4) * 10
         edges.append((base + rng.randrange(10), base + rng.randrange(10)))
-    edges += [(5, 5), (0, 1), (0, 1)]  # self-loop + dup edges
+    edges += [(5, 5), (0, 1), (0, 1), (500, 500)]  # self-loops + dup edges
     df = spark.createDataFrame(edges, "a bigint, b bigint")
-    two = {r.node: r.cluster_id for r in D.two_star_components(df).collect()}
-    prop = {r.node: r.cluster_id for r in D.connected_components(df).collect()}
-    # propagation emits self-loop-only nodes; two-star drops self-loops —
-    # compare on the common contract (nodes with at least one real edge)
-    real = {n for a, b in edges if a != b for n in (a, b)}
-    assert {n: c for n, c in two.items() if n in real} == {
-        n: c for n, c in prop.items() if n in real
-    }
+    got = {r.node: r.cluster_id for r in D.connected_components(df).collect()}
+
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    assert got == {n: find(n) for n in list(parent)}
+    assert 500 not in got
 
 
 def test_pack_shards_budget_and_sliced_equivalence(spark):

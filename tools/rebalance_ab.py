@@ -1,8 +1,8 @@
 """Interleaved A/B for the rebalance decisions: configs alternate run-by-run
 (A B A B ...) inside one session, so JIT/ordering drift hits both arms
 equally — the decision-grade protocol for the sub-300 ms headline queries
-where a sequential median-of-5 showed ±30% arm-order bias (rebalance_exp.py's
-q51 base vs auto-rr differed 33% on IDENTICAL plans).
+where a sequential median-of-5 showed ±30% arm-order bias (q51's base and
+auto-rr arms differed 33% on IDENTICAL plans).
 
 Usage: python tools/rebalance_ab.py <query> <table> <key|-> [pairs]
 Prints per-arm medians of `pairs` interleaved samples.

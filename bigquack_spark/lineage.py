@@ -138,15 +138,17 @@ def capture_column_lineage(df: DataFrame) -> dict[str, list[dict[str, Any]]]:
             f"capture_column_lineage: duplicate output column names {dupes} — "
             "alias them apart; per-column probes would be ambiguous"
         )
-    # backtick-quote the probe: a column whose NAME contains a dot would
-    # otherwise resolve as a nested-field path and raise (df[c] parses the
-    # same way — only a quoted identifier pins the literal name).
-    def _quoted(c: str) -> str:
-        return "`" + c.replace("`", "``") + "`"
-
     return {
-        c: capture_lineage(df.select(_quoted(c)))["sources"] for c in df.columns
+        c: capture_lineage(df.select(quoted_name(c)))["sources"] for c in df.columns
     }
+
+
+def quoted_name(c: str) -> str:
+    """Backtick-quote a column name for ``df.select``: a column whose NAME
+    contains a dot would otherwise resolve as a nested-field path and raise
+    (df[c] parses the same way — only a quoted identifier pins the literal
+    name)."""
+    return "`" + c.replace("`", "``") + "`"
 
 
 def _iter_manifests(roots: list[str]):

@@ -39,6 +39,11 @@ class WriteStreamType(enum.Enum):
     COMMITTED = "committed"
 
 
+def _source_key(source: dict) -> tuple:
+    """Merge identity of a lineage source: one table at one location."""
+    return source["table"], tuple(source["paths"])
+
+
 class AtomicWriter:
     """Managed write stream over a parquet target directory."""
 
@@ -63,7 +68,6 @@ class AtomicWriter:
         self._lineage_sources: list[dict] = []  # merged across batches
         self._output_columns: list[str] = []
         self._column_lineage: dict[str, list[dict]] = {}
-        self._column_lineage_key: str | None = None
         if stream_type is WriteStreamType.PENDING:
             self._dest = f"{target}.staging-{uuid.uuid4().hex[:12]}"
         else:
@@ -96,36 +100,37 @@ class AtomicWriter:
         # batch BEFORE executing — a driver-side plan walk, zero data cost.
         # Failures here must never block the write protocol itself.
         try:
-            from bigquack_spark.lineage import capture_column_lineage, capture_lineage
+            from bigquack_spark.lineage import (
+                capture_column_lineage,
+                capture_lineage,
+                quoted_name,
+            )
 
             cap = capture_lineage(df)
             self._output_columns = cap["output_columns"]
-            seen = {(s["table"], tuple(s["paths"])) for s in self._lineage_sources}
+            seen = {_source_key(s) for s in self._lineage_sources}
             for s in cap["sources"]:
-                if (s["table"], tuple(s["paths"])) not in seen:
+                if _source_key(s) not in seen:
                     self._lineage_sources.append(s)
             # column-grain edges cost one plan compile PER COLUMN — too
             # much for every micro-batch of a steady pipeline (r7 review).
-            # Key the recompute on the attribute-id-normalized physical
-            # plan string: identical wiring -> identical key (ids vary per
-            # batch, hence the normalization), and any change in how
-            # outputs map to sources changes the plan text (a source-set
-            # key alone missed swapped-alias wiring).  The key is stored
-            # only AFTER a successful capture so a transient failure
-            # retries on the next batch instead of suppressing column
-            # lineage for the whole stream.
-            from bigquack_spark.lineage import _ATTR_ID_RE, _plan_string
-
-            key = _ATTR_ID_RE.sub("", _plan_string(df))
-            if key != self._column_lineage_key:
-                for col, sources in capture_column_lineage(df).items():
+            # A probe's scans are a subset of the batch's, and the merge
+            # below only adds a (table, paths) source a column does not list
+            # yet, so only a column that is new or lacks one of this batch's
+            # sources can gain anything: probe just those.  Batches that
+            # differ only in a literal probe once per stream.
+            batch = {_source_key(s) for s in cap["sources"]}
+            stale = [
+                c for c in df.columns
+                if c not in self._column_lineage
+                or not batch <= {_source_key(s) for s in self._column_lineage[c]}
+            ]
+            if stale:
+                probe = df.select(*(quoted_name(c) for c in stale))
+                for col, sources in capture_column_lineage(probe).items():
                     have = self._column_lineage.setdefault(col, [])
-                    keys = {(s["table"], tuple(s["paths"])) for s in have}
-                    have.extend(
-                        s for s in sources
-                        if (s["table"], tuple(s["paths"])) not in keys
-                    )
-                self._column_lineage_key = key
+                    keys = {_source_key(s) for s in have}
+                    have.extend(s for s in sources if _source_key(s) not in keys)
         except Exception:  # pragma: no cover - defensive
             pass
         # batch count rides the append via df.observe — the old df.count()

@@ -13,8 +13,11 @@ from __future__ import annotations
 
 import math
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Every table the driver materializes at /root/testdata/sf*/.
 TABLES: tuple[str, ...] = (
@@ -31,6 +34,12 @@ TABLES: tuple[str, ...] = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Entries kept by the inferred-schema cache of :func:`_read_parquet`.
+_SCHEMA_CACHE_SIZE = 256
+
+_schema_cache: OrderedDict[tuple[str, str], tuple[tuple, StructType]] = OrderedDict()
+_schema_lock = threading.Lock()
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -76,9 +85,13 @@ def load_table(
     round-robin: skips round-robin's local sort-before-repartition pass
     (SPARK-23207 determinism cost) and stays deterministic by key hash.
     Pick a near-unique key that the query already reads.
+
+    The table's schema is inferred (a one-task footer-reading job) once per
+    ``(path, file set, session conf)``; later calls hand the remembered
+    schema to the reader and run no job (:func:`_read_parquet`).
     """
     path = table_path(sf_dir, name)
-    read = spark.read.parquet(path)
+    read = _read_parquet(spark, path)
     df = _normalize_nanos(read)
     if predicate:
         df = df.filter(predicate)
@@ -97,6 +110,53 @@ def load_table(
     if columns:
         df = df.select(*columns)
     return df
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file set.
+
+    The reference fetches a table's schema once from its read session
+    (bigquery.go:243-248); Spark instead runs a footer-inference job on
+    every read.  The first read here infers as usual and remembers
+    ``(file signature, schema)`` under ``(path, session SQL conf)``: any
+    conf that steers inference (``nanosAsLong``, ``inferTimestampNTZ``,
+    ``binaryAsString``, ``mergeSchema``, partition-type inference, ...)
+    changes the key.  A later read passes the remembered schema to the
+    reader, which still lists the files but runs no job, and keeps that
+    frame only if its file signature is unchanged; a rewritten, added or
+    removed file falls back to a fresh inference that replaces the entry.
+    """
+    # the conf map straight from the JVM: pyspark's conf.getAll measured
+    # ~100x slower, which would cost a hit as much as inferring
+    key = (path, spark._jsparkSession.sessionState().conf().getAllConfs().toString())
+    with _schema_lock:
+        hit = _schema_cache.get(key)
+        if hit is not None:
+            _schema_cache.move_to_end(key)
+    if hit is not None:
+        signature, schema = hit
+        df = spark.read.schema(schema).parquet(path)
+        if _file_signature(df) == signature:
+            return df
+    df = spark.read.parquet(path)
+    entry = (_file_signature(df), df.schema)
+    with _schema_lock:
+        _schema_cache[key] = entry
+        _schema_cache.move_to_end(key)
+        while len(_schema_cache) > _SCHEMA_CACHE_SIZE:
+            _schema_cache.popitem(last=False)
+    return df
+
+
+def _file_signature(df: DataFrame) -> tuple:
+    """Sorted ``(path, length, modificationTime)`` of every file in a freshly
+    read frame's file index — the per-file identity a Spark scan records
+    (``PartitionedFile``)."""
+    files = df._jdf.queryExecution().analyzed().relation().location().allFiles()
+    return tuple(sorted(
+        (f.getPath().toString(), f.getLen(), f.getModificationTime())
+        for f in (files.apply(i) for i in range(files.length()))
+    ))
 
 
 def _estimated_scan_splits(df: DataFrame) -> int:
@@ -152,4 +212,4 @@ def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = T
     for name in tables:
         path = table_path(sf_dir, name)
         if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
+            _read_parquet(spark, path).createOrReplaceTempView(name)

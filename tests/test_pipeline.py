@@ -885,3 +885,210 @@ def test_estimated_scan_splits_matches_planner(spark, tmp_path):
     finally:
         P.table_path = orig
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
+def _jobs_run(spark, fn):
+    """``(fn(), Spark jobs it ran)``: the status store's highest-job-id
+    delta, read after the listener bus has drained."""
+    sc = spark.sparkContext
+
+    def top():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids = sc.statusTracker().getJobIdsForGroup(None)
+        return max(ids) if ids else -1
+
+    before = top()
+    out = fn()
+    return out, top() - before
+
+
+def test_load_table_warm_read_runs_no_job(spark, tmp_path):
+    """The schema is inferred once per (path, file set, session conf): a
+    second load_table runs no Spark job and returns what a fresh read
+    returns — for a TIMESTAMP(NANOS) table (normalized to µs) and a tz-less
+    timestamp file as well as the smoke tables."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bigquack_spark.sources.parquet import _normalize_nanos, load_table, table_path
+
+    d = str(tmp_path)
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array([1_700_000_000_123_456_789, 1_700_000_001_000_000_001],
+                       pa.timestamp("ns")),
+    }), table_path(d, "events"))
+    pq.write_table(pa.table({
+        "id": pa.array([1, 2], pa.int64()),
+        "t": pa.array([datetime.datetime(2024, 1, 1, 1, 2, 3),
+                       datetime.datetime(2024, 5, 1)], pa.timestamp("us")),
+    }), table_path(d, "naive"))
+    for sf_dir, name in [(d, "events"), (d, "naive"), (SF_SMOKE, "events"),
+                         (SF_SMOKE, "nation"), (SF_SMOKE, "lineitem")]:
+        load_table(spark, sf_dir, name)
+        warm, jobs = _jobs_run(spark, lambda: load_table(spark, sf_dir, name))
+        assert jobs == 0, (sf_dir, name)
+        fresh = _normalize_nanos(spark.read.parquet(table_path(sf_dir, name)))
+        assert warm.schema == fresh.schema, (sf_dir, name)
+        assert sorted(warm.collect()) == sorted(fresh.collect()), (sf_dir, name)
+    us = load_table(spark, d, "events", predicate="event_id = 1") \
+        .selectExpr("unix_micros(ts) AS us").collect()
+    assert [r.us for r in us] == [1_700_000_000_123_456]
+
+
+def test_load_table_schema_cache_sees_file_changes(spark, tmp_path):
+    """A remembered schema is used only for the file set it was inferred
+    from: rewriting a file with another schema, or adding a file to a
+    directory table, is seen."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bigquack_spark.sources.parquet import load_table, table_path
+
+    d = str(tmp_path)
+    path = table_path(d, "t")
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), path)
+    load_table(spark, d, "t")
+    assert load_table(spark, d, "t").columns == ["a"]
+    pq.write_table(pa.table({"b": pa.array(["x", "y", "z"]),
+                             "c": pa.array([1.5, 2.5, 3.5])}), path)
+    df = load_table(spark, d, "t")
+    assert df.columns == ["b", "c"]
+    assert sorted(r.b for r in df.collect()) == ["x", "y", "z"]
+
+    dpath = table_path(d, "dir")
+    os.makedirs(dpath)
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}),
+                   os.path.join(dpath, "part-0.parquet"))
+    load_table(spark, d, "dir")
+    _, jobs = _jobs_run(spark, lambda: load_table(spark, d, "dir").columns)
+    assert jobs == 0
+    pq.write_table(pa.table({"a": pa.array([3], pa.int64())}),
+                   os.path.join(dpath, "part-1.parquet"))
+    df, jobs = _jobs_run(spark, lambda: load_table(spark, d, "dir"))
+    assert jobs == 1, "a new file must re-infer the schema"
+    assert sorted(r.a for r in df.collect()) == [1, 2, 3]
+
+
+def test_load_table_schema_cache_keys_on_session_conf(spark, tmp_path):
+    """A conf that steers inference forces a re-infer: with
+    ``nanosAsLong`` off, a TIMESTAMP(NANOS) file fails to read exactly as a
+    fresh ``spark.read.parquet`` does, instead of reusing the schema
+    remembered under ``nanosAsLong`` on."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from bigquack_spark.sources.parquet import load_table, table_path
+
+    d = str(tmp_path)
+    pq.write_table(pa.table({"ts": pa.array([1_700_000_000_123_456_789],
+                                            pa.timestamp("ns"))}),
+                   table_path(d, "ns"))
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "true")
+        load_table(spark, d, "ns")
+        _, jobs = _jobs_run(spark, lambda: load_table(spark, d, "ns"))
+        assert jobs == 0
+        spark.conf.set(conf, "false")
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            spark.read.parquet(table_path(d, "ns"))
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            load_table(spark, d, "ns")
+        spark.conf.set(conf, "true")
+        _, jobs = _jobs_run(spark, lambda: load_table(spark, d, "ns"))
+        assert jobs == 0
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_load_table_schema_cache_keeps_partition_columns(spark, tmp_path):
+    """A ``k=v/`` partitioned directory keeps its partition column's
+    inferred type and its position (last) when the remembered schema is
+    handed back to the reader."""
+    from pyspark.sql import types as T
+
+    from bigquack_spark.sources.parquet import load_table, table_path
+
+    d = str(tmp_path)
+    path = table_path(d, "parts")
+    spark.range(0, 6).selectExpr("id", "CAST(id % 3 AS INT) AS k", "'v' AS s") \
+        .write.partitionBy("k").parquet(path)
+    fresh = spark.read.parquet(path)
+    load_table(spark, d, "parts")
+    warm, jobs = _jobs_run(spark, lambda: load_table(spark, d, "parts"))
+    assert jobs == 0
+    assert warm.schema == fresh.schema
+    assert warm.columns[-1] == "k"
+    assert isinstance(warm.schema["k"].dataType, T.IntegerType)
+    assert sorted(warm.collect()) == sorted(fresh.collect())
+
+
+def test_load_table_schema_cache_bounded_under_threads(spark, monkeypatch):
+    """Concurrent readers over more tables than the cache holds: every
+    frame has its table's own schema and the cache never exceeds its
+    bound (evictions race hits on the shared LRU)."""
+    import sys
+    import threading
+    from collections import OrderedDict
+
+    import bigquack_spark.sources.parquet as P
+
+    names = ["region", "nation", "supplier"]
+    want = {n: spark.read.parquet(P.table_path(SF_SMOKE, n)).schema for n in names}
+    monkeypatch.setattr(P, "_schema_cache", OrderedDict())
+    monkeypatch.setattr(P, "_SCHEMA_CACHE_SIZE", 2)
+    errors, sizes = [], []
+
+    def reader(k):
+        try:
+            for i in range(4):
+                n = names[(k + i) % len(names)]
+                if P.load_table(spark, SF_SMOKE, n).schema != want[n]:
+                    errors.append(n)
+                sizes.append(len(P._schema_cache))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(repr(e))
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(k,))
+                   for k in range(2 * (os.cpu_count() or 2))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(sizes) == 4 * len(threads)
+    assert max(sizes) <= 2
+
+
+def test_warm_query_build_runs_no_job(spark):
+    """Building a headline query a second time runs no Spark job: every
+    table's schema is remembered from the first build.  q75 keeps exactly
+    its one bounded query-vector collect."""
+    from bigquack_spark.queries import QUERIES
+
+    expected = {
+        "q01_pricing_summary": 0,
+        "q03_shipping_priority": 0,
+        "q05_region_revenue": 0,
+        "q07_top_customers_per_nation": 0,
+        "q20_events_json_extract": 0,
+        "q30_dedup_exact": 0,
+        "q75_ann_gemm_topk": 1,
+    }
+    for name, want in expected.items():
+        build = QUERIES[name].fn
+        build(spark, SF_SMOKE)
+        _, jobs = _jobs_run(spark, lambda: build(spark, SF_SMOKE))
+        assert jobs == want, f"{name}: second build ran {jobs} jobs, want {want}"

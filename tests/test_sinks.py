@@ -942,6 +942,85 @@ def test_atomic_writer_lineage_merges_batches_and_pending_leaves_none(
     assert not os.path.exists(t2)
 
 
+def _counting_column_probes(monkeypatch):
+    """Count ``capture_column_lineage`` calls made by AtomicWriter.write."""
+    import bigquack_spark.lineage as L
+
+    calls = []
+    real = L.capture_column_lineage
+
+    def counted(df):
+        calls.append(list(df.columns))
+        return real(df)
+
+    monkeypatch.setattr(L, "capture_column_lineage", counted)
+    return calls
+
+
+def test_atomic_writer_probes_column_lineage_once_per_wiring(
+    spark, tmp_path, monkeypatch
+):
+    """Batches that differ only in a literal (the pmod(key, 4) = b split)
+    run the per-column probes once; a literal column is probed too."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from bigquack_spark.lineage import LINEAGE_FILE
+    from tests.conftest import SF_SMOKE
+
+    calls = _counting_column_probes(monkeypatch)
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
+    t = str(tmp_path / "split")
+    w = AtomicWriter(t, WriteStreamType.PENDING)
+    for b in range(4):
+        w.write(li.filter(F.expr(f"pmod(l_orderkey, 4) = {b}")).select(
+            "l_orderkey", "l_quantity", F.lit(b).alias("part")))
+    w.finalize()
+    assert calls == [["l_orderkey", "l_quantity", "part"]]
+    m = json.load(open(os.path.join(t, LINEAGE_FILE)))
+    assert set(m["column_lineage"]) == {"l_orderkey", "l_quantity", "part"}
+    assert [s["table"] for s in m["column_lineage"]["part"]] == ["lineitem"]
+    assert m["batches"] == 4
+
+
+def test_atomic_writer_swapped_alias_records_both_sources(
+    spark, tmp_path, monkeypatch
+):
+    """a<-t1, b<-t2 then a<-t2, b<-t1: both columns record both sources,
+    and the recorded column lineage equals merging a full per-batch probe."""
+    import json
+
+    from bigquack_spark.lineage import LINEAGE_FILE, capture_column_lineage
+    from tests.conftest import SF_SMOKE
+
+    n = spark.read.parquet(f"{SF_SMOKE}/nation.parquet")
+    r = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
+    j = n.join(r, n.n_regionkey == r.r_regionkey)
+    batches = [
+        j.select(n.n_name.alias("a"), r.r_name.alias("b")),
+        j.select(r.r_name.alias("a"), n.n_name.alias("b")),
+    ]
+    expected: dict[str, list] = {}
+    for df in batches:
+        for col, sources in capture_column_lineage(df).items():
+            have = expected.setdefault(col, [])
+            keys = {(s["table"], tuple(s["paths"])) for s in have}
+            have.extend(s for s in sources
+                        if (s["table"], tuple(s["paths"])) not in keys)
+    calls = _counting_column_probes(monkeypatch)
+    t = str(tmp_path / "swapped")
+    w = AtomicWriter(t, WriteStreamType.PENDING)
+    for df in batches:
+        w.write(df)
+    w.finalize()
+    m = json.load(open(os.path.join(t, LINEAGE_FILE)))
+    for col in ("a", "b"):
+        assert {s["table"] for s in m["column_lineage"][col]} == {"nation", "region"}
+    assert m["column_lineage"] == expected
+    assert len(calls) == 1
+
+
 def test_requarantine_repairs_and_converges(spark, tmp_path):
     """r5 verdict #5: the triage loop closes — a repair transform re-drives
     parked rows; fixed rows publish alongside accepted data, unfixable rows

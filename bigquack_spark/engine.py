@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from bigquack_spark.session import tune
 from bigquack_spark.sinks.table import ingest_create_append
+from bigquack_spark.sources.parquet import _read_parquet
 
 
 class Engine:
@@ -63,4 +64,4 @@ class Engine:
 
     def register_parquet(self, name: str, path: str) -> None:
         """Expose a parquet file/dir as a named view for SQL passthrough."""
-        self.spark.read.parquet(path).createOrReplaceTempView(name)
+        _read_parquet(self.spark, path).createOrReplaceTempView(name)

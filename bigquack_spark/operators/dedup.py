@@ -474,7 +474,7 @@ def embedding_near_dup(
     angle theta survives all k planes with probability (1-theta/pi)^k, so
     pick ``num_planes`` against your threshold (high thresholds tolerate
     many planes; loose ones need few or multiprobe)."""
-    from bigquack_spark.operators.simsearch import cosine, random_hyperplane_lsh
+    from bigquack_spark.operators.simsearch import cosine_pairs, random_hyperplane_lsh
 
     if block_col is None and not unblocked:
         df = random_hyperplane_lsh(
@@ -482,15 +482,10 @@ def embedding_near_dup(
             bucket_col="__emb_block",
         )
         block_col = "__emb_block"
-    v = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"), *( [block_col] if block_col else []))
-    left = v.select(F.col(id_col).alias("a"), F.col("v").alias("va"), *( [block_col] if block_col else []))
-    right = v.select(F.col(id_col).alias("b"), F.col("v").alias("vb"), *( [block_col] if block_col else []))
-    joined = left.join(right, on=block_col) if block_col else left.crossJoin(right)
     return (
-        joined.filter(F.col("a") < F.col("b"))
-        .withColumn("cosine_sim", F.round(cosine(F.col("va"), F.col("vb")), 6))
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("a", "b", "cosine_sim")
+        cosine_pairs(df, id_col, vec_col, block_col)
+        .filter((F.col("a") < F.col("b")) & (F.col("cos") >= threshold))
+        .select("a", "b", F.col("cos").alias("cosine_sim"))
     )
 
 

@@ -69,6 +69,18 @@ def _cosine_arrow_udf():
     return cos
 
 
+def _topk(sims: DataFrame, k: int, query_id_col: str = "qid") -> DataFrame:
+    """The top-k tail every ANN path shares: rank each query's scored
+    candidates by (cosine_sim DESC, neighbor_id ASC) and keep the first
+    ``k`` as (query id, neighbor_id, cosine_sim, rank)."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    return (
+        sims.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, "neighbor_id", "cosine_sim", "rank")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -103,18 +115,32 @@ def cosine_topk(
             F.round(cosine(F.col("cv"), F.col("qv")), 6).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(sims, k, query_id_col)
+
+
+def _planes(num_planes: int, dim: int, seed: int) -> np.ndarray:
+    """The seeded hyperplanes both engines bucket with: one draw, shared by
+    the Spark literals and the DuckDB oracle SQL."""
+    return np.random.default_rng(seed).standard_normal((num_planes, dim))
 
 
 def _plane_literals(num_planes: int, dim: int, seed: int) -> list[Column]:
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((num_planes, dim))
-    return [F.array(*[F.lit(float(x)) for x in row]) for row in planes]
+    return [F.array(*[F.lit(float(x)) for x in row]) for row in _planes(num_planes, dim, seed)]
+
+
+def random_hyperplane_lsh_sql(num_planes: int, dim: int, seed: int) -> str:
+    """DuckDB expression over a ``DOUBLE[]`` column ``e`` for
+    :func:`random_hyperplane_lsh`'s bucket, bit-exactly: the same seeded
+    doubles are interpolated as literals (repr round-trips IEEE doubles),
+    and list_dot_product's left-to-right fold matches Spark's aggregate
+    fold, so the sign bits — hence the buckets — are identical across
+    engines."""
+    bits = [
+        f"(CASE WHEN list_dot_product(e, [{', '.join(repr(float(x)) for x in row)}]) >= 0 "
+        f"THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+        for i, row in enumerate(_planes(num_planes, dim, seed))
+    ]
+    return " + ".join(bits)
 
 
 def random_hyperplane_lsh(
@@ -137,6 +163,43 @@ def random_hyperplane_lsh(
         )
         bucket = bit if bucket is None else bucket.bitwiseOR(bit)
     return df.withColumn(bucket_col, bucket)
+
+
+def cosine_pairs(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    block_col: str | None = None,
+) -> DataFrame:
+    """Blocked cosine pairs: the bucket self-join under near-dup, hard
+    negatives, label purity, contrastive pairs and embedding health.
+
+    Every ordered pair ``(a, b)``, ``a != b``, of rows sharing
+    ``block_col`` (all rows when it is None: a cartesian product, test
+    scale only), scored ``cos = round(cosine(va, vb), 6)`` — rounded so
+    ranking and thresholds are engine-invariant.  Output: ``a, b, va, vb,
+    cos``, the block column, and each other column of ``df`` twice as
+    ``<col>_a`` / ``<col>_b``; Catalyst prunes what a caller does not
+    select.  Pairwise work is bounded by block populations (block on
+    :func:`random_hyperplane_lsh`'s bucket for sign-LSH).  There is no
+    ordering option: a caller that wants each unordered pair once adds
+    ``.filter(a < b)``, which Catalyst folds into the join condition."""
+    keys = [block_col] if block_col else []
+    other = [c for c in df.columns if c not in (id_col, vec_col, *keys)]
+
+    def side(s: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(s),
+            F.col(vec_col).cast("array<double>").alias(f"v{s}"),
+            *keys,
+            *[F.col(c).alias(f"{c}_{s}") for c in other],
+        )
+
+    a, b = side("a"), side("b")
+    joined = a.join(b, block_col) if block_col else a.crossJoin(b)
+    return joined.filter(F.col("a") != F.col("b")).withColumn(
+        "cos", F.round(cosine(F.col("va"), F.col("vb")), 6)
+    )
 
 
 def lsh_topk(
@@ -194,12 +257,7 @@ def lsh_topk(
         )
         .dropDuplicates(["qid", "neighbor_id"])
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(sims, k)
 
 
 def ivf_topk(
@@ -266,12 +324,7 @@ def ivf_topk(
         )
         .dropDuplicates(["qid", "neighbor_id"])
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(sims, k)
 
 #: 2^20 — a float32 (24-bit mantissa) times 2^20 rounds to the same exact
 #: integer in every engine; squared-distance sums over 64 dims stay < 2^53,
@@ -395,12 +448,7 @@ def ivf_topk_frozen(
             F.round(cosine(F.col("cv"), F.col("qv")), 6).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(sims, k)
 
 
 def gemm_topk(
@@ -505,12 +553,7 @@ def gemm_topk(
     partial = corpus.select(id_col, vec_col).mapInArrow(
         score, schema=f"{query_id_col} bigint, neighbor_id bigint, cosine_sim double"
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(partial, k, query_id_col)
 
 
 def quantize_int8(
@@ -792,12 +835,7 @@ def probe_ivf_index(
         .select("qid", F.col("id").alias("neighbor_id"), score.alias("cosine_sim"))
         .dropDuplicates(["qid", "neighbor_id"])
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(sims, k)
 
 
 def assign_to_cells(vectors: DataFrame, centroids: DataFrame,
@@ -1497,12 +1535,7 @@ def probe_ivf_pq(
         .select("qid", F.col("id").alias("neighbor_id"), rr_score.alias("cosine_sim"))
         .dropDuplicates(["qid", "neighbor_id"])
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(sims, k)
 
 
 def calibrate_pq_recall(

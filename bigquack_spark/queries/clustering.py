@@ -24,6 +24,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigquack_spark.operators.simsearch import (
+    cosine_pairs,
+    random_hyperplane_lsh,
+    random_hyperplane_lsh_sql,
+)
 from bigquack_spark.queries.registry import query
 from bigquack_spark.sources.parquet import load_table as t
 
@@ -404,59 +409,9 @@ PURITY_K = 5  # neighbors per vector for the label-agreement audit
 
 @query(
     "q188_label_purity",
-    oracle=None,  # installed below (reuses dedup's seeded-plane SQL)
-)
-def q188_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN label-purity audit — the label-noise detector for a supervised
-    embedding set (Confident-Learning-shape triage): for each vector, its
-    top-{PURITY_K} cosine neighbors among sign-LSH bucket-mates vote on
-    its label; a low agreement rate flags a likely mislabel or a class-
-    boundary point.  Same bucket-bounded candidate geometry as
-    q172/q179 (never corpus x corpus), one anchor-keyed window for the
-    top-k cut, then an exact integer agreement count.  Output is
-    per-vector (n_neighbors, n_same_label, purity) — the audit table a
-    relabeling queue consumes.  The oracle replays planes, ranking, and
-    votes exactly."""
-    from pyspark.sql.window import Window
-
-    from bigquack_spark.operators.simsearch import cosine, random_hyperplane_lsh
-
-    e = t(spark, sf_dir, "embeddings")
-    v = random_hyperplane_lsh(
-        e, vec_col="embedding", num_planes=2, seed=42, bucket_col="bkt"
-    ).select(
-        "vec_id", "label", "bkt", F.col("embedding").cast("array<double>").alias("v")
-    )
-    a = v.select(F.col("vec_id").alias("anchor"), F.col("label").alias("alabel"),
-                 "bkt", F.col("v").alias("va"))
-    b = v.select(F.col("vec_id").alias("nid"), F.col("label").alias("nlabel"),
-                 "bkt", F.col("v").alias("vb"))
-    sims = (
-        a.join(b, "bkt")
-        .filter(F.col("anchor") != F.col("nid"))
-        .select(
-            "anchor", "alabel", "nid", "nlabel",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("anchor").orderBy(F.desc("cos"), "nid")
-    top = sims.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= PURITY_K)
-    same = F.when(F.col("nlabel") == F.col("alabel"), 1).otherwise(0)
-    return top.groupBy("anchor", "alabel").agg(
-        F.count(F.lit(1)).alias("n_neighbors"),
-        F.sum(same).cast("long").alias("n_same_label"),
-        F.round(F.sum(same).cast("double") / F.count(F.lit(1)), 6).alias("purity"),
-    )
-
-
-def _install_q188_oracle() -> None:
-    from bigquack_spark.queries import dedup as _dq
-    from bigquack_spark.queries.registry import QUERIES, QuerySpec
-
-    plane = _dq._q35_plane_sql(2, 64, 42)
-    sql = f"""
+    oracle=f"""
     WITH v AS (
-      SELECT vec_id, label, e, {plane} AS bkt
+      SELECT vec_id, label, e, {random_hyperplane_lsh_sql(2, 64, 42)} AS bkt
       FROM (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
     ),
     sims AS (
@@ -480,14 +435,36 @@ def _install_q188_oracle() -> None:
                  / count(*), 6) AS purity
     FROM top WHERE rnk <= {PURITY_K}
     GROUP BY anchor, alabel
-    """
-    spec = QUERIES["q188_label_purity"]
-    QUERIES["q188_label_purity"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=sql, doc=spec.doc
+    """,
+)
+def q188_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """kNN label-purity audit — the label-noise detector for a supervised
+    embedding set (Confident-Learning-shape triage): for each vector, its
+    top-``PURITY_K`` cosine neighbors among sign-LSH bucket-mates vote on
+    its label; a low agreement rate flags a likely mislabel or a class-
+    boundary point.  Candidates are ``operators.simsearch.cosine_pairs``
+    over the 2-plane bucket with each side's label carried (never corpus
+    x corpus), one anchor-keyed window for the top-k cut, then an exact
+    integer agreement count.  Output is per-vector (n_neighbors,
+    n_same_label, purity) — the audit table a relabeling queue consumes.
+    The oracle replays planes, ranking, and votes exactly."""
+    from pyspark.sql.window import Window
+
+    v = random_hyperplane_lsh(
+        t(spark, sf_dir, "embeddings"), num_planes=2, seed=42, bucket_col="bkt"
     )
-
-
-_install_q188_oracle()
+    sims = cosine_pairs(v, block_col="bkt").select(
+        F.col("a").alias("anchor"), F.col("label_a").alias("alabel"),
+        F.col("b").alias("nid"), F.col("label_b").alias("nlabel"), "cos",
+    )
+    w = Window.partitionBy("anchor").orderBy(F.desc("cos"), "nid")
+    top = sims.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= PURITY_K)
+    same = F.when(F.col("nlabel") == F.col("alabel"), 1).otherwise(0)
+    return top.groupBy("anchor", "alabel").agg(
+        F.count(F.lit(1)).alias("n_neighbors"),
+        F.sum(same).cast("long").alias("n_same_label"),
+        F.round(F.sum(same).cast("double") / F.count(F.lit(1)), 6).alias("purity"),
+    )
 
 
 BALANCE_BETA = 0.999  # effective-number-of-samples decay (Cui et al. 2019)

@@ -18,6 +18,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigquack_spark.operators import dedup as D
+from bigquack_spark.operators.simsearch import (
+    cosine_pairs,
+    random_hyperplane_lsh,
+    random_hyperplane_lsh_sql,
+)
 from bigquack_spark.queries.registry import query
 from bigquack_spark.sources.parquet import load_table as t
 
@@ -186,23 +191,6 @@ def q34_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q35_plane_sql(num_planes: int, dim: int, seed: int) -> str:
-    """DuckDB expression for the sign-LSH bucket, replicating
-    simsearch._plane_literals bit-exactly: the same seeded-numpy doubles are
-    interpolated as literals (repr round-trips IEEE doubles), and
-    list_dot_product's left-to-right fold matches Spark's aggregate fold, so
-    the sign bits — hence the buckets — are identical across engines."""
-    import numpy as np
-
-    planes = np.random.default_rng(seed).standard_normal((num_planes, dim))
-    bits = [
-        f"(CASE WHEN list_dot_product(e, [{', '.join(repr(float(x)) for x in row)}]) >= 0 "
-        f"THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for i, row in enumerate(planes)
-    ]
-    return " + ".join(bits)
-
-
 _Q35_PLANES = 2
 
 
@@ -210,7 +198,7 @@ _Q35_PLANES = 2
     "q35_embedding_near_dup",
     oracle=f"""
     WITH v AS (
-      SELECT vec_id, e, {_q35_plane_sql(_Q35_PLANES, 64, 42)} AS bkt
+      SELECT vec_id, e, {random_hyperplane_lsh_sql(_Q35_PLANES, 64, 42)} AS bkt
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
     )
     SELECT a.vec_id AS a, b.vec_id AS b,
@@ -769,7 +757,7 @@ def q164_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q172_semantic_dedup",
     oracle=f"""
     WITH v AS (
-      SELECT vec_id, e, {_q35_plane_sql(_Q35_PLANES, 64, 42)} AS bkt
+      SELECT vec_id, e, {random_hyperplane_lsh_sql(_Q35_PLANES, 64, 42)} AS bkt
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
     ),
     hits AS (
@@ -796,26 +784,19 @@ def q172_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     production scale), and within each cluster a vector is PRUNED when any
     LOWER-id cluster-mate sits above the cosine threshold — the
     deterministic keep-first rule, no connected components needed, one
-    bucket-keyed self-join bounded by cluster occupancy.  The oracle
-    replays the identical plane literals and fold order, so verdicts are
-    bit-identical.  At 100 TB: cluster sizes are capped the same way as
+    bucket-keyed ``operators.simsearch.cosine_pairs`` self-join bounded by
+    cluster occupancy.  The oracle replays the identical plane literals
+    and fold order, so verdicts are bit-identical.  At 100 TB: cluster sizes are capped the same way as
     LSH buckets (operators.dedup.lsh_candidate_pairs' max_bucket_size
     diversion); the verdict join is an aggregation + left join, both on
     the vec_id shuffle key."""
-    from bigquack_spark.operators.simsearch import cosine, random_hyperplane_lsh
-
     e = t(spark, sf_dir, "embeddings")
     v = random_hyperplane_lsh(
         e, vec_col="embedding", num_planes=_Q35_PLANES, seed=42, bucket_col="cluster"
-    ).select(
-        "vec_id", "cluster", F.col("embedding").cast("array<double>").alias("v")
     )
-    a = v.select(F.col("vec_id").alias("a"), F.col("cluster"), F.col("v").alias("va"))
-    b = v.select(F.col("vec_id").alias("b"), F.col("cluster"), F.col("v").alias("vb"))
     hits = (
-        a.join(b, "cluster")
-        .filter(F.col("a") < F.col("b"))
-        .filter(F.round(cosine(F.col("va"), F.col("vb")), 6) >= 0.4)
+        cosine_pairs(v, block_col="cluster")
+        .filter((F.col("a") < F.col("b")) & (F.col("cos") >= 0.4))
         .select(F.col("b").alias("vid"))
         .distinct()
     )

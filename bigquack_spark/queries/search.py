@@ -541,15 +541,64 @@ RRF_TOP = 5       # fused results per query
 
 @query(
     "q191_hybrid_rrf",
-    oracle=None,  # installed below (needs dedup's seeded-plane-free cosine SQL)
+    oracle=f"""
+    WITH sets_ AS (
+      SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS s
+      FROM documents
+    ),
+    qs AS (SELECT doc_id AS qid, s AS qs FROM sets_ WHERE doc_id < {RRF_QUERIES}),
+    lex AS (
+      SELECT qid, doc_id, lex_rank FROM (
+        SELECT q.qid, d.doc_id,
+               row_number() OVER (
+                 PARTITION BY q.qid
+                 ORDER BY round(CAST(len(list_intersect(q.qs, d.s)) AS DOUBLE)
+                   / (len(q.qs) + len(d.s) - len(list_intersect(q.qs, d.s))), 6) DESC,
+                   d.doc_id) AS lex_rank
+        FROM sets_ d CROSS JOIN qs q WHERE d.doc_id <> q.qid
+      ) WHERE lex_rank <= {RRF_POOL}
+    ),
+    v AS (SELECT vec_id AS doc_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+    qv AS (SELECT doc_id AS qid, e AS qe FROM v WHERE doc_id < {RRF_QUERIES}),
+    vec AS (
+      SELECT qid, doc_id, vec_rank FROM (
+        SELECT q.qid, d.doc_id,
+               row_number() OVER (
+                 PARTITION BY q.qid
+                 ORDER BY round(list_dot_product(d.e, q.qe)
+                   / (sqrt(list_dot_product(d.e, d.e)) * sqrt(list_dot_product(q.qe, q.qe))), 6) DESC,
+                   d.doc_id) AS vec_rank
+        FROM v d CROSS JOIN qv q WHERE d.doc_id <> q.qid
+      ) WHERE vec_rank <= {RRF_POOL}
+    ),
+    fused AS (
+      SELECT coalesce(l.qid, x.qid) AS qid,
+             coalesce(l.doc_id, x.doc_id) AS doc_id,
+             coalesce(1.0 / ({RRF_K} + l.lex_rank), 0.0)
+               + coalesce(1.0 / ({RRF_K} + x.vec_rank), 0.0) AS rrf_raw,
+             coalesce(l.lex_rank, 0) AS lex_rank,
+             coalesce(x.vec_rank, 0) AS vec_rank
+      FROM lex l FULL OUTER JOIN vec x
+        ON l.qid = x.qid AND l.doc_id = x.doc_id
+    )
+    SELECT qid, doc_id, round(rrf_raw, 9) AS rrf_score,
+           CAST(lex_rank AS BIGINT) AS lex_rank,
+           CAST(vec_rank AS BIGINT) AS vec_rank,
+           CAST(fused_rank AS INTEGER) AS fused_rank
+    FROM (
+      SELECT *, row_number() OVER (PARTITION BY qid ORDER BY rrf_raw DESC, doc_id)
+                  AS fused_rank
+      FROM fused
+    ) WHERE fused_rank <= {RRF_TOP}
+    """,
 )
 def q191_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval with Reciprocal Rank Fusion — the standard
     lexical+vector fusion (Cormack et al. RRF): for each query document
-    (id < {RRF_QUERIES}; documents and embeddings share the id space),
+    (id < ``RRF_QUERIES``; documents and embeddings share the id space),
     rank the corpus twice — exact unigram Jaccard on text, cosine on the
-    embedding — take each list to depth {RRF_POOL}, and fuse with
-    score = Σ 1/({RRF_K} + rank).  Fusion needs only the integer RANKS,
+    embedding — take each list to depth ``RRF_POOL``, and fuse with
+    score = Σ 1/(``RRF_K`` + rank).  Fusion needs only the integer RANKS,
     so the fused ordering is exactly reproducible cross-engine even
     though the underlying scores live in different metric spaces — the
     property that makes RRF the production default over score
@@ -613,68 +662,6 @@ def q191_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lex_rank", "vec_rank", "fused_rank",
         )
     )
-
-
-def _install_q191_oracle() -> None:
-    from bigquack_spark.queries.registry import QUERIES, QuerySpec
-
-    sql = f"""
-    WITH sets_ AS (
-      SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS s
-      FROM documents
-    ),
-    qs AS (SELECT doc_id AS qid, s AS qs FROM sets_ WHERE doc_id < {RRF_QUERIES}),
-    lex AS (
-      SELECT qid, doc_id, lex_rank FROM (
-        SELECT q.qid, d.doc_id,
-               row_number() OVER (
-                 PARTITION BY q.qid
-                 ORDER BY round(CAST(len(list_intersect(q.qs, d.s)) AS DOUBLE)
-                   / (len(q.qs) + len(d.s) - len(list_intersect(q.qs, d.s))), 6) DESC,
-                   d.doc_id) AS lex_rank
-        FROM sets_ d CROSS JOIN qs q WHERE d.doc_id <> q.qid
-      ) WHERE lex_rank <= {RRF_POOL}
-    ),
-    v AS (SELECT vec_id AS doc_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    qv AS (SELECT doc_id AS qid, e AS qe FROM v WHERE doc_id < {RRF_QUERIES}),
-    vec AS (
-      SELECT qid, doc_id, vec_rank FROM (
-        SELECT q.qid, d.doc_id,
-               row_number() OVER (
-                 PARTITION BY q.qid
-                 ORDER BY round(list_dot_product(d.e, q.qe)
-                   / (sqrt(list_dot_product(d.e, d.e)) * sqrt(list_dot_product(q.qe, q.qe))), 6) DESC,
-                   d.doc_id) AS vec_rank
-        FROM v d CROSS JOIN qv q WHERE d.doc_id <> q.qid
-      ) WHERE vec_rank <= {RRF_POOL}
-    ),
-    fused AS (
-      SELECT coalesce(l.qid, x.qid) AS qid,
-             coalesce(l.doc_id, x.doc_id) AS doc_id,
-             coalesce(1.0 / ({RRF_K} + l.lex_rank), 0.0)
-               + coalesce(1.0 / ({RRF_K} + x.vec_rank), 0.0) AS rrf_raw,
-             coalesce(l.lex_rank, 0) AS lex_rank,
-             coalesce(x.vec_rank, 0) AS vec_rank
-      FROM lex l FULL OUTER JOIN vec x
-        ON l.qid = x.qid AND l.doc_id = x.doc_id
-    )
-    SELECT qid, doc_id, round(rrf_raw, 9) AS rrf_score,
-           CAST(lex_rank AS BIGINT) AS lex_rank,
-           CAST(vec_rank AS BIGINT) AS vec_rank,
-           CAST(fused_rank AS INTEGER) AS fused_rank
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY qid ORDER BY rrf_raw DESC, doc_id)
-                  AS fused_rank
-      FROM fused
-    ) WHERE fused_rank <= {RRF_TOP}
-    """
-    spec = QUERIES["q191_hybrid_rrf"]
-    QUERIES["q191_hybrid_rrf"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=sql, doc=spec.doc
-    )
-
-
-_install_q191_oracle()
 
 
 PHRASE = ("table", "hash")  # the corpus's most frequent bigram (q56)

@@ -59,11 +59,42 @@ def q40_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q41_PLANES = 4
 _Q41_MULTIPROBE_BITS = 2
+#: Hamming distance of a corpus bucket from the query bucket, in DuckDB.
+_Q41_HAM = " + ".join(f"((xor(v.bkt, q.qbkt) >> {i}) & 1)" for i in range(_Q41_PLANES))
 
 
 @query(
     "q41_ann_lsh_topk",
-    oracle=None,  # installed below (shares the seeded-plane SQL with q35)
+    # same plane literals as the Spark side; candidates = Hamming <= 2
+    oracle=f"""
+    WITH v AS (
+      SELECT vec_id, e, {S.random_hyperplane_lsh_sql(_Q41_PLANES, 64, 42)} AS bkt
+      FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
+    ),
+    q AS (
+      SELECT vec_id AS qid, e AS qe, bkt AS qbkt FROM v
+      WHERE vec_id < {N_QUERY_VECS}
+    ),
+    sims AS (
+      SELECT q.qid, v.vec_id AS neighbor_id,
+             round(
+               list_dot_product(v.e, q.qe)
+               / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(q.qe, q.qe))),
+               6
+             ) AS cosine_sim
+      FROM v JOIN q ON {_Q41_HAM} <= {_Q41_MULTIPROBE_BITS}
+      WHERE v.vec_id <> q.qid
+    )
+    SELECT qid, neighbor_id, cosine_sim, CAST(rk AS INTEGER) AS rank
+    FROM (
+      SELECT qid, neighbor_id, cosine_sim,
+             row_number() OVER (
+               PARTITION BY qid ORDER BY cosine_sim DESC, neighbor_id
+             ) AS rk
+      FROM sims
+    )
+    WHERE rk <= {TOP_K}
+    """,
 )
 def q41_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path ANN: sign-LSH buckets + 2-bit multiprobe prune the
@@ -82,77 +113,8 @@ def q41_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_q41_oracle() -> None:
-    """q41's DuckDB twin: same plane literals, candidates = Hamming <= 2."""
-    from bigquack_spark.queries import dedup as _dq
-    from bigquack_spark.queries.registry import QUERIES, QuerySpec
-
-    plane = _dq._q35_plane_sql(_Q41_PLANES, 64, 42)
-    ham = " + ".join(
-        f"((xor(v.bkt, q.qbkt) >> {i}) & 1)" for i in range(_Q41_PLANES)
-    )
-    sql = f"""
-    WITH v AS (
-      SELECT vec_id, e, {plane} AS bkt
-      FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
-    ),
-    q AS (
-      SELECT vec_id AS qid, e AS qe, bkt AS qbkt FROM v
-      WHERE vec_id < {N_QUERY_VECS}
-    ),
-    sims AS (
-      SELECT q.qid, v.vec_id AS neighbor_id,
-             round(
-               list_dot_product(v.e, q.qe)
-               / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(q.qe, q.qe))),
-               6
-             ) AS cosine_sim
-      FROM v JOIN q ON {ham} <= {_Q41_MULTIPROBE_BITS}
-      WHERE v.vec_id <> q.qid
-    )
-    SELECT qid, neighbor_id, cosine_sim, CAST(rk AS INTEGER) AS rank
-    FROM (
-      SELECT qid, neighbor_id, cosine_sim,
-             row_number() OVER (
-               PARTITION BY qid ORDER BY cosine_sim DESC, neighbor_id
-             ) AS rk
-      FROM sims
-    )
-    WHERE rk <= {TOP_K}
-    """
-    spec = QUERIES["q41_ann_lsh_topk"]
-    QUERIES["q41_ann_lsh_topk"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=sql, doc=spec.doc
-    )
-
-
-_install_q41_oracle()
-
-
 _Q42_LISTS = 8
 _Q42_PROBES = 2
-
-
-@query(
-    "q42_ann_ivf_topk",
-    oracle=None,  # installed below (lattice-centroid SQL)
-)
-def q42_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with a FROZEN lattice coarse quantizer: the centroids are
-    the integer-lattice quantizations of the 8 lowest-id vectors (q144's
-    cross-engine-exact lattice), each corpus vector assigns to its nearest
-    cell by exact integer distance, and queries probe their 2 nearest
-    cells.  Hash-checkable (r9 verdict #1): no iterative training, so the
-    oracle replays assignment + probing + ranking verbatim.  The TRAINED
-    quantizer path (seeded MLlib KMeans) lives in operators.simsearch.
-    ivf_topk with recall pinned in tests — same probe math, centroids
-    learned instead of frozen."""
-    e = t(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < N_QUERY_VECS)
-    return S.ivf_topk_frozen(
-        e, queries, k=TOP_K, id_col="vec_id", vec_col="embedding",
-        n_lists=_Q42_LISTS, n_probes=_Q42_PROBES,
-    )
 
 
 def _frozen_ivf_oracle_sql(candidate_pred: str | None = None) -> str:
@@ -220,22 +182,29 @@ def _frozen_ivf_oracle_sql(candidate_pred: str | None = None) -> str:
     """
 
 
-def _install_q42_oracle() -> None:
-    from bigquack_spark.queries.registry import QUERIES, QuerySpec
-
-    spec = QUERIES["q42_ann_ivf_topk"]
-    QUERIES["q42_ann_ivf_topk"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=_frozen_ivf_oracle_sql(), doc=spec.doc
+@query("q42_ann_ivf_topk", oracle=_frozen_ivf_oracle_sql())
+def q42_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN with a FROZEN lattice coarse quantizer: the centroids are
+    the integer-lattice quantizations of the 8 lowest-id vectors (q144's
+    cross-engine-exact lattice), each corpus vector assigns to its nearest
+    cell by exact integer distance, and queries probe their 2 nearest
+    cells.  Hash-checkable (r9 verdict #1): no iterative training, so the
+    oracle replays assignment + probing + ranking verbatim.  The TRAINED
+    quantizer path (seeded MLlib KMeans) lives in operators.simsearch.
+    ivf_topk with recall pinned in tests — same probe math, centroids
+    learned instead of frozen."""
+    e = t(spark, sf_dir, "embeddings")
+    queries = e.filter(F.col("vec_id") < N_QUERY_VECS)
+    return S.ivf_topk_frozen(
+        e, queries, k=TOP_K, id_col="vec_id", vec_col="embedding",
+        n_lists=_Q42_LISTS, n_probes=_Q42_PROBES,
     )
-
-
-_install_q42_oracle()
 
 
 _Q326_PRED = "label = 1"
 
 
-@query("q326_filtered_ann", oracle=None)  # installed below (shared SQL)
+@query("q326_filtered_ann", oracle=_frozen_ivf_oracle_sql(_Q326_PRED))
 def q326_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED ANN (r9 verdict #5) — the retrieval shape production
     vector search actually serves: top-k nearest neighbors AMONG rows
@@ -256,19 +225,6 @@ def q326_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_lists=_Q42_LISTS, n_probes=_Q42_PROBES,
         candidate_predicate=_Q326_PRED,
     )
-
-
-def _install_q326_oracle() -> None:
-    from bigquack_spark.queries.registry import QUERIES, QuerySpec
-
-    spec = QUERIES["q326_filtered_ann"]
-    QUERIES["q326_filtered_ann"] = QuerySpec(
-        name=spec.name, fn=spec.fn,
-        oracle=_frozen_ivf_oracle_sql(_Q326_PRED), doc=spec.doc,
-    )
-
-
-_install_q326_oracle()
 
 
 @query("q75_ann_gemm_topk", oracle=ANN_ORACLE)
@@ -383,62 +339,23 @@ def q136_embedding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.withColumn("vector_ok", ok)
 
 
+def _lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings with their 2-plane seeded sign-LSH bucket as ``bkt``:
+    the blocking key q179, q198 and q220 pair on."""
+    return S.random_hyperplane_lsh(
+        t(spark, sf_dir, "embeddings"), num_planes=2, seed=42, bucket_col="bkt"
+    )
+
+
 HARDNEG_LO, HARDNEG_HI = 0.15, 0.4  # similar-but-not-duplicate cosine band
 HARDNEG_K = 2
 
 
 @query(
     "q179_hard_negatives",
-    oracle=None,  # filled below to reuse dedup's plane SQL without an import cycle
-)
-def q179_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining for contrastive training: per anchor vector,
-    the top-{HARDNEG_K} bucket-mates whose cosine lands in the
-    similar-but-not-duplicate band [{HARDNEG_LO}, {HARDNEG_HI}) — above
-    it is q172's dedup territory, far below it the negative is trivial
-    and teaches the model nothing.  Candidates come from the SAME seeded
-    sign-LSH buckets as q35/q172 (one bucket-keyed self-join, bounded by
-    bucket occupancy — never corpus x corpus), ranked by (cosine desc,
-    neg_id) per anchor with a window over the anchor key.  Cosines are
-    rounded to 6 decimals BEFORE ranking so the order is engine-
-    invariant; the oracle replays plane literals, band, and ranking
-    exactly.  At 100 TB this inherits q172's posture: bucket caps,
-    per-anchor output bounded at k rows."""
-    from pyspark.sql.window import Window
-
-    from bigquack_spark.operators.simsearch import cosine, random_hyperplane_lsh
-
-    e = t(spark, sf_dir, "embeddings")
-    v = random_hyperplane_lsh(
-        e, vec_col="embedding", num_planes=2, seed=42, bucket_col="bkt"
-    ).select("vec_id", "bkt", F.col("embedding").cast("array<double>").alias("v"))
-    a = v.select(F.col("vec_id").alias("anchor"), "bkt", F.col("v").alias("va"))
-    b = v.select(F.col("vec_id").alias("neg_id"), "bkt", F.col("v").alias("vb"))
-    sims = (
-        a.join(b, "bkt")
-        .filter(F.col("anchor") != F.col("neg_id"))
-        .select(
-            "anchor", "neg_id",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"),
-        )
-        .filter((F.col("cos") >= HARDNEG_LO) & (F.col("cos") < HARDNEG_HI))
-    )
-    w = Window.partitionBy("anchor").orderBy(F.desc("cos"), "neg_id")
-    return (
-        sims.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= HARDNEG_K)
-        .select("anchor", "neg_id", "cos", F.col("rnk").cast("int").alias("rnk"))
-    )
-
-
-def _install_q179_oracle() -> None:
-    from bigquack_spark.queries import dedup as _dq
-    from bigquack_spark.queries.registry import QUERIES, QuerySpec
-
-    plane = _dq._q35_plane_sql(2, 64, 42)
-    sql = f"""
+    oracle=f"""
     WITH v AS (
-      SELECT vec_id, e, {plane} AS bkt
+      SELECT vec_id, e, {S.random_hyperplane_lsh_sql(2, 64, 42)} AS bkt
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
     ),
     sims AS (
@@ -456,65 +373,41 @@ def _install_q179_oracle() -> None:
     )
     SELECT anchor, neg_id, cos, CAST(rnk AS INTEGER) AS rnk
     FROM banded WHERE rnk <= {HARDNEG_K}
-    """
-    spec = QUERIES["q179_hard_negatives"]
-    QUERIES["q179_hard_negatives"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=sql, doc=spec.doc
+    """,
+)
+def q179_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining for contrastive training: per anchor vector,
+    the top-``HARDNEG_K`` bucket-mates whose cosine lands in the
+    similar-but-not-duplicate band [``HARDNEG_LO``, ``HARDNEG_HI``) — above
+    it is q172's dedup territory, far below it the negative is trivial
+    and teaches the model nothing.  Candidates are
+    ``operators.simsearch.cosine_pairs`` over the 2-plane seeded sign-LSH
+    bucket (one bucket-keyed self-join, bounded by bucket occupancy —
+    never corpus x corpus), ranked by (cosine desc, neg_id) per anchor
+    with a window over the anchor key.  Cosines are rounded to 6 decimals
+    BEFORE ranking so the order is engine-invariant; the oracle replays
+    plane literals, band, and ranking exactly.  At 100 TB this inherits
+    q172's posture: bucket caps, per-anchor output bounded at k rows."""
+    from pyspark.sql.window import Window
+
+    sims = (
+        S.cosine_pairs(_lsh_bucketed(spark, sf_dir), block_col="bkt")
+        .select(F.col("a").alias("anchor"), F.col("b").alias("neg_id"), "cos")
+        .filter((F.col("cos") >= HARDNEG_LO) & (F.col("cos") < HARDNEG_HI))
     )
-
-
-_install_q179_oracle()
+    w = Window.partitionBy("anchor").orderBy(F.desc("cos"), "neg_id")
+    return (
+        sims.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= HARDNEG_K)
+        .select("anchor", "neg_id", "cos", F.col("rnk").cast("int").alias("rnk"))
+    )
 
 
 @query(
     "q198_contrastive_pairs",
-    oracle=None,  # installed below (shares the seeded-plane SQL)
-)
-def q198_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive training-pair manifest: one table of (anchor, other,
-    label, score) where label 1 = near-duplicate positives (cosine >=
-    {0.4}, q35's blocked pairs) and label 0 = hard negatives (q179's
-    similar-not-duplicate band, top-{2} per anchor) — the
-    ready-to-sample input for embedding-model fine-tuning, emitted by
-    the SAME bucket-bounded candidate join computed once.  Balance
-    accounting rides along (the trainer needs the ratio).  The oracle
-    replays both branches from one shared CTE."""
-    from pyspark.sql.window import Window
-
-    from bigquack_spark.operators.simsearch import cosine, random_hyperplane_lsh
-
-    e = t(spark, sf_dir, "embeddings")
-    v = random_hyperplane_lsh(
-        e, vec_col="embedding", num_planes=2, seed=42, bucket_col="bkt"
-    ).select("vec_id", "bkt", F.col("embedding").cast("array<double>").alias("v"))
-    a = v.select(F.col("vec_id").alias("anchor"), "bkt", F.col("v").alias("va"))
-    b = v.select(F.col("vec_id").alias("other"), "bkt", F.col("v").alias("vb"))
-    sims = (
-        a.join(b, "bkt")
-        .filter(F.col("anchor") != F.col("other"))
-        .select("anchor", "other", F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"))
-    )
-    pos = sims.filter((F.col("cos") >= 0.4) & (F.col("anchor") < F.col("other"))).select(
-        "anchor", "other", F.lit(1).alias("label"), F.col("cos").alias("score")
-    )
-    w = Window.partitionBy("anchor").orderBy(F.desc("cos"), "other")
-    neg = (
-        sims.filter((F.col("cos") >= HARDNEG_LO) & (F.col("cos") < HARDNEG_HI))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= HARDNEG_K)
-        .select("anchor", "other", F.lit(0).alias("label"), F.col("cos").alias("score"))
-    )
-    return pos.unionByName(neg)
-
-
-def _install_q198_oracle() -> None:
-    from bigquack_spark.queries import dedup as _dq
-    from bigquack_spark.queries.registry import QUERIES, QuerySpec
-
-    plane = _dq._q35_plane_sql(2, 64, 42)
-    sql = f"""
+    oracle=f"""
     WITH v AS (
-      SELECT vec_id, e, {plane} AS bkt
+      SELECT vec_id, e, {S.random_hyperplane_lsh_sql(2, 64, 42)} AS bkt
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
     ),
     sims AS (
@@ -533,14 +426,33 @@ def _install_q198_oracle() -> None:
       SELECT *, row_number() OVER (PARTITION BY anchor ORDER BY cos DESC, other) AS rnk
       FROM sims WHERE cos >= {HARDNEG_LO} AND cos < {HARDNEG_HI}
     ) WHERE rnk <= {HARDNEG_K}
-    """
-    spec = QUERIES["q198_contrastive_pairs"]
-    QUERIES["q198_contrastive_pairs"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=sql, doc=spec.doc
+    """,
+)
+def q198_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contrastive training-pair manifest: one table of (anchor, other,
+    label, score) where label 1 = near-duplicate positives (cosine >=
+    0.4, q35's blocked pairs) and label 0 = hard negatives (q179's
+    similar-not-duplicate band, top-``HARDNEG_K`` per anchor) — the
+    ready-to-sample input for embedding-model fine-tuning, emitted from
+    ONE ``operators.simsearch.cosine_pairs`` bucket join.  Balance
+    accounting rides along (the trainer needs the ratio).  The oracle
+    replays both branches from one shared CTE."""
+    from pyspark.sql.window import Window
+
+    sims = S.cosine_pairs(_lsh_bucketed(spark, sf_dir), block_col="bkt").select(
+        F.col("a").alias("anchor"), F.col("b").alias("other"), "cos"
     )
-
-
-_install_q198_oracle()
+    pos = sims.filter((F.col("cos") >= 0.4) & (F.col("anchor") < F.col("other"))).select(
+        "anchor", "other", F.lit(1).alias("label"), F.col("cos").alias("score")
+    )
+    w = Window.partitionBy("anchor").orderBy(F.desc("cos"), "other")
+    neg = (
+        sims.filter((F.col("cos") >= HARDNEG_LO) & (F.col("cos") < HARDNEG_HI))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= HARDNEG_K)
+        .select("anchor", "other", F.lit(0).alias("label"), F.col("cos").alias("score"))
+    )
+    return pos.unionByName(neg)
 
 
 MATRYOSHKA_DIM = 16  # truncated prefix dimensionality
@@ -821,80 +733,9 @@ def q217_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q220_alignment_uniformity",
-    oracle=None,  # installed below (reuses the seeded-plane SQL like q179/q198)
-)
-def q220_alignment_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space health metrics (Wang & Isola): ALIGNMENT = mean
-    squared L2 distance over the near-duplicate positive pairs (q198's
-    bucketed cos >= 0.4 pairs — closer is better), UNIFORMITY =
-    log-mean-exp(-2 d²) over the bucket-bounded candidate pairs (more
-    negative = embeddings spread over the sphere; a collapsed encoder
-    scores near 0).  The training-monitoring counterpart of the q136
-    per-vector gate: q136 catches broken VECTORS, this catches a broken
-    SPACE.  Both means fold over (anchor, other)-sorted term lists (q184
-    discipline) and the pair set is the SAME sign-LSH bucket join as
-    q35/q172/q179/q198 — bounded by bucket occupancy, never corpus²;
-    at 100 TB the metric runs on a deterministic md5 sample of buckets
-    with identical plan shape."""
-    from pyspark.sql.window import Window  # noqa: F401
-
-    from bigquack_spark.operators.simsearch import cosine, random_hyperplane_lsh
-
-    e = t(spark, sf_dir, "embeddings")
-    v = random_hyperplane_lsh(
-        e, vec_col="embedding", num_planes=2, seed=42, bucket_col="bkt"
-    ).select("vec_id", "bkt", F.col("embedding").cast("array<double>").alias("v"))
-    a = v.select(F.col("vec_id").alias("anchor"), "bkt", F.col("v").alias("va"))
-    b = v.select(F.col("vec_id").alias("other"), "bkt", F.col("v").alias("vb"))
-    d2 = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        a.join(b, "bkt")
-        .filter(F.col("anchor") < F.col("other"))
-        .select(
-            "anchor", "other",
-            d2.alias("d2"),
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"),
-        )
-    )
-    folded = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum(F.when(F.col("cos") >= 0.4, 1).otherwise(0)).cast("long").alias("n_pos"),
-        F.array_sort(
-            F.collect_list(
-                F.struct("anchor", "other",
-                         F.when(F.col("cos") >= 0.4, F.col("d2")).otherwise(F.lit(0.0)).alias("vp"))
-            )
-        ).alias("lp"),
-        F.array_sort(
-            F.collect_list(F.struct("anchor", "other", F.exp(-2.0 * F.col("d2")).alias("vu")))
-        ).alias("lu"),
-    )
-
-    def fold(col, field):
-        return F.aggregate(
-            F.transform(col, lambda s: s.getField(field)), F.lit(0.0), lambda acc, x: acc + x
-        )
-
-    return folded.select(
-        "n_pairs",
-        "n_pos",
-        F.round(fold(F.col("lp"), "vp") / F.col("n_pos"), 6).alias("alignment"),
-        F.round(F.log(fold(F.col("lu"), "vu") / F.col("n_pairs")), 6).alias("uniformity"),
-    )
-
-
-def _install_q220_oracle() -> None:
-    from bigquack_spark.queries import dedup as _dq
-    from bigquack_spark.queries.registry import QUERIES, QuerySpec
-
-    plane = _dq._q35_plane_sql(2, 64, 42)
-    sql = f"""
+    oracle=f"""
     WITH v AS (
-      SELECT vec_id, e, {plane} AS bkt
+      SELECT vec_id, e, {S.random_hyperplane_lsh_sql(2, 64, 42)} AS bkt
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
     ),
     pairs AS (
@@ -921,14 +762,56 @@ def _install_q220_oracle() -> None:
            round(ln(list_reduce(list_prepend(CAST(0 AS DOUBLE), lu), (a, x) -> a + x)
                  / n_pairs), 6) AS uniformity
     FROM folded
-    """
-    spec = QUERIES["q220_alignment_uniformity"]
-    QUERIES["q220_alignment_uniformity"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=sql, doc=spec.doc
+    """,
+)
+def q220_alignment_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space health metrics (Wang & Isola): ALIGNMENT = mean
+    squared L2 distance over the near-duplicate positive pairs (q198's
+    bucketed cos >= 0.4 pairs — closer is better), UNIFORMITY =
+    log-mean-exp(-2 d²) over the bucket-bounded candidate pairs (more
+    negative = embeddings spread over the sphere; a collapsed encoder
+    scores near 0).  The training-monitoring counterpart of the q136
+    per-vector gate: q136 catches broken VECTORS, this catches a broken
+    SPACE.  Both means fold over (anchor, other)-sorted term lists (q184
+    discipline) and the pair set is ``operators.simsearch.cosine_pairs``
+    over the 2-plane sign-LSH bucket, each unordered pair once — bounded
+    by bucket occupancy, never corpus²; at 100 TB the metric runs on a
+    deterministic md5 sample of buckets with identical plan shape."""
+    d2 = F.aggregate(
+        F.zip_with("va", "vb", lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    pairs = (
+        S.cosine_pairs(_lsh_bucketed(spark, sf_dir), block_col="bkt")
+        .filter(F.col("a") < F.col("b"))
+        .select(F.col("a").alias("anchor"), F.col("b").alias("other"), d2.alias("d2"), "cos")
+    )
+    folded = pairs.agg(
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.sum(F.when(F.col("cos") >= 0.4, 1).otherwise(0)).cast("long").alias("n_pos"),
+        F.array_sort(
+            F.collect_list(
+                F.struct("anchor", "other",
+                         F.when(F.col("cos") >= 0.4, F.col("d2")).otherwise(F.lit(0.0)).alias("vp"))
+            )
+        ).alias("lp"),
+        F.array_sort(
+            F.collect_list(F.struct("anchor", "other", F.exp(-2.0 * F.col("d2")).alias("vu")))
+        ).alias("lu"),
     )
 
+    def fold(col, field):
+        return F.aggregate(
+            F.transform(col, lambda s: s.getField(field)), F.lit(0.0), lambda acc, x: acc + x
+        )
 
-_install_q220_oracle()
+    return folded.select(
+        "n_pairs",
+        "n_pos",
+        F.round(fold(F.col("lp"), "vp") / F.col("n_pos"), 6).alias("alignment"),
+        F.round(F.log(fold(F.col("lu"), "vu") / F.col("n_pairs")), 6).alias("uniformity"),
+    )
 
 
 @query(
@@ -1283,7 +1166,33 @@ def q288_label_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q328_filtered_ann_coverage", oracle=None)  # installed below
+@query(
+    "q328_filtered_ann_coverage",
+    oracle=f"""
+    WITH u AS (
+      SELECT qid, neighbor_id FROM ({_frozen_ivf_oracle_sql()})
+    ),
+    f AS (
+      SELECT qid, neighbor_id FROM ({_frozen_ivf_oracle_sql(_Q326_PRED)})
+    )
+    SELECT COALESCE(u.qid, f.qid) AS qid,
+           CAST(count(u.neighbor_id) AS BIGINT) AS n_unfiltered,
+           CAST(count(f.neighbor_id) AS BIGINT) AS n_filtered,
+           CAST(sum(CASE WHEN u.neighbor_id IS NOT NULL
+                          AND f.neighbor_id IS NOT NULL
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_overlap,
+           round(
+             CAST(sum(CASE WHEN u.neighbor_id IS NOT NULL
+                            AND f.neighbor_id IS NOT NULL
+                           THEN 1 ELSE 0 END) AS DOUBLE)
+             / nullif(CAST(count(u.neighbor_id) AS DOUBLE), 0.0),
+             6
+           ) AS survivor_share
+    FROM u FULL JOIN f
+      ON u.qid = f.qid AND u.neighbor_id = f.neighbor_id
+    GROUP BY COALESCE(u.qid, f.qid)
+    """,
+)
 def q328_filtered_ann_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered-ANN coverage audit — the acceptance question a predicate
     filter raises in production: per query, how much of the UNFILTERED
@@ -1328,42 +1237,6 @@ def q328_filtered_ann_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("survivor_share"),
         )
     )
-
-
-def _install_q328_oracle() -> None:
-    from bigquack_spark.queries.registry import QUERIES, QuerySpec
-
-    sql = f"""
-    WITH u AS (
-      SELECT qid, neighbor_id FROM ({_frozen_ivf_oracle_sql()})
-    ),
-    f AS (
-      SELECT qid, neighbor_id FROM ({_frozen_ivf_oracle_sql(_Q326_PRED)})
-    )
-    SELECT COALESCE(u.qid, f.qid) AS qid,
-           CAST(count(u.neighbor_id) AS BIGINT) AS n_unfiltered,
-           CAST(count(f.neighbor_id) AS BIGINT) AS n_filtered,
-           CAST(sum(CASE WHEN u.neighbor_id IS NOT NULL
-                          AND f.neighbor_id IS NOT NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_overlap,
-           round(
-             CAST(sum(CASE WHEN u.neighbor_id IS NOT NULL
-                            AND f.neighbor_id IS NOT NULL
-                           THEN 1 ELSE 0 END) AS DOUBLE)
-             / nullif(CAST(count(u.neighbor_id) AS DOUBLE), 0.0),
-             6
-           ) AS survivor_share
-    FROM u FULL JOIN f
-      ON u.qid = f.qid AND u.neighbor_id = f.neighbor_id
-    GROUP BY COALESCE(u.qid, f.qid)
-    """
-    spec = QUERIES["q328_filtered_ann_coverage"]
-    QUERIES["q328_filtered_ann_coverage"] = QuerySpec(
-        name=spec.name, fn=spec.fn, oracle=sql, doc=spec.doc,
-    )
-
-
-_install_q328_oracle()
 
 
 @query(

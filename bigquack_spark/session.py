@@ -84,6 +84,10 @@ RETRY_CONFS: dict[str, str] = {
 }
 
 
+#: The directory that holds the ``bigquack_spark`` package.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
 
@@ -115,6 +119,13 @@ def get_spark(
         conf["spark.sql.warehouse.dir"] = warehouse_dir
     if extra:
         conf.update(extra)
+    # Python UDF workers are fresh interpreters that see the driver's cwd
+    # and PYTHONPATH but not its sys.path, so a driver run from elsewhere
+    # hands them the package's directory (a PYTHONPATH the caller set for
+    # the executors stays after it; Spark appends the process's own)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -32,14 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bigquack_spark.sources.parquet import table_path
+from bigquack_spark.sources.parquet import _read_parquet, table_path
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents table (schema pinned from the
     batch reader, same recipe as read_events_stream)."""
     path = table_path(sf_dir, "documents")
-    batch_schema = spark.read.parquet(path).schema
+    batch_schema = _read_parquet(spark, path).schema
     return (
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", os.path.basename(path))

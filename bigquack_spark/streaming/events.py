@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bigquack_spark.sources.parquet import table_path
+from bigquack_spark.sources.parquet import _read_parquet, table_path
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,7 +38,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch reader (a stream cannot infer), and the TIMESTAMP(NANOS) column is
     normalized to a microsecond TimestampType exactly as in batch."""
     path = table_path(sf_dir, "events")
-    batch_schema = spark.read.parquet(path).schema
+    batch_schema = _read_parquet(spark, path).schema
     # the file source wants a directory; stream the sf_dir with a glob
     # pinned to the events file
     stream = (

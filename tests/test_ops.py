@@ -2534,3 +2534,90 @@ def test_probe_path_advisor_refuses_dominated_pq(spark, tmp_path):
     assert rec["recommendation"] == "ivf_pq"
     assert rec["pq_code_bytes"] > 0
     assert rec["dim"] == 64
+
+
+# ------------------------------------------------------ cosine pairs ---------
+def test_plane_sql_buckets_match_spark_lsh_at_default_planes(spark, duck):
+    """DuckDB evaluating ``random_hyperplane_lsh_sql`` gives every vector
+    the bucket Spark's ``random_hyperplane_lsh`` gives it at the operator's
+    default 16 planes (the q35 and q41 oracles cover only 2 and 4)."""
+    sql = S.random_hyperplane_lsh_sql(16, 64, 42)
+    want = dict(duck.execute(
+        f"SELECT vec_id, {sql} FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e "
+        "FROM embeddings)"
+    ).fetchall())
+    e = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    got = {r.vec_id: r.lsh_bucket
+           for r in S.random_hyperplane_lsh(e).select("vec_id", "lsh_bucket").collect()}
+    assert got == want
+    assert len(set(got.values())) > 16  # the buckets really spread
+
+
+def _fold_cos_round6(va, vb) -> float:
+    """Cosine with the SQL fold's order (sequential over dimensions), then
+    Spark's ``round(x, 6)``: HALF_UP on the double's shortest decimal."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def dot(x, y):
+        acc = 0.0
+        for p, q in zip(x, y):
+            acc += p * q
+        return acc
+
+    cos = dot(va, vb) / (dot(va, va) ** 0.5 * dot(vb, vb) ** 0.5)
+    return float(Decimal(repr(cos)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def test_cosine_pairs_match_brute_force(spark):
+    """Blocked (2-plane sign-LSH bucket) and unblocked ``cosine_pairs``
+    equal a brute force over every ordered pair a != b at the round-6
+    grain, each side's label carried along."""
+    e = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").filter("vec_id < 120")
+    v = S.random_hyperplane_lsh(e, num_planes=2, bucket_col="bkt")
+    rows = v.select("vec_id", "label", "bkt", "embedding").collect()
+    vecs = {r.vec_id: list(r.embedding) for r in rows}  # float32 values, exact as doubles
+    want_all = {
+        (x.vec_id, y.vec_id, x.label, y.label, _fold_cos_round6(vecs[x.vec_id], vecs[y.vec_id]))
+        for x in rows for y in rows if x.vec_id != y.vec_id
+    }
+    bkt = {r.vec_id: r.bkt for r in rows}
+    cols = ["a", "b", "label_a", "label_b", "cos"]
+
+    blocked = S.cosine_pairs(v, block_col="bkt")
+    assert set(blocked.columns) == {"a", "b", "va", "vb", "cos", "bkt", "label_a", "label_b"}
+    got = {tuple(r) for r in blocked.select(*cols).collect()}
+    assert got == {w for w in want_all if bkt[w[0]] == bkt[w[1]]}
+    assert len(set(bkt.values())) > 1 and got != want_all  # the block really prunes
+
+    got = {tuple(r) for r in S.cosine_pairs(e).select(*cols).collect()}
+    assert got == want_all
+
+
+@pytest.mark.parametrize(
+    "name", ["q35_embedding_near_dup", "q172_semantic_dedup", "q220_alignment_uniformity"]
+)
+def test_unordered_pair_filter_sits_in_the_join(spark, name):
+    """``cosine_pairs`` has no ordering option because a caller's
+    ``.filter(a < b)`` costs nothing: Catalyst folds it into the bucket
+    join's condition, and no Filter runs above that join."""
+    import re
+
+    from bigquack_spark.queries import QUERIES
+
+    plan = QUERIES[name].fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+    lines = re.sub(r"#\d+L?", "", plan).splitlines()  # drop expression ids
+
+    def node(line):
+        return line.lstrip(" :+-")
+
+    joins = [i for i, line in enumerate(lines) if "Join" in node(line).split(" ")[0]
+             and "(a < b)" in line]
+    assert len(joins) == 1, lines
+    ancestors, depth = [], len(lines[joins[0]]) - len(node(lines[joins[0]]))
+    for line in reversed(lines[:joins[0]]):
+        d = len(line) - len(node(line))
+        if d < depth:
+            ancestors.append(node(line))
+            depth = d
+    assert not [a for a in ancestors if a.startswith("Filter")], ancestors
+    assert not [line for line in lines if node(line).startswith("Filter") and "a < b" in line]

@@ -1092,3 +1092,53 @@ def test_warm_query_build_runs_no_job(spark):
         build(spark, SF_SMOKE)
         _, jobs = _jobs_run(spark, lambda: build(spark, SF_SMOKE))
         assert jobs == want, f"{name}: second build ran {jobs} jobs, want {want}"
+
+
+def test_stream_readers_and_register_parquet_warm_read_runs_no_job(spark):
+    """The streaming readers pin their schema, and ``Engine.register_parquet``
+    reads its file, through the remembered-schema read: a second call runs
+    no Spark job."""
+    from bigquack_spark.engine import Engine
+    from bigquack_spark.sources.parquet import table_path
+    from bigquack_spark.streaming.documents import read_documents_stream
+    from bigquack_spark.streaming.events import read_events_stream
+
+    engine = Engine(spark)
+    calls = {
+        "events stream": lambda: read_events_stream(spark, SF_SMOKE),
+        "documents stream": lambda: read_documents_stream(spark, SF_SMOKE),
+        "register_parquet": lambda: engine.register_parquet(
+            "warm_nation", table_path(SF_SMOKE, "nation")),
+    }
+    for name, call in calls.items():
+        call()
+        _, jobs = _jobs_run(spark, call)
+        assert jobs == 0, f"{name}: warm call ran {jobs} jobs"
+    assert spark.table("warm_nation").count() == 25
+
+
+def test_udf_query_runs_from_another_cwd(tmp_path):
+    """Python UDF workers find the package when the driver imports it from
+    outside its cwd: ``get_spark`` hands its directory to the executors.
+    q60's feature kernels run in those workers."""
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from bigquack_spark.queries import QUERIES
+        from bigquack_spark.session import get_spark
+        spark = get_spark(master="local[1]", extra={{"spark.driver.memory": "1g"}})
+        name = next(n for n in QUERIES if n.startswith("q60_"))
+        print("ROWS", QUERIES[name].fn(spark, {SF_SMOKE!r}).count())
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=300,
+        cwd=str(tmp_path), env=env,
+    )
+    assert "ROWS 500" in proc.stdout, proc.stderr[-3000:]

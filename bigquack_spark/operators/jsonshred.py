@@ -1,5 +1,5 @@
-"""Schema-on-write JSON shredding — the measured remedy for per-query
-JSON parse cost (bench_full.json `trend_100x.q20_json_parse_wall`).
+"""Schema-on-write JSON shredding — the remedy for the per-query JSON
+parse cost measured at the 100x bench tier in round 4.
 
 The reference maps BQ JSON to STRING (bigquery_write.go:189-190) and every
 query re-parses it.  At the 100x bench tier that re-parse is 9x the cost

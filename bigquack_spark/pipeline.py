@@ -112,10 +112,10 @@ def transfer(
     and the landing write parses the JSON ONCE (``from_json`` projection —
     rides the scan, no extra pass) and stores typed top-level columns.
     Every later query reads columnar values instead of re-parsing: measured
-    15x on the q20 aggregate at the 100x bench tier (bench_full.json
-    ``trend_100x.q20_json_parse_wall``).  The reference maps BQ JSON to
-    STRING and re-parses per query (bigquery_write.go:189-190); this is
-    the schema-carry analogue of its :372-382 write path.
+    15x on the q20 aggregate at the 100x bench tier (round 4).  The
+    reference maps BQ JSON to STRING and re-parses per query
+    (bigquery_write.go:189-190); this is the schema-carry analogue of its
+    :372-382 write path.
 
     ``bucket_by`` (r10 verdict #8) lands the table BUCKETED so the
     q68/q21-class layout win is available at ingest time, not only via a

@@ -99,7 +99,7 @@ _BASKET_TOP_K = 50
     """,
 )
 def q127_part_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket co-occurrence: the top-{K} part pairs appearing in the
+    """Market-basket co-occurrence: the top-``_BASKET_TOP_K`` part pairs appearing in the
     same order.  The self-join is keyed on l_orderkey, so pairwise work is
     bounded by lines-per-order squared (~7² in TPC-H — a per-group
     constant), never the table cross product; one shuffle for the join,
@@ -741,7 +741,7 @@ def q195_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive forecast backtest — the capacity-planning baseline
     every fancier model must beat: each (event_type, day) is predicted
     by the floor-mean of the same weekday's counts over the prior
-    {FORECAST_WEEKS} weeks (pure lag(7k) windows on an integer day
+    ``FORECAST_WEEKS`` weeks (pure lag(7k) windows on an integer day
     index — q156 established the epoch-lattice weekday discipline), and
     the readout is per-type WAPE (total |err| / total actual).  Integer
     day buckets, integer forecasts (floor mean), integer error sums —
@@ -917,7 +917,7 @@ def q203_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit bin grid (missing bins are REAL zeros, floored for ln), and
     the PSI sum folded over bin-ORDERED term lists (the q184/q193
     sorted-fold rule) so both engines add the same doubles in the same
-    order.  Per-type cell state is {PSI_BINS} bins — corpus-size-free."""
+    order.  Per-type cell state is ``PSI_BINS`` bins — corpus-size-free."""
     e = t(spark, sf_dir, "events", columns=["ts", "event_type", "value"])
     us = F.unix_micros("ts")
     span = e.agg(
@@ -1145,7 +1145,7 @@ def q219_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q150 EWMA smoothing, q156 weekday shares, q158 changepoints, q195
     seasonal-naive backtest) with the classic additive decomposition that
     anomaly baselines subtract before thresholding.  Edge days without a
-    full +-{STL_HALF} window are excluded (win_n check) instead of
+    full +-``STL_HALF`` window are excluded (win_n check) instead of
     emitting a biased partial mean.  Scale: the day grid is calendar-
     bounded, so the single-partition trend window and the 7-row seasonal
     table are O(days) — the corpus-sized work is only the first
@@ -1240,7 +1240,7 @@ def q230_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival of customer activity lifetime with RIGHT
     CENSORING — the estimator q206's observed-lifetime curve
     approximates without: lifetime = days between first and last order,
-    a customer whose last order falls within {KM_CENSOR_DAYS} days of
+    a customer whose last order falls within ``KM_CENSOR_DAYS`` days of
     the corpus horizon is CENSORED (still alive — counting them as
     churned biases survival down, the classic retention-analysis error).
     S(t) = Π over event times ≤ t of (1 − d/n_risk), computed as
@@ -1398,7 +1398,7 @@ def q237_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-adjusted anomaly detection — q219's decomposition turned
     into a DETECTOR: after removing trend (centered 7-day MA) and
     weekday seasonality, a day is anomalous when its residual sits more
-    than {ANOM_Z} robust sigmas (1.4826·MAD, the q134 scale) from the
+    than ``ANOM_Z`` robust sigmas (1.4826·MAD, the q134 scale) from the
     residual median — the detector that does NOT page on 'every Sunday
     is low' (q156's point) or 'the quarter is growing' (the trend), only
     on genuinely unexplained days.  Medians interpolate the same two
@@ -1503,7 +1503,7 @@ KS_ALPHA_C = 1.358  # c(0.05) for the two-sample KS critical value
 )
 def q245_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov test on document-length
-    distributions between sources '{KS_SRC_A}' and '{KS_SRC_B}' — the
+    distributions between sources ``KS_SRC_A`` and ``KS_SRC_B`` — the
     UNBINNED distribution-shift check beside q203's binned PSI: D = the
     maximum ECDF gap (with the length where it happens — the actionable
     part: WHERE the distributions diverge), against the α=0.05

@@ -496,7 +496,7 @@ def q189_class_balance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     'class-balanced loss' weight table, Cui et al. CVPR 2019): per label,
     raw count, effective sample count (1-β^n)/(1-β), and the normalized
     inverse-effective-number weight a weighted loss or sampler consumes.
-    β={BALANCE_BETA} discounts marginal duplicates-in-effect — the
+    β=``BALANCE_BETA`` discounts marginal duplicates-in-effect — the
     principled middle ground between no re-weighting and raw inverse
     frequency.  All from ONE |labels|-sized aggregate; the normalizer is
     a broadcast 1-row sum; pow/division over exact BIGINTs are identical
@@ -606,8 +606,8 @@ def _pq_oracle() -> str:
 def q213_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (PQ) encoding — the codebook compression
     behind IVF-PQ indexes: each 64-dim vector splits into
-    {PQ_SUBSPACES} x {PQ_SUBDIM}-dim subspaces, each subspace trains its
-    own {PQ_K}-entry codebook ({PQ_ITERS} unrolled Lloyd iterations,
+    ``PQ_SUBSPACES`` x ``PQ_SUBDIM``-dim subspaces, each subspace trains its
+    own ``PQ_K``-entry codebook (``PQ_ITERS`` unrolled Lloyd iterations,
     deterministic first-K init — q144's exact-lattice machinery applied
     per slice), and the vector's code is the concatenation of its nearest
     codebook entries plus the total reconstruction error.  Plan shape:

@@ -327,7 +327,7 @@ _PACK_SALT = "pack-v1"
     """,
 )
 def q115_sliced_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB form of q107: documents hash into {S} independent slices
+    """The 100 TB form of q107: documents hash into ``_PACK_SLICES`` independent slices
     (md5 bucket — the same engine-portable assignment as q83), and each
     slice packs its own token-budget shards inside its own window
     partition.  No global ordering anywhere: the window partitions by
@@ -398,7 +398,7 @@ _BATCH_SALT = "lenbatch_v1"
 )
 def q132_length_bucketed_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed batch assembly — the padding-efficiency op of a
-    training dataloader: documents band into {LEN_BAND}-token length
+    training dataloader: documents band into ``_LEN_BAND``-token length
     buckets so each batch packs near-homogeneous lengths, then next-fit
     token-budget packing runs per (band x md5 sub-slice) via
     operators/corpus.pack_shards.  Per batch: actual vs padded token counts
@@ -1130,7 +1130,7 @@ OOV_VOCAB_K = 1000  # tokenizer vocabulary size for the coverage audit
     """,
 )
 def q223_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-coverage audit: freeze the top-{OOV_VOCAB_K} corpus
+    """Tokenizer-coverage audit: freeze the top-``OOV_VOCAB_K`` corpus
     tokens as the vocabulary (the word-level stand-in for a trained
     tokenizer's merge table) and measure each source's out-of-vocabulary
     token rate — the number that predicts token-inflation when a
@@ -1138,7 +1138,7 @@ def q223_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     other languages) and the trigger for vocab retraining or fertility
     re-budgeting (q138's BPE counter is the per-doc view; this is the
     per-source rollout decision).  Plan: one token-frequency shuffle, a
-    {OOV_VOCAB_K}-row vocab via TakeOrdered, then a broadcast semi-ish
+    ``OOV_VOCAB_K``-row vocab via TakeOrdered, then a broadcast semi-ish
     LEFT join tagging each token occurrence — the fact-side token stream
     never shuffles for the join because the vocab broadcasts.  Exact
     integer counts; one rounded division."""
@@ -1206,8 +1206,8 @@ def q248_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     every epoch an independent, seeded, bit-reproducible reshuffle (the
     property numpy-permutation-on-the-driver cannot provide at corpus
     scale).  Plan: the only shuffle is the (epoch, shard)-partitioned
-    window — {ORDER_EPOCHS}x{ORDER_SHARDS} bounded partitions, each
-    ~1/{ORDER_SHARDS} of an epoch, NEVER a single global-order partition
+    window — ``ORDER_EPOCHS``x``ORDER_SHARDS`` bounded partitions, each
+    ~1/``ORDER_SHARDS`` of an epoch, NEVER a single global-order partition
     (q59's noted limit, solved the way it prescribes).  At 100 TB raise
     ORDER_SHARDS to target-file-count; everything stays
     partition-parallel."""

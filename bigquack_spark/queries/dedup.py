@@ -561,7 +561,7 @@ def q140_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetrize by EXPLODING each scored pair into both directions (r13):
     # the old unionAll(swap) referenced `scored` twice, and a re-referenced
     # DataFrame subtree is re-computed — the before-plan carried TWO full
-    # copies of the banding+verify pipeline (plans/r13/q140_*_before.txt).
+    # copies of the banding+verify pipeline (round-13 plan dump).
     sym = scored.select(
         F.explode(
             F.array(
@@ -647,13 +647,13 @@ EVAL_THRESHOLD = 0.5  # looser than production 0.9: exercises LSH recall loss
 def q160_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH quality evaluation harness: precision/recall of the MinHash
     banding candidate generator against EXACT pairwise Jaccard ground
-    truth on a bounded {EVAL_SLICE}-document slice — the measurement a
+    truth on a bounded ``EVAL_SLICE``-document slice — the measurement a
     team runs before trusting a (bands, rows) configuration at corpus
     scale, where ground truth is unobtainable.  The threshold is looser
     than production (0.5 vs 0.9) precisely to expose banding recall loss.
 
     Scale posture: the O(n^2) exact pass runs ONLY on the bounded slice
-    (a broadcast nested-loop by construction — the {EVAL_SLICE}-row side
+    (a broadcast nested-loop by construction — the ``EVAL_SLICE``-row side
     broadcasts); the candidate side reuses the production banding plan
     unchanged, so the measured recall is the production operator's
     recall.  Output is one audit row."""
@@ -1168,7 +1168,7 @@ CONTAIN_THRESHOLD = 0.9  # |A ∩ B| / |A| for A-contained-in-B
 def q236_containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASYMMETRIC containment detection — the subset-duplicate class
     symmetric Jaccard structurally misses: a short document whose
-    vocabulary sits ≥{CONTAIN_THRESHOLD} inside a longer one (quote
+    vocabulary sits ≥``CONTAIN_THRESHOLD`` inside a longer one (quote
     farms, article+boilerplate mirrors, truncated re-crawls) scores
     |A∩B|/|A| high while |A∩B|/|A∪B| stays low, so q36's threshold never
     fires.  Candidates come from the SAME minhash band join (ordered
@@ -1374,8 +1374,8 @@ def q243_content_defined_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking (Rabin-style) vs fixed-size chunking,
     scored by corpus chunk-dedup rate — the storage/transfer-dedup
     technique (LBFS, borg, restic) brought to corpus text: a chunk
-    boundary falls wherever the rolling {CDC_K}-token hash ≡ 0 mod
-    {CDC_MASK}, so an INSERTION early in a document only perturbs the
+    boundary falls wherever the rolling ``CDC_K``-token hash ≡ 0 mod
+    ``CDC_MASK``, so an INSERTION early in a document only perturbs the
     chunk it lands in — every later boundary re-synchronizes — while
     fixed windows shift EVERY downstream chunk and lose all sharing
     (q129's fixed chunks are the baseline being beaten here).  The

@@ -62,23 +62,22 @@ def q21_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct users, and value sum.  Hour key emitted as a formatted string —
     engine-invariant vs ns/µs timestamp physical types.  The streaming twin
     (withWatermark + window) lives in bigquack_spark.streaming.  Bucketing
-    events by user_id removes the wide first-phase distinct exchange —
-    the bench's headline_bucketed block measures this query over that
-    layout."""
+    events by user_id removes the wide first-phase distinct exchange
+    (round-10 100x measurement; plan-asserted in tests/test_layouts.py)."""
     return hourly_events_frame(t(spark, sf_dir, "events"))
 
 
 def hourly_events_frame(e: DataFrame) -> DataFrame:
-    """q21's plan over a caller-supplied events frame — reused by the bench
-    to run the SAME headline query over a user_id-bucketed layout (the
-    (hour, user) distinct phase then needs no input exchange) without
-    duplicating the query body.
+    """q21's plan over a caller-supplied events frame — reused by
+    tests/test_layouts.py to run the SAME headline query over a
+    user_id-bucketed layout (the (hour, user) distinct phase then needs no
+    input exchange) without duplicating the query body.
 
     The aggregate groups by the truncated TIMESTAMP and formats the hour
     STRING on the ~K output rows AFTER the agg — grouping by the
     formatted string paid a per-input-row date_format on the 15M-row
     path, measured 28.6% of the whole query at the 100x tier
-    (r12 q21q68_attribution.json: 1.63 s -> 1.16 s).  Output identical
+    (round-12 attribution run: 1.63 s -> 1.16 s).  Output identical
     (same strings, same grouping: trunc-then-format is injective per
     hour bucket)."""
     return (
@@ -847,7 +846,7 @@ _EWMA_FRAME = 16  # trailing events per EWMA, alpha = 1/2
 )
 def q111_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event EWMA (alpha = 1/2) of the user's value over the trailing
-    {N} events: the windowed-list + higher-order-fold surface.  The frame's
+    ``_EWMA_FRAME`` events: the windowed-list + higher-order-fold surface.  The frame's
     ordered values fold left with acc/2 + x/2 — alpha a power of two keeps
     every multiplication exact, and both engines fold in identical frame
     order (init = oldest element, matching DuckDB's list_reduce), so the
@@ -885,7 +884,7 @@ _MEDIAN_FRAME = 15
     """,
 )
 def q113_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling median of the user's trailing {N} values.  Spark has no
+    """Rolling median of the user's trailing ``_MEDIAN_FRAME`` values.  Spark has no
     percentile-over-window, so the idiom is: collect the frame into an
     array, sort it, index the middle (averaging the two middles for even
     frames) — exact, not approximate, and state is frame-bounded.  DuckDB's
@@ -1488,7 +1487,7 @@ ASOF_TOL_US = 10 * 60 * 1_000_000  # 10 min staleness bound
 def q187_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tolerance-bounded as-of join (pandas merge_asof parity, the
     operator's round-2 extension): q170's point-in-time context lookup,
-    but a context event older than {ASOF_TOL_US} µs (10 min) does NOT
+    but a context event older than ``ASOF_TOL_US`` µs (10 min) does NOT
     match — purchases with only stale context land in 'stale_or_none'.
     The staleness gate runs AFTER the carry inside the same window pass
     (the matched right timestamp rides in the carried struct), so the

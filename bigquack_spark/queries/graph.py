@@ -50,7 +50,7 @@ def q148_transition_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulate attention mass when users walk click->view->purchase
     chains.  Edge build is one user_id-keyed window (same shuffle q22
     reuses) collapsed to a type x type count matrix; the rank loop is
-    operators.graph.pagerank — {ITERS} unrolled iterations, every
+    operators.graph.pagerank — ``ITERS`` unrolled iterations, every
     per-node sum an exact 2^40-lattice BIGINT aggregate, so the ranks are
     bit-identical cross-engine and the oracle replays the same math in
     SQL.  Generic at scale: swap the edge CTE for a doc-KNN edge list
@@ -123,7 +123,7 @@ _BRAND_EDGES_CTE = """
 def q171_triangle_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting + local clustering coefficient — the third graph
     primitive after connected components (q86/q99) and PageRank (q148),
-    run on the brand co-purchase graph (brands co-occurring in >= {MIN_CO}
+    run on the brand co-purchase graph (brands co-occurring in >= ``MIN_CO``
     orders).  The edge build fans out pairs PER ORDER (bounded by
     lines-per-order choose 2, never cross-order), map-side combines the
     co-counts, and keeps each undirected edge once as a < b.  Triangles
@@ -228,7 +228,7 @@ def _md5_mod_sql(parts_sql: str, mod_sql: str) -> str:
 )
 def q176_deterministic_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic graph random walks — the DeepWalk/node2vec corpus
-    generator: one {WALK_STEPS}-step walk per start node over the event-
+    generator: one ``WALK_STEPS``-step walk per start node over the event-
     transition graph, where the step-s choice at node v is the
     md5(start|s|v)-derived index into v's dst-sorted out-edges.  md5
     replaces rand() for the same reason as q125/q153: the walk corpus is
@@ -236,7 +236,7 @@ def q176_deterministic_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays it exactly.  Each step is ONE equi-join of the walk
     frontier against the edge list (rank + outdeg come from a single
     src-keyed window) — the iterated-join shape of q148's PageRank, so a
-    billion-walk corpus costs {WALK_STEPS} keyed shuffles of the frontier
+    billion-walk corpus costs ``WALK_STEPS`` keyed shuffles of the frontier
     regardless of graph size.  Walk fan-out per node is 1 here; B walks
     per node = add a walk-index column to the seed frontier."""
     e = t(spark, sf_dir, "events", columns=["user_id", "event_id", "ts", "event_type"])
@@ -324,8 +324,8 @@ def _kcore_oracle() -> str:
 
 @query("q211_kcore_peel", oracle=_kcore_oracle())
 def q211_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-core decomposition ({KCORE_PEELS} unrolled peel rounds at
-    k={KCORE_K}) on the document near-dup candidate graph (q140's minhash
+    """K-core decomposition (``KCORE_PEELS`` unrolled peel rounds at
+    k=``KCORE_K``) on the document near-dup candidate graph (q140's minhash
     band edges) — the fourth graph primitive after CC, PageRank and
     triangles, and the curation read on THIS graph is direct: the
     surviving core is the heavily-templated/boilerplate cluster mass

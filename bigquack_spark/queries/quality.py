@@ -55,7 +55,7 @@ def q118_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous one-scan form put all K DISTINCTs in one aggregate, which
     Expand-multiplies every row K-fold through a single pipeline —
     measured 2.3x slower at sf0.1 (0.77 s vs 0.34 s) and ~20% slower at
-    the 100x tier (bench_full profile_approx_block; run-to-run 13-27%).  Columnar I/O makes
+    the 100x tier (measured in round 6; run-to-run 13-27%).  Columnar I/O makes
     the K scans read the same bytes one scan would.  min/max are DOUBLE
     so both engines emit identical IEEE values.  The 100 TB posture for
     this shape is still the q252 approx profile (no exact distinct at
@@ -134,8 +134,8 @@ def q252_column_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate column profile (r4 verdict #3: q118's exact per-column
     DISTINCT is its 100x cost driver).  The deployable shape is
     :func:`profile_approx` — HLL sketches, no distinct Expand — and its
-    wall is measured against exact q118 at the 100x bench tier
-    (bench_full trend_100x.profile_approx_block).  Raw sketch estimates
+    wall was measured against exact q118 at the 100x bench tier in
+    round 5.  Raw sketch estimates
     can never hash-match across engines, so this driver-diffed variant
     carries the q62-style contract instead: each engine asserts ITS OWN
     sketch lands within 5% of ITS OWN exact distinct count, and the
@@ -418,7 +418,7 @@ K_ANON = 5  # the k in k-anonymity
 def q163_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit over the quasi-identifier tuple (nation, market
     segment, account-balance band): how many identifier combinations have
-    fewer than k={K_ANON} members, and what fraction of rows sits in
+    fewer than k=``K_ANON`` members, and what fraction of rows sits in
     those re-identifiable groups — the privacy gate a dataset passes
     BEFORE export, sitting next to the PII scrub (q58) in the governance
     pipeline.
@@ -828,7 +828,7 @@ def q221_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout advisor — the multi-dimensional clustering lever
     (Delta OPTIMIZE ZORDER BY, Iceberg sort orders) quantified on this
     data: orders keyed by the bit-interleave of (custkey, order-day)
-    scaled to {ZORDER_BITS}-bit lattices, carved into {ZORDER_FILES}
+    scaled to ``ZORDER_BITS``-bit lattices, carved into ``ZORDER_FILES``
     simulated files (ntile over the sort order), and each layout scored
     by the average per-file min/max span fraction per dimension — the
     exact statistic file skipping prunes on.  A linear (date, custkey)
@@ -973,7 +973,7 @@ DP_SALT = "dp-v1"
     """,
 )
 def q235_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differentially-private count release (ε={DP_EPSILON} Laplace
+    """Differentially-private count release (ε=``DP_EPSILON`` Laplace
     mechanism) — the privacy-preserving statistics surface next to
     q163's k-anonymity audit: per event type, the true count plus the
     released noisy count.  The Laplace draw inverts a uniform derived
@@ -1025,17 +1025,17 @@ MERKLE_BUCKETS = 64  # checksum fan-out: which 1/64th of the keyspace differs
 )
 def q244_merkle_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed content checksums — q186's one-row table digest upgraded
-    to a LOCALIZING structure: the keyspace folds into {MERKLE_BUCKETS}
+    to a LOCALIZING structure: the keyspace folds into ``MERKLE_BUCKETS``
     buckets, each carrying its own count + XOR digest.  Transfer
     validation then works like a one-level Merkle tree: compare the
     bucket vectors of source and target, and a mismatch names WHICH
-    1/{MERKLE_BUCKETS}th of the keys to re-sync or drill into with the
+    1/``MERKLE_BUCKETS``th of the keys to re-sync or drill into with the
     row-level diff (q88) — instead of 'something differs somewhere,
     rescan everything'.  Deepening to a real Merkle hierarchy is
     re-bucketing the mismatched slice with a finer modulus — same
     query, narrower predicate, log-rounds convergence on the exact
     divergent keys.  One map-side-combined shuffle of
-    {MERKLE_BUCKETS} groups; same commutative-XOR portability as q186."""
+    ``MERKLE_BUCKETS`` groups; same commutative-XOR portability as q186."""
     o = t(spark, sf_dir, "orders",
           columns=["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"])
     canon = F.concat_ws(
@@ -2292,8 +2292,8 @@ def q308_compaction_roi(spark: SparkSession, sf_dir: str) -> DataFrame:
     are undersized, how many target-size files they bin-pack into
     (ceiling division on the exact byte lattice), and the file-count
     reduction share — at 100 TB that share IS the scan-task and
-    object-store-listing reduction (measured at the bench tier in
-    bench_full's compaction_block).  One groupBy over file METADATA;
+    object-store-listing reduction (measured at the 10x bench tier in
+    round 7).  One groupBy over file METADATA;
     everything integer-exact."""
     li = t(spark, sf_dir, "lineitem", columns=["l_returnflag", "l_shipdate"])
     files = li.groupBy(

@@ -971,9 +971,10 @@ def q64_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nation_profit_frame(
     l: DataFrame, p: DataFrame, s: DataFrame, n: DataFrame, o: DataFrame
 ) -> DataFrame:
-    """q68's plan over caller-supplied inputs — reused by the bench to run
-    the SAME headline query over the bucketed lineitem/orders layout
-    (exchange-free fact-fact join) without duplicating the query body."""
+    """q68's plan over caller-supplied inputs — reused by
+    tests/test_layouts.py to run the SAME headline query over the bucketed
+    lineitem/orders layout (exchange-free fact-fact join) without
+    duplicating the query body."""
     retail_cents = F.round(F.col("p_retailprice") * 100).cast("long")
     cost_units = retail_cents * F.col("l_quantity").cast("long") * F.lit(50)
     return (
@@ -1022,8 +1023,8 @@ def q68_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines.  part/supplier/nation broadcast; lineitem joins orders
     on the shared l_orderkey/o_orderkey key; one final shuffle on the
     (nation, year) aggregate.  Bucketing both facts by the order key
-    removes even that join's input exchanges — the bench's
-    headline_bucketed block measures this query over that layout."""
+    removes even that join's input exchanges (round-10 100x
+    measurement; plan-asserted in tests/test_layouts.py)."""
     l = t(spark, sf_dir, "lineitem")
     p = t(spark, sf_dir, "part", predicate="p_type = 'PROMO'",
           columns=["p_partkey", "p_retailprice"])
@@ -1230,8 +1231,8 @@ def q73_gap_filled_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     reporting shape a plain GROUP BY (q13) cannot produce.  The spine is a
     fixed ~84-row driver-side-free recursion (UnionLoop, depth under the
     default cteRecursionLevelLimit); the ~84-group monthly aggregate
-    broadcasts into the left join (BuildRight in PLANS.md), so the only
-    wide exchange is the aggregate's.  Money on the integer-cent lattice
+    broadcasts into the left join (BuildRight in the round-1 plan dump), so
+    the only wide exchange is the aggregate's.  Money on the integer-cent lattice
     as usual (see _money_cents_units).  SQL surface delegation per SURVEY
     §2.5 (duck.go:180,195 — the engine executes whatever SQL it's handed)."""
     from bigquack_spark.sources.parquet import register_views
@@ -2284,7 +2285,7 @@ def q250_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     set — a broadcast semi-join or bucketed-layout lookup, never a
     history rescan) plus one view-sized merge shuffle; the full-view
     recompute this replaces is the orders⋈lineitem shuffle the bucketed
-    bench block prices at the 100x tier."""
+    layout removes (priced at the 100x tier in round 4)."""
     from bigquack_spark.operators.ivm import merge_agg_partials
 
     o = t(spark, sf_dir, "orders", columns=["o_orderkey", "o_orderpriority"])
@@ -2506,8 +2507,8 @@ def q279_join_skew_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_key_rows / mean_rows_per_key), and a suggested salting fan-out
     when the hot key exceeds 2x uniform (capped at 32, the
     operators.joins.salted_join contract).  This is the measured
-    decision input behind bench_full's skew_mitigation block.  Scale
-    shape: one groupBy (map-side combine), then a 1-row aggregate —
+    decision input behind the 100x skew-mitigation measurement (round
+    4).  Scale shape: one groupBy (map-side combine), then a 1-row aggregate —
     the probe's exchange carries one row per distinct key, never data."""
     li = t(spark, sf_dir, "lineitem", columns=["l_suppkey"])
     freq = li.groupBy(F.col("l_suppkey").alias("key")).agg(F.count(F.lit(1)).alias("n"))

@@ -215,7 +215,7 @@ _TIES_K = 3
     """,
 )
 def q105_top_brands_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rank()-with-ties top-k: the brands in the top {K} by total quantity,
+    """rank()-with-ties top-k: the brands in the top ``_TIES_K`` by total quantity,
     KEEPING ties (rank, not row_number, so equal quantities share a rank
     and the cut can return more than K rows).  The rank key is the exact
     BIGINT unit sum ALONE — adding a tiebreak would make every rank unique
@@ -524,7 +524,7 @@ CHI2_SALT = "bias-v1"
     """,
 )
 def q242_sample_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-representativeness audit: the {SAMPLE_PCT}% md5-bucket
+    """Sample-representativeness audit: the ``SAMPLE_PCT``% md5-bucket
     sample's per-type counts against their expected values under the
     population distribution, with per-cell chi-square terms — the check
     that the DETERMINISTIC sampler (the md5 bucketing every sampling

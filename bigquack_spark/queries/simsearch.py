@@ -500,7 +500,7 @@ MATRYOSHKA_DIM = 16  # truncated prefix dimensionality
 )
 def q209_matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka truncation audit: how much of the full-dimension top-k
-    survives when retrieval runs on only the first {MATRYOSHKA_DIM} of 64
+    survives when retrieval runs on only the first ``MATRYOSHKA_DIM`` of 64
     dims — the measurement behind the serve-cheap-rerank-exact pattern
     (MRL embeddings): a high overlap licenses cutting index bytes 4x.
     Both rankings are the q40 broadcast shape (corpus never shuffles,
@@ -588,7 +588,7 @@ def q210_hamming_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming).  Signatures are an exact integer projection (sum of
     distinct powers of two — order-free, so no fold discipline needed);
     ranking is (hamming asc, neighbor_id) for a total order.  The corpus
-    never shuffles: signatures ride the scan, the {N_QUERY_VECS}-row
+    never shuffles: signatures ride the scan, the ``N_QUERY_VECS``-row
     query-signature set broadcasts, and the only exchange is the
     per-query top-k window — q40's contract at 1/32 the bytes."""
     from pyspark.sql.window import Window
@@ -674,8 +674,8 @@ def q217_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage retrieval — the pattern every production vector store
     serves: a CHEAP first pass over 64-bit sign signatures (q210's
     popcount(xor), 1/32 the bytes of the float corpus) keeps
-    {RERANK_POOL} candidates per query, then the EXACT cosine reranks
-    only that pool to the final top-{TOP_K}.  Stage 1 inherits q40's
+    ``RERANK_POOL`` candidates per query, then the EXACT cosine reranks
+    only that pool to the final top-``TOP_K``.  Stage 1 inherits q40's
     contract (corpus in place, query signatures broadcast, one window
     exchange); stage 2 touches RERANK_POOL x |Q| rows — the full-precision
     vectors are fetched by a vec_id equi-join against the pool, so the
@@ -875,11 +875,11 @@ def q220_alignment_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q224_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval-quality evaluation as a first-class operator (the vector
-    sibling of q160's LSH eval): per query, recall@{TOP_K} of the
+    sibling of q160's LSH eval): per query, recall@``TOP_K`` of the
     hamming-signature ranking against the exact cosine ranking, the
     reciprocal rank at which the approx list surfaces the TRUE nearest
     neighbor (MRR-of-top1 — the metric that catches 'good recall but the
-    best match is buried'), and binary-relevance NDCG@{TOP_K} (exact
+    best match is buried'), and binary-relevance NDCG@``TOP_K`` (exact
     top-k as the relevant set, approx rank as the gain position, ideal
     DCG from the exact ranks).  This is the query you schedule after
     every index rebuild: a recall regression pages before users notice.
@@ -1286,22 +1286,22 @@ def q328_filtered_ann_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q330_cross_rerank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-encoder-style rerank audit over the ANN shortlist (r11
     verdict #8): stage 1 is the bi-encoder shortlist (exact cosine
-    top-{RERANK_POOL} per query — the same pool a probe serves); stage 2
+    top-``RERANK_POOL`` per query — the same pool a probe serves); stage 2
     re-scores every (query, candidate) PAIR with a pairwise feature the
     bi-encoder cannot see — here the deterministic stand-in is per-dim
     sign agreement (integer-valued, so the audit is hash-exact; a real
     deployment swaps in a cross-encoder model via the same
     mapInPandas seam as the multimodal kernels).  The audit reports,
-    per query, how much the rerank MOVED the list: top-{TOP_K} overlap
+    per query, how much the rerank MOVED the list: top-``TOP_K`` overlap
     between the two orders, the largest rank jump, and the summed
     squared displacement — the numbers that tell a serving team whether
     the expensive second stage is earning its latency before they ship
     it.
 
-    Plan: corpus stays in place, the {N_QUERY_VECS}-query set broadcasts
+    Plan: corpus stays in place, the ``N_QUERY_VECS``-query set broadcasts
     (bounded BNLJ, the q40 contract); both rank windows share the qid
     partition key, so the pool's one exchange carries the whole audit;
-    the pairwise stage touches {RERANK_POOL} x |Q| rows only.  At 1e9
+    the pairwise stage touches ``RERANK_POOL`` x |Q| rows only.  At 1e9
     vectors the shortlist is what a probe returns — the audit cost is
     rerank-pool-sized, independent of corpus size."""
     from pyspark.sql.window import Window

@@ -74,7 +74,7 @@ def _q157_oracle() -> str:
 
 @query("q157_countmin_heavy_hitters", oracle=_q157_oracle())
 def q157_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch over l_partkey with the top-{TOP_N} exact heavy
+    """Count-Min sketch over l_partkey with the top-``TOP_N`` exact heavy
     hitters audited against their sketch estimates (CMS always
     over-counts; ``overcount`` is the collision error, bounded in
     expectation by N*depth/width).

@@ -319,8 +319,8 @@ CHUNK_STRIDE = 24
     """,
 )
 def q57_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document chunking for training pipelines: overlapping {CHUNK_TOKENS}-token
-    windows at stride {CHUNK_STRIDE}.  Pure per-row projection (sequence of start
+    """Document chunking for training pipelines: overlapping ``CHUNK_TOKENS``-token
+    windows at stride ``CHUNK_STRIDE``.  Pure per-row projection (sequence of start
     offsets -> slice -> join) then one explode — no shuffle at all; chunk
     fan-out is proportional to document length, the scale-correct shape."""
     d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
@@ -732,7 +732,7 @@ BOILER_MIN_DOCS = 20  # fingerprint shared by >= this many docs = boilerplate
 )
 def q173_boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document boilerplate mining — the crawl-cleaning twin of
-    q139: a winnowing fingerprint shared by >= {BOILER_MIN_DOCS} distinct
+    q139: a winnowing fingerprint shared by >= ``BOILER_MIN_DOCS`` distinct
     documents marks a boilerplate token span (headers, footers, license
     blocks — the spans MinHash under-weights because they ride inside
     otherwise-distinct pages), and each document reports what fraction of
@@ -816,13 +816,13 @@ def q193_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf-law fit of the corpus rank-frequency curve — the one-row
     corpus-health gauge: natural text slopes near -1 on the log-log head;
     a flat slope says templated/boilerplate text, a cliff says synthetic
-    or truncated vocabulary.  OLS over the top-{ZIPF_TOP} ranks, with
+    or truncated vocabulary.  OLS over the top-``ZIPF_TOP`` ranks, with
     every double sum computed as a SEQUENTIAL FOLD over rank-sorted
     lists (q184's discipline) so Sx/Sy/Sxy/Sxx — and therefore the
     slope — are bit-identical cross-engine.  Scale: the token count is
     the corpus-sized map-side-combined shuffle (q146's shape); ranking
     and the fit run on VOCABULARY-sized data, and the fold arrays hold
-    {ZIPF_TOP} doubles."""
+    ``ZIPF_TOP`` doubles."""
     d = t(spark, sf_dir, "documents", columns=["text"], rebalance="auto")
     freq = (
         d.select(F.explode(F.split(F.lower("text"), r"\s+")).alias("tok"))
@@ -892,7 +892,7 @@ MAX_SEQ_LEN = 128  # model context length for the truncation-loss report
 )
 def q199_truncation_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-length truncation accounting: per source, how many tokens a
-    max_seq_len={MAX_SEQ_LEN} dataloader THROWS AWAY if long documents are
+    max_seq_len=``MAX_SEQ_LEN`` dataloader THROWS AWAY if long documents are
     truncated rather than chunked — the number that justifies running the
     q57 chunker (chunking keeps those tokens; truncation doesn't).  Read
     next to q132's padding-waste ratio, this is the other half of the
@@ -992,7 +992,7 @@ def q207_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     the perplexity filter every LLM curation pipeline runs (CCNet/Gopher
     drop the lowest-LM-score tail): the corpus IS the model (token
     unigram frequencies), each document scores the tf-weighted mean of
-    ln p(tok), and the keep gate floors it at {UNIGRAM_MIN_LOGPROB}.
+    ln p(tok), and the keep gate floors it at ``UNIGRAM_MIN_LOGPROB``.
     Swapping the corpus-derived vocab for an external KenLM table is a
     join-input change, not a plan change.  Scale shape: tf is the
     map-side-combined (doc,tok) shuffle, vocab the tok-keyed rollup of
@@ -1471,7 +1471,7 @@ def q229_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated bigram language-model scoring — q207's unigram filter
     upgraded one order: per token transition,
     p = λ·c(w1,w2)/c(w1) + (1−λ)·c(w2)/N (Jelinek-Mercer smoothing with
-    λ={BIGRAM_LAMBDA}), per-doc mean of ln p over POSITION-ordered folds.
+    λ=``BIGRAM_LAMBDA``), per-doc mean of ln p over POSITION-ordered folds.
     The architectural point: the bigram table is vocabulary²-keyed DATA
     joined on (w1, w2) — never driver state, never a broadcast — which
     is exactly how a real KenLM-scale model (billions of n-grams) has to
@@ -1588,7 +1588,7 @@ _CHUNK_EMB_SQL = " , ".join(
 )
 def q240_maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-interaction retrieval (ColBERT's MaxSim, digest-embedded):
-    documents split into {MAXSIM_CHUNK}-char chunks, each chunk embedded
+    documents split into ``MAXSIM_CHUNK``-char chunks, each chunk embedded
     (the q93 sha256-digest stand-in — a real encoder is a mapInPandas
     swap), and a document's score against a query document is the mean
     over QUERY chunks of the max cosine over the document's chunks —

@@ -85,6 +85,21 @@ def test_no_python_udf_in_sql_inventory(spark):
     assert not offenders, f"Python in the row path of: {offenders}"
 
 
+def test_query_docs_name_constants_not_placeholders():
+    """A ``{NAME}`` in a query docstring is an f-string placeholder that
+    was never filled (a docstring cannot be an f-string); docs name the
+    constant as ``NAME`` instead."""
+    import re
+
+    placeholder = re.compile(r"\{[A-Z][A-Z0-9_]*\}")
+    offenders = {
+        name: placeholder.findall(spec.doc)
+        for name, spec in QUERIES.items()
+        if placeholder.search(spec.doc)
+    }
+    assert not offenders, offenders
+
+
 def test_entry_flagship_runs(spark):
     import __spark_entry__ as entrymod
 

@@ -126,6 +126,9 @@ def get_spark(
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
     )
+    # pyspark's daemon behind a zipimport patch: on Python < 3.12 a reused
+    # worker otherwise re-reads pyspark.zip's directory on every task
+    conf.setdefault("spark.python.daemon.module", "bigquack_spark.pydaemon")
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -18,18 +18,39 @@ re-appending an already-acked offset is rejected by the server.  Here the
 writer tracks ``next_offset``; an append at ``offset < next_offset`` is a
 silent no-op (replay), ``offset > next_offset`` is an error (gap), matching
 the managed-writer contract.
+
+Pipelined PENDING appends: a PENDING ``write()`` runs the finalized check,
+the schema gate, the offset rules and the lineage capture in the caller's
+thread, then hands the batch's landing job (its observed count plus the
+parquet append) to a per-writer thread pool and returns the offset, so a
+stream of small batches keeps the cores busy instead of running one short
+job after another.  At most ``defaultParallelism`` batches are in flight; a
+further ``write()`` blocks until one lands.  Each batch lands in its own
+``<staging>/batch-<offset>`` directory, because concurrent appends into one
+directory share FileOutputCommitter's ``_temporary``.  The ack moves from
+``write()`` to ``finalize()``: it waits for every batch, raises the first
+failure without publishing anything, and only then publishes.  A ``write()``
+after an observed failure raises that failure, and ``close()`` waits for the
+in-flight batches before it drops staging.  Readers cannot tell, since
+PENDING data is invisible until finalize anyway.  The one rule for callers:
+a batch's source must stay readable until ``finalize()`` returns.  COMMITTED
+streams stay synchronous: each batch must be visible when ``write()``
+returns.
 """
 
 from __future__ import annotations
 
 import enum
+import functools
 import json
 import os
 import shutil
 import uuid
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from bigquack_spark.operators import fsops
 
@@ -68,6 +89,9 @@ class AtomicWriter:
         self._lineage_sources: list[dict] = []  # merged across batches
         self._output_columns: list[str] = []
         self._column_lineage: dict[str, list[dict]] = {}
+        self._pool: ThreadPoolExecutor | None = None  # PENDING batch jobs
+        self._inflight: list[Future] = []  # in offset order
+        self._failure: BaseException | None = None
         if stream_type is WriteStreamType.PENDING:
             self._dest = f"{target}.staging-{uuid.uuid4().hex[:12]}"
         else:
@@ -75,14 +99,22 @@ class AtomicWriter:
 
     # -- bigquery_write.go:421-462 WriteRecord -------------------------------
     def write(self, df: DataFrame, offset: int | None = None) -> int:
-        """Append one batch at an explicit offset; returns the ack'd offset.
+        """Append one batch at an explicit offset; returns the offset.
 
         Offset semantics per managed-writer: ``None`` means next-in-line;
-        a replayed (already-acked) offset is a no-op; a future offset is a
-        protocol error.
+        a replayed (already-accepted) offset is a no-op; a future offset is
+        a protocol error.
+
+        COMMITTED: the batch has landed and is visible when this returns.
+        PENDING: the batch's job is queued behind at most
+        ``defaultParallelism`` in-flight batches (this blocks while that
+        many run) and lands before ``finalize()`` returns, which is where
+        its failure surfaces; a later ``write()`` raises an already observed
+        failure.  The batch's source must stay readable until then.
         """
         if self.finalized:
             raise RuntimeError("write stream already finalized")
+        self._reap()
         if self._schema is None:
             self._schema = df.schema
         elif {(f.name, f.dataType) for f in df.schema.fields} != {
@@ -133,25 +165,81 @@ class AtomicWriter:
                     have.extend(s for s in sources if _source_key(s) not in keys)
         except Exception:  # pragma: no cover - defensive
             pass
-        # batch count rides the append via df.observe — the old df.count()
-        # re-executed the batch's whole lineage a second time per offset
-        from pyspark.sql import Observation
-
-        obs = Observation(f"atomic_write_{offset}")
-        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(
-            self._dest
-        )
-        self.rows_written += int(obs.get["n"])
+        if self.stream_type is WriteStreamType.COMMITTED:
+            self.rows_written += self._land(df, offset, self._dest)
+        else:
+            self._submit(df, offset)
         self.next_offset += 1
         return offset
 
+    @staticmethod
+    def _land(df: DataFrame, offset: int, path: str) -> int:
+        """One batch's job: append it to ``path`` and return its row count.
+        The count rides the append via ``df.observe`` — a ``df.count()``
+        would re-execute the batch's whole lineage a second time."""
+        obs = Observation(f"atomic_write_{offset}")
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(path)
+        return int(obs.get["n"])
+
+    def _submit(self, df: DataFrame, offset: int) -> None:
+        """Queue a PENDING batch's job into its own staging subdirectory."""
+        spark = df.sparkSession
+        if self._pool is None:
+            self._bound = spark.sparkContext.defaultParallelism
+            self._pool = ThreadPoolExecutor(self._bound, thread_name_prefix="atomic-writer")
+        self._reap(keep=self._bound - 1)
+        # wrapped here, in the caller's thread, so the job runs under the
+        # caller's job group, local properties and tags
+        job = inheritable_thread_target(spark)(
+            functools.partial(self._land, df, offset,
+                              os.path.join(self._dest, f"batch-{offset}")))
+        self._inflight.append(self._pool.submit(job))
+
+    def _reap(self, keep: int | None = None) -> None:
+        """Fold the landed batches' counts into ``rows_written``; with
+        ``keep``, first wait until at most ``keep`` batches are in flight.
+        Raises the first failed batch's error, now and on every later call."""
+        while True:
+            done = [f for f in self._inflight if f.done()]
+            self._inflight = [f for f in self._inflight if f not in done]
+            for fut in done:
+                if fut.exception() is None:
+                    self.rows_written += fut.result()
+                elif self._failure is None:
+                    self._failure = fut.exception()
+            if keep is None or len(self._inflight) <= keep:
+                break
+            wait(self._inflight, return_when=FIRST_COMPLETED)
+        if self._failure is not None:
+            raise self._failure
+
+    def _drain(self) -> None:
+        """Wait for every in-flight batch and stop the pool."""
+        if self._pool is not None:
+            self._pool.shutdown(wait=True)
+            self._pool = None
+
     # -- bigquery_write.go:466-485 Finalize + BatchCommit ---------------------
     def finalize(self) -> int:
-        """Stop appends; atomically publish pending data.  Returns row count."""
+        """Stop appends; atomically publish pending data.  Returns row count.
+
+        PENDING: first waits for every in-flight batch.  If one failed, its
+        error is raised and nothing is published; ``close()`` then drops
+        the staging data.  Otherwise each batch's files move up from its
+        ``batch-<offset>`` subdirectory and the staging directory publishes
+        as one.
+        """
         if self.finalized:
             return self.rows_written
+        self._drain()
+        self._reap()
         self.finalized = True
         if self.stream_type is WriteStreamType.PENDING and os.path.exists(self._dest):
+            for batch in os.listdir(self._dest):
+                sub = os.path.join(self._dest, batch)
+                for name in os.listdir(sub):
+                    os.replace(os.path.join(sub, name), os.path.join(self._dest, name))
+                os.rmdir(sub)
             if not os.path.exists(self.target):
                 fsops.replace(self._dest, self.target)  # atomic publish
             else:  # target pre-exists: move batch files in, then success-mark
@@ -180,7 +268,9 @@ class AtomicWriter:
 
     def close(self) -> None:
         """Abort if never finalized: pending staging data is discarded
-        (uncommitted stream drop, bigquery_write.go:488-503)."""
+        (uncommitted stream drop, bigquery_write.go:488-503).  In-flight
+        PENDING batches land first, so nothing is written after the drop."""
+        self._drain()
         if not self.finalized and self.stream_type is WriteStreamType.PENDING:
             shutil.rmtree(self._dest, ignore_errors=True)
 
@@ -188,6 +278,8 @@ class AtomicWriter:
         return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
-        if exc_type is None and not self.finalized:
-            self.finalize()
-        self.close()
+        try:
+            if exc_type is None and not self.finalized:
+                self.finalize()
+        finally:
+            self.close()

@@ -74,3 +74,24 @@ def test_one_line_json_contract(tmp_path):
     assert len(line["ratio_trend_1x_10x_100x"]) == 6
     assert line["detail"] == "bench_full.json"
     assert (tmp_path / "bench_full.json").exists()
+
+
+def test_ranking_lane_stops_inside_its_budget(monkeypatch):
+    """The lane skips a query once the elapsed time plus the slowest query
+    seen so far would pass the budget, instead of starting it regardless."""
+    import time
+    from types import SimpleNamespace
+
+    def slow_query(spark, sf_dir):
+        time.sleep(0.4)
+        return 0.4
+
+    fake = {f"qx{i}": SimpleNamespace(fn=slow_query) for i in range(5)}
+    monkeypatch.setattr(bench, "QUERIES", fake)
+    monkeypatch.setattr(bench, "_timed_noop", lambda wall, runs=3: wall)
+    monkeypatch.setattr(bench, "default_parallelism", lambda: os.cpu_count() or 1)
+    monkeypatch.setenv("SPARK_GRAFT_EXT_BUDGET_SEC", "1.0")
+    lane = bench._extension_block(None, SF_SMOKE)
+    assert lane["n_timed"] == 2
+    assert lane["not_timed_within_budget"] == ["qx2", "qx3", "qx4"]
+    assert lane["lane_wall_sec"] <= lane["wall_budget_sec"]

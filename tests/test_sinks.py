@@ -80,6 +80,108 @@ def test_finalize_into_existing_target(spark, batch, tmp_path):
     assert spark.read.parquet(target).count() == 4
 
 
+# -- pipelined PENDING batches ----------------------------------------------
+
+
+def _slow_batch(spark, rows=2, sleep_ms=400):
+    """A ``(id bigint, v string)`` batch whose tasks each sleep: one task
+    per row, so the batch's job stays in flight for a while."""
+    return spark.range(0, rows, 1, rows).selectExpr(
+        "id", f"CAST(reflect('java.lang.Thread', 'sleep', {sleep_ms}L) AS STRING) AS v")
+
+
+def test_pending_batch_failure_surfaces_at_finalize(spark, batch, tmp_path):
+    """A batch that fails while it runs makes finalize() raise: nothing is
+    published, close() leaves no staging, and a later write() raises."""
+    target = str(tmp_path / "t_fail")
+    w = AtomicWriter(target, WriteStreamType.PENDING)
+    w.write(batch)
+    w.write(spark.range(3).selectExpr(
+        "id", "if(id = 2, raise_error('batch boom'), 'x') AS v"))
+    with pytest.raises(Exception, match="batch boom"):
+        w.finalize()
+    assert not os.path.exists(target)
+    with pytest.raises(Exception, match="batch boom"):
+        w.write(batch)
+    w.close()
+    assert not os.path.exists(target)
+    assert not os.path.exists(w._dest)
+
+
+def test_pending_close_waits_for_batches_in_flight(spark, tmp_path):
+    target = str(tmp_path / "t_inflight")
+    w = AtomicWriter(target, WriteStreamType.PENDING)
+    for _ in range(3):
+        w.write(_slow_batch(spark))
+    assert not all(f.done() for f in w._inflight)
+    w.close()
+    assert not os.path.exists(target)
+    assert not os.path.exists(w._dest)
+
+
+def test_pipelined_stream_publishes_what_a_serial_stream_does(
+    spark, tmp_path, monkeypatch
+):
+    """Rows, ``_BQ_COMMIT`` and ``_LINEAGE.json`` of a 4-batch stream equal
+    those of the same stream with each batch landed before the next."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from bigquack_spark.lineage import LINEAGE_FILE
+    from tests.conftest import SF_SMOKE
+
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
+        "l_orderkey", "l_linenumber", "l_quantity")
+
+    def stream(target):
+        with AtomicWriter(target, WriteStreamType.PENDING) as w:
+            for b in range(4):
+                w.write(li.filter(F.expr(f"pmod(l_orderkey, 4) = {b}")))
+        rows = sorted(map(tuple, spark.read.parquet(target).collect()))
+        commit = json.load(open(os.path.join(target, "_BQ_COMMIT")))
+        lineage = json.load(open(os.path.join(target, LINEAGE_FILE)))
+        assert lineage.pop("output") == target
+        return rows, commit, lineage
+
+    piped = stream(str(tmp_path / "piped"))
+    submit = AtomicWriter._submit
+
+    def one_at_a_time(self, df, offset):
+        submit(self, df, offset)
+        self._reap(keep=0)
+
+    monkeypatch.setattr(AtomicWriter, "_submit", one_at_a_time)
+    serial = stream(str(tmp_path / "serial"))
+    assert piped == serial
+    assert piped[1] == {"rows": li.count(), "batches": 4}
+
+
+def test_pending_batch_jobs_overlap_under_the_callers_job_group(spark, tmp_path):
+    """The gain itself: on 2+ cores two batch jobs of one stream run at the
+    same time, and they run in the job group the caller set."""
+    sc = spark.sparkContext
+    if sc.defaultParallelism < 2:
+        pytest.skip("needs a session with 2 or more cores")
+    group = f"atomic-overlap-{tmp_path.name}"
+    sc.setJobGroup(group, "pipelined AtomicWriter batches")
+    try:
+        w = AtomicWriter(str(tmp_path / "t_overlap"), WriteStreamType.PENDING)
+        for _ in range(4):
+            w.write(_slow_batch(spark, rows=1))
+        assert w.finalize() == 4
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    spans = sorted(
+        (jd.submissionTime().get().getTime(), jd.completionTime().get().getTime())
+        for jd in (store.job(j) for j in sc.statusTracker().getJobIdsForGroup(group))
+    )
+    assert len(spans) == 4
+    assert any(b[0] < a[1] for a, b in zip(spans, spans[1:]))
+
+
 # -- small-file compaction (sinks/compact.py) --------------------------------
 
 

@@ -459,10 +459,10 @@ def main() -> None:
         ]
         for n in TREND_QUERIES
     }
+    # the end load includes this run's own Spark and DuckDB work, so only
+    # the start load (after the drain wait) says whether the host was busy
     load_end = [round(x, 2) for x in os.getloadavg()]
-    contended = _contended(load_end[0], cpus, host_cpus) or _contended(
-        load_at_start[0], cpus, host_cpus
-    )
+    contended = _contended(load_at_start[0], cpus, host_cpus)
     full = {
         "metric": "headline_total_wall_sec",
         "value": total,

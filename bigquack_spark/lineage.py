@@ -212,6 +212,8 @@ def write_lineage_manifest(
     write pass itself (df.observe / sink counts), never a re-read."""
     import json
 
+    from bigquack_spark.operators import fsops
+
     manifest = {
         "output": output,
         "output_columns": output_columns,
@@ -225,10 +227,7 @@ def write_lineage_manifest(
     if extra:
         manifest.update(extra)
     os.makedirs(out_dir, exist_ok=True)
-    tmp = os.path.join(out_dir, LINEAGE_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    os.replace(tmp, os.path.join(out_dir, LINEAGE_FILE))
+    fsops.write_atomic(os.path.join(out_dir, LINEAGE_FILE), json.dumps(manifest, indent=1))
     return manifest
 
 

@@ -1,17 +1,37 @@
 """The commit-primitive seam (r10 verdict #5).
 
-Every maintenance writer in this repo (operators/maintenance.py,
-sinks/merge.py, operators/lease.py) commits through exactly three
-filesystem primitives:
+Every writer in this package commits through exactly three filesystem
+primitives, and this module is the only one that calls them:
 
 1. **exclusive-create** — ``O_CREAT|O_EXCL`` on the lease lock: at most one
    creator wins.
-2. **atomic-rename** — ``os.replace`` publishing the marker and swapping
-   staged data files: readers see the old name or the new name, never a
-   torn intermediate, and an existing destination is replaced atomically.
+2. **atomic-rename** — ``os.replace`` publishing a metadata file or
+   swapping staged data files and directories: readers see the old name
+   or the new name, never a torn intermediate, and an existing
+   destination is replaced atomically.
 3. **listing** — directory enumeration the resume/adoption gates reason
    over: a listing must not show a file that a completed rename already
    retired.
+
+Small metadata files publish through :func:`write_atomic` (a uniquely
+named ``.tmp`` sibling, then :func:`replace`): the streaming offset
+gate's ``_COMMITTED_BATCH`` and ``JoinViewSink``'s ``_STATE``
+(``streaming/sink.py``), ``AtomicWriter``'s ``_BQ_COMMIT``
+(``sinks/atomic.py``), ``_LINEAGE.json`` (``lineage.py``), the
+connector's ``_manifest-<job>`` (``sources/connector.py``), the export
+``_MANIFEST.json`` of ``sinks/wds.py``, ``sinks/jsonl.py`` and
+``sinks/arrow.py``, ``_PACKING.json`` (``sinks/packing.py``), the
+re-drive markers (``sinks/quarantine.py``, ``streaming/sink.py``), the
+IVF generation pointer (``operators/simsearch.py``), the lease record
+(``operators/lease.py``), the planners' manifest upgrade and decision log
+(``operators/planner.py``), and the maintenance manifests — compaction
+marker, ``_STATS.json``, the ``_PURGE-`` / ``_MERGE-`` / ``_RETENTION-``
+audits and the snapshot ``manifest.json`` (``operators/maintenance.py``,
+``sinks/merge.py``).  Every other rename in the package — data-directory
+swaps (``sinks/wap.py``, ``sinks/merge.py``, the sketch sink), staged file
+moves (``AtomicWriter``, compaction, the connector's pending parts, the
+per-task shard publishes of ``sinks/wds.py`` / ``sinks/arrow.py``), the
+lease break and the quarantine re-drive rename — calls :func:`replace`.
 
 POSIX guarantees all three; S3-class object stores historically guarantee
 NONE of them (rename = copy+delete, visible in between; no O_EXCL;
@@ -24,10 +44,10 @@ closes, so the seam makes the assumption EXPLICIT and the failure LOUD:
   A backend that does not declare both ``atomic_rename`` and
   ``exclusive_create`` raises :class:`UnsupportedCommitStoreError`
   instead of corrupting quietly.
-- The marker/publish renames route through :func:`replace`, the lock
-  create through :func:`create_exclusive`, and the gates' listings
-  through :func:`listdir` — so a capable non-POSIX backend (below) plugs
-  in at ONE place.
+- Every rename routes through :func:`replace`, the lock create through
+  :func:`create_exclusive`, and the gates' listings through
+  :func:`listdir` — so a capable non-POSIX backend (below) plugs in at
+  ONE place.
 
 Object-store strategies, in preference order:
 
@@ -48,15 +68,17 @@ Object-store strategies, in preference order:
    lease file entirely — out of scope here, the seam is where it would
    plug in.
 
-The default backend is POSIX and behavior is byte-for-byte what the
-writers always did; ``set_backend`` exists for tests and for real
-non-POSIX deployments.
+The default backend is POSIX.  :func:`write_atomic` does not fsync: a
+publish survives a process crash but not necessarily a power loss, and
+that policy is decided here, once.  ``set_backend`` exists for tests and
+for real non-POSIX deployments.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import uuid
 
 
 class UnsupportedCommitStoreError(RuntimeError):
@@ -125,6 +147,20 @@ def set_backend(b) -> object:
 
 def replace(src: str, dst: str) -> None:
     _BACKEND.replace(src, dst)
+
+
+def write_atomic(path: str, text: str) -> None:
+    """Publish ``text`` as the whole content of ``path``: write
+    ``<path>.<uuid-hex>.tmp`` in the same directory, then :func:`replace`
+    it into place, so a reader sees the old content or the new, never a
+    torn file.  The per-call name keeps concurrent writers from sharing a
+    staging file; the ``.tmp`` suffix is what ``vacuum`` sweeps after a
+    crash, and a ``_``-prefixed ``path`` keeps the staging file hidden
+    from Spark's readers just like the published one."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    replace(tmp, path)
 
 
 def create_exclusive(path: str, data: bytes = b"") -> int:

@@ -63,6 +63,8 @@ import time
 import uuid
 from contextlib import contextmanager
 
+from bigquack_spark.operators import fsops
+
 LEASE_FILE = "_LEASE.json"
 
 #: Long enough that a huge single-leaf rewrite between two commit-point
@@ -103,12 +105,7 @@ def _read_lease(path: str) -> dict | None:
 
 def _write_lease(path: str, rec: dict) -> None:
     os.makedirs(path, exist_ok=True)
-    # unique tmp per writer: a shared tmp name would let two concurrent
-    # writers interleave even the staging write
-    tmp = f"{_lease_path(path)}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(rec, fh)
-    os.replace(tmp, _lease_path(path))
+    fsops.write_atomic(_lease_path(path), json.dumps(rec))
 
 
 def _try_flock_nb(fd: int) -> bool:
@@ -133,7 +130,7 @@ def _mtime_only_break(lock: str) -> bool:
     try:
         if time.time() - os.path.getmtime(lock) > _LOCK_BREAK_S:
             breaking = f"{lock}.{uuid.uuid4().hex}.breaking"
-            os.rename(lock, breaking)
+            fsops.replace(lock, breaking)
             os.remove(breaking)
             return True
     except OSError:
@@ -188,7 +185,7 @@ def _try_break_orphan(lock: str) -> bool:
         except OSError:
             return True  # path vanished mid-inspection
         breaking = f"{lock}.{uuid.uuid4().hex}.breaking"
-        os.rename(lock, breaking)
+        fsops.replace(lock, breaking)
         os.remove(breaking)
         return True
     finally:
@@ -210,9 +207,7 @@ def _lease_mutex(path: str):
     deadline = time.time() + _LOCK_WAIT_S
     while True:
         try:
-            from bigquack_spark.operators.fsops import create_exclusive
-
-            fd = create_exclusive(lock)
+            fd = fsops.create_exclusive(lock)
             # A breaker may hold the flock for microseconds while
             # inspecting our fresh lock (it sees a fresh mtime and backs
             # off).  Contenders are momentary inspectors, so spinning the
@@ -325,9 +320,7 @@ def acquire_table_lease(
     commit-store capability gate lives here (r10 verdict #5): a backend
     without atomic rename + exclusive create refuses BEFORE any writer
     stages a swap it cannot commit atomically."""
-    from bigquack_spark.operators.fsops import require_commit_capabilities
-
-    require_commit_capabilities(f"acquire_table_lease({owner})")
+    fsops.require_commit_capabilities(f"acquire_table_lease({owner})")
     with _lease_mutex(path):
         now = time.time()
         cur = _read_lease(path)

@@ -25,7 +25,7 @@ with its r6-advice generation binding):
    and the exact (name, size) list of old files to retire.  Written
    atomically (tmp + rename).
 4. **Swap**: retire the listed olds, then move each staged file in as
-   ``compacted-<gen>-<name>`` (per-file ``os.replace`` — atomic, idempotent
+   ``compacted-<gen>-<name>`` (per-file ``fsops.replace`` — atomic, idempotent
    on re-drive).
 5. **Commit**: remove staging.
 
@@ -100,13 +100,10 @@ def _write_marker(
     underneath the crash' (r7 review finding: without this, resuming a
     partial-leaf purge discarded the staging that held the only copy of
     the retired files' kept rows)."""
-    tmp = os.path.join(staging, MARKER + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"gen": gen, "olds": olds, "prefix": prefix, "others": others or []},
-            fh,
-        )
-    fsops.replace(tmp, os.path.join(staging, MARKER))  # the commit point
+    fsops.write_atomic(  # the commit point
+        os.path.join(staging, MARKER),
+        json.dumps({"gen": gen, "olds": olds, "prefix": prefix, "others": others or []}),
+    )
 
 
 def _resume_partition(leaf: str) -> str:
@@ -532,10 +529,7 @@ def _purge_rows_locked(
         # trail shows the follow-up owed (snapshot_table's GDPR note)
         "snapshots_pinning_bytes": list_snapshots(path),
     }
-    tmp = os.path.join(path, f"_PURGE-{gen}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(audit, fh, indent=1)
-    fsops.replace(tmp, os.path.join(path, f"_PURGE-{gen}.json"))
+    fsops.write_atomic(os.path.join(path, f"_PURGE-{gen}.json"), json.dumps(audit, indent=1))
     if refresh_stats:
         # a destructive rewrite invalidates _STATS.json — fold it forward
         # from the per-file partials (removed files subtract by re-derive,
@@ -748,7 +742,7 @@ def collect_table_stats(spark: SparkSession, path: str) -> dict:
         "files": partials,
         "fingerprint": fingerprint,
     }
-    _write_stats(path, manifest)
+    fsops.write_atomic(os.path.join(path, STATS_FILE), json.dumps(manifest, indent=1))
     return manifest
 
 
@@ -818,13 +812,6 @@ def _stats_aggs(c: str, dt) -> list:
         aggs.append(F.min(q).alias(f"__min__{c}"))
         aggs.append(F.max(q).alias(f"__max__{c}"))
     return aggs
-
-
-def _write_stats(path: str, manifest: dict) -> None:
-    tmp = os.path.join(path, STATS_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    fsops.replace(tmp, os.path.join(path, STATS_FILE))
 
 
 def stats_are_fresh(path: str) -> bool:
@@ -901,7 +888,7 @@ def update_table_stats(spark: SparkSession, path: str) -> dict:
         "files": partials,
         "fingerprint": current_fp,
     }
-    _write_stats(path, manifest)
+    fsops.write_atomic(os.path.join(path, STATS_FILE), json.dumps(manifest, indent=1))
     return manifest
 
 
@@ -1234,10 +1221,9 @@ def _apply_retention_locked(
         # (mirrors purge_rows' audit; r8 advisor)
         "snapshots_pinning_bytes": list_snapshots(path),
     }
-    tmp = os.path.join(path, f"_RETENTION-{gen}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(audit, fh, indent=1)
-    fsops.replace(tmp, os.path.join(path, f"_RETENTION-{gen}.json"))
+    fsops.write_atomic(
+        os.path.join(path, f"_RETENTION-{gen}.json"), json.dumps(audit, indent=1)
+    )
     if refresh_stats:
         # removal-only fold: retired partials drop, the table section
         # re-derives from survivors — no data file opened (the fast
@@ -1390,13 +1376,14 @@ def snapshot_table(path: str, name: str, lease=None) -> dict:
             except OSError:
                 shutil.copy2(src, dst)  # cross-device fallback
             n_bytes += size
-        with open(os.path.join(tmp, "manifest.json"), "w") as fh:
-            json.dump(
+        fsops.write_atomic(
+            os.path.join(tmp, "manifest.json"),
+            json.dumps(
                 {"name": name, "files": files, "created_at": _time.time(),
                  "bytes": n_bytes},
-                fh,
                 indent=1,
-            )
+            ),
+        )
         os.makedirs(snap_root, exist_ok=True)
         held.check()  # fencing gate: never publish a torn snapshot
         fsops.replace(tmp, final)

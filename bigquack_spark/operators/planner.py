@@ -33,6 +33,7 @@ import math
 import os
 import re
 
+from bigquack_spark.operators import fsops
 from bigquack_spark.operators.maintenance import (
     STATS_FILE,
     _table_fingerprint,
@@ -228,10 +229,7 @@ def rebind_stats_fingerprint(path: str) -> bool:
     if "files" in manifest:
         return False
     manifest["fingerprint"] = _table_fingerprint(path)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    os.replace(tmp, p)
+    fsops.write_atomic(p, json.dumps(manifest, indent=1))
     return True
 
 
@@ -664,10 +662,7 @@ def trim_workload_log(path: str, keep_last: int = _DEFAULT_MAX_LOGGED) -> int:
         lines = fh.readlines()
     if len(lines) <= keep_last:
         return 0
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.writelines(lines[-keep_last:])
-    os.replace(tmp, p)
+    fsops.write_atomic(p, "".join(lines[-keep_last:]))
     return len(lines) - keep_last
 
 

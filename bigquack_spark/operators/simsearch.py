@@ -1041,6 +1041,7 @@ def rebuild_ivf_index(
     from pyspark.sql import Observation
 
     from bigquack_spark.lineage import capture_lineage, write_lineage_manifest
+    from bigquack_spark.operators import fsops
 
     old_root = _resolve_index_root(path)
     old_index = spark.read.parquet(f"{old_root}/index")
@@ -1102,11 +1103,7 @@ def rebuild_ivf_index(
     )
 
     # atomic pointer swap — the only moment readers retarget
-    ptr = os.path.join(path, CURRENT_PTR)
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"gen": gen}, fh)
-    os.replace(tmp, ptr)
+    fsops.write_atomic(os.path.join(path, CURRENT_PTR), json.dumps({"gen": gen}))
 
     previous = os.path.basename(old_root) if old_root != path else "(flat)"
     pruned = []

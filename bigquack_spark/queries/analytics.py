@@ -147,7 +147,7 @@ def q128_lang_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query, well below any last-ulp divergence, so values — not
     rankings — carry the comparison (cf. q125's rationale for avoiding
     transcendentals where SELECTION depends on them)."""
-    d = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     tok = d.select("lang", F.explode(F.split(F.lower("text"), r"\s+")).alias("tk"))
     freq = tok.groupBy("lang", "tk").agg(F.count(F.lit(1)).alias("n"))
     tot = freq.groupBy("lang").agg(F.sum("n").alias("total"))

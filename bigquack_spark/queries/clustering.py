@@ -170,7 +170,7 @@ def q144_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-deterministic cross-engine — the oracle replays the identical
     unrolled iterations in SQL.
     """
-    e = t(spark, sf_dir, "embeddings", rebalance="auto", rebalance_key="vec_id")
+    e = t(spark, sf_dir, "embeddings", rebalance=True, rebalance_key="vec_id")
     v = e.select(
         "vec_id", _quantize(F.col("embedding")).cast("array<double>").alias("qd")
     )
@@ -228,7 +228,7 @@ def q145_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces mean/variance — bit-identical cross-engine, no
     accumulation-order risk (the float trap VERDICT r1 flagged on q87).
     """
-    e = t(spark, sf_dir, "embeddings", rebalance="auto", rebalance_key="vec_id")
+    e = t(spark, sf_dir, "embeddings", rebalance=True, rebalance_key="vec_id")
     v = e.select(_quantize(F.col("embedding")).cast("array<long>").alias("q"))
     per_dim = v.select(F.posexplode("q").alias("pos", "val")).groupBy("pos")
     n = F.count(F.lit(1))
@@ -309,7 +309,7 @@ def q147_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the corpus scan (zero corpus shuffle, no join); the confusion
     matrix is a <= K^2-group aggregate.  Linear at 100 TB.
     """
-    e = t(spark, sf_dir, "embeddings", rebalance="auto", rebalance_key="vec_id")
+    e = t(spark, sf_dir, "embeddings", rebalance=True, rebalance_key="vec_id")
     v = e.select(
         "vec_id",
         "label",
@@ -618,7 +618,7 @@ def q213_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffle, zero joins, the write-once/serve-many shape an actual
     PQ index build needs.  The oracle replays both subspace loops and
     joins them on vec_id."""
-    e = t(spark, sf_dir, "embeddings", rebalance="auto", rebalance_key="vec_id")
+    e = t(spark, sf_dir, "embeddings", rebalance=True, rebalance_key="vec_id")
     v = e.select(
         "vec_id", _quantize(F.col("embedding")).cast("array<double>").alias("qd")
     )
@@ -704,7 +704,7 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str) -> "DataFrame | None":
     code_1, adc_dist, true_dist) against query vec_id=0 using q213's
     deterministically trained codebooks.  None when the corpus is smaller
     than the codebook seeds."""
-    e = t(spark, sf_dir, "embeddings", rebalance="auto", rebalance_key="vec_id")
+    e = t(spark, sf_dir, "embeddings", rebalance=True, rebalance_key="vec_id")
     v = e.select(
         "vec_id", _quantize(F.col("embedding")).cast("array<double>").alias("qd")
     )
@@ -957,7 +957,7 @@ def q234_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance list (tie-stable on both engines), folds in vec_id order.
     Plan: the corpus-side work is one literal-centroid projection (no
     join, no shuffle); the only exchanges are K-bounded."""
-    e = t(spark, sf_dir, "embeddings", rebalance="auto", rebalance_key="vec_id")
+    e = t(spark, sf_dir, "embeddings", rebalance=True, rebalance_key="vec_id")
     v = e.select(
         "vec_id", _quantize(F.col("embedding")).cast("array<double>").alias("qd")
     )

@@ -95,7 +95,7 @@ def q84_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle key), never a doc cross product; a document-frequency cap drops
     boilerplate trigrams — the join-skew hazard AND the false-positive
     source — before the join (operators/corpus.contamination_pairs)."""
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     bench = docs.filter(F.col("doc_id") % _BENCH_MOD == 0)
     pairs = C.contamination_pairs(
         docs, bench, shingle_len=_SHINGLE_LEN, max_df=_MAX_DF
@@ -168,7 +168,7 @@ def q101_dup_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, not corpus^2."""
     from bigquack_spark.operators.dedup import _shingles
 
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     sh = docs.select(
         "doc_id", F.explode(_shingles("text", _DUP_SHINGLE_LEN)).alias("s")
     )
@@ -487,7 +487,7 @@ def q133_corpus_materialization(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate), which is why the gate runs first."""
     from bigquack_spark.operators import text as X
 
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     sig = X.quality_signals(X.fingerprint(d)).withColumn(
         "b", _hash_bucket(F.col("doc_id"), "split-v1", 100)
     )
@@ -661,7 +661,7 @@ def q168_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint keep-first aggregate and the join back are the q30/q129
     shape (16-byte keys, map-side combined); the final rollup has
     |sources| groups.  All rates are exact-integer divisions."""
-    d = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     tk = F.split(F.lower("text"), r"\s+")
     n_words = F.size(tk).cast("long")
     mean_len = F.aggregate(
@@ -738,7 +738,7 @@ def q180_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     text with 1M copies in 2 sources is ONE joined row carrying two
     counts.  Output is |sources|^2-bounded.  The oracle replays the
     identical md5 pipeline."""
-    d = t(spark, sf_dir, "documents", columns=["text", "source"], rebalance="auto")
+    d = t(spark, sf_dir, "documents", columns=["text", "source"], rebalance=True)
     per = (
         d.select(F.md5("text").alias("f"), "source")
         .groupBy("f", "source")
@@ -795,7 +795,7 @@ def q181_quality_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint keep-first aggregate joined back (q30's shape).  The
     deterministic keeper (min doc_id) makes dup verdicts — hence rates —
     exact integers on both engines."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text", "n_chars"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text", "n_chars"], rebalance=True, rebalance_key="doc_id")
     from pyspark.sql.window import Window
 
     slice_key = (
@@ -865,7 +865,7 @@ def q197_source_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     q107's doc-level global window, which IS demoted) — so the plan is
     scale-free: all corpus-sized work is the one per-source aggregate.
     Deterministic density tiebreak on the source name."""
-    d = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     ntok = F.size(F.split(F.lower("text"), r"\s+")).cast("long")
     per = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -985,7 +985,7 @@ def q200_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ROWS_PER_BAND,
     )
 
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     sized = docs.select(
         "doc_id", "text", F.md5("text").alias("fp"),
         F.size(F.split(F.lower("text"), r"\s+")).cast("long").alias("n_tok"),
@@ -1073,7 +1073,7 @@ def q222_mixture_solver(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is the single token-count scan; everything after runs on
     |langs| rows with 1-row broadcast totals.  Exact-int token counts;
     rates are single IEEE divisions rounded to 6."""
-    d = t(spark, sf_dir, "documents", columns=["lang", "text"], rebalance="auto")
+    d = t(spark, sf_dir, "documents", columns=["lang", "text"], rebalance=True)
     obs = d.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.size(F.split(F.lower("text"), r"\s+"))).cast("long").alias("n_tokens"),
@@ -1142,7 +1142,7 @@ def q223_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT join tagging each token occurrence — the fact-side token stream
     never shuffles for the join because the vocab broadcasts.  Exact
     integer counts; one rounded division."""
-    d = t(spark, sf_dir, "documents", columns=["source", "text"], rebalance="auto")
+    d = t(spark, sf_dir, "documents", columns=["source", "text"], rebalance=True)
     tok = d.select("source", F.explode(F.split(F.lower("text"), r"\s+")).alias("tk"))
     freq = tok.groupBy("tk").agg(F.count(F.lit(1)).alias("n"))
     vocab = (
@@ -1211,7 +1211,7 @@ def q248_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q59's noted limit, solved the way it prescribes).  At 100 TB raise
     ORDER_SHARDS to target-file-count; everything stays
     partition-parallel."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id"], rebalance=True, rebalance_key="doc_id")
     e = d.withColumn(
         "epoch", F.explode(F.sequence(F.lit(0), F.lit(ORDER_EPOCHS - 1)))
     )

@@ -103,7 +103,7 @@ def q32_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable MinHash signatures (long form): min over distinct
     tokens of md5(seed || '|' || token), per (doc, seed)."""
     return D.minhash_signatures(
-        t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id"), "doc_id", "text", NUM_HASHES
+        t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id"), "doc_id", "text", NUM_HASHES
     ).select("doc_id", "seed", "minhash")
 
 
@@ -130,7 +130,7 @@ def q33_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket groupBy is the plan's only exchange.  Bucket stats are the
     scale-safe observable — output is bounded by docs x bands, never pairs."""
     bands = D.minhash_bands_portable(
-        t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id"),
+        t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id"),
         "doc_id", "text", NUM_HASHES, ROWS_PER_BAND,
     )
     return bands.groupBy("band_id", "band_key").agg(
@@ -186,7 +186,7 @@ def q34_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fast path (operators.dedup.simhash64) is the production variant,
     property-tested in tests/test_ops.py."""
     return D.simhash_portable(
-        t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id"),
+        t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id"),
         "doc_id", "text", bits=_SIMHASH_BITS, shingle_len=3,
     )
 
@@ -265,7 +265,7 @@ def q36_lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures are bit-identical across engines, the banding false-negative
     set is identical too — the oracle replays signatures -> bands ->
     candidates -> exact unigram Jaccard >= 0.9 and must match exactly."""
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
     cands = D.lsh_candidate_pairs(bands, "doc_id")
     return D.jaccard_verify(
@@ -276,7 +276,7 @@ def q36_lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _near_dup_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The closure queries' shared input: the documents load and its
     near-dup pair graph ``(a, b)`` at q36's LSH parameters."""
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     pairs = D.near_dup_pairs(
         docs, num_hashes=NUM_HASHES, rows_per_band=ROWS_PER_BAND,
         shingle_len=1, threshold=JACCARD_THRESHOLD,
@@ -393,7 +393,7 @@ def q117_ngram_jaccard_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pairwise work is bounded by chunk-bucket occupancy — never the corpus
     cross product."""
     return D.simhash_jaccard_near_dup(
-        t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id"),
+        t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id"),
         "doc_id", "text",
         max_hamming=_Q117_MAX_HAMMING,
         shingle_len=3,
@@ -448,7 +448,7 @@ def q129_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-spotting one reducer.  The oracle replays the identical chunking
     and keep-first order, so even the reassembled-text fingerprints must
     agree byte-for-byte."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     return D.chunk_dedup(d, chunk_tokens=CHUNK_DEDUP_TOKENS)
 
 
@@ -492,7 +492,7 @@ def q130_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigquack_spark.operators import text as X
     from bigquack_spark.operators.corpus import _hash_bucket
 
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     fp = X.fingerprint(d).select(
         "doc_id", "fingerprint", _hash_bucket(F.col("doc_id"), INCR_SALT, 10).alias("bkt")
     )
@@ -553,7 +553,7 @@ def q140_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the candidate set.  Fully md5-portable, so the oracle
     replays signatures, banding, scores, and the tie-broken argmax
     bit-exactly."""
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
     cands = D.lsh_candidate_pairs(bands, "doc_id")
     scored = D.jaccard_verify(cands, docs, "doc_id", "text", shingle_len=1, threshold=0.0)
@@ -657,7 +657,7 @@ def q160_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts); the candidate side reuses the production banding plan
     unchanged, so the measured recall is the production operator's
     recall.  Output is one audit row."""
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     sl = docs.filter(F.col("doc_id") < EVAL_SLICE).select(
         "doc_id", F.array_distinct(F.split(F.lower("text"), r"\s+")).alias("sh")
     )
@@ -870,7 +870,7 @@ def q185_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     diversion; everything shuffles on token or doc keys."""
     from pyspark.sql.window import Window  # noqa: F401  (registry-style parity)
 
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     toks = d.select(
         "doc_id",
         F.explode(F.array_distinct(F.split(F.lower("text"), r"\s+"))).alias("tok"),
@@ -978,7 +978,7 @@ def q190_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup-cluster id, not the doc id, at production scale.  Costs: the
     q36 pair pipeline plus two broadcast-shaped split joins and a
     9-cell-bounded aggregate."""
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
     cands = D.lsh_candidate_pairs(bands, "doc_id")
     pairs = D.jaccard_verify(
@@ -1184,7 +1184,7 @@ def q236_containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     production variant blocks on the CONTAINED side's own shingles
     (q185's prefix-filter shape); the oracle checks the algorithm as
     declared, bands included."""
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
     x = bands.select(F.col("doc_id").alias("a"), "band_id", "band_key")
     y = bands.select(F.col("doc_id").alias("b"), "band_id", "band_key")
@@ -1283,7 +1283,7 @@ def q241_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     reverse cumsum runs over 10 bins."""
     from pyspark.sql.window import Window
 
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
     cands = D.lsh_candidate_pairs(bands, "doc_id")
     scored = D.jaccard_verify(cands, docs, "doc_id", "text", shingle_len=1, threshold=0.0)
@@ -1387,7 +1387,7 @@ def q243_content_defined_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — the same two-exchange budget as the q142 index build."""
     from pyspark.sql.window import Window
 
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     toks = d.select(
         "doc_id",
         F.posexplode(F.split(F.lower("text"), r"\s+")).alias("p0", "tok"),
@@ -1510,7 +1510,7 @@ def q262_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-bucket sizes (bounded by duplicate-group size on this corpus —
     random digests collide a 16-bit band at 2^-16).  One digest scan,
     one band-keyed shuffle, bit math in whole-stage codegen."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     # the synthetic corpus has no duplicates, so a deterministic variant
     # set (case-flipped copies, identical after q30 normalization) stands
     # in for re-encoded images — the q124/q255 injection technique
@@ -1603,7 +1603,7 @@ def q272_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison.  At 100 TB you'd hash the shingles to fixed 8-byte keys
     (operators.dedup minhash path) and range-bucket the join; the audit
     shape is unchanged."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "source", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "source", "text"], rebalance=True, rebalance_key="doc_id")
     toks = F.split(F.lower(F.col("text")), r"\s+")
     tk = d.select("doc_id", "source", toks.alias("toks"))
     # guard: Spark's sequence(1, stop) DESCENDS when stop < 1 (it would

@@ -343,7 +343,7 @@ def q211_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigquack_spark.operators import dedup as D
     from bigquack_spark.queries.dedup import NUM_HASHES, ROWS_PER_BAND
 
-    docs = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
     cand = D.lsh_candidate_pairs(bands, "doc_id")
     und = cand.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(

@@ -310,7 +310,7 @@ def q125_pps_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, replayable, engine-portable (13 hex chars = 52 bits,
     exact in a double).  Emits (p, u) so the sample is auditable and
     Horvitz-Thompson reweighting (1/p) is one expression away."""
-    d = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id").select(
+    d = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id").select(
         "doc_id", "lang", F.length("text").cast("double").alias("wgt")
     )
     u = (
@@ -363,7 +363,7 @@ def q153_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     k rows per partition, never the corpus.  The md5 uniform makes the
     sample reproducible across engines, re-runs, and repartitioning —
     rand() cannot be either."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "n_chars"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "n_chars"], rebalance=True, rebalance_key="doc_id")
     u = (
         F.conv(
             F.substring(

@@ -100,7 +100,7 @@ def q141_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     |matching docs| x |query terms|, and the final top-k is a
     TakeOrderedAndProject — no global sort materializes.
     """
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     toks = d.select("doc_id", F.explode(X.tokens("text")).alias("tok"))
     dl = d.select("doc_id", F.size(X.tokens("text")).cast("long").alias("dl"))
     stats = dl.agg(
@@ -190,7 +190,7 @@ def q142_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     A production sink would write the full postings bucketed by token;
     the 5-element sample keeps the oracle diff bounded.
     """
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     tf = (
         d.select("doc_id", F.explode(X.tokens("text")).alias("tok"))
         .groupBy("doc_id", "tok")
@@ -247,7 +247,7 @@ def q146_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of corpus size.  Iterating merges re-runs this counting
     kernel over the re-segmented corpus; each round is the same plan.
     """
-    d = t(spark, sf_dir, "documents", columns=["text"], rebalance="auto")
+    d = t(spark, sf_dir, "documents", columns=["text"], rebalance=True)
     toks = d.select(F.explode(X.tokens("text")).alias("tok")).filter(
         F.length("tok") >= 2
     )
@@ -324,7 +324,7 @@ def q143_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict booleans agree bitwise across engines.  Linear at 100 TB:
     state per doc is its own bigram vocabulary, never cross-document.
     """
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     tk = d.select(
         "doc_id",
         X.tokens("text").alias("tk"),
@@ -428,7 +428,7 @@ def q149_entity_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "customer",
         columns=["c_custkey", "c_name"],
         predicate=f"c_custkey <= {TYPO_KEY_CAP}",
-        rebalance="auto",
+        rebalance=True,
     )
     vocab = c.select(F.col("c_name").alias("w"))
     keyed = vocab.select(
@@ -499,7 +499,7 @@ def q162_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single ln() rides on exact-integer operands (same q55 contract).
     Production corpora cap per-doc distinct tokens before this join
     (the standard collocation-window bound)."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     dt = d.select(
         "doc_id", F.explode(F.array_distinct(X.tokens("text"))).alias("tok")
     )
@@ -607,7 +607,7 @@ def q191_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer join of two (query, doc, rank) lists + one window.  At scale
     each list feeds from its indexed path (BM25 postings q141/q142, ANN
     q41/q75) — the fusion stage is unchanged."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     e = t(spark, sf_dir, "embeddings")
     from bigquack_spark.operators.simsearch import cosine
 
@@ -701,7 +701,7 @@ def q239_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode is a zero-shuffle projection; the phrase join is
     (doc_id, position)-keyed equi on term-filtered slivers — bounded by
     term frequency, never corpus size."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     pos = d.select(
         "doc_id",
         F.posexplode(X.tokens("text")).alias("p0", "tok"),
@@ -785,7 +785,7 @@ def q311_bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls the same three rounds in SQL."""
     from bigquack_spark.operators.text import train_bpe
 
-    d = t(spark, sf_dir, "documents", columns=["text"], rebalance="auto")
+    d = t(spark, sf_dir, "documents", columns=["text"], rebalance=True)
     return train_bpe(d, n_merges=3)
 
 
@@ -826,7 +826,7 @@ def q312_bpe_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_bpe,
     )
 
-    d = t(spark, sf_dir, "documents", columns=["text"], rebalance="auto")
+    d = t(spark, sf_dir, "documents", columns=["text"], rebalance=True)
     merges = train_bpe(d, n_merges=3).collect()  # 3 rows, bounded
     words = _bpe_word_table(d)
     w = F.col("w")

@@ -274,7 +274,7 @@ def q121_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizer cannot sort array-typed cells (r2 driver-red), and a
     quantized vector written to parquet would be a string/binary payload
     column anyway."""
-    e = t(spark, sf_dir, "embeddings", rebalance="auto", rebalance_key="vec_id").select(
+    e = t(spark, sf_dir, "embeddings", rebalance=True, rebalance_key="vec_id").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     q = S.quantize_int8(e, vec_col="e", scale_col="q_scale", out_col="q_vec")

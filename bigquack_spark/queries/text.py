@@ -41,7 +41,7 @@ _TOKS = "string_split_regex(lower(text), '\\s+')"
 def q50_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokenization, counts + distinct counts +
     mean token length, all as codegen'd array expressions (zero shuffle)."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     return X.token_stats(d).select(
         "doc_id", "n_tokens", "n_distinct_tokens", "total_token_chars", "avg_token_len"
     )
@@ -70,7 +70,7 @@ def q50_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q51_quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality scoring: alpha/space/stopword ratios + composite
     keep/drop flag — the filtering front door of a training-data pipeline."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     return X.quality_signals(d).select(
         "doc_id", "n_chars_obs", "n_tokens", "alpha_ratio", "space_ratio",
         "stopword_ratio", "quality_pass",
@@ -116,7 +116,7 @@ def q52_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID: marker-vocabulary hit counts, argmax with
     alphabetical tiebreak.  (The synthetic corpus is English word soup, so
     accuracy is meaningless — the operator shape is what's exercised.)"""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text", "lang"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text", "lang"], rebalance=True, rebalance_key="doc_id")
     return X.lang_id(d).select(
         "doc_id",
         "lang",
@@ -140,7 +140,7 @@ def q53_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rebalance: the regex-normalize+md5 kernel is per-row compute; a
     # 1-task scan pins it (interleaved A/B: 0.259 s -> 0.175 s, -32%)
     d = t(spark, sf_dir, "documents", columns=["doc_id", "text"],
-          rebalance="auto", rebalance_key="doc_id")
+          rebalance=True, rebalance_key="doc_id")
     return X.fingerprint(d).select("doc_id", "fingerprint", "prefix_fingerprint")
 
 
@@ -191,7 +191,7 @@ def q54_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak on the token).  Explode -> one narrow shuffle on the token;
     partial aggregation collapses each partition's counts first, so shuffle
     volume is bounded by vocabulary x partitions, not corpus size."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     return (
         d.select("doc_id", F.explode(X.tokens("text")).alias("tok"))
         .groupBy("tok")
@@ -237,7 +237,7 @@ def q55_tf_idf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     term per document.  The document-frequency table is tiny (bounded by
     vocabulary) and broadcast back onto the tf rows — the corpus never
     shuffles twice."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     toks = d.select("doc_id", F.explode(X.tokens("text")).alias("tok"))
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
@@ -278,7 +278,7 @@ def q56_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     token array (pure projection), then the count aggregate.  DuckDB builds
     the same bigrams via list slicing — both sides join consecutive token
     pairs with a single space."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     # token array STAGED as a column (r13, q139 lesson): a Column-shaped
     # `tk` inside the bigram lambda re-runs the tokenizer split per element
     tk = F.col("__tk")
@@ -323,7 +323,7 @@ def q57_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows at stride ``CHUNK_STRIDE``.  Pure per-row projection (sequence of start
     offsets -> slice -> join) then one explode — no shuffle at all; chunk
     fan-out is proportional to document length, the scale-correct shape."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     tk = X.tokens("text")
     starts = F.sequence(F.lit(1), F.greatest(F.lit(1), F.size(tk)), F.lit(CHUNK_STRIDE))
     chunks = d.select(
@@ -365,7 +365,7 @@ def q58_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure JVM per-row projection, the standard pre-training hygiene pass.
     Patterns restricted to the Java-regex ∩ RE2 dialect so the oracle
     replays them verbatim."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     scrubbed = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace("text", PII_PATTERNS["email"], "<EMAIL>"),
@@ -463,7 +463,7 @@ def q93_multimodal_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigquack_spark.operators import multimodal as M
     from bigquack_spark.operators import simsearch as S
 
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     media = M.attach_binary_payload(d, "doc_id", "text", kind="image")
     emb = M.pseudo_embed(media, dim=_EMB_DIM)
     # query side filters BEFORE the kernel: the broadcast subtree embeds 5
@@ -508,7 +508,7 @@ def q120_c4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection (array ops over the token split, zero shuffle, rides the
     scan); every ratio divides the same integers in both engines, so the
     doubles — and the keep booleans at the thresholds — agree bitwise."""
-    d = t(spark, sf_dir, "documents", rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
     toks = F.split(F.lower("text"), r"\s+")
     n = F.size(toks)
     mean_wl = (
@@ -556,7 +556,7 @@ def q131_nfc_canonical_fingerprint(spark: SparkSession, sf_dir: str) -> DataFram
     non-ASCII composed/decomposed pairs; the synthetic corpus itself is
     ASCII (was_canonical all true), so the driver check pins the plumbing
     while the pytest pins the normalization semantics."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     canon = X.nfc_canonicalize(d, "text", "canon_text")
     return canon.select(
         "doc_id",
@@ -594,7 +594,7 @@ def q138_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pattern lives in the Java-regex ∩ RE2 dialect, so the oracle
     replays it verbatim (probed identical piece-by-piece on contractions,
     accented letters, digit runs, punctuation runs)."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     return X.bpe_token_count(d).select(
         "doc_id", "n_bpe_tokens", "n_ws_tokens", "bpe_ws_ratio"
     )
@@ -656,7 +656,7 @@ def q139_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes, base 131, no modulus), so both engines produce identical
     fingerprint sets and the md5 digest of the sorted set diffs
     bit-exactly.  Zero shuffle — rides the scan."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     fp = X.winnow_fingerprints(d)
     return fp.select(
         "doc_id",
@@ -692,7 +692,7 @@ def q155_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     partner feed lying about its language mix.  Bounded output
     (|langs|^2 rows); the classification is the same zero-shuffle
     projection as q52 and the crosstab is one tiny keyed aggregate."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text", "lang"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text", "lang"], rebalance=True, rebalance_key="doc_id")
     return (
         X.lang_id(d)
         .groupBy(
@@ -744,7 +744,7 @@ def q173_boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     total fingerprints at any corpus size, and a hot fingerprint (in
     every doc) is just a big count, not a big join group.  The oracle
     replays the identical integer pipeline."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     # Materialize the fingerprint arrays BEFORE exploding: feeding the
     # nested winnowing transform tree straight into a Generate lets the
     # optimizer inline it per output element (observed ~100x slowdown /
@@ -823,7 +823,7 @@ def q193_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus-sized map-side-combined shuffle (q146's shape); ranking
     and the fit run on VOCABULARY-sized data, and the fold arrays hold
     ``ZIPF_TOP`` doubles."""
-    d = t(spark, sf_dir, "documents", columns=["text"], rebalance="auto")
+    d = t(spark, sf_dir, "documents", columns=["text"], rebalance=True)
     freq = (
         d.select(F.explode(F.split(F.lower("text"), r"\s+")).alias("tok"))
         .groupBy("tok")
@@ -899,7 +899,7 @@ def q199_truncation_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataloader-efficiency ledger: q132 counts padding you pay for, this
     counts content you lose.  Pure projection + one |sources| aggregate;
     exact integer token math end to end."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "source", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "source", "text"], rebalance=True, rebalance_key="doc_id")
     n_tok = F.size(F.split(F.lower("text"), r"\s+")).cast("long")
     sized = d.select("source", n_tok.alias("n_tok"))
     lost = F.when(F.col("n_tok") > MAX_SEQ_LEN, F.col("n_tok") - MAX_SEQ_LEN).otherwise(0)
@@ -947,7 +947,7 @@ def q204_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling (sample_frames, pytest), and now audio segmentation."""
     from bigquack_spark.operators import multimodal as M
 
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     media = M.attach_binary_payload(d, "doc_id", "text", kind="audio")
     return M.segment_audio(media)
 
@@ -1000,7 +1000,7 @@ def q207_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side model), and the per-doc sum folds over TOKEN-SORTED term
     lists (q184 discipline) so the doubles add in one order on both
     engines.  The 1-row corpus total broadcasts."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     tf = (
         d.select("doc_id", F.explode(X.tokens("text")).alias("tok"))
         .groupBy("doc_id", "tok")
@@ -1071,7 +1071,7 @@ def q208_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines, and the n>=2 guard matters because Spark's
     sequence(1, n-1) runs DESCENDING when n-1 < 1 while DuckDB's range
     returns empty."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     toks = X.tokens("text")
     tk = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("n"))
     empty = F.array().cast("array<string>")
@@ -1161,7 +1161,7 @@ def q215_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     media_id — bounded frames per video, never a global sort."""
     from bigquack_spark.operators import multimodal as M
 
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     media = M.attach_binary_payload(d, "doc_id", "text", kind="video")
     return M.scene_cuts(media)
 
@@ -1217,7 +1217,7 @@ def q218_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluate the identical z then sigmoid on identical doubles; outputs
     rounded to 6 digits.  The keep decision compares the ROUNDED
     probability so the boolean is as portable as the score."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     toks = X.tokens("text")
     nonempty = d.filter((F.length("text") > 0) & (F.size(toks) > 0))
     alpha = (
@@ -1291,7 +1291,7 @@ def q225_slice_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with a 1-row broadcast base rate.  Zero-shuffle scoring +
     one slice-cardinality shuffle at any corpus size."""
     d = t(spark, sf_dir, "documents", columns=["doc_id", "lang", "source", "text"],
-          rebalance="auto", rebalance_key="doc_id")
+          rebalance=True, rebalance_key="doc_id")
     toks = X.tokens("text")
     nonempty = d.filter((F.length("text") > 0) & (F.size(toks) > 0))
     alpha = (
@@ -1385,7 +1385,7 @@ def q228_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean what they claim.  Mean-of-doubles folds in doc_id order (q184
     discipline); labels and buckets are exact ints.  One zero-shuffle
     scoring pass + one 10-row aggregate."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     toks = X.tokens("text")
     nonempty = d.filter((F.length("text") > 0) & (F.size(toks) > 0))
     alpha = (
@@ -1479,7 +1479,7 @@ def q229_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     same join pipeline.  Transition extraction is a zipped slice
     (zero-shuffle projection); the model joins are the only exchanges.
     Both engines fold identical doubles in identical order."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     toks = X.tokens("text")
     tk = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("n"))
     trans = (
@@ -1601,7 +1601,7 @@ def q240_maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the chunk-pair pass is corpus x |query chunks| — the first-stage
     hamming prefilter (q217) drops in front unchanged.  Every stage
     replays exactly in SQL, late interaction included."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     # Empty-text guard (q208's warning): sequence(0, ceil(0/N)-1) =
     # sequence(0, -1) runs DESCENDING and emits two phantom chunks where the
     # oracle's range(0, 0) emits none — filter empties out before chunking.
@@ -1708,7 +1708,7 @@ def q247_shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH band join (dedup.py:180), never all-pairs.  Position extraction is
     an in-array array_position projection — no extra shuffle beyond the
     (fp)-keyed cap count and the capped pair join itself."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
     w = X.winnow_windows_frame(d, "text", out_col="wins")
     flat = w.select(
         "doc_id",
@@ -1797,7 +1797,7 @@ def q249_lang_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle classification projection, two tiny marginal aggregates
     full-outer-joined on the bounded language set, one row out — state is
     O(|langs|) regardless of corpus size."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "text", "lang"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "text", "lang"], rebalance=True, rebalance_key="doc_id")
     pred = X.lang_id(d).select(
         F.col("lang").alias("declared"), F.col("predicted_lang").alias("predicted")
     )
@@ -1877,7 +1877,7 @@ def q263_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle to vocab counts; the cumulative window runs over the VOCAB
     (metadata-sized — q254's argument), ordered by (n desc, token) for a
     deterministic range layout."""
-    d = t(spark, sf_dir, "documents", columns=["text"], rebalance="auto")
+    d = t(spark, sf_dir, "documents", columns=["text"], rebalance=True)
     tk = d.select(F.explode(F.split(F.lower("text"), r"\s+")).alias("token"))
     counts = (
         tk.filter(F.col("token") != "")
@@ -2145,7 +2145,7 @@ def q286_vocab_oov_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token (heavy hitters collapse map-side), the coverage probe is a
     left join on the token string — bucketable, and at 100 TB the vocab
     side fits a broadcast after frequency pruning."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "source", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "source", "text"], rebalance=True, rebalance_key="doc_id")
     tk = d.select(
         "doc_id", "source",
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
@@ -2201,7 +2201,7 @@ def q295_repetitiveness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: grams explode map-side; the distinct count shuffles
     gram strings once per source — at 100 TB the grams hash to 8 bytes
     and the distinct becomes approx_count_distinct, same audit shape."""
-    d = t(spark, sf_dir, "documents", columns=["doc_id", "source", "text"], rebalance="auto", rebalance_key="doc_id")
+    d = t(spark, sf_dir, "documents", columns=["doc_id", "source", "text"], rebalance=True, rebalance_key="doc_id")
     # token array STAGED as a column (r13, q139 lesson): a Column-shaped
     # `toks` inside the gram lambda re-runs the split per element
     toks = F.col("__toks")
@@ -2539,7 +2539,7 @@ def q315_readability_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate.  The syllable heuristic is a HEURISTIC (stated in-name:
     vowel groups) — the bands, not the third decimal, are the signal."""
     d = t(spark, sf_dir, "documents",
-          columns=["lang", "source", "text"], rebalance="auto")
+          columns=["lang", "source", "text"], rebalance=True)
     d = d.filter(F.length(F.trim("text")) > 0)
     n_words = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
     n_sentences = F.greatest(
@@ -2604,7 +2604,7 @@ def q316_mojibake_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring — a source with a nonzero replacement rate needs its ingest
     decoder fixed, not its documents filtered.  Pure per-row regexp
     predicates; one source-bounded aggregate."""
-    d = t(spark, sf_dir, "documents", columns=["source", "text"], rebalance="auto")
+    d = t(spark, sf_dir, "documents", columns=["source", "text"], rebalance=True)
 
     def has(pattern: str):
         return (
@@ -2699,7 +2699,7 @@ def q318_vocab_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one token aggregate (pair-vocabulary bounded), a broadcast
     top-K set, a (sources x {_VOCAB_TOPK}+1)-sized grid — nothing
     corpus-sized past the first groupBy."""
-    d = t(spark, sf_dir, "documents", columns=["source", "text"], rebalance="auto")
+    d = t(spark, sf_dir, "documents", columns=["source", "text"], rebalance=True)
     toks = d.select(
         "source", F.explode(X.tokens(F.col("text"))).alias("tok")
     ).filter(F.length("tok") > 0)

@@ -238,19 +238,20 @@ class AtomicWriter:
             for batch in os.listdir(self._dest):
                 sub = os.path.join(self._dest, batch)
                 for name in os.listdir(sub):
-                    os.replace(os.path.join(sub, name), os.path.join(self._dest, name))
+                    fsops.replace(os.path.join(sub, name), os.path.join(self._dest, name))
                 os.rmdir(sub)
             if not os.path.exists(self.target):
                 fsops.replace(self._dest, self.target)  # atomic publish
             else:  # target pre-exists: move batch files in, then success-mark
                 for name in os.listdir(self._dest):
                     if name.startswith(("part-", ".part-")):
-                        shutil.move(os.path.join(self._dest, name), os.path.join(self.target, name))
+                        fsops.replace(os.path.join(self._dest, name), os.path.join(self.target, name))
                 shutil.rmtree(self._dest, ignore_errors=True)
-        marker = os.path.join(self.target, "_BQ_COMMIT")
         if os.path.isdir(self.target):
-            with open(marker, "w") as fh:
-                json.dump({"rows": self.rows_written, "batches": self.next_offset}, fh)
+            fsops.write_atomic(
+                os.path.join(self.target, "_BQ_COMMIT"),
+                json.dumps({"rows": self.rows_written, "batches": self.next_offset}),
+            )
             # output->input edge, written at publish so PENDING streams that
             # never commit leave no lineage record (nothing became visible)
             from bigquack_spark.lineage import write_lineage_manifest

@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigquack_spark.operators import fsops
+
 
 def _checksum_aggs() -> list:
     """The two-channel line checksum shared by export and verify: XOR of
@@ -76,10 +78,7 @@ def export_jsonl_shards(
         "sum_checksum": int(row["sum_checksum"]) if row["sum_checksum"] is not None else 0,
         "shard_records": shard_records,
     }
-    tmp = os.path.join(path, "_MANIFEST.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, os.path.join(path, "_MANIFEST.json"))
+    fsops.write_atomic(os.path.join(path, "_MANIFEST.json"), json.dumps(manifest))
     return manifest
 
 

@@ -495,10 +495,9 @@ def _merge_upsert_locked(
         "columns_added": added_cols,
         "affected_files": sorted(hit_files),
     }
-    tmp = os.path.join(target_path, f"_MERGE-{gen}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(audit, fh, indent=1)
-    fsops.replace(tmp, os.path.join(target_path, f"_MERGE-{gen}.json"))
+    fsops.write_atomic(
+        os.path.join(target_path, f"_MERGE-{gen}.json"), json.dumps(audit, indent=1)
+    )
     if refresh_stats:
         from bigquack_spark.operators.maintenance import refresh_table_stats
 

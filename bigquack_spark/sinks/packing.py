@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bigquack_spark.operators import fsops
+
 PACKING_FILE = "_PACKING.json"
 
 
@@ -247,8 +249,5 @@ def export_packed_shards(
             for r in audit
         },
     }
-    tmp = os.path.join(path, PACKING_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(packing, fh, indent=1)
-    os.replace(tmp, os.path.join(path, PACKING_FILE))
+    fsops.write_atomic(os.path.join(path, PACKING_FILE), json.dumps(packing, indent=1))
     return {**manifest, "packing": packing}

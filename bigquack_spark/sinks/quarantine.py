@@ -31,6 +31,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigquack_spark.operators import fsops
+
 #: A routing rule: (name, FAILURE predicate as a SQL expression string) —
 #: a row violating ANY rule is quarantined.  Same shape as q258's
 #: _DQ_RULES so an expectation suite doubles as a routing policy.
@@ -259,17 +261,16 @@ def requarantine(
         fingerprint = _dir_fingerprint(qdir)
         false_fingerprint = _dir_fingerprint(fdir)
         read_quarantined(spark, base_path).write.parquet(data_dir)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
+        fsops.write_atomic(
+            marker,
+            json.dumps(
                 {
                     "gen": uuid.uuid4().hex[:12],
                     "fingerprint": fingerprint,
                     "false_fingerprint": false_fingerprint,
-                },
-                fh,
-            )
-        os.replace(tmp, marker)
+                }
+            ),
+        )
     with open(marker) as fh:
         gen = json.load(fh)["gen"]
     shutil.rmtree(qdir, ignore_errors=True)  # idempotent on roll-forward
@@ -319,7 +320,7 @@ def requarantine(
     if os.path.isdir(src_true) and any(
         f.startswith("part-") for f in os.listdir(src_true)
     ):
-        os.rename(src_true, qdir)
+        fsops.replace(src_true, qdir)
     shutil.rmtree(staging, ignore_errors=True)
     n_redriven = int(got["n_redriven"])
     n_still = int(got["n_still"] or 0)

@@ -24,6 +24,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigquack_spark.operators import fsops
 from bigquack_spark.sinks.merge import _recover_orphaned_swap
 
 #: An audit check: name + a function DataFrame -> violation count (0 = pass).
@@ -101,9 +102,9 @@ def write_audit_publish(
         return {"published": False, "rows": rows, "violations": violations}
     if os.path.exists(target_path):
         backup = f"{target_path}.old-{uuid.uuid4().hex[:12]}"
-        os.rename(target_path, backup)
-        os.rename(staging, target_path)
+        fsops.replace(target_path, backup)
+        fsops.replace(staging, target_path)
         shutil.rmtree(backup, ignore_errors=True)
     else:
-        os.rename(staging, target_path)
+        fsops.replace(staging, target_path)
     return {"published": True, "rows": rows, "violations": violations}

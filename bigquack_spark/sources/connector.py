@@ -338,6 +338,8 @@ class _StubWriter(DataSourceArrowWriter):
         import os
         import shutil
 
+        from bigquack_spark.operators import fsops
+
         os.makedirs(self._path, exist_ok=True)
         if self._overwrite:
             for f in os.listdir(self._path):
@@ -349,11 +351,12 @@ class _StubWriter(DataSourceArrowWriter):
                 continue
             dst = os.path.join(self._path, os.path.basename(m.pending_path).replace(
                 "part-", f"part-{self._job}-"))
-            os.rename(m.pending_path, dst)
+            fsops.replace(m.pending_path, dst)
             total += m.rows
-        manifest = os.path.join(self._path, f"_manifest-{self._job}")
-        with open(manifest, "w") as fh:
-            json.dump({"job": self._job, "rows": total, "parts": len(messages)}, fh)
+        fsops.write_atomic(
+            os.path.join(self._path, f"_manifest-{self._job}"),
+            json.dumps({"job": self._job, "rows": total, "parts": len(messages)}),
+        )
         shutil.rmtree(os.path.join(self._path, f".pending-{self._job}"), ignore_errors=True)
 
     def abort(self, messages):

@@ -52,7 +52,7 @@ def load_table(
     name: str,
     columns: list[str] | None = None,
     predicate: str | None = None,
-    rebalance: bool | str = False,
+    rebalance: bool = False,
     rebalance_key: str | None = None,
 ) -> DataFrame:
     """Scan one table with source-level pushdown.
@@ -62,24 +62,16 @@ def load_table(
     into the parquet reader (visible as PushedFilters / ReadSchema in
     ``df.explain("formatted")``).
 
-    ``rebalance=True`` repartitions to the cluster's default parallelism
-    after the (pushed-down) scan.  Use it ONLY in front of CPU-bound
-    projections over narrow inputs: a parquet row group is the minimum scan
-    split, so a few-row-group table pins downstream per-row compute (hash
-    folds, regex) to a few tasks; one cheap exchange spreads it across the
-    cluster.  Wide/fact tables at scale arrive with natural parallelism and
-    must not pay the shuffle.
-
-    ``rebalance="auto"`` (r12, guide §2.5 "input skew: repartition
-    immediately after the read") pays the exchange ONLY when the scan
-    actually under-parallelizes — scan splits < the cluster's default
-    parallelism.  A one-row-group parquet file (the primary bench layout)
-    pins the whole downstream pipeline — joins, JSON parse, partial
-    aggregation — to ONE task; the guard detects that from the planned
-    split count and spreads it.  On a properly laid-out table (multi-file /
-    multi-row-group, the 10x/100x tiers and any real ingest) the guard is
-    false and the plan is unchanged, so the fix cannot regress at scale and
-    adapts to whatever core count the session runs at.
+    ``rebalance=True`` (guide §2.5 "input skew: repartition immediately
+    after the read") repartitions to the cluster's default parallelism
+    after the (pushed-down) scan, but ONLY when the scan under-parallelizes
+    — planned scan splits < default parallelism.  A parquet row group is
+    the minimum scan split, so a one-row-group file (the primary bench
+    layout) pins the whole downstream pipeline — joins, JSON parse, hash
+    folds, regex — to ONE task; one cheap exchange spreads it.  On a
+    multi-file / multi-row-group table the guard is false and the plan is
+    unchanged, so it cannot regress at scale and adapts to whatever core
+    count the session runs at.
 
     ``rebalance_key`` hash-repartitions by that column instead of
     round-robin: skips round-robin's local sort-before-repartition pass
@@ -97,7 +89,7 @@ def load_table(
         df = df.filter(predicate)
     if rebalance:
         target = spark.sparkContext.defaultParallelism
-        if rebalance != "auto" or _estimated_scan_splits(read) < target:
+        if _estimated_scan_splits(read) < target:
             # Repartition BEFORE the projection: a rebalance_key outside
             # ``columns`` would otherwise fail analysis (ADVICE r12) — the
             # hash key is cheap and Catalyst's ColumnPruning still folds the
@@ -164,7 +156,7 @@ def _estimated_scan_splits(df: DataFrame) -> int:
 
     r12's guard probed ``df.rdd.getNumPartitions()``, which forces an
     analyzer pass + RDD conversion per ``load_table`` call at query-BUILD
-    time on all 89 auto-rebalance paths (r12 verdict #3).  This computes
+    time on every rebalancing load (r12 verdict #3).  This computes
     the same number Spark's ``FilePartition.maxSplitBytes`` packing will
     produce — ``min(maxPartitionBytes, max(openCost, totalBytes/cores))``
     sized splits greedily packed — from the file index Spark built when it

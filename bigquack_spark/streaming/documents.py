@@ -6,8 +6,7 @@ verification, run per micro-batch against a PERSISTED history.
 ``dedup_against_history`` (streaming/events.py) handles the exact-dup
 case statelessly; this sink adds the near-dup case, which needs real
 state (the history band table) and therefore lives in ``foreachBatch``
-with the batch-id offset gate (streaming/sink.py's exactly-once
-contract).  Per micro-batch:
+behind streaming/sink.py's batch-id offset gate.  Per micro-batch:
 
 1. fingerprint + band the batch docs (pure projections, the q32 plan);
 2. EXACT verdicts: anti/semi join against the history fingerprint set;
@@ -25,7 +24,6 @@ inside a single micro-batch, and the batch pass repairs the residue.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigquack_spark.sources.parquet import _read_parquet, table_path
+from bigquack_spark.streaming.sink import BatchGate
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,9 +46,9 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-class NearDupIngestSink:
+class NearDupIngestSink(BatchGate):
     """foreachBatch handler: exact + near-dup classification against a
-    persisted history, with exactly-once batch-id offsets."""
+    persisted history, landed through the batch-id offset gate."""
 
     def __init__(
         self,
@@ -58,6 +57,7 @@ class NearDupIngestSink:
         rows_per_band: int = 2,
         threshold: float = 0.9,
     ):
+        super().__init__(target)
         self.target = target
         self.num_hashes = num_hashes
         self.rows_per_band = rows_per_band
@@ -65,21 +65,6 @@ class NearDupIngestSink:
         self.docs_dir = os.path.join(target, "history_docs")
         self.bands_dir = os.path.join(target, "history_bands")
         self.verdicts_dir = os.path.join(target, "verdicts")
-        self._offset_file = os.path.join(target, "_COMMITTED_BATCH")
-        self.next_batch_id = self._load()
-
-    def _load(self) -> int:
-        try:
-            with open(self._offset_file) as fh:
-                return json.load(fh)["next_batch_id"]
-        except (OSError, ValueError, KeyError):
-            return 0
-
-    def _persist(self) -> None:
-        tmp = self._offset_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"next_batch_id": self.next_batch_id}, fh)
-        os.replace(tmp, self._offset_file)
 
     def _history_docs(self, spark: SparkSession) -> DataFrame:
         if os.path.exists(self.docs_dir):
@@ -95,14 +80,10 @@ class NearDupIngestSink:
             [], "doc_id bigint, band_id int, band_key string"
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _land(self, batch_df: DataFrame, batch_id: int, lease) -> None:
         from bigquack_spark.operators import dedup as D
 
-        if batch_id < self.next_batch_id:
-            return
         if not batch_df.take(1):
-            self.next_batch_id = batch_id + 1
-            self._persist()
             return
         spark = batch_df.sparkSession
         batch = batch_df.select(
@@ -166,5 +147,3 @@ class NearDupIngestSink:
         bands.join(novel_ids, "doc_id", "left_semi").write.mode("append").parquet(
             self.bands_dir
         )
-        self.next_batch_id = batch_id + 1
-        self._persist()

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigquack_spark.sources.parquet import _read_parquet, table_path
+from bigquack_spark.streaming.sink import ExactlyOnceBatchSink
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,7 +472,7 @@ def topk_stream(
     )
 
 
-class Scd2EnrichSink:
+class Scd2EnrichSink(ExactlyOnceBatchSink):
     """Temporally-correct stream enrichment — ``enrich_stream`` answers
     'what is the dimension row NOW'; this answers 'what was it AT EVENT
     TIME': each micro-batch as-of joins (operators.joins.asof_join,
@@ -483,10 +484,9 @@ class Scd2EnrichSink:
     Stateless streaming-wise: the as-of's union-and-carry windows are
     not expressible on an unbounded stream, but each micro-batch IS a
     bounded frame, so the join runs per batch inside ``foreachBatch``
-    with the batch-id offset gate (ExactlyOnceBatchSink's idempotent
-    per-batch overwrite dirs) making delivery exactly-once.  The dim
-    re-resolves per batch, so new versions take effect without
-    restarts."""
+    and lands in ExactlyOnceBatchSink's idempotent per-batch overwrite
+    dirs.  The dim re-resolves per batch, so new versions take effect
+    without restarts."""
 
     def __init__(
         self,
@@ -497,14 +497,12 @@ class Scd2EnrichSink:
         right_ts: str,
         right_cols: list[str],
     ):
-        from bigquack_spark.streaming.sink import ExactlyOnceBatchSink
-
-        self._sink = ExactlyOnceBatchSink(target)
+        super().__init__(target)
         self.dim_provider = dim_provider
         self.on, self.left_ts, self.right_ts = on, left_ts, right_ts
         self.right_cols = right_cols
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _land(self, batch_df: DataFrame, batch_id: int, lease) -> None:
         from bigquack_spark.operators.joins import asof_join
 
         dim = self.dim_provider(batch_df.sparkSession)
@@ -513,8 +511,4 @@ class Scd2EnrichSink:
             left_ts=self.left_ts, right_ts=self.right_ts,
             right_cols=self.right_cols,
         )
-        self._sink(enriched, batch_id)
-
-    @property
-    def next_batch_id(self) -> int:
-        return self._sink.next_batch_id
+        super()._land(enriched, batch_id, lease)

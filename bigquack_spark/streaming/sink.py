@@ -1,12 +1,37 @@
-"""Exactly-once streaming sink — the Storage Write API offset contract
+"""Exactly-once streaming sinks — the Storage Write API offset contract
 (bigquery_write.go:448-460) carried into Structured Streaming.
 
 ``foreachBatch`` hands each micro-batch a monotonically increasing
 ``batch_id``; treating it as the append offset gives the managed-writer
-idempotence: on restart-and-replay, already-committed batch ids are
-silently skipped.  The committed offset is persisted next to the data so
-the guarantee survives process restarts (the in-memory AtomicWriter covers
-the single-process case; this covers the resumed-query case).
+idempotence.  :class:`BatchGate` owns that bookkeeping for every
+offset-gated sink (the ones below and ``NearDupIngestSink`` /
+``Scd2EnrichSink``):
+
+- The committed offset is ``<root>/_COMMITTED_BATCH``, published with
+  ``fsops.write_atomic`` next to the data, so the guarantee survives
+  process restarts (the in-memory AtomicWriter covers the single-process
+  case; this covers the resumed-query case).  An unreadable offset file
+  reads as 0: the stream reprocesses rather than crashes.
+- A batch id below the committed offset is a replay of a durable batch
+  and no-ops.  A new batch lands, then the offset commits; a crash in
+  between re-runs the batch on replay, so each sink's landing converges
+  when re-run or says in its docstring what the window costs.
+- **Reset rule.**  A genuine restart replays at most the one in-flight
+  batch, so the first batch id a sink object sees may sit at most one
+  below the committed offset.  Anything lower means the streaming
+  checkpoint was reset or belongs to another query; the sink raises
+  instead of dropping every new batch as a "replay".
+- ``lease_table=True`` lands the batch and commits its offset inside the
+  table writer lease (``operators/lease.py``), fenced by ``lease.check()``
+  before the commit, so maintenance (compaction, merge, purge) and a live
+  append serialize: a batch landing while maintenance holds the lease
+  fails loudly (``LeaseHeldError``; the stream's retry redelivers it).
+  Pure replays stay outside the lease.  Off by default: a sink whose table
+  nobody maintains concurrently does not need the extra file ops.
+
+``JoinViewSink`` keeps its own ``_STATE``, because its stream offset
+commits together with its revision pointers, and applies the same reset
+rule.
 """
 
 from __future__ import annotations
@@ -17,18 +42,94 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigquack_spark.operators import fsops
 
-class ExactlyOnceBatchSink:
-    """foreachBatch handler with durable offset tracking.
+
+def _check_first_batch(sink, batch_id: int, committed: int, offset_file: str) -> None:
+    """The reset rule (module docstring) for a sink's first batch."""
+    # A fresh/relocated streaming checkpoint restarts batch ids at 0
+    # while _COMMITTED_BATCH still holds the old high-water mark; the
+    # replay gate would then silently DROP every new batch as a
+    # "replay" (r11 advice — data loss, not duplicates).  A genuine
+    # restart replays at most the one in-flight batch (regression of
+    # exactly 1); anything deeper on the run's first batch is a
+    # checkpoint/offset mismatch and must fail loudly.
+    if batch_id < committed - 1:
+        raise RuntimeError(
+            f"{type(sink).__name__}: first batch id {batch_id} is far below "
+            f"the committed offset {committed} in {offset_file} — the "
+            "streaming checkpoint was reset or points at a different query "
+            "than this sink's target. Restore the original checkpoint dir, "
+            "or clear the target and remove the offset file to restart "
+            "ingest from scratch."
+        )
+
+
+class BatchGate:
+    """The offset gate every offset-gated ``foreachBatch`` sink lands
+    through (module docstring).  A subclass implements :meth:`_land`;
+    :meth:`_landed` runs after the offset commit, inside the lease span,
+    and :meth:`_replayed` on a replayed batch id."""
+
+    #: owner recorded on the table lease
+    lease_owner = "stream-append"
+
+    def __init__(self, root: str, lease_table: bool = False):
+        self.lease_table = lease_table
+        self._root = root
+        self._offset_file = os.path.join(root, "_COMMITTED_BATCH")
+        try:
+            with open(self._offset_file) as fh:
+                self.next_batch_id = json.load(fh)["next_batch_id"]
+        except (OSError, ValueError, KeyError):
+            self.next_batch_id = 0
+        self._first_call = True
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        if self._first_call:
+            self._first_call = False
+            _check_first_batch(self, batch_id, self.next_batch_id, self._offset_file)
+        if batch_id < self.next_batch_id:
+            self._replayed(batch_df)
+            return
+        if not self.lease_table:
+            self._commit(batch_df, batch_id, None)
+            return
+        from bigquack_spark.operators.lease import table_lease
+
+        with table_lease(self._root, owner=self.lease_owner) as held:
+            self._commit(batch_df, batch_id, held)
+
+    def _commit(self, batch_df: DataFrame, batch_id: int, lease) -> None:
+        self._land(batch_df, batch_id, lease)
+        if lease is not None:
+            # fencing gate before the offset commit: a batch that outlived
+            # the TTL (lease stolen by maintenance) must not publish
+            lease.check()
+        fsops.write_atomic(self._offset_file, json.dumps({"next_batch_id": batch_id + 1}))
+        self.next_batch_id = batch_id + 1
+        self._landed(batch_df)
+
+    def _land(self, batch_df: DataFrame, batch_id: int, lease) -> None:
+        raise NotImplementedError
+
+    def _landed(self, batch_df: DataFrame) -> None:
+        pass
+
+    def _replayed(self, batch_df: DataFrame) -> None:
+        pass
+
+
+class ExactlyOnceBatchSink(BatchGate):
+    """foreachBatch handler that appends each batch to a parquet table.
 
     Each batch lands in its own ``batch_id=N`` partition directory with
     OVERWRITE mode, so the write itself is idempotent: a crash after the
-    data write but before the offset persist (the r2-verdict crash window
+    data write but before the offset commit (the r2-verdict crash window
     — a plain ``append`` with random part names would re-append on
     replay) just overwrites the same directory with the same rows on
-    replay.  The offset gate then makes already-committed ids no-ops
-    without re-running their plans.  Readers ``spark.read.parquet(target)``
-    as usual — the batch_id partition column rides along.
+    replay.  Readers ``spark.read.parquet(target)`` as usual — the
+    batch_id partition column rides along.
 
     Usage::
 
@@ -36,24 +137,12 @@ class ExactlyOnceBatchSink:
         (stream.writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt).trigger(availableNow=True)
             .start().awaitTermination())
-
-    ``lease_table=True`` opts the sink into the table writer lease
-    (``operators/lease.py``): each batch commit acquires/releases the
-    lease, so a maintenance writer (compaction, merge, purge) and a live
-    append SERIALIZE instead of interleaving — a batch landing while
-    maintenance holds the lease fails that micro-batch loudly
-    (``LeaseHeldError``; the stream's retry redelivers it), and
-    maintenance refuses to start mid-commit.  Off by default: an
-    append-only sink whose table nobody maintains concurrently does not
-    need the two extra file ops per batch.
     """
 
     def __init__(self, target: str, lease_table: bool = False):
+        super().__init__(target, lease_table)
         self.target = target
-        self.lease_table = lease_table
-        self._offset_file = os.path.join(target, "_COMMITTED_BATCH")
         self._migrate_legacy_layout()
-        self.next_batch_id = self._load()
 
     def _migrate_legacy_layout(self) -> None:
         """Pre-r3 versions of this sink appended flat ``part-*`` files at the
@@ -83,51 +172,16 @@ class ExactlyOnceBatchSink:
         legacy_dir = os.path.join(self.target, "batch_id=-1")
         os.makedirs(legacy_dir, exist_ok=True)
         for f in legacy:
-            os.replace(os.path.join(self.target, f), os.path.join(legacy_dir, f))
+            fsops.replace(os.path.join(self.target, f), os.path.join(legacy_dir, f))
         for marker in ("_SUCCESS",):
             marker_path = os.path.join(self.target, marker)
             if os.path.isfile(marker_path):
                 os.remove(marker_path)
 
-    def _load(self) -> int:
-        try:
-            with open(self._offset_file) as fh:
-                return json.load(fh)["next_batch_id"]
-        except (OSError, ValueError, KeyError):
-            return 0
-
-    def _persist(self) -> None:
-        tmp = self._offset_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"next_batch_id": self.next_batch_id}, fh)
-        os.replace(tmp, self._offset_file)  # atomic on POSIX
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.lease_table and batch_id >= self.next_batch_id:
-            # pure replays stay OUTSIDE the lease: an already-durable
-            # batch redelivered while maintenance holds the table must
-            # no-op, not fail the stream (r9 review)
-            from bigquack_spark.operators.lease import table_lease
-
-            with table_lease(self.target, owner="stream-append") as held:
-                self._run_batch(batch_df, batch_id, lease=held)
-        else:
-            self._run_batch(batch_df, batch_id)
-
-    def _run_batch(self, batch_df: DataFrame, batch_id: int, lease=None) -> None:
-        if batch_id < self.next_batch_id:
-            return  # replayed batch: already durable — exactly-once
-        # overwrite INTO the batch's own partition dir: replay after a
-        # crash-before-persist converges instead of duplicating
+    def _land(self, batch_df: DataFrame, batch_id: int, lease) -> None:
         batch_df.write.mode("overwrite").parquet(
             os.path.join(self.target, f"batch_id={batch_id}")
         )
-        if lease is not None:
-            # fencing gate before the offset commit: a batch that outlived
-            # the TTL (lease stolen by maintenance) must not publish
-            lease.check()
-        self.next_batch_id = batch_id + 1
-        self._persist()
 
 
 class ContinuousRollupSink:
@@ -191,7 +245,7 @@ class ContinuousRollupSink:
         self._upsert(self.daily, day_rows, ["day_key", "event_type"])
 
 
-class SketchRollupSink:
+class SketchRollupSink(BatchGate):
     """Streaming Count-Min rollup — the streaming twin of the batch CMS
     (queries/sketch.q157): a ``foreachBatch`` handler that maintains ONE
     persisted DEPTH x WIDTH counter table by ADDING each micro-batch's
@@ -200,28 +254,25 @@ class SketchRollupSink:
     Mergeability is the whole point of the sketch: per-batch partials
     combine by counter addition, so the persisted summary stays
     4 KB-class forever while summarizing an unbounded stream.  Addition
-    is NOT idempotent, so this sink composes the batch-id offset gate
-    (ExactlyOnceBatchSink's contract — replayed batch ids are skipped,
-    offset persisted atomically next to the data) with the merge; replay
-    convergence is exactly-once by offset, not by idempotence.
+    is NOT idempotent, so replay convergence is exactly-once by the
+    offset gate, not by idempotence.  With ``lease_table=True`` the
+    whole-dir rename swap — the one streaming commit a concurrent
+    maintenance writer could tear mid-flight — runs under the lease.
 
     The partial build is the q157 plan (DEPTH-way projection union +
     map-side-combined groupBy); md5 buckets keep the persisted sketch a
     portable artifact any engine can extend or query."""
 
+    lease_owner = "stream-sketch"
+
     def __init__(self, target: str, key_col: str, depth: int = 4,
                  width: int = 1024, lease_table: bool = False):
+        super().__init__(target, lease_table)
         self.target = target
         self.key_col = key_col
         self.depth = depth
         self.width = width
-        self.lease_table = lease_table
         self.table = os.path.join(target, "sketch")
-        self._offset_file = os.path.join(target, "_COMMITTED_BATCH")
-        self.next_batch_id = self._load()
-
-    _load = ExactlyOnceBatchSink._load
-    _persist = ExactlyOnceBatchSink._persist
 
     def _partial(self, batch_df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
@@ -242,26 +293,9 @@ class SketchRollupSink:
             F.count(F.lit(1)).cast("long").alias("cnt")
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.lease_table and batch_id >= self.next_batch_id:
-            # the whole-dir rename swap below is the one streaming commit
-            # a concurrent maintenance writer could tear mid-flight — the
-            # lease serializes them (same opt-in as ExactlyOnceBatchSink);
-            # pure replays no-op outside it
-            from bigquack_spark.operators.lease import table_lease
-
-            with table_lease(self.target, owner="stream-sketch") as held:
-                self._run_batch(batch_df, batch_id, lease=held)
-        else:
-            self._run_batch(batch_df, batch_id)
-
-    def _run_batch(self, batch_df: DataFrame, batch_id: int, lease=None) -> None:
-        from pyspark.sql import functions as F
-
+    def _land(self, batch_df: DataFrame, batch_id: int, lease) -> None:
         from bigquack_spark.sinks.merge import _recover_orphaned_swap
 
-        if batch_id < self.next_batch_id:
-            return  # replayed: the sketch already contains this batch
         # a crash between the two swap renames below leaves the table in a
         # .old-<id> backup with self.table missing; recover FIRST or the
         # exists() check silently resets the accumulated sketch to this
@@ -284,15 +318,13 @@ class SketchRollupSink:
             lease.check()  # fencing gate: never swap after losing the table
         if os.path.exists(self.table):
             backup = self.table + f".old-{batch_id}"
-            os.rename(self.table, backup)
-            os.rename(tmp, self.table)
+            fsops.replace(self.table, backup)
+            fsops.replace(tmp, self.table)
             import shutil
 
             shutil.rmtree(backup, ignore_errors=True)
         else:
-            os.rename(tmp, self.table)
-        self.next_batch_id = batch_id + 1
-        self._persist()
+            fsops.replace(tmp, self.table)
 
     def estimate(self, spark, keys: DataFrame, key_col: str) -> DataFrame:
         """CMS point estimates for a bounded key set: min over depth rows
@@ -361,20 +393,14 @@ class JoinViewSink:
         self.lines_dir = os.path.join(base_dir, "lines")
         self._state_file = os.path.join(base_dir, "_STATE")
         os.makedirs(base_dir, exist_ok=True)
-        (
-            self.rev,
-            self.orders_rev,
-            self.lines_rev,
-            self.next_stream_batch,
-        ) = self._load_state()
-
-    def _load_state(self) -> tuple[int, int, int, int]:
         try:
             with open(self._state_file) as fh:
                 s = json.load(fh)
-            return s["rev"], s["orders_rev"], s["lines_rev"], s["next_stream_batch"]
+            state = s["rev"], s["orders_rev"], s["lines_rev"], s["next_stream_batch"]
         except (OSError, ValueError, KeyError):
-            return 0, 0, 0, 0
+            state = 0, 0, 0, 0
+        self.rev, self.orders_rev, self.lines_rev, self.next_stream_batch = state
+        self._first_call = True
 
     def _view_path(self, rev: int) -> str:
         return os.path.join(self.base, f"view-{rev}")
@@ -452,10 +478,7 @@ class JoinViewSink:
                 self.next_stream_batch if next_stream_batch is None else next_stream_batch
             ),
         }
-        tmp = self._state_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(committed, fh)
-        os.replace(tmp, self._state_file)  # atomic on POSIX
+        fsops.write_atomic(self._state_file, json.dumps(committed))
         # in-memory counters mutate only after the durable commit succeeded
         self.rev = committed["rev"]
         self.orders_rev = committed["orders_rev"]
@@ -489,6 +512,9 @@ class JoinViewSink:
         (replayed batch ids are no-ops), joins the COMMITTED accumulated
         orders state (the O⋈ΔL term, which also covers ΔO⋈ΔL for orders
         that arrived first — update sequencing makes the terms disjoint)."""
+        if self._first_call:
+            self._first_call = False
+            _check_first_batch(self, batch_id, self.next_stream_batch, self._state_file)
         if batch_id < self.next_stream_batch:
             return  # replayed batch: already folded into the view
         spark = batch_df.sparkSession
@@ -513,24 +539,15 @@ class JoinViewSink:
         return spark.read.parquet(self._view_path(self.rev))
 
 
-class QuarantineIngestSink:
+class QuarantineIngestSink(ExactlyOnceBatchSink):
     """Streaming twin of ``sinks/quarantine.write_with_quarantine``: every
     micro-batch is routed through the rule predicates and BOTH streams land
-    in one distributed write — accepted rows under
-    ``batch_id=N/quarantined=false/``, rejects (with their
-    ``violated_rules`` evidence) under ``quarantined=true/`` — under
-    ExactlyOnceBatchSink's offset protocol (per-batch overwrite dirs +
-    durable committed-id gate), so crash replay converges and a committed
-    batch is never re-run.  Per-batch accept/reject counts ride the write
-    via ``df.observe`` and accumulate in ``self.stats`` for the pipeline's
-    progress ledger (never a post-write re-read).
-
-    Usage mirrors ExactlyOnceBatchSink::
-
-        sink = QuarantineIngestSink(target_dir, rules)
-        (stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt).trigger(availableNow=True)
-            .start().awaitTermination())
+    in one distributed write into the batch's own overwrite directory —
+    accepted rows under ``batch_id=N/quarantined=false/``, rejects (with
+    their ``violated_rules`` evidence) under ``quarantined=true/``.
+    Per-batch accept/reject counts ride the write via ``df.observe`` and
+    accumulate in ``self.stats`` for the pipeline's progress ledger (never
+    a post-write re-read).  Usage mirrors ExactlyOnceBatchSink.
     """
 
     def __init__(self, target: str, rules: list[tuple[str, str]]):
@@ -538,22 +555,15 @@ class QuarantineIngestSink:
 
         if not rules:
             raise ValueError("QuarantineIngestSink: at least one rule required")
+        super().__init__(target)
         self.rules = rules
-        self._inner = ExactlyOnceBatchSink(target)
-        self.target = target
         self.stats = {"n_rows": 0, "n_quarantined": 0}
 
-    @property
-    def next_batch_id(self) -> int:
-        return self._inner.next_batch_id
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _land(self, batch_df: DataFrame, batch_id: int, lease) -> None:
         from pyspark.sql import Observation
 
         from bigquack_spark.sinks.quarantine import QUARANTINE_COL, tag_violations
 
-        if batch_id < self._inner.next_batch_id:
-            return  # replayed batch: already durable — exactly-once
         tagged = tag_violations(batch_df, self.rules)
         obs = Observation(f"quarantine_batch_{batch_id}")
         tagged = tagged.observe(
@@ -567,8 +577,6 @@ class QuarantineIngestSink:
         got = obs.get
         self.stats["n_rows"] += int(got["n_rows"])
         self.stats["n_quarantined"] += int(got["n_quarantined"] or 0)
-        self._inner.next_batch_id = batch_id + 1
-        self._inner._persist()
 
     #: redrive id -> partition dir: negative ids so a re-drive can never
     #: consume an ENGINE batch id (batch_id=-1 is the legacy-migration dir)
@@ -646,10 +654,7 @@ class QuarantineIngestSink:
                     os.path.join(self.target, name, f"{QUARANTINE_COL}=true")
                 )
             )
-            tmp = consumed_path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(consumed, fh)
-            os.replace(tmp, consumed_path)  # snapshot becomes adoptable
+            fsops.write_atomic(consumed_path, json.dumps(consumed))  # snapshot becomes adoptable
         with open(consumed_path) as fh:
             consumed = json.load(fh)
         # clear exactly the partitions the snapshot covered (idempotent)
@@ -684,10 +689,7 @@ class QuarantineIngestSink:
             os.path.join(self.target, own_dir)
         )
         got = obs.get
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"next_redrive_id": rid + 1}, fh)
-        os.replace(tmp, marker)  # commit point
+        fsops.write_atomic(marker, json.dumps({"next_redrive_id": rid + 1}))  # commit point
         shutil.rmtree(staging, ignore_errors=True)
         n = int(got["n"])
         n_still = int(got["n_still"] or 0)
@@ -705,70 +707,62 @@ class StatsMaintainedAppendSink(ExactlyOnceBatchSink):
     """Exactly-once append that keeps the table's ``_STATS.json`` fresh
     INCREMENTALLY (r8 stats loop, streaming leg): after each committed
     batch, the manifest folds in only that batch's files
-    (:func:`bigquack_spark.operators.maintenance.update_table_stats` —
+    (:func:`bigquack_spark.operators.maintenance.refresh_table_stats` —
     rows/nulls add, min/max combine, ndv via HLL union), so the planners
     (``operators/planner.py``) stay metadata-answerable on a table that
     never stops ingesting, at per-batch cost proportional to the BATCH.
 
     The first committed batch seeds the manifest with a full collect
-    (batch-sized — the table IS the batch then).  Since r9 the fold also
-    handles REMOVALS (per-file partials), so a crash-replay that
-    overwrote a batch directory under different part names folds forward
-    too; the recollect fallback remains only for legacy pre-partials
-    manifests.
+    (batch-sized — the table IS the batch then).  The fold also handles
+    REMOVALS (per-file partials), so a crash-replay that overwrote a
+    batch directory under different part names folds forward too.
 
-    With ``lease_table=True`` (inherited) the stats fold commits INSIDE
-    the same lease span as the data write — maintenance can never observe
+    With ``lease_table=True`` the stats fold commits INSIDE the same
+    lease span as the data write — maintenance can never observe
     data-landed-but-stats-pending."""
 
-    def _run_batch(self, batch_df: DataFrame, batch_id: int, lease=None) -> None:
-        if batch_id < self.next_batch_id:
-            # replayed: the data is already durable, but a crash may have
-            # landed BETWEEN the offset persist and the stats fold — heal
-            # the manifest if it is stale instead of assuming it folded
-            # (r8 review pass 3; otherwise an availableNow stream with no
-            # further batches leaves the planners StaleStatsError forever).
-            # Replays run OUTSIDE the lease (see __call__): the heal is an
-            # atomic manifest replace, and any mid-maintenance staleness
-            # it could bless resolves loudly at the next freshness gate.
-            self._ensure_stats(batch_df.sparkSession)
-            return
-        super()._run_batch(batch_df, batch_id, lease=lease)
+    def _landed(self, batch_df: DataFrame) -> None:
+        self._ensure_stats(batch_df.sparkSession)
+
+    def _replayed(self, batch_df: DataFrame) -> None:
+        # the data is already durable, but a crash may have landed BETWEEN
+        # the offset commit and the stats fold — heal the manifest if it
+        # is stale instead of assuming it folded (r8 review pass 3;
+        # otherwise an availableNow stream with no further batches leaves
+        # the planners StaleStatsError forever).  Replays run OUTSIDE the
+        # lease: the heal is an atomic manifest replace, and any
+        # mid-maintenance staleness it could bless resolves loudly at the
+        # next freshness gate.
         self._ensure_stats(batch_df.sparkSession)
 
     def _ensure_stats(self, spark) -> None:
         from bigquack_spark.operators.maintenance import (
             STATS_FILE,
             collect_table_stats,
+            refresh_table_stats,
             stats_are_fresh,
-            update_table_stats,
         )
 
         if not os.path.exists(os.path.join(self.target, STATS_FILE)):
             collect_table_stats(spark, self.target)
         elif not stats_are_fresh(self.target):
-            try:
-                update_table_stats(spark, self.target)
-            except ValueError:
-                # legacy pre-partials manifest: upgrade with one recollect
-                collect_table_stats(spark, self.target)
+            refresh_table_stats(spark, self.target)
 
 
-class AnnIndexIngestSink:
+class AnnIndexIngestSink(BatchGate):
     """foreachBatch handler: stream embedding batches into a persisted
     IVF(-PQ) index via ``append_to_ivf_index`` — the serving-side ANN
     ingest loop (build once, append per micro-batch, rebuild on drift).
 
-    Exactly-once: an index append is NOT naturally idempotent (cell
-    partitions take plain appends; a replayed batch would duplicate ids),
-    so the sink gates on a durable ``_COMMITTED_BATCH`` offset at the
-    index ROOT (above the generation pointer, so rebuilds preserve it) —
-    the same protocol as :class:`ExactlyOnceBatchSink`.  The one crash
-    window — append durable, offset not — re-appends that batch on
-    replay: probes stay CORRECT (both probe paths dropDuplicates on
-    (qid, neighbor_id) by design), the duplicate bytes are healed by the
-    next ``rebuild_ivf_index`` (which re-materializes from current rows),
-    and the window is disclosed here rather than papered over.
+    An index append is NOT naturally idempotent (cell partitions take
+    plain appends; a replayed batch would duplicate ids), so the gate's
+    ``_COMMITTED_BATCH`` sits at the index ROOT (above the generation
+    pointer, so rebuilds preserve it).  The one crash window — append
+    durable, offset not — re-appends that batch on replay: probes stay
+    CORRECT (both probe paths dropDuplicates on (qid, neighbor_id) by
+    design), the duplicate bytes are healed by the next
+    ``rebuild_ivf_index`` (which re-materializes from current rows), and
+    the window is disclosed here rather than papered over.
 
     ``drift_check=True`` runs :func:`ivf_cell_drift` after each committed
     batch (partition-column-only scan — no vector bytes) and records the
@@ -786,71 +780,33 @@ class AnnIndexIngestSink:
         drift_check: bool = False,
         drift_threshold: float = 1.5,
     ):
+        super().__init__(index_path)
         self.index_path = index_path
         self.id_col = id_col
         self.vec_col = vec_col
         self.drift_check = drift_check
         self.drift_threshold = drift_threshold
-        self._offset_file = os.path.join(index_path, "_COMMITTED_BATCH")
-        self.next_batch_id = self._load()
         self.appended = 0
         self.last_drift: dict | None = None
-        self._first_call = True
 
-    def _load(self) -> int:
-        try:
-            with open(self._offset_file) as fh:
-                return json.load(fh)["next_batch_id"]
-        except (OSError, ValueError, KeyError):
-            return 0
+    def _land(self, batch_df: DataFrame, batch_id: int, lease) -> None:
+        from bigquack_spark.operators.simsearch import append_to_ivf_index
 
-    def _persist(self) -> None:
-        from bigquack_spark.operators import fsops
-
-        tmp = self._offset_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"next_batch_id": self.next_batch_id}, fh)
-        fsops.replace(tmp, self._offset_file)
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self._first_call:
-            self._first_call = False
-            # A fresh/relocated streaming checkpoint restarts batch ids at 0
-            # while _COMMITTED_BATCH still holds the old high-water mark; the
-            # replay gate below would then silently DROP every new batch as a
-            # "replay" (r11 advice — data loss, not duplicates).  A genuine
-            # restart replays at most the one in-flight batch (regression of
-            # exactly 1); anything deeper on the run's first batch is a
-            # checkpoint/offset mismatch and must fail loudly.
-            if batch_id < self.next_batch_id - 1:
-                raise RuntimeError(
-                    f"AnnIndexIngestSink: first batch id {batch_id} is far below "
-                    f"the committed offset {self.next_batch_id} in "
-                    f"{self._offset_file} — the streaming checkpoint was reset "
-                    "or points at a different query than this index. Restore "
-                    "the original checkpoint dir, or rebuild the index and "
-                    "remove _COMMITTED_BATCH to restart ingest from scratch."
-                )
-        if batch_id < self.next_batch_id:
-            return  # replayed batch: already durable — exactly-once
-        from bigquack_spark.operators.simsearch import (
-            append_to_ivf_index,
-            ivf_cell_drift,
-        )
-
-        spark = batch_df.sparkSession
         self.appended += append_to_ivf_index(
-            spark, self.index_path, batch_df,
+            batch_df.sparkSession, self.index_path, batch_df,
             id_col=self.id_col, vec_col=self.vec_col,
         )
-        self.next_batch_id = batch_id + 1
-        self._persist()
-        if self.drift_check:
-            rows = ivf_cell_drift(
-                spark, self.index_path,
-                share_ratio_threshold=self.drift_threshold,
-            ).collect()  # n_lists rows — bounded by construction
-            self.last_drift = {
-                "rebuild": bool(rows and rows[0]["rebuild"]),
-                "hot_cells": sorted(int(r["cell"]) for r in rows if r["hot"]),
-            }
+
+    def _landed(self, batch_df: DataFrame) -> None:
+        if not self.drift_check:
+            return
+        from bigquack_spark.operators.simsearch import ivf_cell_drift
+
+        rows = ivf_cell_drift(
+            batch_df.sparkSession, self.index_path,
+            share_ratio_threshold=self.drift_threshold,
+        ).collect()  # n_lists rows — bounded by construction
+        self.last_drift = {
+            "rebuild": bool(rows and rows[0]["rebuild"]),
+            "hot_cells": sorted(int(r["cell"]) for r in rows if r["hot"]),
+        }

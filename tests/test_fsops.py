@@ -208,3 +208,111 @@ def test_create_exclusive_write_failure_is_loud(tmp_path, monkeypatch):
     os.close(fd)
     with open(path, "rb") as fh:
         assert fh.read() == b"payload"
+
+
+def _package_root():
+    import bigquack_spark
+
+    return os.path.dirname(bigquack_spark.__file__)
+
+
+def test_fsops_is_the_only_renamer():
+    """Every rename in the package goes through ``fsops.replace`` and every
+    small-file publish through ``fsops.write_atomic``: no ``os.replace`` /
+    ``os.rename`` / ``shutil.move`` call (under any import alias) outside
+    ``operators/fsops.py``, and no function that writes a file with
+    ``open(..., "w")`` and then renames it with ``fsops.replace`` — the
+    hand-rolled "tmp, then dump, then rename" publish."""
+    import ast
+
+    root = _package_root()
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, root)
+            if rel == os.path.join("operators", "fsops.py"):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), rel)
+            aliases = {"os": "os", "shutil": "shutil"}
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    for a in node.names:
+                        if a.name in ("os", "shutil"):
+                            aliases[a.asname or a.name] = a.name
+                elif isinstance(node, ast.ImportFrom) and node.module in ("os", "shutil"):
+                    for a in node.names:
+                        if a.name in ("replace", "rename", "move"):
+                            offenders.append(f"{rel}:{node.lineno} imports {a.name}")
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and isinstance(node.func.value, ast.Name)
+                    and (aliases.get(node.func.value.id), node.func.attr)
+                    in {("os", "replace"), ("os", "rename"), ("shutil", "move")}
+                ):
+                    offenders.append(f"{rel}:{node.lineno} {node.func.value.id}.{node.func.attr}")
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    calls = [n for n in ast.walk(node) if isinstance(n, ast.Call)]
+                    writes = any(
+                        isinstance(c.func, ast.Name) and c.func.id == "open"
+                        and any(
+                            isinstance(a, ast.Constant) and str(a.value).startswith("w")
+                            for a in c.args[1:2] + [k.value for k in c.keywords if k.arg == "mode"]
+                        )
+                        for c in calls
+                    )
+                    renames = any(
+                        isinstance(c.func, ast.Attribute) and c.func.attr == "replace"
+                        and isinstance(c.func.value, ast.Name) and c.func.value.id == "fsops"
+                        for c in calls
+                    )
+                    if writes and renames:
+                        offenders.append(f"{rel}:{node.lineno} {node.name} hand-rolls a publish")
+    assert offenders == []
+
+
+class _RecordingBackend(PosixBackend):
+    """POSIX semantics that remember every published basename."""
+
+    name = "recording"
+
+    def __init__(self):
+        self.published: list[str] = []
+
+    def replace(self, src: str, dst: str) -> None:
+        super().replace(src, dst)
+        self.published.append(os.path.basename(dst))
+
+
+def test_commit_files_publish_through_the_backend(spark, tmp_path):
+    """One PENDING AtomicWriter finalize and one ExactlyOnceBatchSink batch
+    publish their metadata through the installed backend, with the same
+    ``_BQ_COMMIT`` content as ever and no staging file left behind."""
+    from bigquack_spark.sinks.atomic import AtomicWriter, WriteStreamType
+    from bigquack_spark.streaming.sink import ExactlyOnceBatchSink
+
+    rec = _RecordingBackend()
+    prev = set_backend(rec)
+    try:
+        target = str(tmp_path / "atomic")
+        w = AtomicWriter(target, WriteStreamType.PENDING)
+        w.write(spark.range(5).selectExpr("id"))
+        w.write(spark.range(5, 8).selectExpr("id"))
+        assert w.finalize() == 8
+        sink_target = str(tmp_path / "stream")
+        ExactlyOnceBatchSink(sink_target)(spark.range(3).selectExpr("id"), 0)
+    finally:
+        set_backend(prev)
+    for name in ("_BQ_COMMIT", "_LINEAGE.json", "_COMMITTED_BATCH"):
+        assert name in rec.published, name
+    with open(os.path.join(target, "_BQ_COMMIT")) as fh:
+        assert json.load(fh) == {"rows": 8, "batches": 2}
+    with open(os.path.join(sink_target, "_COMMITTED_BATCH")) as fh:
+        assert json.load(fh) == {"next_batch_id": 1}
+    for d in (target, sink_target):
+        assert not [f for f in os.listdir(d) if f.endswith(".tmp")]

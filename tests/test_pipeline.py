@@ -778,7 +778,7 @@ def test_layout_advisor_ignores_dotted_string_literals(spark, tmp_path):
 
 
 def test_load_table_auto_rebalance_guard(spark, tmp_path):
-    """rebalance="auto" pays the spread-exchange only when the planned scan
+    """rebalance=True pays the spread-exchange only when the planned scan
     has fewer splits than the session's parallelism; a hash key partitions
     by that column instead of round-robin (r12 optimization)."""
     from bigquack_spark.sources.parquet import load_table
@@ -786,7 +786,7 @@ def test_load_table_auto_rebalance_guard(spark, tmp_path):
     target = spark.sparkContext.defaultParallelism
 
     # the smoke parquet is one row group -> 1-split scan: guard fires
-    d = load_table(spark, SF_SMOKE, "documents", rebalance="auto")
+    d = load_table(spark, SF_SMOKE, "documents", rebalance=True)
     assert d.rdd.getNumPartitions() == target
     plan = d._sc._jvm.PythonSQLUtils.explainString(
         d._jdf.queryExecution(), "formatted"
@@ -796,7 +796,7 @@ def test_load_table_auto_rebalance_guard(spark, tmp_path):
     # hash key -> hashpartitioning, not round robin
     h = load_table(
         spark, SF_SMOKE, "documents",
-        columns=["doc_id", "text"], rebalance="auto", rebalance_key="doc_id",
+        columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id",
     )
     hplan = h._sc._jvm.PythonSQLUtils.explainString(
         h._jdf.queryExecution(), "formatted"
@@ -813,7 +813,7 @@ def test_load_table_auto_rebalance_guard(spark, tmp_path):
     orig = P.table_path
     P.table_path = lambda sf_dir, name: path
     try:
-        m = P.load_table(spark, "ignored", "many", rebalance="auto")
+        m = P.load_table(spark, "ignored", "many", rebalance=True)
     finally:
         P.table_path = orig
     mplan = m._sc._jvm.PythonSQLUtils.explainString(
@@ -877,7 +877,7 @@ def test_estimated_scan_splits_matches_planner(spark, tmp_path):
             assert (est < par) == (actual < par), loc
             assert abs(est - actual) <= max(2, actual // 4), loc
             P.table_path = lambda sf_dir, name, loc=loc: loc
-            m = load_table(spark, "ignored", "mrg", rebalance="auto", rebalance_key="doc_id")
+            m = load_table(spark, "ignored", "mrg", rebalance=True, rebalance_key="doc_id")
             mplan = m._sc._jvm.PythonSQLUtils.explainString(
                 m._jdf.queryExecution(), "formatted"
             )

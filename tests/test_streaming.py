@@ -1040,17 +1040,17 @@ def test_join_view_sink_failed_update_keeps_committed_state(spark, tmp_path, mon
     sink(l1, batch_id=0)
     committed = (sink.rev, sink.orders_rev, sink.lines_rev, sink.next_stream_batch)
 
-    real_dump = sink_mod.json.dump
+    real_write = sink_mod.fsops.write_atomic
 
-    def exploding_dump(*a, **k):
+    def exploding_write(*a, **k):
         raise OSError("disk full (injected)")
 
-    monkeypatch.setattr(sink_mod.json, "dump", exploding_dump)
+    monkeypatch.setattr(sink_mod.fsops, "write_atomic", exploding_write)
     import pytest as _pytest
 
     with _pytest.raises(OSError, match="injected"):
         sink(l2, batch_id=1)
-    monkeypatch.setattr(sink_mod.json, "dump", real_dump)
+    monkeypatch.setattr(sink_mod.fsops, "write_atomic", real_write)
 
     # in-memory AND durable state both still at the last commit
     assert (sink.rev, sink.orders_rev, sink.lines_rev, sink.next_stream_batch) == committed
@@ -1494,32 +1494,97 @@ def test_ann_index_ingest_sink_exactly_once_and_drift(spark, tmp_path):
     assert AnnIndexIngestSink(path).next_batch_id == committed
 
 
-def test_ann_ingest_sink_detects_checkpoint_reset(tmp_path):
+def _offset_gated_sinks():
+    """Constructor per offset-gated sink, keyed by class name."""
+    from bigquack_spark.streaming.documents import NearDupIngestSink
+    from bigquack_spark.streaming.events import Scd2EnrichSink
+    from bigquack_spark.streaming.sink import (
+        AnnIndexIngestSink,
+        ExactlyOnceBatchSink,
+        QuarantineIngestSink,
+        SketchRollupSink,
+        StatsMaintainedAppendSink,
+    )
+
+    return {
+        "ExactlyOnceBatchSink": ExactlyOnceBatchSink,
+        "SketchRollupSink": lambda root: SketchRollupSink(root, key_col="id"),
+        "QuarantineIngestSink": lambda root: QuarantineIngestSink(root, [("neg", "id < 0")]),
+        "StatsMaintainedAppendSink": StatsMaintainedAppendSink,
+        "Scd2EnrichSink": lambda root: Scd2EnrichSink(
+            root, lambda spark: None, on="id", left_ts="ts", right_ts="ts", right_cols=[]
+        ),
+        "AnnIndexIngestSink": AnnIndexIngestSink,
+        "NearDupIngestSink": NearDupIngestSink,
+    }
+
+
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "ExactlyOnceBatchSink",
+        "SketchRollupSink",
+        "QuarantineIngestSink",
+        "StatsMaintainedAppendSink",
+        "Scd2EnrichSink",
+        "AnnIndexIngestSink",
+        "NearDupIngestSink",
+    ],
+)
+def test_sink_detects_checkpoint_reset(spark, tmp_path, kind):
     """r11 advice: a fresh/relocated streaming checkpoint restarts batch
-    ids at 0 while the index's _COMMITTED_BATCH keeps the old high-water
+    ids at 0 while the target's _COMMITTED_BATCH keeps the old high-water
     mark — without a guard every new batch is silently dropped as a
-    "replay" (data loss).  The sink must fail LOUDLY on a first-batch id
-    far below the committed offset, while a genuine restart (replay of
-    exactly the last in-flight batch) still no-ops quietly."""
+    "replay" (data loss).  Every offset-gated sink must fail LOUDLY on a
+    first-batch id far below the committed offset, while a genuine
+    restart (replay of exactly the last in-flight batch) still no-ops
+    quietly."""
     import json as _json
     import os as _os
 
-    from bigquack_spark.streaming.sink import AnnIndexIngestSink
-
-    root = str(tmp_path / "idx")
+    make = _offset_gated_sinks()[kind]
+    root = str(tmp_path / "target")
     _os.makedirs(root)
+    df = spark.range(3)
+    if kind == "StatsMaintainedAppendSink":
+        # a replay heals a stale manifest; give it a fresh one to keep
+        from bigquack_spark.operators.maintenance import collect_table_stats
+
+        df.write.parquet(_os.path.join(root, "batch_id=6"))
+        collect_table_stats(spark, root)
     with open(_os.path.join(root, "_COMMITTED_BATCH"), "w") as fh:
         _json.dump({"next_batch_id": 7}, fh)
+    before = sorted(_os.listdir(root))
 
     # checkpoint reset: first batch id 0 against committed offset 7
-    sink = AnnIndexIngestSink(root)
+    sink = make(root)
     with pytest.raises(RuntimeError, match="checkpoint"):
-        sink(None, 0)  # gate fires before the DataFrame is touched
+        sink(df, 0)
 
     # genuine restart: the one in-flight batch (id 6) replays as a no-op,
     # and earlier ids on SUBSEQUENT calls are plain replays, never a raise
-    sink = AnnIndexIngestSink(root)
-    sink(None, 6)  # no raise, no append
-    assert sink.appended == 0
-    sink(None, 3)  # later call: ordinary replay no-op
+    sink = make(root)
+    sink(df, 6)
+    sink(df, 3)  # later call: ordinary replay no-op
     assert sink.next_batch_id == 7
+    assert sorted(_os.listdir(root)) == before
+
+
+def test_join_view_sink_detects_checkpoint_reset(tmp_path):
+    """JoinViewSink keeps its stream offset in _STATE and applies the same
+    first-batch rule as the offset-gated sinks."""
+    import json as _json
+    import os as _os
+
+    from bigquack_spark.streaming.sink import JoinViewSink
+
+    base = str(tmp_path / "jv")
+    _os.makedirs(base)
+    with open(_os.path.join(base, "_STATE"), "w") as fh:
+        _json.dump({"rev": 3, "orders_rev": 1, "lines_rev": 2, "next_stream_batch": 7}, fh)
+    with pytest.raises(RuntimeError, match="checkpoint"):
+        JoinViewSink(base)(None, 0)  # gate fires before the DataFrame is touched
+    sink = JoinViewSink(base)
+    sink(None, 6)
+    sink(None, 3)
+    assert (sink.rev, sink.next_stream_batch) == (3, 7)

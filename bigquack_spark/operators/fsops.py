@@ -27,11 +27,13 @@ IVF generation pointer (``operators/simsearch.py``), the lease record
 (``operators/planner.py``), and the maintenance manifests — compaction
 marker, ``_STATS.json``, the ``_PURGE-`` / ``_MERGE-`` / ``_RETENTION-``
 audits and the snapshot ``manifest.json`` (``operators/maintenance.py``,
-``sinks/merge.py``).  Every other rename in the package — data-directory
-swaps (``sinks/wap.py``, ``sinks/merge.py``, the sketch sink), staged file
-moves (``AtomicWriter``, compaction, the connector's pending parts, the
-per-task shard publishes of ``sinks/wds.py`` / ``sinks/arrow.py``), the
-lease break and the quarantine re-drive rename — calls :func:`replace`.
+``sinks/merge.py``).  Every other rename in the package — the staged
+file moves of ``maintenance.publish_leaf`` (the one table-publish
+protocol: compaction, purge, retention, restore, merge, write-audit-
+publish and the sketch sink), ``AtomicWriter``'s batch moves, the
+connector's pending parts, the per-task shard publishes of
+``sinks/wds.py`` / ``sinks/arrow.py``, the lease break and the quarantine
+re-drive rename — calls :func:`replace`.
 
 POSIX guarantees all three; S3-class object stores historically guarantee
 NONE of them (rename = copy+delete, visible in between; no O_EXCL;
@@ -177,7 +179,8 @@ def require_commit_capabilities(operation: str, exclusive_create: bool = True) -
     acquisition), so no writer can start a commit it cannot finish
     atomically.  ``exclusive_create=False`` checks atomic rename only —
     for publishers that rename but never take the O_EXCL lock
-    (AtomicWriter's PENDING publish, merge's orphan recovery)."""
+    (AtomicWriter's PENDING publish, ``maintenance.publish_leaf`` for
+    leaseless callers)."""
     b = _BACKEND
     missing = []
     if not getattr(b, "atomic_rename", False):

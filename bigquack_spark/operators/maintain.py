@@ -40,6 +40,7 @@ from bigquack_spark.operators.lease import table_lease
 from bigquack_spark.operators.maintenance import (
     apply_retention,
     collect_table_stats,
+    DEFAULT_TARGET_FILE_BYTES,
     compact_small_files,
     expire_snapshots,
     list_snapshots,
@@ -48,7 +49,6 @@ from bigquack_spark.operators.maintenance import (
     stats_are_fresh,
     vacuum,
 )
-from bigquack_spark.sinks.compact import DEFAULT_TARGET_FILE_BYTES
 
 #: Policy defaults: compaction must clear BOTH gates to run.
 DEFAULT_POLICY = {

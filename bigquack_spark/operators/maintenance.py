@@ -1,7 +1,8 @@
 """Table-maintenance executors — the operators that ACT on what the audit
-queries plan (r6 verdict #1).
+queries plan (r6 verdict #1) — and the one table-publish protocol every
+data rewrite in the package lands through.
 
-q254 ranks small-file debt and ``sinks/compact.plan_compaction`` selects the
+q254 ranks small-file debt and :func:`plan_compaction` selects the
 partitions worth rewriting; this module executes that plan with the crash
 guarantees a 100 TB lakehouse needs.  The reference's entire purpose is
 moving bytes into query-efficient form (bigquack.go:64-141 drives a one-shot
@@ -9,35 +10,39 @@ BQ->DuckDB load); on Spark the same table lives for years under thousands of
 micro-batch appends, so "query-efficient form" is a maintenance LOOP:
 plan debt -> rewrite bin-packed -> verify content -> swap atomically.
 
-Publish protocol (the requarantine roll-forward pattern, sinks/quarantine.py,
-with its r6-advice generation binding):
+Publish protocol (:func:`publish_leaf`, the requarantine roll-forward
+pattern of sinks/quarantine.py with its r6-advice generation binding).
+Compaction, purge, retention, restore, both merge legs (sinks/merge.py),
+write-audit-publish (sinks/wap.py) and the streaming sketch rollup
+(streaming/sink.py) publish through it, one leaf directory at a time:
 
-1. **Stage**: the partition's undersized files are read ONCE and rewritten
-   bin-packed (``coalesce(n_out)``, or range-clustered when ``cluster_cols``)
-   into ``<leaf>/.compact-staging/data``.
-2. **Verify before commit**: :func:`bigquack_spark.operators.reconcile.
-   table_checksum` of the staged copy must equal the checksum of the source
-   files — a rewrite that would lose or mutate rows aborts here, leaving
-   the live layout untouched.  (Costs one extra read of just the
-   undersized files — maintenance-window priced, and the only honest way
-   to compare both physical layouts.)
-3. **Marker** (the commit point): ``_COMPACT_ID`` records the generation id
-   and the exact (name, size) list of old files to retire.  Written
-   atomically (tmp + rename).
+1. **Stage**: the caller's fill writes the leaf's replacement files into
+   ``<leaf>/.compact-staging/data`` (compaction: the undersized files read
+   ONCE and rewritten bin-packed, or range-clustered when
+   ``cluster_cols``).
+2. **Verify before commit**: rewrites check
+   :func:`bigquack_spark.operators.reconcile.table_checksum` of the staged
+   copy against the rows it must carry — a rewrite that would lose or
+   mutate rows aborts here, leaving the live layout untouched.  (Costs one
+   extra read of just the rewritten files — maintenance-window priced, and
+   the only honest way to compare both physical layouts.)
+3. **Marker** (the commit point): ``_COMPACT_ID`` records the generation id,
+   the exact (name, size) list of old files to retire and every other live
+   data file of the leaf.  Written atomically (tmp + rename).
 4. **Swap**: retire the listed olds, then move each staged file in as
-   ``compacted-<gen>-<name>`` (per-file ``fsops.replace`` — atomic, idempotent
-   on re-drive).
-5. **Commit**: remove staging.
+   ``<prefix>-<gen>-<name>`` (per-file ``fsops.replace`` — atomic,
+   idempotent on re-drive).
+5. **Commit**: remove staging; a leaf left without data files is pruned.
 
 Any crash rolls FORWARD: a marker-less staging dir is pre-commit residue and
 is discarded (the next run re-plans); a marker-ed one resumes the swap.  The
 marker's file list doubles as the adoption gate — if the live partition
-holds data files that are neither recorded olds (name+size) nor this
-generation's news, the partition was REBUILT underneath a crashed
-compaction, so the stale staging is discarded instead of republishing
-superseded rows (the exact failure class the r6 advice closed in
-requarantine).  Like every filesystem-coordinated maintenance op here, run
-it while no concurrent writer mutates the table.
+holds data files that are neither recorded olds/others (name+size) nor this
+generation's news, the partition was REBUILT underneath a crashed swap, so
+the stale staging is discarded instead of republishing superseded rows (the
+exact failure class the r6 advice closed in requarantine).  The swap is
+crash-atomic, not reader-isolated: like every filesystem-coordinated
+maintenance op here, run it while no concurrent writer mutates the table.
 
 Scale posture: planning walks file METADATA (one row per file); each
 partition rewrite is an independent bounded Spark job (never the whole
@@ -50,26 +55,74 @@ from __future__ import annotations
 
 import base64
 import json
+import math
 import os
 import re
 import shutil
 import time as _time
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from bigquack_spark.operators import fsops
 from bigquack_spark.operators.lease import table_lease
 from bigquack_spark.operators.reconcile import table_checksum
-from bigquack_spark.sinks.compact import (
-    DEFAULT_TARGET_FILE_BYTES,
-    PartitionPlan,
-    _is_data_file,
-    plan_compaction,
-)
 
 STAGING_DIR = ".compact-staging"
 MARKER = "_COMPACT_ID"
+DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
+def _is_data_file(name: str) -> bool:
+    return name.endswith(".parquet") and not name.startswith((".", "_"))
+
+
+def _leaf_dirs(path: str) -> list[str]:
+    """Leaf data directories of a (possibly partitioned) parquet layout."""
+    leaves = []
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
+        if any(_is_data_file(f) for f in filenames):
+            leaves.append(dirpath)
+    return sorted(leaves)
+
+
+@dataclass
+class PartitionPlan:
+    directory: str
+    files: list[str]
+    bytes: int
+    n_out: int
+
+
+def plan_compaction(
+    path: str,
+    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
+    min_files: int = 2,
+) -> list[PartitionPlan]:
+    """Select partitions worth rewriting.
+
+    A partition qualifies when it has at least ``min_files`` data files AND
+    fewer bytes-per-file than half the target — i.e. compaction would
+    actually reduce the file count.  Each qualifying leaf is rewritten as
+    ``ceil(bytes / target_file_bytes)`` files; untouched partitions keep
+    their files bit-identical, so re-running converges (a second run plans
+    zero work).  Uses driver-side listing (the local parquet harness); at
+    cluster scale the identical walk runs through the Hadoop FileSystem
+    API against the object store.
+    """
+    plans = []
+    for leaf in _leaf_dirs(path):
+        files = sorted(f for f in os.listdir(leaf) if _is_data_file(f))
+        if len(files) < min_files:
+            continue
+        total = sum(os.path.getsize(os.path.join(leaf, f)) for f in files)
+        n_out = max(1, math.ceil(total / target_file_bytes))
+        if n_out < len(files) and total / len(files) < target_file_bytes / 2:
+            plans.append(PartitionPlan(leaf, files, total, n_out))
+    return plans
 
 
 def _local_path(uri: str) -> str:
@@ -111,8 +164,8 @@ def _resume_partition(leaf: str) -> str:
 
     Returns ``"none"`` (nothing to do), ``"discarded"`` (pre-commit residue
     or stale generation dropped), or ``"resumed"`` (swap completed).
-    Handles both maintenance rewrites (compaction and purge) — the marker
-    records which news prefix the swap publishes under."""
+    Handles every :func:`publish_leaf` caller — the marker records which
+    news prefix the swap publishes under."""
     staging = os.path.join(leaf, STAGING_DIR)
     marker = os.path.join(staging, MARKER)
     if not os.path.isdir(staging):
@@ -185,8 +238,163 @@ def _finish_swap(
     shutil.rmtree(staging, ignore_errors=True)
 
 
+def _prune_leaf(root: str, leaf: str) -> None:
+    """A leaf left without data files: its Hadoop ``.crc`` sidecars are
+    orphans — sweep them, then drop the empty directory chain up to (never
+    including) the table root."""
+    if not os.path.isdir(leaf):
+        return
+    names = fsops.listdir(leaf)
+    if any(_is_data_file(n) for n in names):
+        return
+    for n in names:
+        if n.startswith(".") and n.endswith(".crc"):
+            os.remove(os.path.join(leaf, n))
+    root = os.path.normpath(root)
+    d = os.path.normpath(leaf)
+    while d.startswith(root + os.sep) and not os.listdir(d):
+        os.rmdir(d)
+        d = os.path.dirname(d)
+
+
+def publish_leaf(
+    root: str,
+    leaf: str,
+    gen: str,
+    prefix: str,
+    olds: list[str],
+    fill,
+    lease,
+) -> int:
+    """Replace the data files ``olds`` of ``leaf`` (a directory under the
+    table ``root``) with the files ``fill(data_dir)`` stages, published as
+    ``<prefix>-<gen>-<name>`` — steps 1 and 3-5 of the module protocol.
+
+    ``fill`` writes into a ``data_dir`` that does not exist yet (a Spark
+    write creates it); it raising drops the staging, publishes nothing and
+    re-raises — a checksum mismatch or a failed audit aborts here.  With
+    ``fill=None`` the publish only retires ``olds``.  Every other live data file
+    of the leaf rides the marker as ``others`` for the adoption gate.  When
+    ``lease`` is held, ``lease.check()`` fences the commit point.  Callers
+    roll crashed swaps forward (:func:`_resume_tree`) before planning; a
+    staging dir met here is pre-commit residue.  Returns the number of
+    files published."""
+    # every publisher renames here, leased or not (the lease gates the
+    # O_EXCL lock on top)
+    fsops.require_commit_capabilities(f"publish {prefix}", exclusive_create=False)
+    staging = os.path.join(leaf, STAGING_DIR)
+    data_dir = os.path.join(staging, "data")
+    shutil.rmtree(staging, ignore_errors=True)  # pre-commit residue only
+    os.makedirs(staging)
+    if fill is not None:
+        try:
+            fill(data_dir)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            _prune_leaf(root, leaf)
+            raise
+    os.makedirs(data_dir, exist_ok=True)
+    n_new = sum(1 for n in fsops.listdir(data_dir) if _is_data_file(n))
+    old_names = set(olds)
+    olds_rec = [[n, os.path.getsize(os.path.join(leaf, n))] for n in sorted(old_names)]
+    others = [
+        [n, os.path.getsize(os.path.join(leaf, n))]
+        for n in sorted(fsops.listdir(leaf))
+        if _is_data_file(n)
+        and n not in old_names
+        and not n.startswith(f"{prefix}-{gen}-")
+    ]
+    if lease is not None:
+        lease.check()  # fencing gate: die pre-commit if the lease was stolen
+    _write_marker(staging, gen, olds_rec, prefix=prefix, others=others)  # commit point
+    _finish_swap(leaf, staging, gen, olds_rec, prefix=prefix)
+    _prune_leaf(root, leaf)
+    return n_new
+
+
+def affected_files(scan: DataFrame, hit) -> dict[str, list[str]]:
+    """Leaf directory -> sorted names of the files of ``scan`` holding a
+    row ``hit(frame)`` keeps — the find step of purge and merge.  The file
+    name is captured on the scan side, before ``hit`` filters or joins
+    (evaluated after a join, ``input_file_name()`` is empty); only the
+    distinct file set reaches the driver, never row data."""
+    by_leaf: dict[str, list[str]] = {}
+    for r in hit(scan.withColumn("__f", F.input_file_name())).select("__f").distinct().collect():
+        f = _local_path(r["__f"])
+        by_leaf.setdefault(os.path.dirname(f), []).append(os.path.basename(f))
+    return {leaf: sorted(names) for leaf, names in sorted(by_leaf.items())}
+
+
+def rewrite_leaf(
+    spark: SparkSession,
+    root: str,
+    leaf: str,
+    names: list[str],
+    gen: str,
+    prefix: str,
+    keep,
+    verify: bool,
+    lease,
+    merge_schema: bool,
+) -> tuple[int, int]:
+    """Rewrite the files ``names`` of ``leaf`` without the rows ``keep``
+    drops, through :func:`publish_leaf` — the rewrite step of purge and
+    merge.
+
+    ``keep(frame)`` filters (or anti-joins) the rows to keep and may add
+    columns; it must pass the frame's other columns through.  The files
+    are read with ``basePath=root`` (and ``mergeSchema`` when
+    ``merge_schema``), so partition columns resolve for
+    ``keep`` and are dropped again before staging.  Kept rows are counted
+    per file: a file with none kept is retired with no successor, the rest
+    are staged, checksum-verified against the kept rows when ``verify``,
+    and published.  Returns ``(rows_removed, files_retired)``."""
+    files = [os.path.join(leaf, n) for n in names]
+    rel = os.path.relpath(leaf, root)
+    part_cols = [seg.split("=", 1)[0] for seg in rel.split(os.sep) if "=" in seg]
+
+    def read() -> DataFrame:
+        # fresh reader per call (DataFrameReader options are sticky)
+        r = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
+        return r.option("basePath", root).parquet(*files)
+
+    src = read()
+    n_src = src.count()
+    kept_per_file = {
+        os.path.basename(_local_path(r["__f"])): r["n"]
+        for r in keep(read().withColumn("__f", F.input_file_name()))
+        .groupBy("__f")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    n_keep = sum(kept_per_file.values())
+
+    def kept() -> DataFrame:
+        df = keep(read())
+        cols = [c for c in src.columns if c not in part_cols]
+        return df.select(*cols, *(c for c in df.columns if c not in src.columns))
+
+    def fill(data_dir: str) -> None:
+        if not n_keep:
+            return  # every row dropped: a retire-only publish
+        kept().write.parquet(data_dir)
+        if verify:
+            want = _checksum_row(kept())
+            got = _checksum_row(spark.read.parquet(data_dir))
+            if want != got:
+                raise RuntimeError(
+                    f"{prefix} rewrite of {leaf} does not checksum-match its "
+                    f"kept rows (want {want}, got {got}) — aborted before "
+                    "publish; live layout untouched"
+                )
+
+    publish_leaf(root, leaf, gen, prefix, names, fill, lease)
+    return n_src - n_keep, sum(1 for n in names if not kept_per_file.get(n))
+
+
 def _compact_partition(
     spark: SparkSession,
+    path: str,
     plan: PartitionPlan,
     cluster_cols: list[str] | None,
     verify: bool,
@@ -194,53 +402,42 @@ def _compact_partition(
     cluster_expr=None,
 ) -> dict:
     leaf = plan.directory
-    staging = os.path.join(leaf, STAGING_DIR)
-    shutil.rmtree(staging, ignore_errors=True)  # pre-commit residue only
-    data_dir = os.path.join(staging, "data")
-    olds = [
-        [f, os.path.getsize(os.path.join(leaf, f))] for f in sorted(plan.files)
-    ]
+    files = [os.path.join(leaf, f) for f in plan.files]
 
-    df = spark.read.parquet(*(os.path.join(leaf, f) for f in plan.files))
-    if cluster_expr is not None:
-        # multi-key z-order: cluster on the precomputed interleaved-bits
-        # curve (table-global boundaries, so every leaf shares the grid)
-        df = (
-            df.withColumn("__z", cluster_expr)
-            .repartitionByRange(plan.n_out, "__z")
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-    elif cluster_cols:
-        df = df.repartitionByRange(plan.n_out, *cluster_cols).sortWithinPartitions(
-            *cluster_cols
-        )
-    else:
-        df = df.coalesce(plan.n_out)
-    df.write.parquet(data_dir)
-
-    if verify:
-        # pre-commit gate: the staged copy must carry exactly the source's
-        # rows — compare order-insensitive checksums of both layouts while
-        # the olds are still live (abort leaves the table untouched)
-        want = _checksum_row(
-            spark.read.parquet(*(os.path.join(leaf, f) for f in plan.files))
-        )
-        got = _checksum_row(spark.read.parquet(data_dir))
-        if want != got:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise RuntimeError(
-                f"compact_small_files: staged rewrite of {leaf} does not "
-                f"checksum-match its source (want {want}, got {got}) — "
-                "aborted before publish; live layout untouched"
+    def fill(data_dir: str) -> None:
+        df = spark.read.parquet(*files)
+        if cluster_expr is not None:
+            # multi-key z-order: cluster on the precomputed interleaved-bits
+            # curve (table-global boundaries, so every leaf shares the grid)
+            df = (
+                df.withColumn("__z", cluster_expr)
+                .repartitionByRange(plan.n_out, "__z")
+                .sortWithinPartitions("__z")
+                .drop("__z")
             )
+        elif cluster_cols:
+            df = df.repartitionByRange(plan.n_out, *cluster_cols).sortWithinPartitions(
+                *cluster_cols
+            )
+        else:
+            df = df.coalesce(plan.n_out)
+        df.write.parquet(data_dir)
+        if verify:
+            # pre-commit gate: the staged copy must carry exactly the
+            # source's rows — compare order-insensitive checksums of both
+            # layouts while the olds are still live
+            want = _checksum_row(spark.read.parquet(*files))
+            got = _checksum_row(spark.read.parquet(data_dir))
+            if want != got:
+                raise RuntimeError(
+                    f"compact_small_files: staged rewrite of {leaf} does not "
+                    f"checksum-match its source (want {want}, got {got}) — "
+                    "aborted before publish; live layout untouched"
+                )
 
-    n_new = sum(1 for f in fsops.listdir(data_dir) if _is_data_file(f))
-    gen = uuid.uuid4().hex[:12]
-    if lease is not None:
-        lease.check()  # fencing gate: die pre-commit if the lease was stolen
-    _write_marker(staging, gen, olds)  # commit point
-    _finish_swap(leaf, staging, gen, [tuple(o) for o in olds])
+    n_new = publish_leaf(
+        path, leaf, uuid.uuid4().hex[:12], "compacted", plan.files, fill, lease
+    )
     return {
         "files_before": len(plan.files),
         "files_after": n_new,
@@ -251,7 +448,6 @@ def _compact_partition(
 def compact_small_files(
     spark: SparkSession,
     path: str,
-    target_mb: int | None = None,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
     min_files: int = 2,
     cluster_cols: list[str] | None = None,
@@ -272,16 +468,13 @@ def compact_small_files(
     files.  Lexicographic multi-key clustering only prunes on the
     prefix.
 
-    ``target_mb`` is the deployment-facing knob (``target_file_bytes``
-    remains for byte-exact tests).  Returns ``{partitions_compacted,
+    Returns ``{partitions_compacted,
     files_before, files_after, bytes_rewritten, resumed, discarded_stale,
     verified}``.  Re-running converges: healthy partitions plan no work and
     a crashed run's partitions are rolled forward before re-planning.
     Runs under the table writer lease (``operators/lease.py``): a
     concurrent maintenance writer raises ``LeaseHeldError`` instead of
     interleaving; pass ``lease=`` to compose under an outer holder."""
-    if target_mb is not None:
-        target_file_bytes = target_mb * 1024 * 1024
     report = {
         "partitions_compacted": 0,
         "files_before": 0,
@@ -329,7 +522,7 @@ def compact_small_files(
             )
         for plan in plans:
             got = _compact_partition(
-                spark, plan, cluster_cols, verify, lease=held,
+                spark, path, plan, cluster_cols, verify, lease=held,
                 cluster_expr=cluster_expr,
             )
             report["partitions_compacted"] += 1
@@ -380,19 +573,21 @@ def purge_rows(
 
     The Delta/Iceberg DELETE algorithm re-expressed over plain parquet:
 
-    1. **Find** — one scan evaluates the predicate and collects the
-       DISTINCT ``input_file_name()`` set of matching rows (file-count
-       metadata, never row data; a predicate on a partition column prunes
-       the scan to those directories before any file is opened).
-    2. **Rewrite** — per affected leaf directory, the affected files are
-       read once and re-written WITHOUT the matching rows into staging;
-       the staged copy must checksum-equal the kept rows (computed from
-       the same source files) before anything publishes.
-    3. **Swap** — the compaction marker/roll-forward protocol, news
-       published under a ``purged-<gen>-`` prefix.  Any crash rolls
-       forward; a rebuilt-underneath partition discards its stale staging
-       (same adoption gate).  A file whose every row matches is simply
-       retired (no staged successor).
+    1. **Find** (:func:`affected_files`) — one scan evaluates the
+       predicate and collects the DISTINCT ``input_file_name()`` set of
+       matching rows (file-count metadata, never row data; a predicate on
+       a partition column prunes the scan to those directories before any
+       file is opened).
+    2. **Rewrite** (:func:`rewrite_leaf`) — per affected leaf directory,
+       the affected files are read once and re-written WITHOUT the
+       matching rows into staging; the staged copy must checksum-equal the
+       kept rows (computed from the same source files) before anything
+       publishes.
+    3. **Swap** — :func:`publish_leaf`, news published under a
+       ``purged-<gen>-`` prefix.  Any crash rolls forward; a
+       rebuilt-underneath partition discards its stale staging (same
+       adoption gate).  A file whose every row matches is simply retired
+       (no staged successor), and a leaf left with no file is pruned.
 
     Untouched files are byte-identical afterwards — at 100 TB an erasure
     request costs the affected file set, not a table rewrite.  A
@@ -417,10 +612,6 @@ def _purge_rows_locked(
     refresh_stats: bool,
     lease,
 ) -> dict:
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
     resumed, discarded = _resume_tree(path)
     report = {
         "n_deleted": 0,
@@ -431,23 +622,12 @@ def _purge_rows_locked(
         "discarded_stale": discarded,
         "generation": None,
     }
-    df = spark.read.parquet(path)
-    hit_files = [
-        _local_path(r.f)
-        for r in df.filter(predicate)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    ]
-    if not hit_files:
+    by_leaf = affected_files(spark.read.parquet(path), lambda df: df.filter(predicate))
+    if not by_leaf:
         return report
-    by_leaf: dict[str, list[str]] = {}
-    for f in hit_files:
-        by_leaf.setdefault(os.path.dirname(f), []).append(os.path.basename(f))
 
-    gen = _uuid.uuid4().hex[:12]
+    gen = uuid.uuid4().hex[:12]
     report["generation"] = gen
-    affected_files: list[str] = []
     # a row is DELETED iff the predicate is TRUE for it (the find step's
     # filter(predicate) semantics); rows where the predicate evaluates to
     # NULL (e.g. "user_id = 42" on a NULL user_id) must be KEPT — plain
@@ -455,75 +635,23 @@ def _purge_rows_locked(
     # (r7 review finding), and the checksum gate could not catch it
     # because both sides would share the same wrong expression
     keep_pred = f"NOT coalesce(({predicate}), false)"
-    for leaf, names in sorted(by_leaf.items()):
-        names = sorted(names)
-        staging = os.path.join(leaf, STAGING_DIR)
-        shutil.rmtree(staging, ignore_errors=True)  # pre-commit residue only
-        data_dir = os.path.join(staging, "data")
-        olds = [[n, os.path.getsize(os.path.join(leaf, n))] for n in names]
-        name_set = set(names)
-        others = [
-            [n, os.path.getsize(os.path.join(leaf, n))]
-            for n in sorted(fsops.listdir(leaf))
-            if _is_data_file(n) and n not in name_set
-        ]
-        files = [os.path.join(leaf, n) for n in names]
-
-        # basePath keeps partition columns resolvable for the predicate
-        # while still scanning ONLY the affected files; they are dropped
-        # again before writing so staged files match the leaf's raw schema
-        raw_cols = spark.read.parquet(files[0]).columns
-        src = spark.read.option("basePath", path).parquet(*files)
-        part_cols = [c for c in src.columns if c not in raw_cols]
-
-        def kept():
-            return spark.read.option("basePath", path).parquet(*files).filter(
-                keep_pred
-            ).drop(*part_cols)
-
-        n_src = src.count()
-        # per-file kept counts: files whose every row matched are RETIRED
-        # (no staged successor) — needed for honest accounting (r7 review)
-        kept_per_file = {
-            os.path.basename(_local_path(r.f)): r.n
-            for r in spark.read.option("basePath", path)
-            .parquet(*files)
-            .filter(keep_pred)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_keep = sum(kept_per_file.values())
-        retired_here = [n for n in names if kept_per_file.get(n, 0) == 0]
-        if n_keep:
-            kept().write.parquet(data_dir)
-            if verify:
-                want = _checksum_row(kept())
-                got = _checksum_row(spark.read.parquet(data_dir))
-                if want != got:
-                    shutil.rmtree(staging, ignore_errors=True)
-                    raise RuntimeError(
-                        f"purge_rows: staged rewrite of {leaf} does not "
-                        f"checksum-match its kept rows (want {want}, got "
-                        f"{got}) — aborted before publish; live layout "
-                        "untouched"
-                    )
-        else:
-            os.makedirs(data_dir, exist_ok=True)  # empty: retire-only swap
-        lease.check()  # fencing gate: die pre-commit if the lease was stolen
-        _write_marker(staging, gen, olds, prefix="purged", others=others)
-        _finish_swap(leaf, staging, gen, [tuple(o) for o in olds], prefix="purged")
-        report["n_deleted"] += n_src - n_keep
-        report["files_rewritten"] += len(names) - len(retired_here)
-        report["files_retired"] += len(retired_here)
+    for leaf, names in by_leaf.items():
+        n_deleted, n_retired = rewrite_leaf(
+            spark, path, leaf, names, gen, "purged",
+            lambda df: df.filter(keep_pred), verify, lease, False,
+        )
+        report["n_deleted"] += n_deleted
+        report["files_rewritten"] += len(names) - n_retired
+        report["files_retired"] += n_retired
         report["partitions_touched"] += 1
-        affected_files += files
 
     audit = {
         "generation": gen,
         "predicate": predicate,
         "n_deleted": report["n_deleted"],
-        "affected_files": sorted(affected_files),
+        "affected_files": sorted(
+            os.path.join(leaf, n) for leaf, names in by_leaf.items() for n in names
+        ),
         # snapshots PIN bytes (hardlinks): an erasure obligation must
         # also drop_snapshot/re-snapshot these — recorded so the audit
         # trail shows the follow-up owed (snapshot_table's GDPR note)
@@ -911,7 +1039,7 @@ def vacuum(path: str, keep_purge_manifests: int = 5, lease=None) -> dict:
     metadata, no Spark session, so it costs the same at 100 TB as at 100
     rows:
 
-    1. Roll forward (or discard) any crashed compaction/purge swap
+    1. Roll forward (or discard) any crashed :func:`publish_leaf` swap
        (:func:`_resume_tree` — the same protocol the executors run on
        entry, available here for tables nobody is compacting right now).
     2. Sweep crashed writers' ``*.tmp`` partials: every writer in this
@@ -1082,8 +1210,8 @@ def apply_retention(
     row matching ``predicate`` (rows to RETIRE).
 
     **Metadata-only fast path**: when the predicate references ONLY
-    partition columns, whole leaf directories retire under the shared
-    marker/roll-forward protocol WITHOUT reading a single data file — the
+    partition columns, whole leaf directories retire through
+    :func:`publish_leaf` WITHOUT reading a single data file — the
     partition values are parsed from the directory names, typed by the
     same inference Spark's reader uses, and the predicate is evaluated
     driver-side over that leaf-count-sized table.  At 100 TB a
@@ -1117,8 +1245,6 @@ def _apply_retention_locked(
     refresh_stats: bool,
     lease,
 ) -> dict:
-    import uuid as _uuid
-
     part_cols, leaves = _partition_leaves(path)
     fast = False
     matched: list[str] = []
@@ -1180,34 +1306,20 @@ def _apply_retention_locked(
     }
     if not matched:
         return report
-    gen = _uuid.uuid4().hex[:12]
+    gen = uuid.uuid4().hex[:12]
     report["generation"] = gen
     retired_leaves = []
     for leaf in sorted(matched):
         names = sorted(n for n in fsops.listdir(leaf) if _is_data_file(n))
         if not names:
             continue
-        staging = os.path.join(leaf, STAGING_DIR)
-        shutil.rmtree(staging, ignore_errors=True)  # pre-commit residue only
-        os.makedirs(os.path.join(staging, "data"), exist_ok=True)
-        olds = [[n, os.path.getsize(os.path.join(leaf, n))] for n in names]
-        lease.check()  # fencing gate: die pre-commit if the lease was stolen
-        _write_marker(staging, gen, olds, prefix="retired")  # commit point
-        _finish_swap(leaf, staging, gen, [tuple(o) for o in olds], prefix="retired")
-        report["files_retired"] += len(olds)
-        report["bytes_retired"] += sum(s for _n, s in olds)
+        report["bytes_retired"] += sum(
+            os.path.getsize(os.path.join(leaf, n)) for n in names
+        )
+        publish_leaf(path, leaf, gen, "retired", names, None, lease)
+        report["files_retired"] += len(names)
         report["partitions_touched"] += 1
         retired_leaves.append(os.path.relpath(leaf, path))
-        # with every data file retired, the Hadoop .crc sidecars are
-        # orphans — sweep them, then prune the empty directory chain
-        if not any(_is_data_file(n) for n in os.listdir(leaf)):
-            for n in os.listdir(leaf):
-                if n.startswith(".") and n.endswith(".crc"):
-                    os.remove(os.path.join(leaf, n))
-        d = leaf
-        while d != path and os.path.isdir(d) and not os.listdir(d):
-            os.rmdir(d)
-            d = os.path.dirname(d)
 
     audit = {
         "generation": gen,
@@ -1235,7 +1347,6 @@ def _apply_retention_locked(
 def optimize_layout(
     spark: SparkSession,
     path: str,
-    target_mb: int | None = None,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
     candidates: list[str] | None = None,
     verify: bool = True,
@@ -1279,7 +1390,6 @@ def optimize_layout(
             report = compact_small_files(
                 spark,
                 path,
-                target_mb=target_mb,
                 target_file_bytes=target_file_bytes,
                 cluster_cols=list(zorder_cols),
                 verify=verify,
@@ -1304,7 +1414,6 @@ def optimize_layout(
         report = compact_small_files(
             spark,
             path,
-            target_mb=target_mb,
             target_file_bytes=target_file_bytes,
             cluster_cols=[rec["column"]] if rec else None,
             verify=verify,
@@ -1559,8 +1668,8 @@ def restore_snapshot(
     dry_run: bool = False,
     lease=None,
 ) -> dict:
-    """Roll the table back to a snapshot, leaf by leaf, under the shared
-    marker/roll-forward protocol: per leaf, files not in the snapshot are
+    """Roll the table back to a snapshot, leaf by leaf, through
+    :func:`publish_leaf`: per leaf, files not in the snapshot are
     retired and missing snapshot files are re-published (hardlinked from
     the snapshot — still zero-copy) as ``restored-<gen>-`` news; a file
     present with identical (name, size) is left untouched.  With
@@ -1644,46 +1753,25 @@ def _restore_snapshot_locked(
     for leaf in sorted(set(by_leaf_want) | set(by_leaf_have)):
         want = by_leaf_want.get(leaf, {})
         have = by_leaf_have.get(leaf, {})
-        olds = [[n, s] for n, s in sorted(have.items()) if want.get(n) != s]
+        olds = [n for n, s in sorted(have.items()) if want.get(n) != s]
         news = [n for n, s in sorted(want.items()) if have.get(n) != s]
-        # unaffected files MUST ride the marker as `others` or the resume
-        # adoption gate reads them as a rebuilt-underneath partition and
-        # discards the crashed restore's staging (the r7 partial-leaf
-        # purge bug, restore flavor — r8 review pass 3)
-        unaffected = [
-            [n, s] for n, s in sorted(have.items()) if want.get(n) == s
-        ]
         if not olds and not news:
             continue
-        staging = os.path.join(leaf, STAGING_DIR)
-        shutil.rmtree(staging, ignore_errors=True)
-        data_dir = os.path.join(staging, "data")
-        os.makedirs(data_dir, exist_ok=True)
-        rel_leaf = os.path.relpath(leaf, path)
-        for n in news:
-            src = os.path.join(
-                snap, "data", n if rel_leaf == "." else os.path.join(rel_leaf, n)
-            )
-            dst = os.path.join(data_dir, n)
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)
-        os.makedirs(leaf, exist_ok=True)
-        lease.check()  # fencing gate: die pre-commit if the lease was stolen
-        _write_marker(staging, gen, olds, prefix="restored", others=unaffected)
-        _finish_swap(leaf, staging, gen, [tuple(o) for o in olds], prefix="restored")
+        snap_leaf = os.path.join(snap, "data", os.path.relpath(leaf, path))
+
+        def link_news(data_dir: str, news=news, snap_leaf=snap_leaf) -> None:
+            os.makedirs(data_dir)
+            for n in news:
+                src, dst = os.path.join(snap_leaf, n), os.path.join(data_dir, n)
+                try:
+                    os.link(src, dst)
+                except OSError:
+                    shutil.copy2(src, dst)
+
+        publish_leaf(path, leaf, gen, "restored", olds, link_news, lease)
         report["files_restored"] += len(news)
         report["files_retired"] += len(olds)
         report["partitions_touched"] += 1
-        if not any(_is_data_file(x) for x in os.listdir(leaf)):
-            for x in os.listdir(leaf):
-                if x.startswith(".") and x.endswith(".crc"):
-                    os.remove(os.path.join(leaf, x))
-            d = leaf
-            while d != path and os.path.isdir(d) and not os.listdir(d):
-                os.rmdir(d)
-                d = os.path.dirname(d)
 
     if verify:
         want_df = spark.read.parquet(os.path.join(snap, "data"))

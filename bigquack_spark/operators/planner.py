@@ -35,11 +35,12 @@ import re
 
 from bigquack_spark.operators import fsops
 from bigquack_spark.operators.maintenance import (
+    DEFAULT_TARGET_FILE_BYTES,
     STATS_FILE,
+    _is_data_file,
     _table_fingerprint,
     stats_are_fresh,
 )
-from bigquack_spark.sinks.compact import DEFAULT_TARGET_FILE_BYTES, _is_data_file
 
 
 class StaleStatsError(RuntimeError):

@@ -1159,14 +1159,14 @@ _BYTES_PER_ROW = 256  # deterministic byte proxy for the synthetic manifest
 )
 def q254_small_file_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction planner — the declarative math behind
-    sinks/compact.py's OPTIMIZE loop: bin-pack every undersized file into
+    operators/maintenance.plan_compaction's OPTIMIZE loop: bin-pack every undersized file into
     target-size rewrite groups by cumulative-sum bucketing (next-fit over
     the manifest's natural order), so each bin lands within one target of
     full and untouched big files are skipped.  The manifest here is
     synthesized deterministically from lineitem — one "file" per
     (returnflag, ship-month) with a 256 B/row proxy — because
     the bench container has no real multi-file table; the plan math is
-    byte-for-byte what compact.py's planner runs on real directory
+    byte-for-byte what ``plan_compaction`` runs on real directory
     listings.  Scale posture: the packing window runs over file METADATA
     (one row per file, millions at 100 TB, never data rows), partitioned
     by the layout key (returnflag here; table partition in deployments) so

@@ -12,9 +12,9 @@ Spark's RangePartitioner) so each output file owns one contiguous key
 range, then an in-partition sort so row groups within a file are also
 range-disjoint (parquet writers emit row-group-level stats too).
 
-Pairs with :mod:`bigquack_spark.sinks.compact`: compaction fixes file
-COUNT, clustering fixes file ORDER; a maintenance pipeline typically does
-both in one rewrite (compact with ``cluster_cols=...``).
+Pairs with ``operators/maintenance.compact_small_files``: compaction
+fixes file COUNT, clustering fixes file ORDER; a maintenance pipeline
+typically does both in one rewrite (compact with ``cluster_cols=...``).
 
 The reference's sink has no layout control at all (a single DuckDB table,
 duck.go:214-252); this module is pure extension surface for the Spark

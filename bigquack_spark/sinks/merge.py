@@ -15,16 +15,16 @@ implementation rewrote the WHOLE table per apply):
    the scan is first partition-pruned to the partitions the change set
    names — a CDC trickle touching 1 of N partitions reads 1/N of the keys.
 2. **Insert** — every non-delete change row is written as NEW files
-   (partitioned to the right leaves), published per leaf under the shared
-   maintenance marker protocol (``merged-<gen>-`` prefix).  Inserts never
-   rewrite an existing byte.
+   (partitioned to the right leaves), published per leaf through
+   ``operators/maintenance.publish_leaf`` (``merged-<gen>-`` prefix).
+   Inserts never rewrite an existing byte.
 3. **Rewrite** — ONLY the files found in step 1 are read back and
    re-written without the matched keys (anti-join), staged, checksum-
    verified against the kept rows BEFORE the commit point, then swapped
-   in under the same marker protocol (``operators/maintenance.py`` —
-   compaction and erasure use the identical swap; ``_resume_tree`` rolls
-   any crash forward).  A file whose every row matched is retired with no
-   successor.
+   in by the same leaf publish (``maintenance.rewrite_leaf`` — purge runs
+   the identical rewrite; ``_resume_tree`` rolls any crash forward).  A
+   file whose every row matched is retired with no successor, and a leaf
+   left with no file is pruned.
 
 Untouched files are byte-identical afterwards: at 100 TB a CDC apply costs
 the affected-file set plus the change set, never a table rewrite.
@@ -66,57 +66,14 @@ from pyspark.sql import functions as F
 from bigquack_spark.operators import fsops
 
 
-#: Staging dirs younger than this are presumed owned by a live concurrent
-#: merge and left alone; only genuinely abandoned staging is reclaimed.
-_STAGING_REAP_SECONDS = 24 * 3600
-
 #: Above this many distinct partition tuples in the change set, the find
 #: scan skips building the partition-pruning predicate (a filter that long
 #: costs more to plan than it saves; the semi-join still prunes columns).
 _MAX_PRUNE_PARTITIONS = 10_000
 
 
-def _recover_orphaned_swap(target_path: str) -> None:
-    """Self-heal the LEGACY rename-swap crash window (pre-r8 merges and the
-    streaming sinks' own swap protocol, streaming/sink.py): if a writer
-    died between its two renames, the table data sits in a ``.old-<id>``
-    backup dir and ``target_path`` is missing — restore the backup.  If the
-    swap completed but cleanup didn't, drop the stale backup.  ``.merge-``
-    staging dirs are reclaimed only after ``_STAGING_REAP_SECONDS`` — a
-    younger one may belong to a writer that is RUNNING right now, and
-    deleting it would destroy in-flight work."""
-    import time
-
-    from bigquack_spark.operators.fsops import require_commit_capabilities
-
-    # recovery renames directories but never takes the O_EXCL lock
-    require_commit_capabilities("merge recover_orphaned_swap",
-                                exclusive_create=False)
-    parent = os.path.dirname(os.path.abspath(target_path)) or "."
-    base = os.path.basename(target_path)
-    if not os.path.isdir(parent):
-        return
-    for entry in sorted(fsops.listdir(parent)):
-        full = os.path.join(parent, entry)
-        if entry.startswith(base + ".old-"):
-            if not os.path.exists(target_path):
-                try:
-                    fsops.replace(full, target_path)
-                except OSError:
-                    pass  # concurrent owner completed its swap first
-            else:
-                shutil.rmtree(full, ignore_errors=True)
-        elif entry.startswith(base + ".merge-"):
-            try:
-                abandoned = time.time() - os.path.getmtime(full) > _STAGING_REAP_SECONDS
-            except OSError:
-                abandoned = False
-            if abandoned:
-                shutil.rmtree(full, ignore_errors=True)
-
-
 def _first_data_file(path: str) -> str | None:
-    from bigquack_spark.sinks.compact import _is_data_file
+    from bigquack_spark.operators.maintenance import _is_data_file
 
     for dirpath, dirnames, filenames in os.walk(path):
         dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
@@ -124,43 +81,6 @@ def _first_data_file(path: str) -> str | None:
             if _is_data_file(name):
                 return os.path.join(dirpath, name)
     return None
-
-
-def _publish_leaf(
-    leaf: str,
-    gen: str,
-    olds: list[list],
-    stage_files: list[str] | None,
-    prefix: str = "merged",
-    lease=None,
-) -> None:
-    """One leaf publish under the shared maintenance marker protocol:
-    move ``stage_files`` into the leaf's staging data dir, record the
-    marker (commit point), retire ``olds``, swap the news in."""
-    from bigquack_spark.operators.maintenance import (
-        STAGING_DIR,
-        _finish_swap,
-        _write_marker,
-    )
-    from bigquack_spark.sinks.compact import _is_data_file
-
-    staging = os.path.join(leaf, STAGING_DIR)
-    data_dir = os.path.join(staging, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    for f in stage_files or []:
-        fsops.replace(f, os.path.join(data_dir, os.path.basename(f)))
-    old_names = {name for name, _size in olds}
-    others = [
-        [n, os.path.getsize(os.path.join(leaf, n))]
-        for n in sorted(fsops.listdir(leaf))
-        if _is_data_file(n)
-        and n not in old_names
-        and not n.startswith(f"{prefix}-{gen}-")
-    ]
-    if lease is not None:
-        lease.check()  # fencing gate: die pre-commit if the lease was stolen
-    _write_marker(staging, gen, olds, prefix=prefix, others=others)
-    _finish_swap(leaf, staging, gen, [tuple(o) for o in olds], prefix=prefix)
 
 
 def merge_upsert(
@@ -210,11 +130,6 @@ def merge_upsert(
     # URIs, and the insert leg joins target_path + rel — a relative
     # target_path would double-count the same physical leaf
     target_path = os.path.abspath(target_path)
-    # heal the LEGACY rename-swap crash window BEFORE leasing: acquiring a
-    # lease materializes the table dir, which would make the healer read a
-    # missing-table-with-backup state as an already-completed swap and drop
-    # the .old- backup holding the only copy of the data
-    _recover_orphaned_swap(target_path)
     with table_lease(target_path, owner="merge", lease=lease) as held:
         return _merge_upsert_locked(
             spark, target_path, changes, key_cols, delete_col, verify,
@@ -233,16 +148,9 @@ def _merge_upsert_locked(
     schema_evolution: bool,
     lease,
 ) -> dict:
-    from bigquack_spark.operators.maintenance import (
-        STAGING_DIR,
-        _checksum_row,
-        _local_path,
-        _partition_leaves,
-        _resume_tree,
-    )
-    from bigquack_spark.sinks.compact import _is_data_file
+    from bigquack_spark.operators import maintenance as M
 
-    resumed, discarded = _resume_tree(target_path)
+    resumed, discarded = M._resume_tree(target_path)
     # pre-commit insert staging from a crashed merge is residue: the change
     # set is the source of truth and that merge must be re-run anyway
     ins_root = os.path.join(target_path, ".merge-insert-staging")
@@ -257,7 +165,7 @@ def _merge_upsert_locked(
         # partition columns from the DIRECTORY layout, not footer diffing:
         # under drifted file schemas "in the read but not in the first
         # file" no longer means "partition column"
-        part_cols = _partition_leaves(target_path)[0]
+        part_cols = M._partition_leaves(target_path)[0]
         base_cols = target.columns
         added_cols = [
             c for c in changes.columns
@@ -331,19 +239,9 @@ def _merge_upsert_locked(
                 pred = conj if pred is None else (pred | conj)
             if pred is not None:
                 scan = target.filter(pred)
-    # input_file_name() must be captured on the SCAN side, before the
-    # join — evaluated after it, the expression returns empty strings
-    hit_files = [
-        _local_path(r.f)
-        for r in scan.withColumn("__f", F.input_file_name())
-        .join(removed_keys, key_cols, "left_semi")
-        .select(F.col("__f").alias("f"))
-        .distinct()
-        .collect()
-    ]
-    by_leaf: dict[str, list[str]] = {}
-    for f in hit_files:
-        by_leaf.setdefault(os.path.dirname(f), []).append(os.path.basename(f))
+    by_leaf = M.affected_files(
+        scan, lambda df: df.join(removed_keys, key_cols, "left_semi")
+    )
 
     gen = uuid.uuid4().hex[:12]
     report["generation"] = gen
@@ -377,8 +275,8 @@ def _merge_upsert_locked(
             # Row count equality still rides the checksum's n_rows.
             ins_cmp_cols = [c for c in data_cols if c not in part_cols]
             staged = spark.read.option("basePath", ins_data).parquet(ins_data)
-            want = _checksum_row(upserts.select(*ins_cmp_cols))
-            got = _checksum_row(staged.select(*ins_cmp_cols))
+            want = M._checksum_row(upserts.select(*ins_cmp_cols))
+            got = M._checksum_row(staged.select(*ins_cmp_cols))
             if want != got:
                 shutil.rmtree(ins_root, ignore_errors=True)
                 raise RuntimeError(
@@ -389,15 +287,21 @@ def _merge_upsert_locked(
         for dirpath, dirnames, filenames in os.walk(ins_data):
             dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
             stage_files = [
-                os.path.join(dirpath, n) for n in sorted(filenames) if _is_data_file(n)
+                os.path.join(dirpath, n) for n in sorted(filenames) if M._is_data_file(n)
             ]
             if not stage_files:
                 continue
             rel = os.path.relpath(dirpath, ins_data)
-            leaf = target_path if rel == "." else os.path.join(target_path, rel)
-            os.makedirs(leaf, exist_ok=True)
-            _publish_leaf(leaf, gen, olds=[], stage_files=stage_files, lease=lease)
-            report["files_inserted"] += len(stage_files)
+            leaf = os.path.normpath(os.path.join(target_path, rel))
+
+            def move_in(data_dir: str, stage_files=stage_files) -> None:
+                os.makedirs(data_dir)
+                for f in stage_files:
+                    fsops.replace(f, os.path.join(data_dir, os.path.basename(f)))
+
+            report["files_inserted"] += M.publish_leaf(
+                target_path, leaf, gen, "merged", [], move_in, lease
+            )
             touched_leaves.add(leaf)
         shutil.rmtree(ins_root, ignore_errors=True)
 
@@ -406,77 +310,26 @@ def _merge_upsert_locked(
     # partition columns excluded (they live in the directory names)
     staged_cols = [c for c in data_cols if c not in part_cols]
 
-    def _leaf_reader():
-        # fresh reader per call (DataFrameReader options are sticky);
-        # union footers under evolution so old files NULL-fill new columns
-        r = spark.read.option("mergeSchema", "true") if schema_evolution else spark.read
-        return r.option("basePath", target_path)
+    def keep(df: DataFrame) -> DataFrame:
+        df = df.join(removed_keys, key_cols, "left_anti")
+        if schema_evolution:
+            # an affected file may predate an evolved column entirely
+            # (this merge introduces it, or every file read is old):
+            # materialize it as typed NULLs so the staged rewrite carries
+            # the full evolved schema; mergeSchema unions the footers read
+            for c in staged_cols:
+                if c not in df.columns:
+                    df = df.withColumn(c, F.lit(None).cast(fill_types[c]))
+        return df
 
-    for leaf, names in sorted(by_leaf.items()):
-        names = sorted(names)
-        staging = os.path.join(leaf, STAGING_DIR)
-        shutil.rmtree(staging, ignore_errors=True)  # pre-commit residue only
-        data_dir = os.path.join(staging, "data")
-        olds = [[n, os.path.getsize(os.path.join(leaf, n))] for n in names]
-        files = [os.path.join(leaf, n) for n in names]
-
-        # basePath keeps partition columns resolvable for the key join
-        # while still scanning ONLY the affected files; they are dropped
-        # again before writing so staged files match the leaf's raw schema
-        src = _leaf_reader().parquet(*files)
-
-        def kept():
-            df = (
-                _leaf_reader()
-                .parquet(*files)
-                .join(removed_keys, key_cols, "left_anti")
-            )
-            if schema_evolution:
-                # an affected file may predate an evolved column entirely
-                # (this merge introduces it, or every file read is old):
-                # materialize it as typed NULLs so the staged rewrite
-                # carries the full evolved schema
-                for c in staged_cols:
-                    if c not in df.columns:
-                        df = df.withColumn(c, F.lit(None).cast(fill_types[c]))
-            return df.select(*staged_cols)
-
-        n_src = src.count()
-        kept_per_file = {
-            os.path.basename(_local_path(r.f)): r.n
-            for r in _leaf_reader()
-            .parquet(*files)
-            .withColumn("__f", F.input_file_name())  # capture pre-join
-            .join(removed_keys, key_cols, "left_anti")
-            .groupBy(F.col("__f").alias("f"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_keep = sum(kept_per_file.values())
-        retired_here = [n for n in names if kept_per_file.get(n, 0) == 0]
-        stage_files: list[str] = []
-        if n_keep:
-            kept().write.parquet(data_dir)
-            if verify:
-                want = _checksum_row(kept())
-                got = _checksum_row(spark.read.parquet(data_dir))
-                if want != got:
-                    shutil.rmtree(staging, ignore_errors=True)
-                    raise RuntimeError(
-                        f"merge_upsert: staged rewrite of {leaf} does not "
-                        f"checksum-match its kept rows (want {want}, got "
-                        f"{got}) — aborted before publish; live layout "
-                        "untouched"
-                    )
-            stage_files = [
-                os.path.join(data_dir, n)
-                for n in sorted(fsops.listdir(data_dir))
-                if _is_data_file(n)
-            ]
-        _publish_leaf(leaf, gen, olds=olds, stage_files=stage_files, lease=lease)
-        n_matched_removed += n_src - n_keep
-        report["files_rewritten"] += len(names) - len(retired_here)
-        report["files_retired"] += len(retired_here)
+    for leaf, names in by_leaf.items():
+        n_removed, n_retired = M.rewrite_leaf(
+            spark, target_path, leaf, names, gen, "merged", keep, verify,
+            lease, schema_evolution,
+        )
+        n_matched_removed += n_removed
+        report["files_rewritten"] += len(names) - n_retired
+        report["files_retired"] += n_retired
 
     report["partitions_touched"] = len(touched_leaves)
     report["rows_after"] = (
@@ -493,13 +346,13 @@ def _merge_upsert_locked(
         "files_retired": report["files_retired"],
         "files_inserted": report["files_inserted"],
         "columns_added": added_cols,
-        "affected_files": sorted(hit_files),
+        "affected_files": sorted(
+            os.path.join(leaf, n) for leaf, names in by_leaf.items() for n in names
+        ),
     }
     fsops.write_atomic(
         os.path.join(target_path, f"_MERGE-{gen}.json"), json.dumps(audit, indent=1)
     )
     if refresh_stats:
-        from bigquack_spark.operators.maintenance import refresh_table_stats
-
-        refresh_table_stats(spark, target_path)
+        M.refresh_table_stats(spark, target_path)
     return report

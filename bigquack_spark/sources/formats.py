@@ -136,8 +136,8 @@ def load_binary_dir(
     re-listing, no driver-side enumeration.  At 100 TB the source
     parallelizes by file (each file one task input); pair with
     ``spark.sql.files.maxPartitionBytes`` for many-small-file dirs, or a
-    compaction pass (sinks/compact.py) first — the standard small-files
-    remedy.  ``glob`` filters server-side via pathGlobFilter (e.g.
+    compaction pass (``maintenance.compact_small_files``) first — the
+    standard small-files remedy.  ``glob`` filters server-side via pathGlobFilter (e.g.
     ``*.jpg``), so non-matching files are never opened."""
     reader = spark.read.format("binaryFile")
     if glob:

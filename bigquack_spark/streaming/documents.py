@@ -13,8 +13,12 @@ behind streaming/sink.py's batch-id offset gate.  Per micro-batch:
 3. NEAR verdicts: batch bands ⋈ history bands (the q36 candidate join,
    bounded by band-bucket occupancy) -> exact unigram Jaccard >= the
    threshold against the matched history docs;
-4. verdicts append to ``{target}/verdicts``; novel docs and their bands
-   append to the history tables, so batch N+1 sees batch N's novelty.
+4. verdicts land in ``{target}/verdicts/batch_id=N``; novel docs and their
+   bands land in ``batch_id=N`` of the history tables, so batch N+1 sees
+   batch N's novelty.  Each landing OVERWRITES its batch's directory and
+   history reads only ``batch_id < N`` (ExactlyOnceBatchSink's layout): a
+   batch replayed after a crash before its offset commit rewrites the
+   same rows instead of appending them again or meeting itself.
 
 In-batch duplicate policy: exact copies WITHIN a batch keep the lowest
 doc_id (the q30 keep-first rule); near-dups within one batch are left to
@@ -66,19 +70,15 @@ class NearDupIngestSink(BatchGate):
         self.bands_dir = os.path.join(target, "history_bands")
         self.verdicts_dir = os.path.join(target, "verdicts")
 
-    def _history_docs(self, spark: SparkSession) -> DataFrame:
-        if os.path.exists(self.docs_dir):
-            return spark.read.parquet(self.docs_dir)
-        return spark.createDataFrame(
-            [], "doc_id bigint, text string, fingerprint string"
-        )
-
-    def _history_bands(self, spark: SparkSession) -> DataFrame:
-        if os.path.exists(self.bands_dir):
-            return spark.read.parquet(self.bands_dir)
-        return spark.createDataFrame(
-            [], "doc_id bigint, band_id int, band_key string"
-        )
+    @staticmethod
+    def _history(spark: SparkSession, path: str, batch_id: int, empty: str) -> DataFrame:
+        if os.path.exists(path):
+            return (
+                spark.read.parquet(path)
+                .filter(F.col("batch_id") < batch_id)
+                .drop("batch_id")
+            )
+        return spark.createDataFrame([], empty)
 
     def _land(self, batch_df: DataFrame, batch_id: int, lease) -> None:
         from bigquack_spark.operators import dedup as D
@@ -89,7 +89,9 @@ class NearDupIngestSink(BatchGate):
         batch = batch_df.select(
             "doc_id", "text", F.md5("text").alias("fingerprint")
         ).localCheckpoint(eager=True)
-        hist_docs = self._history_docs(spark)
+        hist_docs = self._history(
+            spark, self.docs_dir, batch_id, "doc_id bigint, text string, fingerprint string"
+        )
         hist_fps = hist_docs.select("fingerprint").distinct()
 
         # in-batch exact keep-first, then exact-vs-history
@@ -105,7 +107,9 @@ class NearDupIngestSink(BatchGate):
         bands = D.minhash_bands_portable(
             batch, "doc_id", "text", self.num_hashes, self.rows_per_band
         ).localCheckpoint(eager=True)
-        hist_bands = self._history_bands(spark)
+        hist_bands = self._history(
+            spark, self.bands_dir, batch_id, "doc_id bigint, band_id int, band_key string"
+        )
         cand = (
             hist_bands.withColumnRenamed("doc_id", "a")
             .join(
@@ -135,15 +139,15 @@ class NearDupIngestSink(BatchGate):
                 .when(F.col("__near").isNotNull(), "near_dup")
                 .otherwise("novel")
                 .alias("verdict"),
-                F.lit(batch_id).alias("batch_id"),
             )
             .localCheckpoint(eager=True)
         )
-        verdicts.write.mode("append").parquet(self.verdicts_dir)
+        part = f"batch_id={batch_id}"
+        verdicts.write.mode("overwrite").parquet(os.path.join(self.verdicts_dir, part))
         novel_ids = verdicts.filter(F.col("verdict") == "novel").select("doc_id")
-        batch.join(novel_ids, "doc_id", "left_semi").write.mode("append").parquet(
-            self.docs_dir
+        batch.join(novel_ids, "doc_id", "left_semi").write.mode("overwrite").parquet(
+            os.path.join(self.docs_dir, part)
         )
-        bands.join(novel_ids, "doc_id", "left_semi").write.mode("append").parquet(
-            self.bands_dir
+        bands.join(novel_ids, "doc_id", "left_semi").write.mode("overwrite").parquet(
+            os.path.join(self.bands_dir, part)
         )

@@ -210,12 +210,8 @@ class ContinuousRollupSink:
         self.daily = os.path.join(base_dir, "daily")
 
     def _upsert(self, target: str, rows: DataFrame, keys: list[str]) -> None:
-        from bigquack_spark.sinks.merge import _recover_orphaned_swap, merge_upsert
+        from bigquack_spark.sinks.merge import merge_upsert
 
-        # a crash between merge_upsert's two swap renames leaves the table
-        # in a .old- backup with target missing; recover BEFORE the exists
-        # check or the fresh-write branch would silently truncate history
-        _recover_orphaned_swap(target)
         if not os.path.exists(target):
             rows.write.parquet(target)
         else:
@@ -254,10 +250,12 @@ class SketchRollupSink(BatchGate):
     Mergeability is the whole point of the sketch: per-batch partials
     combine by counter addition, so the persisted summary stays
     4 KB-class forever while summarizing an unbounded stream.  Addition
-    is NOT idempotent, so replay convergence is exactly-once by the
-    offset gate, not by idempotence.  With ``lease_table=True`` the
-    whole-dir rename swap — the one streaming commit a concurrent
-    maintenance writer could tear mid-flight — runs under the lease.
+    is NOT idempotent, so the landing is made idempotent by generation:
+    the merged sketch publishes through ``maintenance.publish_leaf`` as
+    ``sketch-<batch_id>-*`` files, and a batch whose generation is already
+    live (it landed, then the process died before the offset commit) is
+    not added again.  With ``lease_table=True`` the publish runs under
+    the lease, fenced before its commit point.
 
     The partial build is the q157 plan (DEPTH-way projection union +
     map-side-combined groupBy); md5 buckets keep the persisted sketch a
@@ -294,37 +292,28 @@ class SketchRollupSink(BatchGate):
         )
 
     def _land(self, batch_df: DataFrame, batch_id: int, lease) -> None:
-        from bigquack_spark.sinks.merge import _recover_orphaned_swap
+        from bigquack_spark.operators import maintenance as M
 
-        # a crash between the two swap renames below leaves the table in a
-        # .old-<id> backup with self.table missing; recover FIRST or the
-        # exists() check silently resets the accumulated sketch to this
-        # batch's partial (ADVICE r2) — same guard ContinuousRollupSink uses
-        _recover_orphaned_swap(self.table)
+        M._resume_partition(self.table)  # roll a crashed publish forward
+        gen = str(batch_id)
+        live = (
+            [n for n in fsops.listdir(self.table) if M._is_data_file(n)]
+            if os.path.isdir(self.table) else []
+        )
+        if any(n.startswith(f"sketch-{gen}-") for n in live):
+            return  # this batch already landed; only its offset commit was lost
         spark = batch_df.sparkSession
-        partial = self._partial(batch_df)
-        if os.path.exists(self.table):
+        merged = self._partial(batch_df)
+        if live:
             merged = (
                 spark.read.parquet(self.table)
-                .unionByName(partial)
+                .unionByName(merged)
                 .groupBy("j", "bucket")
                 .agg(F.sum("cnt").cast("long").alias("cnt"))
             )
-        else:
-            merged = partial
-        tmp = self.table + f".staging-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if lease is not None:
-            lease.check()  # fencing gate: never swap after losing the table
-        if os.path.exists(self.table):
-            backup = self.table + f".old-{batch_id}"
-            fsops.replace(self.table, backup)
-            fsops.replace(tmp, self.table)
-            import shutil
-
-            shutil.rmtree(backup, ignore_errors=True)
-        else:
-            fsops.replace(tmp, self.table)
+        M.publish_leaf(
+            self.target, self.table, gen, "sketch", live, merged.write.parquet, lease
+        )
 
     def estimate(self, spark, keys: DataFrame, key_col: str) -> DataFrame:
         """CMS point estimates for a bounded key set: min over depth rows

@@ -161,18 +161,18 @@ def test_marker_protocol_converges_across_torn_publish(spark, tmp_path):
 
 
 def test_leaseless_publishers_hit_the_gate(tmp_path, object_store):
-    """AtomicWriter's PENDING publish and merge's orphan recovery rename
+    """AtomicWriter's PENDING publish and the leaf publish rename
     without taking a lease — they must hit the capability gate themselves
     (r11 review: the lease-side gate never covered them), but only for
     the rename they actually perform: COMMITTED appends in place and must
     keep working on a rename-less store (second review pass)."""
+    from bigquack_spark.operators.maintenance import publish_leaf
     from bigquack_spark.sinks.atomic import AtomicWriter, WriteStreamType
-    from bigquack_spark.sinks.merge import _recover_orphaned_swap
 
     with pytest.raises(UnsupportedCommitStoreError):
         AtomicWriter(str(tmp_path / "t"))
     with pytest.raises(UnsupportedCommitStoreError):
-        _recover_orphaned_swap(str(tmp_path / "t"))
+        publish_leaf(str(tmp_path / "t"), str(tmp_path / "t"), "g", "p", [], None, None)
     # COMMITTED: no rename, no lock — not gated
     AtomicWriter(str(tmp_path / "t2"), WriteStreamType.COMMITTED)
     # conditional-PUT store (rename still copy+delete): PENDING refuses on
@@ -273,6 +273,41 @@ def test_fsops_is_the_only_renamer():
                     )
                     if writes and renames:
                         offenders.append(f"{rel}:{node.lineno} {node.name} hand-rolls a publish")
+    assert offenders == []
+
+
+def test_one_table_publish_protocol():
+    """Every data rewrite lands through ``maintenance.publish_leaf``: only
+    it and the crash resume call ``_write_marker`` / ``_finish_swap``, and
+    the directory rename swap (``.old-`` backups healed by
+    ``_recover_orphaned_swap``) is gone from the package."""
+    import ast
+
+    root = _package_root()
+    allowed = {"publish_leaf", "_resume_partition"}
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(dirpath, name), root)
+            with open(os.path.join(dirpath, name)) as fh:
+                tree = ast.parse(fh.read(), rel)
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                for c in ast.walk(fn):
+                    if not isinstance(c, ast.Call):
+                        continue
+                    callee = getattr(c.func, "id", getattr(c.func, "attr", None))
+                    if callee in ("_write_marker", "_finish_swap") and fn.name not in allowed:
+                        offenders.append(f"{rel}:{c.lineno} {fn.name} calls {callee}")
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Constant) and ".old-" in str(node.value):
+                    offenders.append(f"{rel}:{node.lineno} '.old-' literal")
+                ident = getattr(node, "id", None) or getattr(node, "attr", None) or getattr(node, "name", None)
+                if ident == "_recover_orphaned_swap":
+                    offenders.append(f"{rel}:{node.lineno} _recover_orphaned_swap")
     assert offenders == []
 
 

@@ -67,15 +67,6 @@ def test_compact_verified_checksum_equal_and_files_reduced(spark, tmp_path):
     assert _checksum(spark, path) == before
 
 
-def test_target_mb_knob(spark, tmp_path):
-    from bigquack_spark.operators.maintenance import compact_small_files
-
-    path = _fragmented(spark, tmp_path, partitioned=False)
-    report = compact_small_files(spark, path, target_mb=1024)
-    assert report["partitions_compacted"] == 1
-    assert len(_data_files(path)) == 1
-
-
 def test_crash_before_marker_discards_and_recompacts(spark, tmp_path):
     """Crash point 1: staged write finished, marker never written — the
     staging dir is pre-commit residue; next run discards it, re-plans, and
@@ -88,7 +79,7 @@ def test_crash_before_marker_discards_and_recompacts(spark, tmp_path):
     class Boom(RuntimeError):
         pass
 
-    def no_marker(staging, gen, olds):
+    def no_marker(*a, **kw):
         raise Boom()
 
     real = maintenance._write_marker
@@ -116,7 +107,7 @@ def _crash_after_marker(maintenance, spark, path):
     class Boom(RuntimeError):
         pass
 
-    def no_swap(leaf, staging, gen, olds):
+    def no_swap(*a, **kw):
         raise Boom()
 
     real = maintenance._finish_swap
@@ -265,18 +256,6 @@ def test_verify_gate_aborts_before_publish(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, maintenance.STAGING_DIR))
 
 
-def test_sinks_compact_delegates_to_crash_safe_executor(spark, tmp_path):
-    """sinks.compact.compact is the same protocol now — one publish path."""
-    from bigquack_spark.sinks.compact import compact
-
-    path = _fragmented(spark, tmp_path, partitioned=False)
-    before = _checksum(spark, path)
-    report = compact(spark, path, target_file_bytes=1 << 30)
-    assert report["partitions_compacted"] == 1
-    assert "resumed" in report  # the maintenance-shaped report
-    assert _checksum(spark, path) == before
-
-
 # -- purge_rows (erasure executor) -------------------------------------------
 
 
@@ -422,6 +401,19 @@ def test_purge_rows_noop_on_no_matches(spark, tmp_path):
     assert sorted(_data_files(path)) == files_before
     assert _checksum(spark, path) == before
     assert not any(f.startswith("_PURGE-") for f in os.listdir(path))
+
+
+def test_purge_rows_prunes_an_emptied_leaf(spark, tmp_path):
+    """Every row of leaf k=3 matches: its files retire with no successor
+    and the leaf directory goes with them."""
+    from bigquack_spark.operators.maintenance import purge_rows
+
+    path = _purge_table(spark, tmp_path, "pt6")
+    report = purge_rows(spark, path, "id % 4 = 3")
+    assert report["n_deleted"] == 250 and report["files_rewritten"] == 0
+    assert not os.path.exists(os.path.join(path, "k=3"))
+    assert os.path.isdir(os.path.join(path, "k=2"))
+    assert spark.read.parquet(path).count() == 750
 
 
 # -- vacuum ------------------------------------------------------------------

@@ -182,7 +182,7 @@ def test_pending_batch_jobs_overlap_under_the_callers_job_group(spark, tmp_path)
     assert any(b[0] < a[1] for a, b in zip(spans, spans[1:]))
 
 
-# -- small-file compaction (sinks/compact.py) --------------------------------
+# -- small-file compaction (operators/maintenance.py) ------------------------
 
 
 def _data_files(path):
@@ -198,7 +198,7 @@ def _data_files(path):
 
 
 def test_compact_preserves_rows_and_reduces_files(spark, tmp_path):
-    from bigquack_spark.sinks.compact import compact
+    from bigquack_spark.operators.maintenance import compact_small_files as compact
 
     path = str(tmp_path / "frag")
     df = spark.range(2000).selectExpr("id", "id % 3 AS k", "repeat('x', 50) AS pad")
@@ -219,7 +219,8 @@ def test_compact_preserves_rows_and_reduces_files(spark, tmp_path):
 
 
 def test_compact_is_idempotent_and_skips_healthy(spark, tmp_path):
-    from bigquack_spark.sinks.compact import compact, plan_compaction
+    from bigquack_spark.operators.maintenance import compact_small_files as compact
+    from bigquack_spark.operators.maintenance import plan_compaction
 
     path = str(tmp_path / "frag2")
     spark.range(500).repartition(20).write.parquet(path)
@@ -280,7 +281,7 @@ def test_compact_with_cluster_cols_fixes_count_and_order(spark, tmp_path):
     whose footer key ranges are disjoint, content preserved."""
     import pyarrow.parquet as pq
 
-    from bigquack_spark.sinks.compact import compact
+    from bigquack_spark.operators.maintenance import compact_small_files as compact
 
     path = str(tmp_path / "t")
     # 20 small unsorted files, interleaved key ranges
@@ -333,35 +334,6 @@ def test_merge_upsert_update_insert_delete_and_idempotent(spark, tmp_path):
     merge_upsert(spark, path, changes, ["k"], delete_col="is_delete")
     again = {r.k: (r.s, r.v) for r in spark.read.parquet(path).collect()}
     assert again == got
-
-
-def test_merge_upsert_self_heals_crashed_swap(spark, tmp_path):
-    """A crash between the two swap renames leaves the table stranded in a
-    .old- backup with target_path missing; the next merge_upsert call must
-    restore the backup and proceed normally."""
-    import os
-
-    from bigquack_spark.sinks.merge import merge_upsert
-
-    path = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0)], "k bigint, s string, v double"
-    ).write.parquet(path)
-    # simulate the crash window: first rename done, second never happened,
-    # plus an ABANDONED staging dir from the dead merge (aged past the reap
-    # window — young staging dirs belong to live merges and must survive)
-    os.rename(path, path + ".old-deadbeef0000")
-    os.makedirs(path + ".merge-deadbeef0000")
-    old = 1_000_000.0
-    os.utime(path + ".merge-deadbeef0000", (old, old))
-    changes = spark.createDataFrame(
-        [(2, "b2", 99.0, False)], "k bigint, s string, v double, is_delete boolean"
-    )
-    merge_upsert(spark, path, changes, ["k"], delete_col="is_delete")
-    got = {r.k: (r.s, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {1: ("a", 10.0), 2: ("b2", 99.0)}
-    assert not os.path.exists(path + ".old-deadbeef0000")
-    assert not os.path.exists(path + ".merge-deadbeef0000")
 
 
 def test_lakehouse_auto_selects_and_writes(spark, batch, tmp_path):
@@ -504,6 +476,28 @@ def test_wap_publishes_only_clean_data(spark, tmp_path):
     import os as _os
     leftovers = [p for p in _os.listdir(str(tmp_path)) if ".merge-" in p or ".old-" in p]
     assert leftovers == []
+    assert ".compact-staging" not in _os.listdir(path)
+
+    # a failed FIRST audit leaves no target behind
+    fresh = str(tmp_path / "never")
+    rep3 = write_audit_publish(dirty, fresh, checks)
+    assert not rep3["published"]
+    assert not _os.path.exists(fresh)
+
+
+def test_wap_replaces_a_partitioned_target(spark, tmp_path):
+    """A publish over a previously partitioned target retires every
+    sub-leaf: the target then reads back exactly the audited rows."""
+    from bigquack_spark.sinks.wap import not_null, write_audit_publish
+
+    path = str(tmp_path / "t")
+    spark.range(20).selectExpr("id AS k", "id % 3 AS p").write.partitionBy("p").parquet(path)
+    rep = write_audit_publish(
+        spark.createDataFrame([(7,), (8,)], "k bigint"), path, [not_null("k")]
+    )
+    assert rep["published"]
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == [7, 8]
+    assert not [d for d in os.listdir(path) if d.startswith("p=")]
 
 
 def test_jsonl_export_roundtrip_and_manifest(spark, tmp_path):

@@ -119,13 +119,22 @@ def test_exactly_once_sink_crash_between_write_and_persist(spark, tmp_path):
     assert replay.next_batch_id == 2
 
 
+def _sketch_depth_totals(spark, sink):
+    return [
+        r.n
+        for r in spark.read.parquet(sink.table)
+        .groupBy("j").agg(F.sum("cnt").alias("n")).orderBy("j").collect()
+    ]
+
+
 def test_sketch_rollup_sink_crash_mid_swap_recovers(spark, tmp_path):
-    """ADVICE r2: a crash between the two swap renames leaves the sketch in
-    a .old-<id> backup with the table missing; the next call must restore
-    it, not silently reset the accumulated counters to one batch's
+    """A crash after the publish marker commits, before the swap: the next
+    landing rolls the swap forward, then adds its own batch — the
+    accumulated counters are neither lost nor reset to one batch's
     partial."""
     import os
 
+    from bigquack_spark.operators import maintenance
     from bigquack_spark.streaming.sink import SketchRollupSink
 
     target = str(tmp_path / "cms_crash")
@@ -134,21 +143,50 @@ def test_sketch_rollup_sink_crash_mid_swap_recovers(spark, tmp_path):
 
     sink = SketchRollupSink(target, key_col="event_type", depth=4, width=64)
     sink(batch, batch_id=0)
-    total_after_0 = (
-        spark.read.parquet(sink.table).groupBy("j").agg(F.sum("cnt").alias("n")).collect()
-    )
-    assert all(r.n == 100 for r in total_after_0)
+    assert _sketch_depth_totals(spark, sink) == [100] * 4
 
-    # simulate dying between rename(table, backup) and rename(tmp, table)
-    os.rename(sink.table, sink.table + ".old-99")
+    class Boom(RuntimeError):
+        pass
+
+    real = maintenance._finish_swap
+    state = {"crashed": False}
+
+    def crash_once(*a, **kw):
+        if not state["crashed"]:
+            state["crashed"] = True
+            raise Boom()
+        return real(*a, **kw)
+
+    maintenance._finish_swap = crash_once
+    try:
+        with pytest.raises(Boom):
+            sink(batch, batch_id=1)
+    finally:
+        maintenance._finish_swap = real
     # the unpersisted-offset replay of batch 1 (offset says next=1, so it runs)
     sink(batch, batch_id=1)
-    per_depth = (
-        spark.read.parquet(sink.table).groupBy("j").agg(F.sum("cnt").alias("n")).collect()
-    )
-    # batch 0's 100 rows were recovered from the backup, batch 1 added 100
-    assert all(r.n == 200 for r in per_depth)
-    assert not os.path.exists(sink.table + ".old-99")
+    assert _sketch_depth_totals(spark, sink) == [200] * 4
+    assert not os.path.exists(os.path.join(sink.table, maintenance.STAGING_DIR))
+
+
+def test_sketch_rollup_sink_replay_adds_nothing(spark, tmp_path):
+    """A crash between the landing and the offset commit: the replayed
+    batch finds its own generation live and is not counted twice."""
+    import json as _json
+    import os
+
+    from bigquack_spark.streaming.sink import SketchRollupSink
+
+    target = str(tmp_path / "cms_replay")
+    os.makedirs(target)
+    batch = spark.range(100).selectExpr("id % 7 AS k")
+    SketchRollupSink(target, key_col="k", depth=2, width=64)(batch, batch_id=0)
+    with open(os.path.join(target, "_COMMITTED_BATCH"), "w") as fh:
+        _json.dump({"next_batch_id": 0}, fh)  # the state the crash leaves
+    replay = SketchRollupSink(target, key_col="k", depth=2, width=64)
+    replay(batch, batch_id=0)
+    assert _sketch_depth_totals(spark, replay) == [100, 100]
+    assert replay.next_batch_id == 1
 
 
 def test_exactly_once_sink_corrupt_offset_file(spark, tmp_path):
@@ -756,6 +794,30 @@ def test_near_dup_ingest_sink_classifies_and_replays_once(spark, tmp_path):
     n_before = spark.read.parquet(sink.verdicts_dir).count()
     run("ck2")
     assert spark.read.parquet(sink.verdicts_dir).count() == n_before
+
+
+def test_near_dup_ingest_sink_replay_lands_once(spark, tmp_path):
+    """A crash between the landing and the offset commit: the replayed
+    batch overwrites its own verdicts and does not meet its first landing
+    in the history (it would read as exact dups of itself)."""
+    import json as _json
+    import os
+
+    from bigquack_spark.streaming.documents import NearDupIngestSink
+
+    target = str(tmp_path / "nd_replay")
+    os.makedirs(target)
+    batch = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"), (2, "query planner shuffle join")],
+        "doc_id bigint, text string",
+    )
+    NearDupIngestSink(target)(batch, 0)
+    with open(os.path.join(target, "_COMMITTED_BATCH"), "w") as fh:
+        _json.dump({"next_batch_id": 0}, fh)  # the state the crash leaves
+    replay = NearDupIngestSink(target)
+    replay(batch, 0)
+    verdicts = [r.verdict for r in spark.read.parquet(replay.verdicts_dir).collect()]
+    assert verdicts == ["novel", "novel"]
 
 
 def test_topk_stream_exact_at_capacity(spark):

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bigquack_spark.operators.dedup import _shingles
+from bigquack_spark.operators.dedup import _shingles_frame
 
 
 def _hash_bucket(key: Column, salt: str, buckets: int = 100) -> Column:
@@ -98,13 +98,11 @@ def contamination_pairs(
     one document-frequency aggregate removes both.  Output is one row per
     overlapping pair: (doc_id, bench_id, n_overlap, bench_total, score).
     """
-    d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_shingles(F.col(text_col), shingle_len)).alias("sh"),
+    d = _shingles_frame(docs, text_col, shingle_len, "__sh").select(
+        F.col(id_col).alias("doc_id"), F.explode("__sh").alias("sh")
     )
-    b = benchmark.select(
-        F.col(id_col).alias("bench_id"),
-        F.explode(_shingles(F.col(text_col), shingle_len)).alias("sh"),
+    b = _shingles_frame(benchmark, text_col, shingle_len, "__sh").select(
+        F.col(id_col).alias("bench_id"), F.explode("__sh").alias("sh")
     )
     if max_df is not None:
         rare = (

@@ -4,14 +4,13 @@ embedding-cosine near-dup (SURVEY §2.9).
 Scale design (the 100 TB mandate): every stage is a shuffle-based
 groupBy/join — no driver-side state, no collect, no cross product.  The LSH
 candidate generation bounds the pairwise work to documents sharing a band
-bucket; signatures are built from JVM hash expressions (xxhash64 / md5), not
-Python UDFs.
+bucket; signatures are built from JVM md5 expressions, not Python UDFs.
 
-Two signature flavors exist on purpose:
-- ``minhash_signatures`` (md5-hex min) — engine-portable, used by the
-  DuckDB-oracle queries;
-- ``minhash_signatures_fast`` (xxhash64) — the scale path: 64-bit integer
-  min-hash, ~4x cheaper than hex-string md5 comparisons.
+One hash family: the MinHash signature, its bands and the SimHash all hash
+with md5, which DuckDB computes to the same hex string, so every near-dup
+query runs exactly the signature its oracle replays.  A full near-dup chain
+costs the same as with an xxhash64 signature (SCALING.md, "Known limits",
+has the measurement).
 """
 
 from __future__ import annotations
@@ -44,41 +43,28 @@ def exact_dedup_keep_first(df: DataFrame, key_cols: list[str], order_col: str) -
 
 
 # -------------------------------------------------------------- minhash ----
-def _shingles(text_col: str, shingle_len: int) -> Column:
-    """Distinct word n-gram shingles as an array column.  shingle_len=1
-    degrades to the distinct-token set (what the oracle SQL mirrors).
+def _shingles_frame(
+    df: DataFrame, text_col: str, shingle_len: int, out_col: str
+) -> DataFrame:
+    """``df`` plus ``out_col``: the distinct word ``shingle_len``-gram
+    shingles of ``text_col`` as an array.  ``shingle_len=1`` degrades to
+    the distinct-token set (what the oracle SQL mirrors).
 
     Docs shorter than ``shingle_len`` tokens yield an EMPTY array: without
     the guard, F.sequence(0, size-n) would produce a DESCENDING index list
     for size<n and F.slice would throw on start=0 at runtime (the oracle's
-    range(1, ...) is simply empty for short docs)."""
-    toks = F.split(F.lower(text_col), r"\s+")
-    if shingle_len == 1:
-        return F.array_distinct(toks)
-    idx = F.sequence(F.lit(0), F.size(toks) - shingle_len)
-    return F.when(
-        F.size(toks) >= shingle_len,
-        F.array_distinct(
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, shingle_len), " "))
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    range(1, ...) is simply empty for short docs).
 
-
-def _shingles_frame(
-    df: DataFrame, text_col: str, shingle_len: int, out_col: str
-) -> DataFrame:
-    """Staged twin of :func:`_shingles` (r13, the q139 winnowing lesson):
-    for ``shingle_len >= 2`` the gram transform slices the token array once
-    PER ELEMENT, and a Column-shaped ``toks`` is a full ``split()``
-    re-evaluated at every lambda reference — higher-order lambdas get no
-    codegen subexpression elimination, so the Column form costs
-    O(tokens^2) splits per row.  Staging the token array as its own
-    projected column makes every lambda reference a bound attribute: one
+    For ``shingle_len >= 2`` the token array is STAGED as its own projected
+    column (r13, the q139 winnowing lesson): the gram transform slices the
+    tokens once PER ELEMENT, and a Column-shaped ``toks`` is a full
+    ``split()`` re-evaluated at every lambda reference — higher-order
+    lambdas get no codegen subexpression elimination, so the unstaged
+    form costs O(tokens^2) splits per row.  A staged attribute costs one
     split per row (Catalyst's CollapseProject keeps multi-referenced
-    non-cheap aliases staged).  ``shingle_len == 1`` has no lambda over the
-    tokens and stays the single _shingles expression."""
+    non-cheap aliases staged)."""
     if shingle_len == 1:
-        return df.withColumn(out_col, _shingles(text_col, 1))
+        return df.withColumn(out_col, F.array_distinct(F.split(F.lower(text_col), r"\s+")))
     toks = F.col("__shingle_toks")
     idx = F.sequence(F.lit(0), F.size(toks) - shingle_len)
     grams = F.when(
@@ -99,16 +85,19 @@ def minhash_signature_wide(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = DEFAULT_NUM_HASHES,
+    shingle_len: int = 1,
 ) -> DataFrame:
-    """Engine-portable MinHash, wide form: one array<string> signature per
-    row, element ``seed`` = min over shingles of md5(seed || '|' || shingle).
+    """MinHash, wide form: one array<string> signature per row, element
+    ``seed`` = min over word ``shingle_len``-gram shingles of
+    md5(seed || '|' || shingle).  DuckDB computes the identical hex
+    strings, so every stage downstream is oracle-diffable.
 
     Computed as a per-row array fold (array_min over the hashed shingle
-    array, once per seed) — ZERO shuffle, pure projection.  The token set
-    is STAGED as its own column (r13): a Column-shaped ``toks`` would be
-    re-inlined into every per-seed transform, re-running the
-    split+array_distinct ``num_hashes`` times per row."""
-    staged = df.withColumn("__mh_toks", _shingles(text_col, 1))
+    array, once per seed) — ZERO shuffle, pure projection.  The shingle
+    set is STAGED as its own column (r13): a Column-shaped set would be
+    re-inlined into every per-seed transform, re-running the tokenize
+    ``num_hashes`` times per row."""
+    staged = _shingles_frame(df, text_col, shingle_len, "__mh_toks")
     toks = F.col("__mh_toks")
 
     def seed_min(seed: int) -> Column:
@@ -135,18 +124,20 @@ def minhash_signatures(
     ).withColumn("seed", F.col("seed").cast("int"))
 
 
-def minhash_bands_portable(
+def minhash_bands(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = DEFAULT_NUM_HASHES,
     rows_per_band: int = DEFAULT_ROWS_PER_BAND,
+    shingle_len: int = 1,
 ) -> DataFrame:
     """(id, band_id, band_key) from the md5 signature, banded PER ROW —
     band_key = md5(comma-joined band slice).  Zero shuffle: signature and
     banding are both projections; downstream grouping is the first exchange.
-    Matches the oracle's md5(string_agg(minhash, ',' ORDER BY seed))."""
-    wide = minhash_signature_wide(df, id_col, text_col, num_hashes)
+    Documents agreeing on any full band land in the same bucket.  Matches
+    the oracle's md5(string_agg(minhash, ',' ORDER BY seed))."""
+    wide = minhash_signature_wide(df, id_col, text_col, num_hashes, shingle_len)
     band_keys = F.array(
         *[
             F.md5(
@@ -164,54 +155,6 @@ def minhash_bands_portable(
     return wide.select(
         F.col(id_col), F.posexplode(band_keys).alias("band_id", "band_key")
     ).withColumn("band_id", F.col("band_id").cast("int"))
-
-
-def minhash_signatures_fast(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_len: int = 3,
-) -> DataFrame:
-    """Scale-path MinHash: wide format (id, sig array<bigint>), xxhash64 per
-    seed, computed without exploding — the per-row array fold keeps this a
-    pure projection (zero shuffle).  Shingles are staged (r13): the Column
-    form would re-run the O(tokens^2) gram build once per seed."""
-    staged = _shingles_frame(df, text_col, shingle_len, "__mh_sh")
-    sh = F.col("__mh_sh")
-    sig = F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(seed))))
-            for seed in range(num_hashes)
-        ]
-    )
-    return staged.select(F.col(id_col), sig.alias("signature"))
-
-
-def lsh_bands(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    rows_per_band: int = DEFAULT_ROWS_PER_BAND,
-) -> DataFrame:
-    """Banding: split each wide signature into bands and key each band by a
-    hash of its slice -> (id, band_id, band_key).  Documents agreeing on any
-    full band land in the same bucket."""
-    sig = F.col("signature")
-    bands = F.sequence(F.lit(0), (F.size(sig) / rows_per_band).cast("int") - 1)
-    exploded = signatures.select(
-        F.col(id_col), F.explode(bands).alias("band_id"), sig.alias("signature")
-    )
-    band_key = F.xxhash64(
-        F.col("band_id"),
-        F.array_join(
-            F.transform(
-                F.slice(sig, F.col("band_id") * rows_per_band + 1, rows_per_band),
-                lambda h: h.cast("string"),
-            ),
-            ",",
-        ),
-    )
-    return exploded.select(F.col(id_col), "band_id", band_key.alias("band_key"))
 
 
 def lsh_candidate_pairs(
@@ -362,40 +305,52 @@ def near_dup_pairs(
     shingle_len: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: signatures -> bands -> candidate
-    pairs -> exact Jaccard verify.  End-to-end shuffle-based; the only
-    super-linear step is bounded by LSH bucket sizes."""
-    sigs = minhash_signatures_fast(df, id_col, text_col, num_hashes, shingle_len)
-    bands = lsh_bands(sigs, id_col, rows_per_band)
+    """Full MinHash-LSH near-dup pipeline: md5 bands -> candidate pairs ->
+    exact Jaccard verify over the same ``shingle_len``-gram sets.
+    End-to-end shuffle-based; the only super-linear step is bounded by LSH
+    bucket sizes.  Every stage is what the oracle SQL replays, so even the
+    LSH false negatives agree across engines."""
+    bands = minhash_bands(df, id_col, text_col, num_hashes, rows_per_band, shingle_len)
     cands = lsh_candidate_pairs(bands, id_col)
     return jaccard_verify(cands, df, id_col, text_col, shingle_len, threshold)
 
 
 # -------------------------------------------------------------- simhash ----
-def simhash64(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", shingle_len: int = 3
+def simhash(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    bits: int = 60,
+    shingle_len: int = 3,
 ) -> DataFrame:
-    """64-bit SimHash: per-shingle xxhash64, signed bit-vote per position,
-    packed back into one BIGINT.
+    """SimHash over word ``shingle_len``-gram shingles: per-shingle hash =
+    first 15 hex chars of md5 parsed as a 60-bit integer (Spark
+    conv(hex,16,10) == DuckDB ('0x'||hex)::BIGINT), signed bit-vote per
+    position, packed to BIGINT — oracle-diffable bit for bit.
 
-    Shape: one hashed-shingle array per doc, a bounded 64-row bit fan-out
-    (explode of bit positions — NOT per token), per-bit vote as a SQL
-    higher-order fold, then one groupBy(id) to pack.  Shuffle volume is
-    64 rows/doc regardless of document size."""
+    Shape: one hashed-shingle array per doc, a bounded ``bits``-row bit
+    fan-out (explode of bit positions — NOT per token), per-bit vote as a
+    SQL higher-order fold, then one groupBy(id) to pack.  Shuffle volume
+    is ``bits`` rows/doc regardless of document size."""
+    if bits > 60:
+        raise ValueError("simhash caps at 60 bits (15 hex chars)")
     staged = _shingles_frame(df, text_col, shingle_len, "__sh")
     hashed = staged.select(
-        F.col(id_col), F.transform(F.col("__sh"), lambda s: F.xxhash64(s)).alias("hashes")
+        F.col(id_col),
+        F.transform(
+            F.col("__sh"),
+            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"),
+        ).alias("hashes"),
     )
-    bits = hashed.select(
-        F.col(id_col), "hashes", F.explode(F.sequence(F.lit(0), F.lit(63))).alias("b")
+    bit_rows = hashed.select(
+        F.col(id_col), "hashes", F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("b")
     )
-    # SQL lambda may shift by a column (the Python shiftright wrapper cannot)
     vote = F.expr(
         "aggregate(hashes, CAST(0 AS BIGINT), (acc, h) -> acc + "
         "(CASE WHEN (shiftright(h, b) & 1) = 1 THEN 1 ELSE -1 END))"
     )
     return (
-        bits.select(F.col(id_col), F.col("b"), vote.alias("v"))
+        bit_rows.select(F.col(id_col), F.col("b"), vote.alias("v"))
         .groupBy(id_col)
         .agg(
             F.sum(
@@ -408,27 +363,37 @@ def simhash64(
     )
 
 
-def simhash_near_dup(
+def simhash_jaccard_near_dup(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
     shingle_len: int = 3,
+    threshold: float = 0.5,
+    bits: int = 60,
 ) -> DataFrame:
-    """SimHash near-dup: block on 16-bit chunks (any pair within Hamming
-    distance <= 3 of a 64-bit hash agrees on at least one of 4 chunks —
-    pigeonhole), then verify exact Hamming distance via bit_count(xor)."""
-    sh = simhash64(df, id_col, text_col, shingle_len)
+    """SimHash-blocked exact n-gram Jaccard: the pipeline brief's n-gram
+    Jaccard dedup family, oracle-diffable end to end.
+
+    Stages: simhash (bounded bits-per-doc fan-out) -> pigeonhole
+    blocking on 15-bit chunks (any pair within Hamming distance
+    <= bits/15 - 1 shares at least one chunk) -> exact Hamming filter via
+    bit_count(xor) -> exact word-``shingle_len``-gram Jaccard on the
+    surviving candidates only.  Pairwise work is bounded by chunk-bucket
+    occupancy; the Jaccard join touches candidates, never the corpus cross
+    product."""
+    n_chunks = bits // 15
+    if max_hamming > n_chunks - 1:
+        raise ValueError(
+            f"pigeonhole blocking over {n_chunks} chunks only guarantees "
+            f"hamming <= {n_chunks - 1}"
+        )
+    sh = simhash(df, id_col, text_col, bits=bits, shingle_len=shingle_len)
     chunks = sh.select(
         id_col,
         "simhash",
-        F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("chunk_id"),
-    ).withColumn(
-        # SQL form: the Python shiftrightunsigned wrapper rejects a Column
-        # shift amount
-        "chunk",
-        F.expr("shiftrightunsigned(simhash, chunk_id * 16) & 65535"),
-    )
+        F.explode(F.array(*[F.lit(i) for i in range(n_chunks)])).alias("chunk_id"),
+    ).withColumn("chunk", F.expr("shiftrightunsigned(simhash, chunk_id * 15) & 32767"))
     left = chunks.select(
         F.col(id_col).alias("a"), F.col("simhash").alias("sim_a"), "chunk_id", "chunk"
     )
@@ -436,13 +401,20 @@ def simhash_near_dup(
         F.col(id_col).alias("b"), F.col("simhash").alias("sim_b"), "chunk_id", "chunk"
     )
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (
+    cands = (
         left.join(right, ["chunk_id", "chunk"])
         .filter(F.col("a") < F.col("b"))
-        .select("a", "b", hamming.alias("hamming"))
-        .distinct()
+        .select("a", "b", hamming.cast("bigint").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
+        .distinct()
     )
+    # carry hamming THROUGH the verify (r13): the old `verified.join(cands)`
+    # re-referenced the cands frame, and Spark re-computes a re-referenced
+    # DataFrame subtree — the whole simhash+blocking pipeline ran twice
+    verified = jaccard_verify(
+        cands, df, id_col, text_col, shingle_len, threshold, keep_cols=("hamming",)
+    )
+    return verified.select("a", "b", "hamming", "jaccard")
 
 
 # ------------------------------------------------- embedding near-dup ------
@@ -487,107 +459,6 @@ def embedding_near_dup(
         .filter((F.col("a") < F.col("b")) & (F.col("cos") >= threshold))
         .select("a", "b", F.col("cos").alias("cosine_sim"))
     )
-
-
-def simhash_portable(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 60,
-    shingle_len: int = 3,
-) -> DataFrame:
-    """Engine-portable SimHash: per-shingle hash = first 15 hex chars of
-    md5 parsed as a 60-bit integer (Spark conv(hex,16,10) == DuckDB
-    ('0x'||hex)::BIGINT), signed bit-vote per position, packed to BIGINT.
-
-    Same shape as :func:`simhash64` (bounded bits-per-doc fan-out, one
-    groupBy) but oracle-diffable; simhash64's xxhash64 stays the production
-    fast path (one hash call vs md5 + hex parse).
-    """
-    if bits > 60:
-        raise ValueError("portable simhash caps at 60 bits (15 hex chars)")
-    staged = _shingles_frame(df, text_col, shingle_len, "__sh")
-    hashed = staged.select(
-        F.col(id_col),
-        F.transform(
-            F.col("__sh"),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"),
-        ).alias("hashes"),
-    )
-    bit_rows = hashed.select(
-        F.col(id_col), "hashes", F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("b")
-    )
-    vote = F.expr(
-        "aggregate(hashes, CAST(0 AS BIGINT), (acc, h) -> acc + "
-        "(CASE WHEN (shiftright(h, b) & 1) = 1 THEN 1 ELSE -1 END))"
-    )
-    return (
-        bit_rows.select(F.col(id_col), F.col("b"), vote.alias("v"))
-        .groupBy(id_col)
-        .agg(
-            F.sum(
-                F.expr(
-                    "CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), b) "
-                    "ELSE CAST(0 AS BIGINT) END"
-                )
-            ).alias("simhash")
-        )
-    )
-
-
-def simhash_jaccard_near_dup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    shingle_len: int = 3,
-    threshold: float = 0.5,
-    bits: int = 60,
-) -> DataFrame:
-    """SimHash-blocked exact n-gram Jaccard: the pipeline brief's n-gram
-    Jaccard dedup family, composed from portable parts so the whole chain is
-    oracle-diffable (unlike simhash_near_dup's xxhash64 fast path).
-
-    Stages: portable simhash (bounded bits-per-doc fan-out) -> pigeonhole
-    blocking on 15-bit chunks (any pair within Hamming distance
-    <= bits/15 - 1 shares at least one chunk) -> exact Hamming filter via
-    bit_count(xor) -> exact word-``shingle_len``-gram Jaccard on the
-    surviving candidates only.  Pairwise work is bounded by chunk-bucket
-    occupancy; the Jaccard join touches candidates, never the corpus cross
-    product."""
-    n_chunks = bits // 15
-    if max_hamming > n_chunks - 1:
-        raise ValueError(
-            f"pigeonhole blocking over {n_chunks} chunks only guarantees "
-            f"hamming <= {n_chunks - 1}"
-        )
-    sh = simhash_portable(df, id_col, text_col, bits=bits, shingle_len=shingle_len)
-    chunks = sh.select(
-        id_col,
-        "simhash",
-        F.explode(F.array(*[F.lit(i) for i in range(n_chunks)])).alias("chunk_id"),
-    ).withColumn("chunk", F.expr("shiftrightunsigned(simhash, chunk_id * 15) & 32767"))
-    left = chunks.select(
-        F.col(id_col).alias("a"), F.col("simhash").alias("sim_a"), "chunk_id", "chunk"
-    )
-    right = chunks.select(
-        F.col(id_col).alias("b"), F.col("simhash").alias("sim_b"), "chunk_id", "chunk"
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    cands = (
-        left.join(right, ["chunk_id", "chunk"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", hamming.cast("bigint").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    # carry hamming THROUGH the verify (r13): the old `verified.join(cands)`
-    # re-referenced the cands frame, and Spark re-computes a re-referenced
-    # DataFrame subtree — the whole simhash+blocking pipeline ran twice
-    verified = jaccard_verify(
-        cands, df, id_col, text_col, shingle_len, threshold, keep_cols=("hamming",)
-    )
-    return verified.select("a", "b", "hamming", "jaccard")
 
 
 # ------------------------------------------------ dedup clustering ----------
@@ -882,7 +753,8 @@ def lsh_tune(
     point), tie-broken toward more bands (higher recall).  Driver-side
     arithmetic over a handful of splits — the ten lines everyone otherwise
     re-derives from the MMDS textbook before every near-dup rollout; the
-    returned numbers plug straight into minhash_bands_portable."""
+    returned numbers plug straight into ``minhash_bands`` /
+    ``near_dup_pairs`` as (num_hashes, rows_per_band)."""
     if not 0 < threshold < 1:
         raise ValueError("threshold must be in (0, 1)")
     best = None

@@ -260,6 +260,28 @@ def lsh_topk(
     return _topk(sims, k)
 
 
+def _nearest_cells(
+    q: DataFrame, centroids: DataFrame, n_probes: int, keep_centroid: bool = False
+) -> DataFrame:
+    """IVF coarse probe: each query's ``n_probes`` nearest cells by squared
+    L2 distance to the broadcast centroid table, ties broken by cell id.
+    ``q`` is (qid, qv); returns (qid, qv[, centroid], cell)."""
+    dist2 = F.aggregate(
+        F.zip_with(F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    keep = ["qid", "qv", *(["centroid"] if keep_centroid else []), "cell"]
+    wq = Window.partitionBy("qid").orderBy(F.asc("d2"), F.asc("cell"))
+    return (
+        q.crossJoin(F.broadcast(centroids))
+        .select(*keep, dist2.alias("d2"))
+        .withColumn("pr", F.row_number().over(wq))
+        .filter(F.col("pr") <= n_probes)
+        .select(*keep)
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -300,20 +322,7 @@ def ivf_topk(
         "cell int, centroid array<double>",
     )
     q = queries.select(F.col(id_col).alias("qid"), vec.alias("qv"))
-    # nearest n_probes cells per query: broadcast the centroid table both ways
-    dist2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("qid").orderBy(F.asc("d2"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .select("qid", "qv", "cell", dist2.alias("d2"))
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probes)
-        .select("qid", "qv", "cell")
-    )
+    probes = _nearest_cells(q, centroids, n_probes)
     sims = (
         assigned.join(F.broadcast(probes), "cell")
         .filter(F.col("neighbor_id") != F.col("qid"))
@@ -800,19 +809,7 @@ def probe_ivf_index(
     q = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
     )
-    dist2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("qid").orderBy(F.asc("d2"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .select("qid", "qv", "cell", dist2.alias("d2"))
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probes)
-        .select("qid", "qv", "cell")
-    )
+    probes = _nearest_cells(q, centroids, n_probes)
     index = spark.read.parquet(f"{path}/index")
     if collect_cells:
         rows = probes.collect()  # bounded: n_queries x n_probes rows
@@ -1437,19 +1434,7 @@ def probe_ivf_pq(
     q = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
     )
-    dist2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("qid").orderBy(F.asc("d2"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .select("qid", "qv", "centroid", "cell", dist2.alias("d2"))
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probes)
-        .drop("pr", "d2")
-    )
+    probes = _nearest_cells(q, centroids, n_probes, keep_centroid=True)
     if collect_cells:
         # static pruning (see probe_ivf_index): bounded driver-side probe
         # resolution for online batches.  Resolved BEFORE the ADC lookup

@@ -166,11 +166,11 @@ def q101_dup_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy on the shingle (map-side combinable) and the shingle-keyed join
     back; no doc x doc pair ever materializes, so it scales with corpus
     size, not corpus^2."""
-    from bigquack_spark.operators.dedup import _shingles
+    from bigquack_spark.operators.dedup import _shingles_frame
 
     docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
-    sh = docs.select(
-        "doc_id", F.explode(_shingles("text", _DUP_SHINGLE_LEN)).alias("s")
+    sh = _shingles_frame(docs, "text", _DUP_SHINGLE_LEN, "__sh").select(
+        "doc_id", F.explode("__sh").alias("s")
     )
     df_ = sh.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     joined = sh.join(df_, "s")
@@ -894,7 +894,7 @@ Q200_MIN_TOK, Q200_MAX_TOK = 20, 150  # the funnel's length gate
 def _q200_oracle() -> str:
     from bigquack_spark.queries.dedup import (
         JACCARD_THRESHOLD,
-        ROWS_PER_BAND,
+        _BANDS_SQL,
         _SIG_SQL,
     )
 
@@ -913,11 +913,7 @@ def _q200_oracle() -> str:
       JOIN (SELECT fp, min(doc_id) AS keep FROM q GROUP BY fp) k
         ON q.fp = k.fp AND q.doc_id = k.keep
     ),
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
@@ -993,7 +989,7 @@ def q200_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = sized.filter(F.col("n_tok").between(Q200_MIN_TOK, Q200_MAX_TOK))
     keep = q.groupBy("fp").agg(F.min("doc_id").alias("keep"))
     exact_u = q.join(keep, "fp").filter(F.col("doc_id") == F.col("keep")).drop("keep")
-    bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
+    bands = D.minhash_bands(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
     eu_ids = exact_u.select("doc_id")
     bands_eu = bands.join(eu_ids, "doc_id", "left_semi")
     cand = D.lsh_candidate_pairs(bands_eu, "doc_id")

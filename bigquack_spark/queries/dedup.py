@@ -3,9 +3,11 @@
 The md5-based MinHash is deterministic and engine-portable, so the ENTIRE
 LSH pipeline — signatures, banding, candidate generation, exact-Jaccard
 verify — is oracle-diffable: DuckDB computes the identical signatures, so
-even LSH false negatives agree bit-for-bit.  The xxhash64 fast path
-(operators.dedup.minhash_signatures_fast) is Spark-only and covered by
-pytest instead (q34_simhash below is likewise rows-only).
+even LSH false negatives agree bit-for-bit.  There is one hash family:
+every near-dup query — the q86 closure family included — runs the md5
+signature its oracle replays, through operators.dedup.near_dup_pairs where
+it needs verified pairs.  The repeated oracle CTEs (signatures, bands,
+unigram sets) are the shared constants below.
 
 Thresholds are calibrated to the synthetic corpus: the documents table is a
 31-word vocabulary, so unigram-set Jaccard runs high (near-dup threshold
@@ -45,6 +47,23 @@ _SIG_SQL = f"""
     FROM toks CROSS JOIN seeds
     GROUP BY doc_id, seed
   )
+"""
+
+#: Shared CTE: LSH bands over ``sig`` — operators.dedup.minhash_bands' keys.
+_BANDS_SQL = f"""
+  bands AS (
+    SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
+           md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
+    FROM sig
+    GROUP BY doc_id, seed // {ROWS_PER_BAND}
+  )
+"""
+
+#: Shared CTE: per-document distinct-token sets — the shingle_len=1 sets
+#: operators.dedup.jaccard_verify compares.
+_SETS_SQL = """
+  sets_ AS (SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS sh
+            FROM documents)
 """
 
 
@@ -111,12 +130,7 @@ def q32_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q33_lsh_bucket_stats",
     oracle=f"""
     WITH {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig
-      GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    )
+    {_BANDS_SQL}
     SELECT band_id, band_key,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(min(doc_id) AS BIGINT) AS min_doc_id
@@ -129,7 +143,7 @@ def q33_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band, band_key).  Banding is a per-row projection (zero shuffle); the
     bucket groupBy is the plan's only exchange.  Bucket stats are the
     scale-safe observable — output is bounded by docs x bands, never pairs."""
-    bands = D.minhash_bands_portable(
+    bands = D.minhash_bands(
         t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id"),
         "doc_id", "text", NUM_HASHES, ROWS_PER_BAND,
     )
@@ -180,12 +194,12 @@ _Q34_ORACLE = f"WITH {_SIMHASH_CTE} SELECT doc_id, simhash FROM sh"
 
 @query("q34_simhash", oracle=_Q34_ORACLE)
 def q34_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable 60-bit SimHash over word 3-gram shingles, oracle-diffed
-    bit for bit: both engines parse the same 15 md5 hex chars to the same
-    60-bit integer and tally identical signed bit votes.  The xxhash64
-    fast path (operators.dedup.simhash64) is the production variant,
-    property-tested in tests/test_ops.py."""
-    return D.simhash_portable(
+    """60-bit SimHash over word 3-gram shingles (operators.dedup.simhash),
+    oracle-diffed bit for bit: both engines parse the same 15 md5 hex
+    chars to the same 60-bit integer and tally identical signed bit
+    votes.  Locality and determinism are property-tested in
+    tests/test_ops.py."""
+    return D.simhash(
         t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id"),
         "doc_id", "text", bits=_SIMHASH_BITS, shingle_len=3,
     )
@@ -236,19 +250,13 @@ def q35_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q36_lsh_near_dup_pairs",
     oracle=f"""
     WITH {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig
-      GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
         ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
     ),
-    sets_ AS (SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS sh
-              FROM documents)
+    {_SETS_SQL}
     SELECT cand.a, cand.b,
            CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
              / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE) AS jaccard
@@ -266,39 +274,35 @@ def q36_lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is identical too — the oracle replays signatures -> bands ->
     candidates -> exact unigram Jaccard >= 0.9 and must match exactly."""
     docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
-    bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
-    cands = D.lsh_candidate_pairs(bands, "doc_id")
-    return D.jaccard_verify(
-        cands, docs, "doc_id", "text", shingle_len=1, threshold=JACCARD_THRESHOLD
+    return _near_dup_pairs(docs, JACCARD_THRESHOLD)
+
+
+def _near_dup_pairs(docs: DataFrame, threshold: float) -> DataFrame:
+    """``near_dup_pairs`` at the family's LSH parameters (NUM_HASHES,
+    ROWS_PER_BAND, unigram sets) — the chain every ``_SIG_SQL`` oracle
+    replays, keeping pairs with Jaccard >= ``threshold``."""
+    return D.near_dup_pairs(
+        docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND,
+        shingle_len=1, threshold=threshold,
     )
 
 
 def _near_dup_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """The closure queries' shared input: the documents load and its
-    near-dup pair graph ``(a, b)`` at q36's LSH parameters."""
+    """The closure queries' shared input: the documents load and q36's
+    near-dup pair graph ``(a, b)``."""
     docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
-    pairs = D.near_dup_pairs(
-        docs, num_hashes=NUM_HASHES, rows_per_band=ROWS_PER_BAND,
-        shingle_len=1, threshold=JACCARD_THRESHOLD,
-    ).select("a", "b")
-    return docs, pairs
+    return docs, _near_dup_pairs(docs, JACCARD_THRESHOLD).select("a", "b")
 
 
 _CLOSURE_ORACLE = f"""
     WITH RECURSIVE {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig
-      GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
         ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
     ),
-    sets_ AS (SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS sh
-              FROM documents),
+    {_SETS_SQL},
     pairs AS (
       SELECT cand.a, cand.b
       FROM cand
@@ -505,19 +509,13 @@ def q130_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q140_knn_graph",
     oracle=f"""
     WITH {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig
-      GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
         ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
     ),
-    sets_ AS (SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS sh
-              FROM documents),
+    {_SETS_SQL},
     scored AS (
       SELECT cand.a, cand.b,
              round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
@@ -554,10 +552,7 @@ def q140_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays signatures, banding, scores, and the tie-broken argmax
     bit-exactly."""
     docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
-    bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
-    cands = D.lsh_candidate_pairs(bands, "doc_id")
-    scored = D.jaccard_verify(cands, docs, "doc_id", "text", shingle_len=1, threshold=0.0)
-    scored = scored.withColumn("jaccard", F.round("jaccard", 6))
+    scored = _near_dup_pairs(docs, 0.0).withColumn("jaccard", F.round("jaccard", 6))
     # symmetrize by EXPLODING each scored pair into both directions (r13):
     # the old unionAll(swap) referenced `scored` twice, and a re-referenced
     # DataFrame subtree is re-computed — the before-plan carried TWO full
@@ -606,12 +601,7 @@ EVAL_THRESHOLD = 0.5  # looser than production 0.9: exercises LSH recall loss
     "q160_lsh_eval",
     oracle=f"""
     WITH {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig
-      GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
@@ -671,7 +661,7 @@ def q160_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a") < F.col("b"))
         .select("a", "b", jac.alias("jac"))
     )
-    bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
+    bands = D.minhash_bands(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
     cand = (
         D.lsh_candidate_pairs(bands, "doc_id")
         .filter((F.col("a") < EVAL_SLICE) & (F.col("b") < EVAL_SLICE))
@@ -921,19 +911,13 @@ def q185_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q190_split_leakage",
     oracle=f"""
     WITH {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig
-      GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
         ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
     ),
-    sets_ AS (SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS sh
-              FROM documents),
+    {_SETS_SQL},
     pairs AS (
       SELECT cand.a, cand.b
       FROM cand
@@ -978,13 +962,9 @@ def q190_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup-cluster id, not the doc id, at production scale.  Costs: the
     q36 pair pipeline plus two broadcast-shaped split joins and a
     9-cell-bounded aggregate."""
-    docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
-    bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
-    cands = D.lsh_candidate_pairs(bands, "doc_id")
-    pairs = D.jaccard_verify(
-        cands, docs, "doc_id", "text", shingle_len=1, threshold=JACCARD_THRESHOLD
-    ).select("a", "b")
     from bigquack_spark.operators import corpus as C
+
+    docs, pairs = _near_dup_graph(spark, sf_dir)
 
     splits = C.hash_split(docs, id_col="doc_id", salt="split-v1").select(
         "doc_id", "split"
@@ -1006,19 +986,13 @@ def q190_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q227_cluster_representatives",
     oracle=f"""
     WITH RECURSIVE {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig
-      GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
         ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
     ),
-    sets_ AS (SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS sh
-              FROM documents),
+    {_SETS_SQL},
     pairs AS (
       SELECT cand.a, cand.b
       FROM cand
@@ -1130,19 +1104,13 @@ CONTAIN_THRESHOLD = 0.9  # |A ∩ B| / |A| for A-contained-in-B
     "q236_containment_dups",
     oracle=f"""
     WITH {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig
-      GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
         ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id <> y.doc_id
     ),
-    sets_ AS (SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS sh
-              FROM documents),
+    {_SETS_SQL},
     scored AS (
       SELECT cand.a AS contained_id, cand.b AS container_id,
              CAST(len(list_intersect(sa.sh, sb.sh)) AS BIGINT) AS n_common,
@@ -1185,7 +1153,7 @@ def q236_containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q185's prefix-filter shape); the oracle checks the algorithm as
     declared, bands included."""
     docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
-    bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
+    bands = D.minhash_bands(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
     x = bands.select(F.col("doc_id").alias("a"), "band_id", "band_key")
     y = bands.select(F.col("doc_id").alias("b"), "band_id", "band_key")
     cand = (
@@ -1233,19 +1201,13 @@ def q236_containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q241_threshold_sweep",
     oracle=f"""
     WITH {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig
-      GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
         ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
     ),
-    sets_ AS (SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS sh
-              FROM documents),
+    {_SETS_SQL},
     scored AS (
       SELECT round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
                    / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE), 6)
@@ -1284,9 +1246,7 @@ def q241_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
-    bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
-    cands = D.lsh_candidate_pairs(bands, "doc_id")
-    scored = D.jaccard_verify(cands, docs, "doc_id", "text", shingle_len=1, threshold=0.0)
+    scored = _near_dup_pairs(docs, 0.0)
     binned = (
         scored.select(
             F.least(F.floor(F.round("jaccard", 6) * 10).cast("int"), F.lit(9)).alias("bin")
@@ -1528,7 +1488,7 @@ def q262_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE scan per join side: the four band keys project into an array
     # and posexplode — a unionAll of four selects would re-scan the
     # corpus (and recompute the digest) once per branch, 8x total with
-    # the self-join (the minhash_bands_portable shape, operators/dedup)
+    # the self-join (the minhash_bands shape, operators/dedup)
     band_arr = F.array(
         *[F.substring("ph", st, ln) for st, ln in _PHASH_BANDS]
     )

@@ -282,7 +282,7 @@ KCORE_PEELS = 3   # fixed unrolled peeling rounds (both engines identical)
 def _kcore_oracle() -> str:
     """Fixed-iteration peel replayed as generated CTE rounds over the SAME
     minhash-band candidate graph q140 builds (queries.dedup._SIG_SQL)."""
-    from bigquack_spark.queries.dedup import _SIG_SQL, ROWS_PER_BAND
+    from bigquack_spark.queries.dedup import _BANDS_SQL, _SIG_SQL
 
     rounds = []
     prev = "alive0"
@@ -299,11 +299,7 @@ def _kcore_oracle() -> str:
         prev = f"alive{r}"
     return f"""
     WITH {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
@@ -344,7 +340,7 @@ def q211_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigquack_spark.queries.dedup import NUM_HASHES, ROWS_PER_BAND
 
     docs = t(spark, sf_dir, "documents", rebalance=True, rebalance_key="doc_id")
-    bands = D.minhash_bands_portable(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
+    bands = D.minhash_bands(docs, "doc_id", "text", NUM_HASHES, ROWS_PER_BAND)
     cand = D.lsh_candidate_pairs(bands, "doc_id")
     und = cand.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
         cand.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
@@ -376,22 +372,17 @@ REACH_HOPS = 3  # recursion bound (UNION ALL + hop guard: Spark 4 rCTE form)
 def _knn_edges_sql() -> str:
     """q140's top-1 kNN edges as a reusable CTE body (bands -> candidate
     pairs -> exact-Jaccard argmax), symmetrized."""
-    from bigquack_spark.queries.dedup import _SIG_SQL, ROWS_PER_BAND
+    from bigquack_spark.queries.dedup import _BANDS_SQL, _SETS_SQL, _SIG_SQL
 
     return f"""
     {_SIG_SQL},
-    bands AS (
-      SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INTEGER) AS band_id,
-             md5(string_agg(minhash, ',' ORDER BY seed)) AS band_key
-      FROM sig GROUP BY doc_id, seed // {ROWS_PER_BAND}
-    ),
+    {_BANDS_SQL},
     cand AS (
       SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
       FROM bands x JOIN bands y
         ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
     ),
-    sets_ AS (SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS sh
-              FROM documents),
+    {_SETS_SQL},
     scored AS (
       SELECT cand.a, cand.b,
              round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)

@@ -9,7 +9,9 @@ no accumulation-order float risk anywhere in this module.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -1176,27 +1178,67 @@ QC_W_SPACE = -4.0     # extreme whitespace = boilerplate/tables
 QC_W_LOGTOK = 0.5     # longer docs are likelier to be prose
 QC_THRESHOLD = 0.5
 
-
-@query(
-    "q218_quality_classifier",
-    oracle=f"""
-    WITH feats AS (
-      SELECT doc_id,
+#: The classifier's oracle pieces: the feature select list over
+#: ``documents``, the rows it is defined on, and the logit over those
+#: features (``_QC_P_SQL`` is the rounded sigmoid the keep decision reads).
+_QC_FEATS_SQL = f"""
              CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
                / CAST(length(text) AS DOUBLE) AS alpha_ratio,
              CAST(len(list_filter({_TOKS}, x -> list_contains({_sql_list(X.STOPWORDS)}, x))) AS DOUBLE)
                / CAST(len({_TOKS}) AS DOUBLE) AS stopword_ratio,
              CAST(length(regexp_replace(text, '[^ ]', '', 'g')) AS DOUBLE)
                / CAST(length(text) AS DOUBLE) AS space_ratio,
-             log10(CAST(len({_TOKS}) AS DOUBLE)) AS log_tokens
-      FROM documents WHERE length(text) > 0 AND len({_TOKS}) > 0
-    ),
-    scored AS (
-      SELECT doc_id,
-             {QC_W0} + {QC_W_ALPHA} * alpha_ratio + {QC_W_STOP} * stopword_ratio
-               + {QC_W_SPACE} * space_ratio + {QC_W_LOGTOK} * log_tokens AS z
-      FROM feats
+             log10(CAST(len({_TOKS}) AS DOUBLE)) AS log_tokens"""
+_QC_WHERE_SQL = f"length(text) > 0 AND len({_TOKS}) > 0"
+_QC_Z_SQL = (
+    f"({QC_W0} + {QC_W_ALPHA} * alpha_ratio + {QC_W_STOP} * stopword_ratio"
+    f" + {QC_W_SPACE} * space_ratio + {QC_W_LOGTOK} * log_tokens)"
+)
+_QC_P_SQL = f"round(1.0 / (1.0 + exp(-{_QC_Z_SQL})), 6)"
+
+
+class _QualityScore(NamedTuple):
+    """The q218 classifier as Column expressions over ``text``."""
+
+    valid: Column  # rows it is defined on: non-empty text, >= 1 token
+    toks: Column
+    alpha: Column
+    stop: Column
+    z: Column  # logit
+    p: Column  # sigmoid rounded to 6 digits — what the keep decision reads
+
+
+def _quality_score() -> _QualityScore:
+    toks = X.tokens("text")
+    alpha = (
+        F.length(F.regexp_replace("text", "[^A-Za-z]", "")).cast("double")
+        / F.length("text")
     )
+    stop = X._count_in(toks, X.STOPWORDS).cast("double") / F.size(toks)
+    space = (
+        F.length(F.regexp_replace("text", "[^ ]", "")).cast("double") / F.length("text")
+    )
+    logtok = F.log10(F.size(toks).cast("double"))
+    z = (
+        F.lit(QC_W0)
+        + F.lit(QC_W_ALPHA) * alpha
+        + F.lit(QC_W_STOP) * stop
+        + F.lit(QC_W_SPACE) * space
+        + F.lit(QC_W_LOGTOK) * logtok
+    )
+    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
+    valid = (F.length("text") > 0) & (F.size(toks) > 0)
+    return _QualityScore(valid, toks, alpha, stop, z, p)
+
+
+@query(
+    "q218_quality_classifier",
+    oracle=f"""
+    WITH feats AS (
+      SELECT doc_id, {_QC_FEATS_SQL}
+      FROM documents WHERE {_QC_WHERE_SQL}
+    ),
+    scored AS (SELECT doc_id, {_QC_Z_SQL} AS z FROM feats)
     SELECT doc_id,
            round(z, 6) AS logit,
            round(1.0 / (1.0 + exp(-z)), 6) AS p_quality,
@@ -1218,30 +1260,12 @@ def q218_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded to 6 digits.  The keep decision compares the ROUNDED
     probability so the boolean is as portable as the score."""
     d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
-    toks = X.tokens("text")
-    nonempty = d.filter((F.length("text") > 0) & (F.size(toks) > 0))
-    alpha = (
-        F.length(F.regexp_replace("text", "[^A-Za-z]", "")).cast("double")
-        / F.length("text")
-    )
-    stop = X._count_in(toks, X.STOPWORDS).cast("double") / F.size(toks)
-    space = (
-        F.length(F.regexp_replace("text", "[^ ]", "")).cast("double") / F.length("text")
-    )
-    logtok = F.log10(F.size(toks).cast("double"))
-    z = (
-        F.lit(QC_W0)
-        + F.lit(QC_W_ALPHA) * alpha
-        + F.lit(QC_W_STOP) * stop
-        + F.lit(QC_W_SPACE) * space
-        + F.lit(QC_W_LOGTOK) * logtok
-    )
-    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-    return nonempty.select(
+    qc = _quality_score()
+    return d.filter(qc.valid).select(
         "doc_id",
-        F.round(z, 6).alias("logit"),
-        p.alias("p_quality"),
-        (p >= QC_THRESHOLD).alias("keep"),
+        F.round(qc.z, 6).alias("logit"),
+        qc.p.alias("p_quality"),
+        (qc.p >= QC_THRESHOLD).alias("keep"),
     )
 
 
@@ -1249,22 +1273,12 @@ def q218_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q225_slice_audit",
     oracle=f"""
     WITH feats AS (
-      SELECT doc_id, lang, source,
-             CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-               / CAST(length(text) AS DOUBLE) AS alpha_ratio,
-             CAST(len(list_filter({_TOKS}, x -> list_contains({_sql_list(X.STOPWORDS)}, x))) AS DOUBLE)
-               / CAST(len({_TOKS}) AS DOUBLE) AS stopword_ratio,
-             CAST(length(regexp_replace(text, '[^ ]', '', 'g')) AS DOUBLE)
-               / CAST(length(text) AS DOUBLE) AS space_ratio,
-             log10(CAST(len({_TOKS}) AS DOUBLE)) AS log_tokens
-      FROM documents WHERE length(text) > 0 AND len({_TOKS}) > 0
+      SELECT doc_id, lang, source, {_QC_FEATS_SQL}
+      FROM documents WHERE {_QC_WHERE_SQL}
     ),
     scored AS (
       SELECT lang, source,
-             CASE WHEN round(1.0 / (1.0 + exp(-({QC_W0} + {QC_W_ALPHA} * alpha_ratio
-                    + {QC_W_STOP} * stopword_ratio + {QC_W_SPACE} * space_ratio
-                    + {QC_W_LOGTOK} * log_tokens))), 6) >= {QC_THRESHOLD}
-                  THEN 1 ELSE 0 END AS keep
+             CASE WHEN {_QC_P_SQL} >= {QC_THRESHOLD} THEN 1 ELSE 0 END AS keep
       FROM feats
     ),
     overall AS (
@@ -1292,26 +1306,9 @@ def q225_slice_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     one slice-cardinality shuffle at any corpus size."""
     d = t(spark, sf_dir, "documents", columns=["doc_id", "lang", "source", "text"],
           rebalance=True, rebalance_key="doc_id")
-    toks = X.tokens("text")
-    nonempty = d.filter((F.length("text") > 0) & (F.size(toks) > 0))
-    alpha = (
-        F.length(F.regexp_replace("text", "[^A-Za-z]", "")).cast("double")
-        / F.length("text")
-    )
-    stop = X._count_in(toks, X.STOPWORDS).cast("double") / F.size(toks)
-    space = (
-        F.length(F.regexp_replace("text", "[^ ]", "")).cast("double") / F.length("text")
-    )
-    logtok = F.log10(F.size(toks).cast("double"))
-    z = (
-        F.lit(QC_W0)
-        + F.lit(QC_W_ALPHA) * alpha
-        + F.lit(QC_W_STOP) * stop
-        + F.lit(QC_W_SPACE) * space
-        + F.lit(QC_W_LOGTOK) * logtok
-    )
-    keep = (F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6) >= QC_THRESHOLD).cast("int")
-    scored = nonempty.select("lang", "source", keep.alias("keep"))
+    qc = _quality_score()
+    keep = (qc.p >= QC_THRESHOLD).cast("int")
+    scored = d.filter(qc.valid).select("lang", "source", keep.alias("keep"))
     overall = scored.agg(
         (F.sum("keep").cast("double") / F.count(F.lit(1))).alias("base_rate")
     )
@@ -1334,28 +1331,15 @@ def q225_slice_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q228_calibration_curve",
     oracle=f"""
     WITH feats AS (
-      SELECT doc_id,
-             CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-               / CAST(length(text) AS DOUBLE) AS alpha_ratio,
-             CAST(len(list_filter({_TOKS}, x -> list_contains({_sql_list(X.STOPWORDS)}, x))) AS DOUBLE)
-               / CAST(len({_TOKS}) AS DOUBLE) AS stopword_ratio,
-             CAST(length(regexp_replace(text, '[^ ]', '', 'g')) AS DOUBLE)
-               / CAST(length(text) AS DOUBLE) AS space_ratio,
-             log10(CAST(len({_TOKS}) AS DOUBLE)) AS log_tokens,
+      SELECT doc_id, {_QC_FEATS_SQL},
              (len({_TOKS}) >= 5
               AND CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
                     / CAST(length(text) AS DOUBLE) > 0.5
               AND CAST(len(list_filter({_TOKS}, x -> list_contains({_sql_list(X.STOPWORDS)}, x))) AS DOUBLE)
                     / CAST(len({_TOKS}) AS DOUBLE) < 0.9) AS label
-      FROM documents WHERE length(text) > 0 AND len({_TOKS}) > 0
+      FROM documents WHERE {_QC_WHERE_SQL}
     ),
-    scored AS (
-      SELECT doc_id, label,
-             round(1.0 / (1.0 + exp(-({QC_W0} + {QC_W_ALPHA} * alpha_ratio
-                    + {QC_W_STOP} * stopword_ratio + {QC_W_SPACE} * space_ratio
-                    + {QC_W_LOGTOK} * log_tokens))), 6) AS p
-      FROM feats
-    ),
+    scored AS (SELECT doc_id, label, {_QC_P_SQL} AS p FROM feats),
     bucketed AS (
       SELECT doc_id, label, p,
              least(CAST(floor(p * 10) AS INTEGER), 9) AS bucket
@@ -1386,26 +1370,10 @@ def q228_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline); labels and buckets are exact ints.  One zero-shuffle
     scoring pass + one 10-row aggregate."""
     d = t(spark, sf_dir, "documents", columns=["doc_id", "text"], rebalance=True, rebalance_key="doc_id")
-    toks = X.tokens("text")
-    nonempty = d.filter((F.length("text") > 0) & (F.size(toks) > 0))
-    alpha = (
-        F.length(F.regexp_replace("text", "[^A-Za-z]", "")).cast("double")
-        / F.length("text")
-    )
-    stop = X._count_in(toks, X.STOPWORDS).cast("double") / F.size(toks)
-    space = (
-        F.length(F.regexp_replace("text", "[^ ]", "")).cast("double") / F.length("text")
-    )
-    logtok = F.log10(F.size(toks).cast("double"))
-    z = (
-        F.lit(QC_W0) + F.lit(QC_W_ALPHA) * alpha + F.lit(QC_W_STOP) * stop
-        + F.lit(QC_W_SPACE) * space + F.lit(QC_W_LOGTOK) * logtok
-    )
-    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
-    label = (
-        (F.size(toks) >= 5) & (alpha > 0.5) & (stop < 0.9)
-    )
-    bucketed = nonempty.select(
+    qc = _quality_score()
+    p = qc.p
+    label = (F.size(qc.toks) >= 5) & (qc.alpha > 0.5) & (qc.stop < 0.9)
+    bucketed = d.filter(qc.valid).select(
         "doc_id", p.alias("p"), label.alias("label"),
         F.least(F.floor(p * 10).cast("int"), F.lit(9)).alias("bucket"),
     )

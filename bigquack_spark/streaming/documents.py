@@ -104,7 +104,7 @@ class NearDupIngestSink(BatchGate):
         ).withColumn("exact_dup", F.col("__hist_hit").isNotNull())
 
         # near-dup: candidates from band collisions vs history
-        bands = D.minhash_bands_portable(
+        bands = D.minhash_bands(
             batch, "doc_id", "text", self.num_hashes, self.rows_per_band
         ).localCheckpoint(eager=True)
         hist_bands = self._history(

@@ -56,20 +56,26 @@ def test_exact_dedup_keep_first(spark):
 def test_simhash_locality(planted):
     """Identical text -> identical hash; near-dup -> small hamming; unrelated
     -> large hamming."""
-    sh = {r.doc_id: r.simhash for r in D.simhash64(planted).collect()}
-    ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")
+    sh = {r.doc_id: r.simhash for r in D.simhash(planted).collect()}
+    assert all(0 <= h < 2**60 for h in sh.values())
+    ham = lambda a, b: bin(a ^ b).count("1")
     assert ham(sh[0], sh[1]) < ham(sh[0], sh[10])
     assert ham(sh[0], sh[2]) < ham(sh[0], sh[11])
 
 
-def test_simhash_near_dup_blocking(spark, planted):
+def test_simhash_jaccard_near_dup_blocking(spark, planted):
     """Chunk blocking guarantees detection for hamming <= 3 (pigeonhole over
-    4 x 16-bit chunks); plant an exact duplicate (hamming 0) plus the near
-    variants and require no unrelated pair survives."""
+    4 x 15-bit chunks of the 60-bit simhash); plant an exact duplicate
+    (hamming 0) plus the near variants and require no unrelated pair
+    survives.  threshold=0.0 leaves the Jaccard verify a no-op, so the pair
+    set is the blocking's."""
     with_dup = planted.union(
         spark.createDataFrame([(3, BASE)], "doc_id bigint, text string")
     )
-    got = {(r.a, r.b) for r in D.simhash_near_dup(with_dup, max_hamming=3).collect()}
+    got = {
+        (r.a, r.b)
+        for r in D.simhash_jaccard_near_dup(with_dup, max_hamming=3, threshold=0.0).collect()
+    }
     assert (0, 3) in got  # exact duplicate always blocked together
     assert all(a < 10 and b < 10 for a, b in got)
 
@@ -383,8 +389,7 @@ def test_lsh_candidate_pairs_oversized_bucket_cap(spark):
     rows += [(100 + i, f"unique filler document number {i} with words {i*7} {i*13}")
              for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    sigs = D.minhash_signatures_fast(df, num_hashes=8, shingle_len=2)
-    bands = D.lsh_bands(sigs, rows_per_band=2)
+    bands = D.minhash_bands(df, num_hashes=8, rows_per_band=2, shingle_len=2)
     capped = D.lsh_candidate_pairs(bands, max_bucket_size=10).collect()
     clone_pairs = [(r.a, r.b) for r in capped if r.a < n and r.b < n]
     # star form: exactly n-1 edges, all anchored at doc 0 — not n*(n-1)/2
@@ -635,10 +640,7 @@ def test_shingles_short_doc_yields_empty(spark):
         [(1, "a b c"), (2, ""), (3, "one two three four five six")],
         "doc_id bigint, text string",
     )
-    rows = {
-        r.doc_id: r.sh
-        for r in df.select("doc_id", D._shingles("text", 5).alias("sh")).collect()
-    }
+    rows = {r.doc_id: r.sh for r in D._shingles_frame(df, "text", 5, "sh").collect()}
     assert rows[1] == [] and rows[2] == []
     assert len(rows[3]) == 2  # 6 tokens -> two distinct 5-grams
 
@@ -783,8 +785,8 @@ def test_text_family_survives_unicode(spark):
     assert a == sorted(map(tuple, X.token_stats(df).collect()))
     X.quality_signals(df).collect()
     X.lang_id(df).collect()
-    sh1 = {r.doc_id: r.simhash for r in D.simhash64(df).collect()}
-    sh2 = {r.doc_id: r.simhash for r in D.simhash64(df).collect()}
+    sh1 = {r.doc_id: r.simhash for r in D.simhash(df).collect()}
+    sh2 = {r.doc_id: r.simhash for r in D.simhash(df).collect()}
     assert sh1 == sh2
     X.compression_ratio(df).collect()
 
@@ -1039,8 +1041,18 @@ def test_jaccard_verify_inclusion_exclusion_parity(spark):
                 keep_cols=("meta",),
             ).collect()
         }
-        # reference: the pre-r13 direct formulation
-        sh = D._shingles("text", shingle_len)
+        # reference: the pre-r13 direct formulation, unstaged shingles
+        toks = F.split(F.lower("text"), r"\s+")
+        if shingle_len == 1:
+            sh = F.array_distinct(toks)
+        else:
+            idx = F.sequence(F.lit(0), F.size(toks) - shingle_len)
+            sh = F.when(
+                F.size(toks) >= shingle_len,
+                F.array_distinct(F.transform(
+                    idx, lambda i: F.array_join(F.slice(toks, i + 1, shingle_len), " ")
+                )),
+            ).otherwise(F.array().cast("array<string>"))
         sa = docs.select(F.col("doc_id").alias("a"), sh.alias("sh_a"))
         sb = docs.select(F.col("doc_id").alias("b"), sh.alias("sh_b"))
         ref_j = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
@@ -1070,14 +1082,12 @@ def test_shingle_and_signature_staging_evaluate_once(spark):
     ).optimizedPlan().toString()
     assert plan.count("split(") == 1, plan
     assert "__shingle_toks" in plan, plan
-    # portable wide signature: one tokenize feeding all seeds
-    plan = D.minhash_signature_wide(df, "doc_id", "text", 8)._jdf.queryExecution(
-    ).optimizedPlan().toString()
-    assert plan.count("split(") == 1, plan
-    # fast signatures at shingle_len 3: one split feeding all seeds
-    plan = D.minhash_signatures_fast(df, "doc_id", "text", 16, 3)._jdf.queryExecution(
-    ).optimizedPlan().toString()
-    assert plan.count("split(") == 1, plan
+    # wide signature, unigram and trigram: one split feeding all seeds
+    for num_hashes, shingle_len in ((8, 1), (16, 3)):
+        plan = D.minhash_signature_wide(
+            df, "doc_id", "text", num_hashes, shingle_len
+        )._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("split(") == 1, (shingle_len, plan)
 
 
 def test_lsh_candidate_pairs_single_dedup_exchange(spark):
@@ -1090,13 +1100,26 @@ def test_lsh_candidate_pairs_single_dedup_exchange(spark):
         [(i, f"common shared tokens everywhere {i % 2}") for i in range(8)],
         "doc_id bigint, text string",
     )
-    bands = D.minhash_bands_portable(docs, "doc_id", "text", 8, 2)
+    bands = D.minhash_bands(docs, "doc_id", "text", 8, 2)
     cands = D.lsh_candidate_pairs(bands, "doc_id")
     plan = cands._jdf.queryExecution().executedPlan().toString()
     n_pair_exchanges = plan.count("hashpartitioning(a#")
     assert n_pair_exchanges == 1, plan
     expected = docs.sparkSession.sparkContext.defaultParallelism
     assert f"hashpartitioning(a#" in plan and f", {expected})" in plan, plan
+
+
+def test_near_dup_graph_matches_q36_pairs(spark):
+    """The closure family's pair graph (q86/q99/q164/q227/q233/q329) is
+    q36's verified pair set: one md5 signature, band and Jaccard verify —
+    the chain their shared oracle replays — with no second hash family."""
+    import bigquack_spark.queries.dedup as QD
+
+    _, pairs = QD._near_dup_graph(spark, SF_SMOKE)
+    assert "xxhash64" not in pairs._jdf.queryExecution().optimizedPlan().toString()
+    graph = {(r.a, r.b) for r in pairs.collect()}
+    q36 = {(r.a, r.b) for r in QD.q36_lsh_near_dup_pairs(spark, SF_SMOKE).collect()}
+    assert graph == q36 and graph
 
 
 def test_knn_graph_agg_matches_window_argmax(spark, tmp_path):
@@ -1126,7 +1149,7 @@ def test_knn_graph_agg_matches_window_argmax(spark, tmp_path):
     from bigquack_spark.sources.parquet import load_table
 
     docs = load_table(spark, str(tmp_path), "documents")
-    bands = D.minhash_bands_portable(docs, "doc_id", "text", QD.NUM_HASHES, QD.ROWS_PER_BAND)
+    bands = D.minhash_bands(docs, "doc_id", "text", QD.NUM_HASHES, QD.ROWS_PER_BAND)
     cands = D.lsh_candidate_pairs(bands, "doc_id")
     scored = D.jaccard_verify(cands, docs, "doc_id", "text", shingle_len=1, threshold=0.0)
     scored = scored.withColumn("jaccard", F.round("jaccard", 6))

@@ -7,7 +7,7 @@ even LSH false negatives agree bit-for-bit.  There is one hash family:
 every near-dup query — the q86 closure family included — runs the md5
 signature its oracle replays, through operators.dedup.near_dup_pairs where
 it needs verified pairs.  The repeated oracle CTEs (signatures, bands,
-unigram sets) are the shared constants below.
+candidates, unigram sets, verified pairs) are the shared constants below.
 
 Thresholds are calibrated to the synthetic corpus: the documents table is a
 31-word vocabulary, so unigram-set Jaccard runs high (near-dup threshold
@@ -64,6 +64,34 @@ _BANDS_SQL = f"""
 _SETS_SQL = """
   sets_ AS (SELECT doc_id, list_distinct(string_split_regex(lower(text), '\\s+')) AS sh
             FROM documents)
+"""
+
+#: Shared CTE: LSH candidate pairs ``a < b`` off ``bands`` —
+#: operators.dedup.lsh_candidate_pairs.
+_CAND_SQL = """
+  cand AS (
+    SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+    FROM bands x JOIN bands y
+      ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
+  )
+"""
+
+#: Shared CTE chain ending in ``pairs`` (a, b): q36's verified near-dup
+#: pairs — the replay of ``_near_dup_graph``.
+_PAIRS_SQL = f"""
+  {_SIG_SQL},
+  {_BANDS_SQL},
+  {_CAND_SQL},
+  {_SETS_SQL},
+  pairs AS (
+    SELECT cand.a, cand.b
+    FROM cand
+    JOIN sets_ sa ON sa.doc_id = cand.a
+    JOIN sets_ sb ON sb.doc_id = cand.b
+    WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
+            / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE)
+          >= {JACCARD_THRESHOLD}
+  )
 """
 
 
@@ -251,11 +279,7 @@ def q35_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SIG_SQL},
     {_BANDS_SQL},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ),
+    {_CAND_SQL},
     {_SETS_SQL}
     SELECT cand.a, cand.b,
            CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
@@ -295,23 +319,7 @@ def _near_dup_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
 
 
 _CLOSURE_ORACLE = f"""
-    WITH RECURSIVE {_SIG_SQL},
-    {_BANDS_SQL},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ),
-    {_SETS_SQL},
-    pairs AS (
-      SELECT cand.a, cand.b
-      FROM cand
-      JOIN sets_ sa ON sa.doc_id = cand.a
-      JOIN sets_ sb ON sb.doc_id = cand.b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-              / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE)
-            >= {JACCARD_THRESHOLD}
-    ),
+    WITH RECURSIVE {_PAIRS_SQL},
     sym AS (SELECT a AS s, b AS d FROM pairs UNION SELECT b, a FROM pairs),
     reach(src, node) AS (
       SELECT s, s FROM sym
@@ -510,11 +518,7 @@ def q130_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SIG_SQL},
     {_BANDS_SQL},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ),
+    {_CAND_SQL},
     {_SETS_SQL},
     scored AS (
       SELECT cand.a, cand.b,
@@ -910,23 +914,7 @@ def q185_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q190_split_leakage",
     oracle=f"""
-    WITH {_SIG_SQL},
-    {_BANDS_SQL},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ),
-    {_SETS_SQL},
-    pairs AS (
-      SELECT cand.a, cand.b
-      FROM cand
-      JOIN sets_ sa ON sa.doc_id = cand.a
-      JOIN sets_ sb ON sb.doc_id = cand.b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-              / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE)
-            >= {JACCARD_THRESHOLD}
-    ),
+    WITH {_PAIRS_SQL},
     splits AS (
       SELECT doc_id,
              CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
@@ -985,23 +973,7 @@ def q190_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q227_cluster_representatives",
     oracle=f"""
-    WITH RECURSIVE {_SIG_SQL},
-    {_BANDS_SQL},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ),
-    {_SETS_SQL},
-    pairs AS (
-      SELECT cand.a, cand.b
-      FROM cand
-      JOIN sets_ sa ON sa.doc_id = cand.a
-      JOIN sets_ sb ON sb.doc_id = cand.b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-              / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE)
-            >= {JACCARD_THRESHOLD}
-    ),
+    WITH RECURSIVE {_PAIRS_SQL},
     sym AS (SELECT a AS s, b AS d FROM pairs UNION SELECT b, a FROM pairs),
     reach(src, node) AS (
       SELECT s, s FROM sym
@@ -1202,11 +1174,7 @@ def q236_containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SIG_SQL},
     {_BANDS_SQL},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ),
+    {_CAND_SQL},
     {_SETS_SQL},
     scored AS (
       SELECT round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)

@@ -282,7 +282,7 @@ KCORE_PEELS = 3   # fixed unrolled peeling rounds (both engines identical)
 def _kcore_oracle() -> str:
     """Fixed-iteration peel replayed as generated CTE rounds over the SAME
     minhash-band candidate graph q140 builds (queries.dedup._SIG_SQL)."""
-    from bigquack_spark.queries.dedup import _BANDS_SQL, _SIG_SQL
+    from bigquack_spark.queries.dedup import _BANDS_SQL, _CAND_SQL, _SIG_SQL
 
     rounds = []
     prev = "alive0"
@@ -300,11 +300,7 @@ def _kcore_oracle() -> str:
     return f"""
     WITH {_SIG_SQL},
     {_BANDS_SQL},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ),
+    {_CAND_SQL},
     und AS (
       SELECT a AS node, b AS nbr FROM cand
       UNION ALL SELECT b, a FROM cand
@@ -372,16 +368,12 @@ REACH_HOPS = 3  # recursion bound (UNION ALL + hop guard: Spark 4 rCTE form)
 def _knn_edges_sql() -> str:
     """q140's top-1 kNN edges as a reusable CTE body (bands -> candidate
     pairs -> exact-Jaccard argmax), symmetrized."""
-    from bigquack_spark.queries.dedup import _BANDS_SQL, _SETS_SQL, _SIG_SQL
+    from bigquack_spark.queries.dedup import _BANDS_SQL, _CAND_SQL, _SETS_SQL, _SIG_SQL
 
     return f"""
     {_SIG_SQL},
     {_BANDS_SQL},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ),
+    {_CAND_SQL},
     {_SETS_SQL},
     scored AS (
       SELECT cand.a, cand.b,
